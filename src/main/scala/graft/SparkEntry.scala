@@ -249,7 +249,7 @@ object Queries {
         when(col("doc_id") % 3 === 0, col("doc_hash"))
           .otherwise(substring(md5(concat(lit("stale-"), col("doc_id").cast("string"))), 1, 16))
           .as("doc_hash"))
-    SyncGate.needsUpdate(hashed, store, "doc_id", "doc_hash")
+    SyncGate.needsUpdate(hashed, store, Seq("doc_id", "doc_hash"))
       .orderBy(col("doc_id"))
   }
 
@@ -3302,9 +3302,12 @@ object Queries {
       .select(col("media_id"), col("frame_idx"), col("frame_len"), col("frame_hash"))
       .orderBy(col("media_id"), col("frame_idx"))
 
-  /** Full subscription pipeline in batch mode (the exact chain the
-    * streaming path runs per micro-batch): route → filter → mask →
-    * path template → canonical hash → SYNC anti-join gate. */
+  /** Full subscription pipeline in batch mode: the micro-batch chain
+    * `StreamingJob.start` runs (`Pipeline.compileMulti` →
+    * `Pipeline.gateMulti`), here over one subscription: route → filter
+    * → mask → path template → canonical hash → SYNC anti-join gate.
+    * The stream's per-batch `dedupeBatch` is omitted: event ids are
+    * unique, so it would keep every row. */
   def qPipelineE2e(s: SparkSession, dir: String): DataFrame = {
     import graft.model.{FbOptions, Subscription => Sub}
     val sub = Sub("sub-e2e", "e2e", "*", FbOptions(
@@ -3324,11 +3327,11 @@ object Queries {
     // cached: the store fixture AND the gate probe both consume it,
     // and the canonical-JSON hash inside is the pipeline's dominant
     // per-row cost — compute it once, not once per consumer
-    val prepared = graft.streaming.Pipeline.compile(sub, "tnant", ev).cache()
+    val prepared = graft.streaming.Pipeline.compileMulti(Seq(sub), "tnant", ev).cache()
     // hash store fixture: even ids stored with their current hash
-    val store = prepared.filter(col("id") % 2 === 0)
+    val store = prepared.filter(col("doc_id").cast("long") % 2 === 0)
       .select(col("target_path"), col("doc_id"), col("doc_hash"))
-    graft.streaming.Pipeline.gate(prepared, sub, store)
+    graft.streaming.Pipeline.gateMulti(prepared, Seq(sub), store)
       .select(col("doc_id"), col("topic"), col("target_path"),
         col("doc_hash"), col("doc_json"))
       .orderBy(col("doc_id").cast("long"))
@@ -6997,12 +7000,14 @@ object Queries {
     * tells a pipeline owner which near-dup detector is the outlier
     * before they trust any single one at 100 TB. All four signals
     * compute in the SAME two candidate joins (no extra passes). */
-  def qDedupPanel(s: SparkSession, dir: String): DataFrame = {
+  def qDedupPanel(s: SparkSession, dir: String): DataFrame =
+    operators.Rounds.onFailure { scope =>
     import graft.functions.{Shingles, SimHash}
     val k = Dedup.MinhashK
     // doc_id-keyed dedupe after the shared cache — see
     // qMinhashCalibration (r17 dup sweep)
     val (sigRaw, sigRelease) = minhashSigned(s, dir)
+    scope.defer(sigRelease)
     val sig = sigRaw.dropDuplicates(Seq("doc_id"))
     val cands = Dedup.lshCandidatePairs(Dedup.withLshBands(sig), "doc_id")
     // verify sides carry only (id, TEXT, minhash cols) through the
@@ -7053,6 +7058,7 @@ object Queries {
     // caching discipline — reused AND expensive to recompute).
     val (votes, relVotes) =
       operators.Rounds.persist(votesPlan, reliable = false)
+    scope.defer(relVotes)
     val hist = votes
       .groupBy(expr("concat('votes_', CAST(v_exact + v_minhash + " +
         "v_simhash + v_edit AS STRING))").as("metric"))

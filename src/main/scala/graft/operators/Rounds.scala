@@ -80,11 +80,12 @@ private[graft] object Rounds {
     // every per-round stage over the relation then schedules 100+
     // near-empty tasks (StageProfile: 4.5 run_s vs 0.4 cpu_s on the
     // 161-task stages — pure scheduling). `coalesce` is a NARROW cap
-    // (no shuffle, merges up to the nearest exchange boundary), the
+    // (no shuffle, merges up to the nearest exchange boundary) and the
     // width derives from the session's defaultParallelism (never a
-    // constant), and a checkpointed relation reports
-    // UnknownPartitioning downstream regardless, so no consumer ever
-    // relied on the un-coalesced layout.
+    // constant). CoalesceExec reports UnknownPartitioning, so the cap
+    // itself drops any hash partitioning the checkpoint would otherwise
+    // carry; no current caller consumes the checkpoint's layout (each
+    // shuffles or aggregates on its own key next).
     val capped = df.coalesce(df.sparkSession.sparkContext.defaultParallelism)
     // The count MUST stay exchange-free: a Dataset-level count/agg
     // plans a partial+final aggregate with a shuffle between, which

@@ -12,6 +12,8 @@ import org.apache.spark.sql.functions._
   * implement the *intended* semantics — "write iff no stored hash or
   * hash changed" — as a left-anti join of the incoming batch against
   * the hash store on (id, hash). Documented deviation per SURVEY §7.4.
+  * The per-subscription mode dispatch is `streaming.Pipeline.gateMulti`;
+  * its SYNC branch is [[needsUpdate]].
   *
   * At scale: the anti-join shuffles both sides on id unless the store
   * is broadcastable; with AQE on, Spark picks broadcast automatically
@@ -33,20 +35,10 @@ object SyncGate {
     case _ => NoneMode
   }
 
-  /** Rows that need writing: no stored hash for id, or stored hash
-    * differs. incoming must carry (idCol, hashCol). */
+  /** Rows that need writing: no stored row for the key, or its stored
+    * hash differs. `keys` names the identity columns plus the hash
+    * column; both sides must carry all of them. */
   def needsUpdate(incoming: DataFrame, hashStore: DataFrame,
-                  idCol: String = "id", hashCol: String = "doc_hash"): DataFrame =
-    incoming.join(hashStore.select(col(idCol), col(hashCol)),
-      Seq(idCol, hashCol), "left_anti")
-
-  /** Apply the sync-mode gate: NONE/CONSUME drop everything, FORWARD
-    * passes all, SYNC anti-joins against the hash store. */
-  def gate(incoming: DataFrame, mode: SyncMode, hashStore: => DataFrame,
-           idCol: String = "id", hashCol: String = "doc_hash"): DataFrame =
-    mode match {
-      case Forward => incoming
-      case Sync => needsUpdate(incoming, hashStore, idCol, hashCol)
-      case _ => incoming.limit(0)
-    }
+                  keys: Seq[String]): DataFrame =
+    incoming.join(hashStore.select(keys.map(col): _*), keys, "left_anti")
 }

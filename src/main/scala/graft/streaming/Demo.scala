@@ -29,7 +29,7 @@ object Demo {
     val b1 = (1L to 5L).map(i => ("tnt.topicA", i, s"v$i")).toDF("kafka_topic", "id", "payload")
     b1.coalesce(1).write.mode("append").parquet(input)
 
-    val job = new StreamingJob(spark, sub, "tnt", () => new JsonFileSink(sinkRoot),
+    val job = new StreamingJob(spark, Seq(sub), "tnt", () => new JsonFileSink(sinkRoot),
       s"$work/hashes", s"$work/ckpt")
     val q = job.start(spark.readStream.schema(b1.schema).parquet(input))
     q.processAllAvailable()

@@ -18,11 +18,12 @@ import graft.sources.DocumentSink
   *   template → canonical hash → sync gate (hash anti-join) →
   *   batched idempotent upsert sink + hash-store merge.
   *
-  * The same `compile` chain serves batch (oracle-verified, see
-  * Queries.qPipelineE2e) and streaming (`start`) — classic
-  * batch/streaming unification, replacing the reference's
-  * 1-message-per-0.5 s poll loop (artifacts.py:263-285) with
-  * micro-batches; offsets live in the checkpoint instead of Kafka
+  * One `compileMulti` → `gateMulti` chain serves batch (oracle-
+  * verified: Queries.qPipelineE2e runs it over one subscription) and
+  * streaming (`StreamingJob.start`, over N subscriptions per
+  * micro-batch) — classic batch/streaming unification, replacing the
+  * reference's 1-message-per-0.5 s poll loop (artifacts.py:263-285)
+  * with micro-batches; offsets live in the checkpoint instead of Kafka
   * group commits (A25 ⇒ effectively-once with the idempotent sink).
   *
   * Scale notes: every stage is a narrow projection except the sync
@@ -43,19 +44,26 @@ object Pipeline {
   def decodeAvro(df: DataFrame, avroSchemaJson: String,
                  valueCol: String = "value"): DataFrame = {
     val struct = graft.sources.AvroSchemaBridge.parse(avroSchemaJson)
-    val others = df.columns.filterNot(_ == valueCol).toIndexedSeq
-    // fail fast on name collisions — downstream compile/masking would
-    // otherwise hit ambiguous-reference errors far from the cause
+    flattenDecoded(df, df.columns.filterNot(_ == valueCol).toIndexedSeq,
+      graft.functions.AvroColumns.avro_decode(col(valueCol), avroSchemaJson), struct)
+  }
+
+  /** `others` carried through, plus the `decoded` struct's fields as
+    * top-level columns with the schema's field metadata (the
+    * `@aether_*` annotations masking reads). Fails fast on name
+    * collisions — downstream compile/masking would otherwise hit
+    * ambiguous-reference errors far from the cause. Two projections on
+    * purpose: CollapseProject refuses to merge them because merging
+    * would duplicate the non-cheap decode expression — guaranteeing
+    * exactly ONE Avro decode per row even on interpreted /
+    * subexpression-elimination-disabled paths. */
+  private def flattenDecoded(df: DataFrame, others: IndexedSeq[String],
+                             decoded: Column, struct: StructType): DataFrame = {
     val collisions = struct.fields.map(_.name).toSet
       .intersect(others.toSet + "_payload")
     require(collisions.isEmpty,
       s"decoded Avro field(s) ${collisions.mkString(", ")} collide with " +
-        "carried-through column(s); rename or drop them upstream of decodeAvro")
-    val decoded = graft.functions.AvroColumns.avro_decode(col(valueCol), avroSchemaJson)
-    // two projections on purpose: CollapseProject refuses to merge them
-    // because merging would duplicate the non-cheap decode expression —
-    // guaranteeing exactly ONE Avro decode per row even on interpreted /
-    // subexpression-elimination-disabled paths
+        "carried-through column(s); rename or drop them upstream of the decode")
     df.select(others.map(col) :+ decoded.as("_payload"): _*)
       .select(others.map(col) ++ struct.fields.map(f =>
         col("_payload").getField(f.name).as(f.name, f.metadata)): _*)
@@ -111,76 +119,19 @@ object Pipeline {
             case ((cond, dec), acc) => when(cond, dec).otherwise(acc)
           }
         } else graft.functions.AvroColumns.avro_decode(col(valueCol), reader)
-      val others = batch.columns
-        .filterNot(c => c == valueCol || (hasFp && c == fpCol)).toIndexedSeq
-      val collisions = readerStruct.fields.map(_.name).toSet
-        .intersect(others.toSet + "_payload")
-      require(collisions.isEmpty,
-        s"decoded Avro field(s) ${collisions.mkString(", ")} collide with " +
-          "carried-through column(s)")
-      batch.select(others.map(col) :+ decoded.as("_payload"): _*)
-        .select(others.map(col) ++ readerStruct.fields.map(f =>
-          col("_payload").getField(f.name).as(f.name, f.metadata)): _*)
+      flattenDecoded(batch, batch.columns
+        .filterNot(c => c == valueCol || (hasFp && c == fpCol)).toIndexedSeq,
+        decoded, readerStruct)
     }
   }
 
-  /** Input contract: `kafka_topic` string column + an `id` column +
-    * payload columns. Output: surviving rows with `doc_id`,
-    * `target_path`, `doc_json`, `doc_hash`. */
-  def compile(sub: Subscription, tenant: String, df: DataFrame): DataFrame = {
-    val payloadCols = df.columns.filterNot(_ == "kafka_topic").toIndexedSeq
-    val routed = Routing.route(df, col("kafka_topic"), tenant,
-        Seq(SubscriptionRoute(sub.id, sub.topicPattern, sub.fbOptions.targetPath)))
-      .filter(col("sub_id").isNotNull)
-    compileBranch(sub, routed, payloadCols)
-  }
-
-  /** Per-subscription filter → mask → doc projection over an already-
-    * routed branch. `extraCols` are carried alongside (never hashed or
-    * serialized into the document). */
-  private def compileBranch(sub: Subscription, routed: DataFrame,
-                            payloadCols: IndexedSeq[String],
-                            extraCols: Seq[String] = Nil): DataFrame = {
-    val filtered =
-      if (sub.fbOptions.filterRequired)
-        Filters.fieldPathFilter(routed, sub.fbOptions.filterFieldPath,
-          sub.fbOptions.filterPassValues)
-      else routed
-
-    val masked =
-      if (sub.fbOptions.maskingEmitLevel.nonEmpty && sub.fbOptions.maskingLevels.nonEmpty) {
-        // Select the pruned EXPRESSIONS maskProjection builds (nested
-        // structs rebuilt without masked subfields) — selecting kept
-        // column NAMES from `filtered` would resurrect masked nested
-        // fields into doc_json/doc_hash.
-        val payloadSchema = StructType(
-          filtered.schema.fields.filter(f => payloadCols.contains(f.name)))
-        val pruned = Masking.maskProjection(payloadSchema,
-          sub.fbOptions.maskingEmitLevel, sub.fbOptions.maskingLevels,
-          sub.fbOptions.maskingAnnotation)
-        // the id is the document key — masking may never drop it, or the
-        // sink loses its upsert identity (and col("id") below would fail)
-        val keep = if (pruned.exists(_._1 == "id")) pruned.map(_._2)
-                   else {
-                     val byName = pruned.toMap
-                     payloadCols.flatMap(c =>
-                       if (c == "id") Some(col("id")) else byName.get(c))
-                   }
-        filtered.select(keep ++ (Seq("topic", "sub_id", "target_path") ++ extraCols).map(col): _*)
-      } else filtered
-
-    val docCols = masked.columns
-      .filterNot((Set("topic", "sub_id", "target_path", "kafka_topic") ++ extraCols)).toIndexedSeq
-    masked
-      .withColumn("doc_id", col("id").cast("string"))
-      .withColumn("doc_json", to_json(struct(docCols.map(col): _*)))
-      .withColumn("doc_hash", canonical_hash(struct(docCols.map(col): _*)))
-  }
-
-  /** Multi-subscription compile (reference: one consumer serves N
+  /** Subscription compile (reference: one consumer serves N
     * subscriptions, first glob match after id sort wins —
-    * artifacts.py:250-256): route once against ALL subscriptions,
-    * then evaluate every per-subscription filter/mask as ONE
+    * artifacts.py:250-256). Input contract: `kafka_topic` string column
+    * + an `id` column + payload columns; output: surviving rows as
+    * `(doc_id, topic, sub_id, target_path, doc_json, doc_hash)` plus
+    * `extraCols`. Routes once against ALL subscriptions, then
+    * evaluates every per-subscription filter/mask as ONE
     * conditional projection keyed by `sub_id` — a single scan of the
     * micro-batch regardless of fan-out (no per-branch union, which
     * Catalyst would not share, re-reading the batch once per
@@ -215,8 +166,8 @@ object Pipeline {
       (col("sub_id") === sub.id) && cond
     }.reduce(_ || _)
 
-    // the subscription's masked document as a struct expression (same
-    // pruned expressions compileBranch selects — nested masked fields
+    // the subscription's masked document as a struct expression (the
+    // pruned expressions maskProjection builds — nested masked fields
     // stay pruned; the id is the upsert key and always survives)
     def docStruct(sub: Subscription): Column = {
       val o = sub.fbOptions
@@ -265,23 +216,13 @@ object Pipeline {
       .filter(col("_rn") === 1).drop("_rn")
   }
 
-  /** Rows needing a write under the subscription's sync mode. The
-    * change-detection key is (target_path, doc_id, doc_hash) — a
-    * deliberate refinement of the reference's global-by-id RTDB store
-    * (config.py:37), which cannot distinguish destinations. */
-  def gate(prepared: DataFrame, sub: Subscription, hashStore: => DataFrame): DataFrame =
-    SyncGate.parseMode(sub.fbOptions.syncMode) match {
-      case SyncGate.Forward => prepared
-      case SyncGate.Sync =>
-        prepared.join(hashStore.select("target_path", "doc_id", "doc_hash"),
-          Seq("target_path", "doc_id", "doc_hash"), "left_anti")
-      case _ => prepared.limit(0)
-    }
-
   /** Per-subscription sync-mode gate over a multi-subscription batch:
     * FORWARD branches pass, NONE/CONSUME branches drop, SYNC branches
     * anti-join the hash store — one partitioned pass, not one job per
-    * subscription. */
+    * subscription. The change-detection key is (target_path, doc_id,
+    * doc_hash) — a deliberate refinement of the reference's
+    * global-by-id RTDB store (config.py:37), which cannot distinguish
+    * destinations. */
   def gateMulti(prepared: DataFrame, subs: Seq[Subscription],
                 hashStore: => DataFrame): DataFrame = {
     def ids(m: SyncGate.SyncMode) =
@@ -291,9 +232,8 @@ object Pipeline {
     val forwarded = prepared.filter(col("sub_id").isin(fwd: _*))
     if (sync.isEmpty) forwarded
     else forwarded.unionByName(
-      prepared.filter(col("sub_id").isin(sync: _*))
-        .join(hashStore.select("target_path", "doc_id", "doc_hash"),
-          Seq("target_path", "doc_id", "doc_hash"), "left_anti"))
+      SyncGate.needsUpdate(prepared.filter(col("sub_id").isin(sync: _*)),
+        hashStore, Seq("target_path", "doc_id", "doc_hash")))
   }
 
   /** Executor-side batched upsert of the gated rows. NB: the count is
@@ -493,11 +433,6 @@ final class StreamingJob(
       * re-plans the decode projection mid-stream instead of freezing
       * the projection at start time. */
     preBatch: Option[DataFrame => DataFrame] = None) {
-
-  def this(spark: SparkSession, sub: Subscription, tenant: String,
-           mkSink: () => DocumentSink, hashStorePath: String, checkpoint: String) =
-    this(spark, Seq(sub), tenant, mkSink, hashStorePath, checkpoint,
-      Trigger.ProcessingTime("1 second"), None)
 
   val hashStore = new HashStore(spark, hashStorePath)
 

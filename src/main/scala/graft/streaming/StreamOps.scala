@@ -17,16 +17,6 @@ object StreamOps {
   def eventTime(df: DataFrame, nsCol: String): DataFrame =
     df.withColumn("event_time", timestamp_micros(expr(s"$nsCol div 1000")))
 
-  /** Watermarked tumbling-window counts/sums per event type. State is
-    * bounded by the watermark — late rows beyond `lateness` are
-    * dropped, so executor state can't grow unboundedly. */
-  def windowedAgg(df: DataFrame, lateness: String, window: String): DataFrame =
-    eventTime(df, "ts")
-      .withWatermark("event_time", lateness)
-      .groupBy(org.apache.spark.sql.functions.window(col("event_time"), window),
-        col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
-
   /** Watermarked event-time SESSION windows (gap-based): per-key
     * sessions close when `gap` passes with no new event, and their
     * aggregate is emitted in append mode once the watermark clears the

@@ -405,8 +405,7 @@ object ConfigFuzz {
     val store = if (subs.exists(_.mode == "sync")) drawStore(rnd) else None
     CfgVariant(f"fuzz_$idx%03d", subs,
       annMaps = Map(Masking.DefaultAnnotation -> ann),
-      store = store,
-      singleCompile = nSubs == 1 && rnd.nextInt(3) == 0)
+      store = store)
   }
 
   // ---------------------------------------------------------------

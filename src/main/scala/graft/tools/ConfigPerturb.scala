@@ -24,9 +24,9 @@ import graft.streaming.Pipeline
   * full Subscription pipeline — route → filter → mask → template →
   * canonical hash → sync gate, the exact chain `q_pipeline_e2e` runs
   * once — through the PRODUCTION entry points
-  * ([[Pipeline.compileMulti]] / [[Pipeline.compile]] +
-  * [[Pipeline.gateMulti]] / [[Pipeline.gate]]) and oracle-checks the
-  * result against an independently-generated DuckDB query.
+  * ([[Pipeline.compileMulti]] + [[Pipeline.gateMulti]]) and
+  * oracle-checks the result against an independently-generated DuckDB
+  * query.
   *
   * Oracle independence: the SQL is built from the CONTRACT, not the
   * engine — glob matching becomes SQL `LIKE` (`*`→`%`, `?`→`_`,
@@ -77,10 +77,7 @@ object ConfigPerturb {
         Map(Masking.DefaultAnnotation -> DefaultAnn),
       store: Option[StoreSpec] = None,
       tenant: String = "tnant",
-      kafkaSql: String = "'tnant.' || event_type",
-      // exercise the single-subscription compile()+gate() path instead
-      // of compileMulti()+gateMulti() (requires exactly one sub)
-      singleCompile: Boolean = false) {
+      kafkaSql: String = "'tnant.' || event_type") {
     def kafkaSpark: Column = {
       // kafkaSql is one of three shapes by construction; mirror it
       val s = kafkaSql
@@ -217,16 +214,13 @@ object ConfigPerturb {
 
   /** Compile + gate the variant through the production pipeline. */
   def run(s: SparkSession, dir: String, v: CfgVariant): DataFrame = {
-    require(!v.singleCompile || v.subs.size == 1,
-      s"${v.id}: singleCompile needs exactly one sub")
     val ev0 = Tables.events(s, dir).withColumnRenamed("event_id", "id").drop("ts")
       .withColumn("kafka_topic", v.kafkaSpark)
     val ev = v.annMaps.foldLeft(ev0) { case (df, (name, cls)) =>
       Masking.annotate(df, cls, name)
     }
     val subs = v.subs.map(toSub)
-    val prepared = (if (v.singleCompile) Pipeline.compile(subs.head, v.tenant, ev)
-      else Pipeline.compileMulti(subs, v.tenant, ev)).cache()
+    val prepared = Pipeline.compileMulti(subs, v.tenant, ev).cache()
     val anySync = v.subs.exists(_.mode == "sync")
     val anyDrop = v.subs.exists(x => x.mode == "none" || x.mode == "consume")
     val gated =
@@ -244,8 +238,7 @@ object ConfigPerturb {
           case None => prepared.limit(0)
             .select("target_path", "doc_id", "doc_hash")
         }
-        if (v.singleCompile) Pipeline.gate(prepared, subs.head, store)
-        else Pipeline.gateMulti(prepared, subs, store)
+        Pipeline.gateMulti(prepared, subs, store)
       }
     gated.select(col("doc_id"), col("topic"), col("sub_id"),
         col("target_path"), col("doc_hash"), col("doc_json"))
@@ -305,8 +298,7 @@ object ConfigPerturb {
       Seq(SubSpec("s1", "*", mask = emit("public"))),
       annMaps = Map(Masking.DefaultAnnotation -> (DefaultAnn + ("id" -> "ufos")))),
     CfgVariant("cfg_mask_emit_public_single",
-      Seq(SubSpec("s1", "*", mask = emit("public"))),
-      singleCompile = true),
+      Seq(SubSpec("s1", "*", mask = emit("public")))),
 
     // ---- B. routing: overlap order, '?', no-match, templates, tenant strip
     CfgVariant("cfg_route_catchall_first",
@@ -384,8 +376,7 @@ object ConfigPerturb {
       store = Some(StoreSpec("CAST(doc_id AS BIGINT) % 2 = 0", "id % 2 = 0"))),
     CfgVariant("cfg_sync_single_gate",
       Seq(SubSpec("s1", "*", mode = "sync", mask = emit("confidential"))),
-      store = Some(StoreSpec("CAST(doc_id AS BIGINT) % 2 = 0", "id % 2 = 0")),
-      singleCompile = true),
+      store = Some(StoreSpec("CAST(doc_id AS BIGINT) % 2 = 0", "id % 2 = 0"))),
 
     // ---- E. the full coupled grid: filter × mask × sync × template
     CfgVariant("cfg_e2e_grid",

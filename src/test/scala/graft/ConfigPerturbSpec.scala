@@ -51,7 +51,6 @@ class ConfigPerturbSpec extends AnyFunSuite {
     assert(vs.exists(_.subs.exists(_.mode == "sync")))
     assert(vs.exists(_.subs.exists(s => s.mode == "none" || s.mode == "consume")))
     assert(vs.exists(_.subs.size >= 3))
-    assert(vs.exists(_.singleCompile))
     assert(vs.exists(_.store.exists(_.duckStale.nonEmpty)))
   }
 

@@ -47,13 +47,26 @@ class OperatorsSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("sync gate: forward passes, consume drops, sync anti-joins") {
-    val incoming = Seq((1L, "h1"), (2L, "h2"), (3L, "h3")).toDF("id", "doc_hash")
-    val store = Seq((1L, "h1"), (2L, "old")).toDF("id", "doc_hash")
-    assert(SyncGate.gate(incoming, SyncGate.Forward, store).count() == 3)
-    assert(SyncGate.gate(incoming, SyncGate.Consume, store).count() == 0)
-    val synced = SyncGate.gate(incoming, SyncGate.Sync, store)
-      .select("id").as[Long].collect().sorted.toSeq
-    assert(synced == Seq(2L, 3L)) // 1 unchanged, 2 stale hash, 3 new
+    import graft.model.{FbOptions, Subscription}
+    import graft.streaming.Pipeline
+    val subs = Seq("sync", "forward", "consume", "none").map(m =>
+      Subscription(s"s-$m", m, "*", FbOptions(syncMode = m)))
+    val prepared = Seq(
+      ("s-sync", "p/a", "1", "h1"),    // stored, same hash: unchanged
+      ("s-sync", "p/a", "2", "h2"),    // stored hash stale: changed
+      ("s-sync", "p/a", "3", "h3"),    // not stored: new
+      ("s-sync", "p/b", "1", "h1"),    // doc 1 on another path: a second document
+      ("s-forward", "f/a", "1", "h1"), // forward ignores the store
+      ("s-consume", "c/a", "4", "h4"),
+      ("s-none", "n/a", "5", "h5"))
+      .toDF("sub_id", "target_path", "doc_id", "doc_hash")
+    val store = Seq(("p/a", "1", "h1"), ("p/a", "2", "old"), ("f/a", "1", "h1"))
+      .toDF("target_path", "doc_id", "doc_hash")
+    val gated = Pipeline.gateMulti(prepared, subs, store)
+      .select("sub_id", "target_path", "doc_id").as[(String, String, String)]
+      .collect().sorted.toSeq
+    assert(gated == Seq(("s-forward", "f/a", "1"), ("s-sync", "p/a", "2"),
+      ("s-sync", "p/a", "3"), ("s-sync", "p/b", "1")))
   }
 
   test("jsonPathFilter extracts and filters on JSON string column") {

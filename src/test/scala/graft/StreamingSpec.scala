@@ -23,7 +23,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
       .toDF("kafka_topic", "id", "name", "score")
     batch1.coalesce(1).write.mode("append").parquet(input)
 
-    val job = new StreamingJob(spark, sub, "tnt", () => new JsonFileSink(sinkRoot),
+    val job = new StreamingJob(spark, Seq(sub), "tnt", () => new JsonFileSink(sinkRoot),
       s"$work/hashes", s"$work/ckpt")
     val stream = spark.readStream.schema(batch1.schema).parquet(input)
     val q = job.start(stream)
@@ -76,7 +76,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     val df = Seq(("tnt.alpha1", 1L, "x", 1.0), ("tnt.beta", 2L, "y", 2.0))
       .toDF("kafka_topic", "id", "name", "score")
     df.coalesce(1).write.mode("append").parquet(input)
-    val job = new StreamingJob(spark, sub, "tnt", () => new JsonFileSink(sinkRoot),
+    val job = new StreamingJob(spark, Seq(sub), "tnt", () => new JsonFileSink(sinkRoot),
       s"$work/hashes", s"$work/ckpt")
     val q = job.start(spark.readStream.schema(df.schema).parquet(input))
     try {
@@ -136,7 +136,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
       maskingEmitLevel = "public"))
 
     // annotation lives on a NESTED field — the regression this guards:
-    // compileBranch must keep maskProjection's rebuilt struct, not
+    // the compile must keep maskProjection's rebuilt struct, not
     // re-select the original geo column
     def annotate(df: org.apache.spark.sql.DataFrame) = {
       val md = new org.apache.spark.sql.types.MetadataBuilder()
@@ -150,7 +150,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
         struct($"geo._1".as("lat"), $"geo._2".as("ssn")).as("geo"))
     annotate(raw).coalesce(1).write.mode("append").parquet(input)
 
-    val job = new StreamingJob(spark, sub, "tnt", () => new JsonFileSink(sinkRoot),
+    val job = new StreamingJob(spark, Seq(sub), "tnt", () => new JsonFileSink(sinkRoot),
       s"$work/hashes", s"$work/ckpt")
     val q = job.start(annotate(spark.readStream.schema(raw.schema).parquet(input)))
     try {
@@ -183,7 +183,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
           struct($"id", $"name", $"ssn"), schemaJson).as("value"))
     raw.coalesce(1).write.mode("append").parquet(input)
 
-    val job = new StreamingJob(spark, sub, "tnt", () => new JsonFileSink(sinkRoot),
+    val job = new StreamingJob(spark, Seq(sub), "tnt", () => new JsonFileSink(sinkRoot),
       s"$work/hashes", s"$work/ckpt")
     val stream = spark.readStream.schema(raw.schema).parquet(input)
     val q = job.start(graft.streaming.Pipeline.decodeAvro(stream, schemaJson))
@@ -253,10 +253,10 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     assert(plan.collectLeaves().size == 1, "multi-sub compile must scan the batch once")
     assert(!plan.toString.contains("Union"), "no per-subscription union branches")
 
-    // semantics match the per-subscription single compiles
-    val contract = Seq("doc_id", "topic", "sub_id", "target_path", "doc_json", "doc_hash")
-    val expected = subs.map(sub => Pipeline.compile(sub, "tnt", batch)
-      .select(contract.map(col): _*)).reduce(_ unionByName _).collect().toSet
+    // semantics match the per-subscription compiles (the patterns are
+    // disjoint, so routing against all subs changes no row's owner)
+    val expected = subs.map(sub => Pipeline.compileMulti(Seq(sub), "tnt", batch))
+      .reduce(_ unionByName _).collect().toSet
     assert(out.collect().toSet == expected)
     // the masked branch really masked (score pruned from s2's doc only)
     val bySub = out.collect().map(r => r.getString(2) -> r.getString(4)).toMap
