@@ -260,9 +260,11 @@ object Pipeline {
   * Scale design: the store is hash-partitioned into `numBuckets`
   * directories keyed by `pmod(hash(target_path, doc_id), numBuckets)`;
   * a merge rewrites ONLY the buckets containing batch keys, so per-batch
-  * I/O is O(|store|/numBuckets × touched buckets), not O(|store|). At
-  * billions of ids raise numBuckets so a bucket stays executor-sized —
-  * the merge plan is a bucket-pruned scan + anti-join, unchanged.
+  * I/O is O(|store|/numBuckets × touched buckets), not O(|store|). Each
+  * merge writes one file per bucket dir, so the next `load()` opens one
+  * file per bucket however many partitions the update had. At billions
+  * of ids raise numBuckets so a bucket stays executor-sized — the merge
+  * plan is a bucket-pruned scan + anti-join, unchanged.
   *
   * Commit protocol (object-store-safe, no directory renames on the
   * read path): bucket data lives in immutable uniquely-named dirs; the
@@ -381,11 +383,12 @@ final class HashStore(spark: SparkSession, path: String, numBuckets: Int = 16) {
         .withColumn("bucket", bucketCol(buckets))
       val next = deduped.unionByName(survivors)
 
-      // stage the new bucket data, then publish each bucket dir under a
-      // fresh immutable name and flip the manifest in one rename
+      // stage the new bucket data, one file per bucket (each bucket is
+      // clustered into a single write task), then publish each bucket dir
+      // under a fresh immutable name and flip the manifest in one rename
       val stamp = java.util.UUID.randomUUID().toString.take(8)
       val staging = new HPath(root, s".stage-$stamp")
-      next.write.partitionBy("bucket").parquet(staging.toString)
+      next.repartition(col("bucket")).write.partitionBy("bucket").parquet(staging.toString)
       val replaced = touched.toSeq.sorted.map { b =>
         val dir = s"b$b-$stamp"
         if (!fs.rename(new HPath(staging, s"bucket=$b"), new HPath(root, dir)))

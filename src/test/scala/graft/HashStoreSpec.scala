@@ -60,6 +60,26 @@ class HashStoreSpec extends AnyFunSuite with SparkTestBase {
       .as[String].head() == "h1-CHANGED")
   }
 
+  test("a merge writes one data file per touched bucket dir") {
+    val root = tmp()
+    val store = new HashStore(spark, root, numBuckets = 4)
+    store.merge(rows((1 to 200).map(i => s"id-$i" -> s"h$i"): _*))
+    // stored survivors and an 8-partition update meet in every bucket
+    val update = rows((101 to 300).map(i => s"id-$i" -> s"v$i"): _*).repartition(8)
+    assert(update.rdd.getNumPartitions == 8)
+    store.merge(update)
+    val dirs = manifest(root).values
+    assert(dirs.size == 4)
+    dirs.foreach { d =>
+      val data = Files.list(Paths.get(root, d)).iterator().asScala
+        .map(_.getFileName.toString).filter(_.endsWith(".parquet")).toSeq
+      assert(data.size == 1, s"$d holds ${data.mkString(", ")}")
+    }
+    assert(store.load().select("doc_id", "doc_hash").as[(String, String)].collect().toSet
+      == ((1 to 100).map(i => s"id-$i" -> s"h$i") ++
+        (101 to 300).map(i => s"id-$i" -> s"v$i")).toSet)
+  }
+
   test("duplicate keys within one merge collapse to a single stored row") {
     val store = new HashStore(spark, tmp(), numBuckets = 2)
     store.merge(rows("a" -> "h1", "a" -> "h1", "b" -> "h2"))
