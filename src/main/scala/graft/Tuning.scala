@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.sources.{NioLocalFileSystem, NioLocalFs}
+
 /** Engine-level Spark conf defaults shared by every session-building
   * main (Bench, Verify, the measurement tools, the streaming soaks),
   * so a tuning decision is made once and every surface measures the
@@ -24,10 +26,22 @@ import org.apache.spark.sql.SparkSession
   * semantics-neutral and at worst costs the small map-side sort+copy
   * the r19 pair-core A/B measured at ~0.1-0.4 s, while data-bearing
   * cluster shuffles (R > 200) never used the bypass path anyway.
-  * Env-overridable for A/B (`SPARK_GRAFT_BYPASS_MERGE_THRESHOLD`).
+  *
+  * `fs.file.impl` / `fs.AbstractFileSystem.file.impl`: the Spark
+  * distribution ships no `libhadoop`, so Hadoop's local filesystem starts
+  * a `chmod` process for every file create and mkdir and `readlink`
+  * processes for every `FileContext` rename (the checkpoint logs and the
+  * hash-store manifest flip). In a 3 GB-heap JVM on a 4-core host one
+  * checksummed create took 10-12 ms and one rename 34-45 ms that way,
+  * against 0.5-0.7 ms for the create without the fork; a 6-batch
+  * consumer catch-up started 862 processes. The
+  * [[graft.sources.NioRawLocalFileSystem]] classes do the same through
+  * NIO. A session built without `engineDefaults` gets Hadoop's forking
+  * default.
   */
 object Tuning {
   def engineDefaults(b: SparkSession.Builder): SparkSession.Builder =
-    b.config("spark.shuffle.sort.bypassMergeThreshold",
-      sys.env.getOrElse("SPARK_GRAFT_BYPASS_MERGE_THRESHOLD", "0"))
+    b.config("spark.shuffle.sort.bypassMergeThreshold", "0")
+      .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[NioLocalFs].getName)
 }

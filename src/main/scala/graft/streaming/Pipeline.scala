@@ -280,7 +280,9 @@ object Pipeline {
   * existing store derives the modulus from the manifest, so a caller
   * passing a different `numBuckets` cannot split a key across two
   * bucket dirs. All I/O goes through the Hadoop FileSystem API — no
-  * java.io.File local-FS assumptions.
+  * java.io.File local-FS assumptions. On the local FS of a session built
+  * by `Tuning.engineDefaults` the commit path (bucket writes, publish
+  * renames, manifest flip) starts no processes ([[graft.sources.NioRawLocalFileSystem]]).
   *
   * Concurrency: `merge` is synchronized per instance, and a store path
   * must have a SINGLE writer (one StreamingJob — the registry enforces
