@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Catalog-wide cache-release audit (VERDICT r13 #3's catalog-wide
   * form): run every catalog query, materialize its result, and report
   * any persisted RDDs left registered beyond the one allowance — the
@@ -14,15 +12,7 @@ import org.apache.spark.sql.SparkSession
 object CacheAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = graft.Tuning.engineDefaults(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Tuning.localSession()
     val sc = spark.sparkContext
     var offenders = 0
     Queries.all.keys.toSeq.sorted.foreach { name =>

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, Graph}
@@ -38,15 +38,7 @@ object GraphScale {
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/repo/testdata-graph")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.Tuning.engineDefaults(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Tuning.localSession()
 
     // ---- phase 1: the big sparse graph --------------------------------
     val (nNodes, draws) = (200000L, 10500000L)

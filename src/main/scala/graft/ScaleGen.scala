@@ -201,14 +201,7 @@ object ScaleGen {
     val factor = args(2).toInt
     // optional 4th arg: hot-key skew percentage (e.g. 20)
     val skewPct = if (args.length > 3) args(3).toInt else 0
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = graft.Tuning.engineDefaults(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Tuning.localSession()
     generate(spark, srcDir, outDir, factor, skewPct)
     // FIXTURES measurement records cite this id so measurements taken
     // on silently-regenerated directories can never supersede each

@@ -6,9 +6,9 @@ import org.apache.spark.sql.types.DecimalType
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
-  * Every implemented operator from SURVEY.md §2 gets a `queries` entry
-  * (Spark plan) and, where deterministically SQL-expressible, an
-  * `oracleSql` entry (DuckDB SQL over the same parquet tables).
+  * Every implemented operator from SURVEY.md §2 gets one
+  * `Queries.catalog` entry: its Spark plan (`queries`) and its oracle
+  * (`oracleSql`, DuckDB SQL over the same parquet tables).
   *
   * Determinism rules used throughout so the driver's hash-compare is
   * stable across engines and partition orders:
@@ -30,7 +30,7 @@ object SparkEntry {
     Queries.all
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted for non-SQL-expressible ops. */
+    * the same parquet tables. */
   def oracleSql: Map[String, String] = Queries.oracles
 }
 
@@ -7729,279 +7729,8 @@ object Queries {
       .orderBy(col("cntry_bucket"))
   }
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_tpch_q2" -> (qTpchQ2 _),
-    "q_tpch_q3" -> (qTpchQ3 _),
-    "q_tpch_q4" -> (qTpchQ4 _),
-    "q_tpch_q6" -> (qTpchQ6 _),
-    "q_tpch_q7" -> (qTpchQ7 _),
-    "q_tpch_q8" -> (qTpchQ8 _),
-    "q_tpch_q9" -> (qTpchQ9 _),
-    "q_tpch_q10" -> (qTpchQ10 _),
-    "q_tpch_q12" -> (qTpchQ12 _),
-    "q_tpch_q13" -> (qTpchQ13 _),
-    "q_tpch_q14" -> (qTpchQ14 _),
-    "q_tpch_q15" -> (qTpchQ15 _),
-    "q_tpch_q16" -> (qTpchQ16 _),
-    "q_tpch_q17" -> (qTpchQ17 _),
-    "q_tpch_q18" -> (qTpchQ18 _),
-    "q_tpch_q19" -> (qTpchQ19 _),
-    "q_tpch_q20" -> (qTpchQ20 _),
-    "q_tpch_q21" -> (qTpchQ21 _),
-    "q_tpch_q22" -> (qTpchQ22 _),
-    "q_score_auc" -> (qScoreAuc _),
-    "q_ks_drift" -> (qKsDrift _),
-    "q_cohen_kappa" -> (qCohenKappa _),
-    "q_mrr_eval" -> (qMrrEval _),
-    "q_gini_concentration" -> (qGiniConcentration _),
-    "q_prf_eval" -> (qPrfEval _),
-    "q_spearman_rho" -> (qSpearmanRho _),
-    "q_score_calibration" -> (qScoreCalibration _),
-    "q_corr_matrix" -> (qCorrMatrix _),
-    "q_k_anonymity" -> (qKAnonymity _),
-    "q_rfm_scores" -> (qRfmScores _),
-    "q_join_size_profile" -> (qJoinSizeProfile _),
-    "q_group_split" -> (qGroupSplit _),
-    "q_forecast_eval" -> (qForecastEval _),
-    "q_grid_join" -> (qGridJoin _),
-    "q_dbscan" -> (qDbscan _),
-    "q_phrase_search" -> (qPhraseSearch _),
-    "q_rake_keywords" -> (qRakeKeywords _),
-    "q_seq_patterns" -> (qSeqPatterns _),
-    "q_autocorr" -> (qAutocorr _),
-    "q_changepoint" -> (qChangepoint _),
-    "q_benford_audit" -> (qBenfordAudit _),
-    "q_rolling_slope" -> (qRollingSlope _),
-    "q_hybrid_rrf" -> (qHybridRrf _),
-    "q_twap" -> (qTwap _),
-    "q_quantile_normalize" -> (qQuantileNormalize _),
-    "q_fit_transform" -> (qFitTransform _),
-    "q_ppr" -> (qPpr _),
-    "q_ind_discovery" -> (qIndDiscovery _),
-    "q_assortativity" -> (qAssortativity _),
-    "q_mutual_nn" -> (qMutualNn _),
-    "q_seasonal_decompose" -> (qSeasonalDecompose _),
-    "q_cascade_delete" -> (qCascadeDelete _),
-    "q_encoding_advisor" -> (qEncodingAdvisor _),
-    "q_post_stratify" -> (qPostStratify _),
-    "q_local_clustering" -> (qLocalClustering _),
-    "q_rolling_median" -> ((s: SparkSession, d: String) => qRollingMedian(s, d)),
-    "q_char_entropy" -> (qCharEntropy _),
-    "q_zonemap_compare" -> (qZonemapCompare _),
-    "q_hits" -> (qHits _),
-    "q_sssp_bounded" -> ((s: SparkSession, d: String) => qSsspBounded(s, d)),
-    "q_ewma" -> (qEwma _),
-    "q_label_prop" -> (qLabelProp _),
-    "q_cluster_purity" -> (qClusterPurity _),
-    "q_lexical_diversity" -> (qLexicalDiversity _),
-    "q_ngram_novelty" -> (qNgramNovelty _),
-    "q_quality_repetition" -> (qQualityRepetition _),
-    "q_decontaminate" -> (qDecontaminate _),
-    "q_kmeans_embed" -> (qKmeansEmbed _),
-    "q_semdedup" -> (qSemdedup _),
-    "q_boilerplate_ngrams" -> (qBoilerplateNgrams _),
-    "q_boilerplate_fraction" -> (qBoilerplateFraction _),
-    "q_redact_pii" -> (qRedactPii _),
-    "q_chunk_docs" -> ((s: SparkSession, d: String) => qChunkDocs(s, d)),
-    "q_pack_docs" -> (qPackDocs _),
-    "q_quota_sample" -> (qQuotaSample _),
-    "q_tfidf_topk" -> (qTfidfTopk _),
-    "q_approx_distinct_hll" -> (qApproxDistinctHll _),
-    "q_quantiles" -> (qQuantiles _),
-    "q_anomaly_mad" -> (qAnomalyMad _),
-    "q_dq_checks" -> (qDqChecks _),
-    "q_inverted_index" -> (qInvertedIndex _),
-    "q_dedup_editdist" -> (qDedupEditDistance _),
-    "q_sample_hash" -> (qSampleHash _),
-    "q_approx_distinct_kmv" -> (qApproxDistinctKmv _),
-    "q_dedup_clusters" -> (qDedupClusters _),
-    "q_dedup_survivors" -> (qDedupSurvivors _),
-    "q_curation_e2e" -> (qCurationE2e _),
-    "q_skew_salted_agg" -> (qSkewSaltedAgg _),
-    "q_skew_salted_join" -> (qSkewSaltedJoin _),
-    "q_cms_heavy_hitters" -> (qCmsHeavyHitters _),
-    "q_split_stratified" -> (qSplitStratified _),
-    "q_sample_weighted" -> (qSampleWeighted _),
-    "q1_agg" -> ((s: SparkSession, d: String) => q1Agg(s, d)),
-    "q_filter_jsonpath" -> ((s: SparkSession, d: String) => qFilterJsonpath(s, d)),
-    "q_filter_jsonpath_deep" -> (qFilterJsonpathDeep _),
-    "q_mask_project" -> (qMaskProject _),
-    "q_route_topics" -> (qRouteTopics _),
-    "q_hash_canonical" -> (qHashCanonical _),
-    "q_sync_antijoin" -> (qSyncAntijoin _),
-    "q_join_broadcast" -> ((s: SparkSession, d: String) => qJoinBroadcast(s, d)),
-    "q_join_shuffle" -> ((s: SparkSession, d: String) => qJoinShuffle(s, d)),
-    "q_bloom_join" -> (qBloomJoin _),
-    "q_interval_overlap" -> ((s: SparkSession, d: String) => qIntervalOverlapJoin(s, d)),
-    "q_source_csv" -> (qSourceCsv _),
-    "q_source_orc" -> (qSourceOrc _),
-    "q_bucketed_join" -> (qBucketedJoin _),
-    "q_partitioned_scan" -> (qPartitionedScan _),
-    "q_schema_evolution" -> (qSchemaEvolution _),
-    "q_source_cfs" -> (qSourceCfs _),
-    "q_quantile_global" -> ((s: SparkSession, d: String) => qQuantileGlobal(s, d)),
-    "q_gapfill" -> ((s: SparkSession, d: String) => qGapFill(s, d)),
-    "q_incremental_agg" -> (qIncrementalAgg _),
-    "q_null_semantics" -> (qNullSemantics _),
-    "q_vocab_coverage" -> (qVocabCoverage _),
-    "q_ngram_lm_score" -> (qNgramLmScore _),
-    "q_dup_spans" -> (qDupSpans _),
-    "q_pagerank" -> (qPagerank _),
-    "q_triangle_count" -> (qTriangleCount _),
-    "q_rolling_window" -> (qRollingWindow _),
-    "q_sim_join_exact" -> (qSimJoinExact _),
-    "q_containment_join" -> (qContainmentJoin _),
-    "q_dsir_resample" -> (qDsirResample _),
-    "q_domain_mix" -> (qDomainMix _),
-    "q_mix_materialize" -> (qMixMaterialize _),
-    "q_paragraph_dedup" -> (qParagraphDedup _),
-    "q_pmi_collocations" -> (qPmiCollocations _),
-    "q_curriculum" -> (qCurriculum _),
-    "q_incremental_dedup" -> (qIncrementalDedup _),
-    "q_cdc_chunks" -> (qCdcChunks _),
-    "q_weighted_quantiles" -> (qWeightedQuantiles _),
-    "q_source_ablation" -> (qSourceAblation _),
-    "q_fd_discovery" -> (qFdDiscovery _),
-    "q_eval_leakage" -> (qEvalLeakage _),
-    "q_approx_rewrite" -> (qApproxRewrite _),
-    "q_contrastive_pairs" -> (qContrastivePairs _),
-    "q_winsorized" -> ((s: SparkSession, d: String) => qWinsorized(s, d)),
-    "q_markov_transitions" -> (qMarkovTransitions _),
-    "q_itemset_pairs" -> (qItemsetPairs _),
-    "q_neighbor_agg" -> (qNeighborAgg _),
-    "q_attribution" -> (qAttribution _),
-    "q_trigram_search" -> (qTrigramSearch _),
-    "q_approx_rewrite_mixed" -> (qApproxRewriteMixed _),
-    "q_bfs_hops" -> ((s: SparkSession, d: String) => qBfsHops(s, d)),
-    "q_running_distinct" -> (qRunningDistinct _),
-    "q_recursive_cte" -> (qRecursiveCte _),
-    "q_ohlc_bars" -> (qOhlcBars _),
-    "q_zorder_layout" -> (qZorderLayout _),
-    "q_compaction_plan" -> (qCompactionPlan _),
-    "q_skyline_2d" -> (qSkyline2d _),
-    "q_cdc_scd2" -> (qCdcScd2 _),
-    "q_pit_join" -> (qPitJoin _),
-    "q_mv_rewrite" -> (qMvRewrite _),
-    "q_mv_rollup" -> (qMvRollup _),
-    "q_mv_rollup_avg" -> (qMvRollupAvg _),
-    "q_event_paths" -> ((s: SparkSession, d: String) => qEventPaths(s, d)),
-    "q_star_join" -> (qStarJoin _),
-    "q_table_diff" -> (qTableDiff _),
-    "q_dense_ids" -> (qDenseIds _),
-    "q_funnel" -> ((s: SparkSession, d: String) => qFunnel(s, d)),
-    "q_cohort_retention" -> (qCohortRetention _),
-    "q_topk_grouped" -> ((s: SparkSession, d: String) => qTopkGrouped(s, d)),
-    "q_lateral_topk" -> ((s: SparkSession, d: String) => qLateralTopk(s, d)),
-    "q_correlated_subquery" -> (qCorrelatedSubquery _),
-    "q_array_fns" -> (qArrayFns _),
-    "q_map_fns" -> (qMapFns _),
-    "q_bitmap_distinct" -> (qBitmapDistinct _),
-    "q_variant_extract" -> (qVariantExtract _),
-    "q_xml_roundtrip" -> (qXmlRoundtrip _),
-    "q_try_fns" -> (qTryFns _),
-    "q_source_json" -> (qSourceJson _),
-    "q_join_semi" -> (qJoinSemi _),
-    "q_join_anti" -> (qJoinAnti _),
-    "q_window_funcs" -> (qWindowFuncs _),
-    "q_window_ranks" -> ((s: SparkSession, d: String) => qWindowRanks(s, d)),
-    "q_grouping_sets" -> (qGroupingSets _),
-    "q_topk" -> (qTopK _),
-    "q_distinct" -> (qDistinct _),
-    "q_setops" -> (qSetOps _),
-    "q_scalar_fns" -> (qScalarFns _),
-    "q_unpivot" -> (qUnpivot _),
-    "q_histogram" -> (qHistogram _),
-    "q_regression" -> (qRegression _),
-    "q_regex_fns" -> (qRegexFns _),
-    "q_profile" -> (qProfile _),
-    "q_sorted_neighborhood" -> (qSortedNeighborhood _),
-    "q_kcore" -> (qKcore _),
-    "q_merge_upsert" -> (qMergeUpsert _),
-    "q_rollup" -> (qRollup _),
-    "q_event_window" -> (qEventWindow _),
-    "q_dedup_exact" -> ((s: SparkSession, d: String) => qDedupExact(s, d)),
-    "q_dedup_minhash" -> (qDedupMinhash _),
-    "q_dedup_ngram" -> (qDedupNgram _),
-    "q_dedup_simhash" -> (qDedupSimhash _),
-    "q_dedup_embedding" -> (qDedupEmbedding _),
-    "q_text_langid" -> (qTextLangid _),
-    "q_text_quality" -> (qTextQuality _),
-    "q_text_tokens" -> (qTextTokens _),
-    "q_text_fingerprint" -> (qTextFingerprint _),
-    "q_ann_bruteforce" -> ((s: SparkSession, d: String) => qAnnBruteforce(s, d)),
-    "q_ann_lsh" -> (qAnnLsh _),
-    "q_multimodal_features" -> (qMultimodalFeatures _),
-    "q_multimodal_frames" -> (qMultimodalFrames _),
-    "q_image_decode" -> (qImageDecode _),
-    "q_jpeg_decode" -> (qJpegDecode _),
-    "q_jpeg_decode_banded" -> (qJpegDecodeBanded _),
-    "q_audio_decode" -> (qAudioDecode _),
-    "q_skipgram_pairs" -> (qSkipgramPairs _),
-    "q_bm25_topk" -> (qBm25Topk _),
-    "q_blocklist_score" -> (qBlocklistScore _),
-    "q_chisq_domain" -> (qChisqDomain _),
-    "q_domain_centroid_sim" -> (qDomainCentroidSim _),
-    "q_skipgram_pmi" -> (qSkipgramPmi _),
-    "q_cc_size_hist" -> (qCcSizeHist _),
-    "q_pack_efficiency" -> (qPackEfficiency _),
-    "q_dup_ratio_by_source" -> (qDupRatioBySource _),
-    "q_hourly_activity" -> (qHourlyActivity _),
-    "q_decay_popularity" -> (qDecayPopularity _),
-    "q_null_skew_join" -> (qNullSkewJoin _),
-    "q_bpe_first_merge" -> (qBpeFirstMerge _),
-    "q_embed_quantize" -> (qEmbedQuantize _),
-    "q_langid_eval" -> (qLangidEval _),
-    "q_ann_recall" -> (qAnnRecall _),
-    "q_pipeline_e2e" -> (qPipelineE2e _),
-    "q_join_range" -> (qJoinRange _),
-    "q_range_autobin" -> (qRangeAutobin _),
-    "q_asof_join" -> (qAsofJoin _),
-    "q_agg_stats" -> ((s: SparkSession, d: String) => qAggStats(s, d)),
-    "q_udaf_weighted" -> (qUdafWeighted _),
-    "q_ann_ivf" -> (qAnnIvf _),
-    "q_sessionize" -> ((s: SparkSession, d: String) => qSessionize(s, d)),
-    "q_join_outer" -> (qJoinOuter _),
-    "q_explode_wordcount" -> (qExplodeWordcount _),
-    "q_array_agg" -> (qArrayAgg _),
-    "q_pivot" -> ((s: SparkSession, d: String) => qPivot(s, d)),
-    "q_cube" -> ((s: SparkSession, d: String) => qCube(s, d)),
-    "q_setops_all" -> (qSetopsAll _),
-    "q_date_fns" -> (qDateFns _),
-    "q_avro_decode" -> (qAvroDecode _),
-    "q_dedup_damerau" -> (qDedupDamerau _),
-    "q_link_prediction" -> (qLinkPrediction _),
-    "q_decision_stump" -> (qDecisionStump _),
-    "q_rocchio_classify" -> (qRocchioClassify _),
-    "q_knn_label" -> (qKnnLabel _),
-    "q_crosscorr" -> (qCrossCorr _),
-    "q_peak_detect" -> (qPeakDetect _),
-    "q_readability" -> (qReadability _),
-    "q_welch_ttest" -> (qWelchTtest _),
-    "q_hazard_km" -> (qHazardKm _),
-    "q_perm_test" -> (qPermTest _),
-    "q_item_lift" -> (qItemLift _),
-    "q_consistent_shard" -> (qConsistentShard _),
-    "q_sax_motifs" -> (qSaxMotifs _),
-    "q_heavy_change" -> (qHeavyChange _),
-    "q_table_checksum" -> (qTableChecksum _),
-    "q_bpe_merges" -> (qBpeMerges _),
-    "q_bpe_encode" -> (qBpeEncode _),
-    "q_eb_shrinkage" -> (qEbShrinkage _),
-    "q_mode_disc" -> (qModeDisc _),
-    "q_autocomplete" -> (qAutocomplete _),
-    "q_fano_burstiness" -> (qFanoBurstiness _),
-    "q_interarrival" -> (qInterarrival _),
-    "q_minhash_calibration" -> (qMinhashCalibration _),
-    "q_multipattern_scan" -> (qMultipatternScan _),
-    "q_vocab_growth" -> (qVocabGrowth _),
-    "q_behavior_diversity" -> (qBehaviorDiversity _),
-    "q_scd2_read" -> (qScd2Read _),
-    "q_dedup_panel" -> (qDedupPanel _),
-    "q_peak_concurrency" -> (qPeakConcurrency _),
-    "q_diameter_2sweep" -> (qDiameter2Sweep _),
-    "q_hll_union" -> (qHllUnion _),
-    "q_activity_streaks" -> (qActivityStreaks _)
-  )
+  /** A catalog query's Spark plan and its oracle. */
+  final case class Entry(plan: (SparkSession, String) => DataFrame, oracle: String)
 
   /** Shared oracle CTEs for the shingle/minhash pipeline (DuckDB). */
   private val shingleCte =
@@ -8077,12 +7806,15 @@ object Queries {
     head + ",\n" + rounds
   }
 
-  val oracles: Map[String, String] = Map(
+  /** Every catalog query, declared once: the name, the Spark plan, and
+    * the DuckDB SQL over the same parquet tables that must return the
+    * same rows. */
+  val catalog: Map[String, Entry] = Map(
     // TPC-H decorrelation shapes: the oracle states each query in its
     // CORRELATED form (scalar subquery / EXISTS / IN / NOT EXISTS) so
     // the compare proves the declarative decorrelated Spark plan
     // computes the correlated semantics exactly.
-    "q_tpch_q2" ->
+    "q_tpch_q2" -> Entry(qTpchQ2 _,
       """WITH es AS (SELECT s_suppkey, s_name FROM supplier
         |  JOIN nation ON s_nationkey = n_nationkey
         |  JOIN region ON n_regionkey = r_regionkey WHERE r_name = 'EUROPE'),
@@ -8095,9 +7827,9 @@ object Queries {
         |FROM off o
         |WHERE o.pc = (SELECT min(o2.pc) FROM off o2
         |  WHERE o2.l_partkey = o.l_partkey)
-        |ORDER BY p_partkey, s_suppkey""".stripMargin,
+        |ORDER BY p_partkey, s_suppkey""".stripMargin),
 
-    "q_tpch_q4" ->
+    "q_tpch_q4" -> Entry(qTpchQ4 _,
       """SELECT o_orderpriority, CAST(count(*) AS BIGINT) order_count
         |FROM orders
         |WHERE o_orderdate >= TIMESTAMP '1996-07-01'
@@ -8106,18 +7838,18 @@ object Queries {
         |    WHERE l_orderkey = o_orderkey
         |    AND date_diff('day', CAST(o_orderdate AS DATE),
         |        CAST(l_shipdate AS DATE)) > 30)
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
+        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
 
-    "q_tpch_q13" ->
+    "q_tpch_q13" -> Entry(qTpchQ13 _,
       """WITH co AS (SELECT c_custkey,
         |    CAST(count(o_orderkey) AS BIGINT) c_count
         |  FROM customer LEFT JOIN orders ON c_custkey = o_custkey
         |    AND o_orderpriority <> '1-URGENT'
         |  GROUP BY c_custkey)
         |SELECT c_count, CAST(count(*) AS BIGINT) custdist FROM co
-        |GROUP BY c_count ORDER BY custdist DESC, c_count DESC""".stripMargin,
+        |GROUP BY c_count ORDER BY custdist DESC, c_count DESC""".stripMargin),
 
-    "q_tpch_q17" ->
+    "q_tpch_q17" -> Entry(qTpchQ17 _,
       """WITH li AS (SELECT l_partkey,
         |    CAST(floor(CAST(l_quantity AS DOUBLE) * 100) AS BIGINT) qc,
         |    CAST(floor(CAST(l_extendedprice AS DOUBLE) * 100) AS BIGINT) pc
@@ -8129,9 +7861,9 @@ object Queries {
         |WHERE l.qc * (SELECT count(*) FROM li l2
         |    WHERE l2.l_partkey = l.l_partkey) * 5
         |  < (SELECT sum(l3.qc) FROM li l3 WHERE l3.l_partkey = l.l_partkey)
-        |ORDER BY n_lines""".stripMargin,
+        |ORDER BY n_lines""".stripMargin),
 
-    "q_tpch_q18" ->
+    "q_tpch_q18" -> Entry(qTpchQ18 _,
       """SELECT c_custkey, c_name, o_orderkey,
         |  strftime(CAST(o_orderdate AS DATE), '%Y-%m-%d') order_date,
         |  CAST(floor(CAST(o_totalprice AS DOUBLE) * 100) AS BIGINT)
@@ -8143,9 +7875,9 @@ object Queries {
         |WHERE o_orderkey IN (SELECT l_orderkey FROM lineitem GROUP BY 1
         |  HAVING sum(CAST(floor(CAST(l_quantity AS DOUBLE) * 100)
         |    AS BIGINT)) > 30000)
-        |ORDER BY total_cents DESC, o_orderkey""".stripMargin,
+        |ORDER BY total_cents DESC, o_orderkey""".stripMargin),
 
-    "q_tpch_q21" ->
+    "q_tpch_q21" -> Entry(qTpchQ21 _,
       """WITH late AS (SELECT DISTINCT l_orderkey, l_suppkey
         |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
         |  WHERE date_diff('day', CAST(o_orderdate AS DATE),
@@ -8159,9 +7891,9 @@ object Queries {
         |      AND l3.l_suppkey <> l1.l_suppkey))
         |SELECT s_name, CAST(count(*) AS BIGINT) numwait
         |FROM sole JOIN supplier ON l_suppkey = s_suppkey
-        |GROUP BY s_name ORDER BY numwait DESC, s_name LIMIT 20""".stripMargin,
+        |GROUP BY s_name ORDER BY numwait DESC, s_name LIMIT 20""".stripMargin),
 
-    "q_tpch_q6" ->
+    "q_tpch_q6" -> Entry(qTpchQ6 _,
       """WITH f AS (SELECT
         |    CAST(floor(CAST(l_extendedprice AS DOUBLE)*100) AS BIGINT) pc,
         |    CAST(floor(CAST(l_discount AS DOUBLE)*100) AS BIGINT) dpct
@@ -8172,9 +7904,9 @@ object Queries {
         |SELECT CAST(sum(pc * dpct) AS BIGINT) revenue_u,
         |  CAST(count(*) AS BIGINT) n_lines
         |FROM f WHERE dpct BETWEEN 5 AND 7
-        |ORDER BY n_lines""".stripMargin,
+        |ORDER BY n_lines""".stripMargin),
 
-    "q_tpch_q3" ->
+    "q_tpch_q3" -> Entry(qTpchQ3 _,
       """SELECT l_orderkey,
         |  strftime(CAST(o_orderdate AS DATE), '%Y-%m-%d') order_date,
         |  o_orderpriority,
@@ -8187,9 +7919,9 @@ object Queries {
         |  AND o_orderdate < TIMESTAMP '1998-06-01'
         |  AND l_shipdate > TIMESTAMP '1998-06-01'
         |GROUP BY 1, 2, 3
-        |ORDER BY revenue_cc DESC, l_orderkey LIMIT 10""".stripMargin,
+        |ORDER BY revenue_cc DESC, l_orderkey LIMIT 10""".stripMargin),
 
-    "q_tpch_q7" ->
+    "q_tpch_q7" -> Entry(qTpchQ7 _,
       """SELECT n1.n_name supp_nation, n2.n_name cust_nation,
         |  year(CAST(l_shipdate AS DATE)) l_year,
         |  CAST(sum(CAST(floor(CAST(l_extendedprice AS DOUBLE)*100) AS BIGINT)
@@ -8207,9 +7939,9 @@ object Queries {
         |  AND n1.n_name <> n2.n_name
         |  AND l_shipdate >= TIMESTAMP '1996-01-01'
         |  AND l_shipdate < TIMESTAMP '1998-01-01'
-        |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin,
+        |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin),
 
-    "q_tpch_q8" ->
+    "q_tpch_q8" -> Entry(qTpchQ8 _,
       """WITH vol AS (SELECT year(CAST(o_orderdate AS DATE)) o_year,
         |    CAST(floor(CAST(l_extendedprice AS DOUBLE)*100) AS BIGINT)
         |      * (100 - CAST(floor(CAST(l_discount AS DOUBLE)*100) AS BIGINT)) cc,
@@ -8231,9 +7963,9 @@ object Queries {
         |  CAST(sum(cc) AS BIGINT) total_cc,
         |  CAST(sum(CASE WHEN sup_nation = 'NATION_3' THEN cc ELSE 0 END)
         |    * 1000000 // sum(cc) AS BIGINT) share_ppm
-        |FROM vol GROUP BY o_year ORDER BY o_year""".stripMargin,
+        |FROM vol GROUP BY o_year ORDER BY o_year""".stripMargin),
 
-    "q_tpch_q9" ->
+    "q_tpch_q9" -> Entry(qTpchQ9 _,
       """SELECT n_name nation, year(CAST(o_orderdate AS DATE)) o_year,
         |  CAST(sum(CAST(floor(CAST(l_extendedprice AS DOUBLE)*100) AS BIGINT)
         |      * (100 - CAST(floor(CAST(l_discount AS DOUBLE)*100) AS BIGINT))
@@ -8248,9 +7980,9 @@ object Queries {
         |JOIN nation ON s_nationkey = n_nationkey
         |JOIN orders ON l_orderkey = o_orderkey
         |WHERE p_name LIKE '%rod%'
-        |GROUP BY 1, 2 ORDER BY nation, o_year DESC""".stripMargin,
+        |GROUP BY 1, 2 ORDER BY nation, o_year DESC""".stripMargin),
 
-    "q_tpch_q10" ->
+    "q_tpch_q10" -> Entry(qTpchQ10 _,
       """SELECT c_custkey, c_name, n_name,
         |  CAST(sum(CAST(floor(CAST(l_extendedprice AS DOUBLE)*100) AS BIGINT)
         |    * (100 - CAST(floor(CAST(l_discount AS DOUBLE)*100) AS BIGINT)))
@@ -8263,9 +7995,9 @@ object Queries {
         |WHERE l_returnflag = 'R'
         |  AND o_orderdate >= TIMESTAMP '1997-07-01'
         |  AND o_orderdate < TIMESTAMP '1997-10-01'
-        |GROUP BY 1, 2, 3 ORDER BY lost_cc DESC, c_custkey LIMIT 20""".stripMargin,
+        |GROUP BY 1, 2, 3 ORDER BY lost_cc DESC, c_custkey LIMIT 20""".stripMargin),
 
-    "q_tpch_q12" ->
+    "q_tpch_q12" -> Entry(qTpchQ12 _,
       """SELECT l_linestatus,
         |  CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH')
         |    THEN 1 ELSE 0 END) AS BIGINT) high_line_count,
@@ -8276,9 +8008,9 @@ object Queries {
         |    CAST(l_shipdate AS DATE)) > 30
         |WHERE l_shipdate >= TIMESTAMP '1997-01-01'
         |  AND l_shipdate < TIMESTAMP '1998-01-01'
-        |GROUP BY l_linestatus ORDER BY l_linestatus""".stripMargin,
+        |GROUP BY l_linestatus ORDER BY l_linestatus""".stripMargin),
 
-    "q_tpch_q14" ->
+    "q_tpch_q14" -> Entry(qTpchQ14 _,
       """SELECT
         |  CAST(sum(CASE WHEN p_type = 'PROMO' THEN
         |    CAST(floor(CAST(l_extendedprice AS DOUBLE)*100) AS BIGINT)
@@ -8297,9 +8029,9 @@ object Queries {
         |FROM lineitem JOIN part ON l_partkey = p_partkey
         |WHERE l_shipdate >= TIMESTAMP '1997-09-01'
         |  AND l_shipdate < TIMESTAMP '1997-10-01'
-        |ORDER BY promo_cc""".stripMargin,
+        |ORDER BY promo_cc""".stripMargin),
 
-    "q_tpch_q15" ->
+    "q_tpch_q15" -> Entry(qTpchQ15 _,
       """WITH rev AS (SELECT l_suppkey,
         |    CAST(sum(CAST(floor(CAST(l_extendedprice AS DOUBLE)*100) AS BIGINT)
         |      * (100 - CAST(floor(CAST(l_discount AS DOUBLE)*100) AS BIGINT)))
@@ -8311,9 +8043,9 @@ object Queries {
         |SELECT s_suppkey, s_name, total_cc
         |FROM rev JOIN supplier ON l_suppkey = s_suppkey
         |WHERE total_cc = (SELECT max(total_cc) FROM rev)
-        |ORDER BY s_suppkey""".stripMargin,
+        |ORDER BY s_suppkey""".stripMargin),
 
-    "q_tpch_q16" ->
+    "q_tpch_q16" -> Entry(qTpchQ16 _,
       """SELECT p_brand, p_size,
         |  CAST(count(DISTINCT l_suppkey) AS BIGINT) supplier_cnt
         |FROM lineitem JOIN part ON l_partkey = p_partkey
@@ -8321,9 +8053,9 @@ object Queries {
         |  AND l_suppkey NOT IN
         |    (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
         |GROUP BY 1, 2
-        |ORDER BY supplier_cnt DESC, p_brand, p_size""".stripMargin,
+        |ORDER BY supplier_cnt DESC, p_brand, p_size""".stripMargin),
 
-    "q_tpch_q19" ->
+    "q_tpch_q19" -> Entry(qTpchQ19 _,
       """SELECT
         |  CAST(sum(CAST(floor(CAST(l_extendedprice AS DOUBLE)*100) AS BIGINT)
         |    * (100 - CAST(floor(CAST(l_discount AS DOUBLE)*100) AS BIGINT)))
@@ -8340,9 +8072,9 @@ object Queries {
         |  OR (p_brand = 'Brand#23' AND p_size <= 15
         |    AND CAST(floor(CAST(l_quantity AS DOUBLE)*100) AS BIGINT)
         |      BETWEEN 2000 AND 3000)
-        |ORDER BY n_lines""".stripMargin,
+        |ORDER BY n_lines""".stripMargin),
 
-    "q_tpch_q20" ->
+    "q_tpch_q20" -> Entry(qTpchQ20 _,
       """WITH rl AS (SELECT l_partkey, l_suppkey,
         |    CAST(floor(CAST(l_quantity AS DOUBLE)*100) AS BIGINT) qc
         |  FROM lineitem WHERE l_partkey IN
@@ -8353,9 +8085,9 @@ object Queries {
         |  GROUP BY r1.l_partkey, r1.l_suppkey
         |  HAVING sum(r1.qc) * 2 > (SELECT sum(r2.qc) FROM rl r2
         |    WHERE r2.l_partkey = r1.l_partkey))
-        |ORDER BY s_suppkey""".stripMargin,
+        |ORDER BY s_suppkey""".stripMargin),
 
-    "q_tpch_q22" ->
+    "q_tpch_q22" -> Entry(qTpchQ22 _,
       """WITH c AS (SELECT c_custkey,
         |    CAST(floor(CAST(c_acctbal AS DOUBLE)*100) AS BIGINT) bal_c
         |  FROM customer)
@@ -8368,9 +8100,9 @@ object Queries {
         |    > (SELECT sum(c3.bal_c) FROM c c3 WHERE c3.bal_c > 0)
         |  AND NOT EXISTS
         |    (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-        |GROUP BY 1 ORDER BY cntry_bucket""".stripMargin,
+        |GROUP BY 1 ORDER BY cntry_bucket""".stripMargin),
 
-    "q_score_auc" ->
+    "q_score_auc" -> Entry(qScoreAuc _,
       """WITH ps AS (SELECT source, n_chars,
         |  sum(CASE WHEN lang='en' THEN 1 ELSE 0 END) cp,
         |  sum(CASE WHEN lang='en' THEN 0 ELSE 1 END) cn
@@ -8386,9 +8118,9 @@ object Queries {
         |SELECT source, CAST(n_pos AS BIGINT) n_pos,
         |  CAST(n_neg AS BIGINT) n_neg,
         |  CAST(u2s * 500000 // (CAST(n_pos AS HUGEINT) * n_neg) AS BIGINT) auc_ppm
-        |FROM ag ORDER BY source""".stripMargin,
+        |FROM ag ORDER BY source""".stripMargin),
 
-    "q_ks_drift" ->
+    "q_ks_drift" -> Entry(qKsDrift _,
       s"""WITH pv AS (SELECT event_type, value,
          |  sum(CASE WHEN epoch_ns(ts) < ${KsCutoffNs} THEN 1 ELSE 0 END) ca,
          |  sum(CASE WHEN epoch_ns(ts) < ${KsCutoffNs} THEN 0 ELSE 1 END) cb
@@ -8407,9 +8139,9 @@ object Queries {
          |  HAVING max(na) > 0 AND max(nb) > 0)
          |SELECT event_type, CAST(n_a AS BIGINT) n_a, CAST(n_b AS BIGINT) n_b,
          |  CAST(d_num * 1000000 // (CAST(n_a AS HUGEINT)*n_b) AS BIGINT) d_ppm
-         |FROM ag ORDER BY event_type""".stripMargin,
+         |FROM ag ORDER BY event_type""".stripMargin),
 
-    "q_cohen_kappa" ->
+    "q_cohen_kappa" -> Entry(qCohenKappa _,
       """WITH l AS (SELECT source,
         |  CASE WHEN n_chars < 216 THEN 0 WHEN n_chars < 379 THEN 1 ELSE 2 END len_label,
         |  CASE WHEN len(string_split(text,' ')) < 39 THEN 0
@@ -8429,9 +8161,9 @@ object Queries {
         |  CAST((CAST(n AS HUGEINT)*agree_n - chance_num) * 1000000
         |    // (CAST(n AS HUGEINT)*n - chance_num) AS BIGINT) kappa_ppm
         |FROM ag JOIN ch ON ag.source = ch.source
-        |ORDER BY ag.source""".stripMargin,
+        |ORDER BY ag.source""".stripMargin),
 
-    "q_prf_eval" ->
+    "q_prf_eval" -> Entry(qPrfEval _,
       """WITH p AS (SELECT source, (lang = 'en') y, (n_chars >= 306) yh
         |  FROM documents),
         |ag AS (SELECT source,
@@ -8449,12 +8181,12 @@ object Queries {
         |  CASE WHEN 2*tp + fp + fn > 0 THEN
         |    CAST(2 * tp * 1000000 // (2*tp + fp + fn) AS BIGINT) END f1_ppm,
         |  CAST((tp + tn) * 1000000 // (tp + fp + fn + tn) AS BIGINT) accuracy_ppm
-        |FROM ag ORDER BY source""".stripMargin,
+        |FROM ag ORDER BY source""".stripMargin),
 
     // tie-robust doubled-average ranks (2·rank + |peers| − 1), the
     // engine's Eval.spearmanRho convention — row_number ranks are
     // nondeterministic on fully-duplicated rows (r17 dup sweep)
-    "q_spearman_rho" ->
+    "q_spearman_rho" -> Entry(qSpearmanRho _,
       """WITH d AS (SELECT source, n_chars,
         |  len(string_split(text,' ')) wc, doc_id FROM documents),
         |r AS (SELECT source,
@@ -8468,9 +8200,9 @@ object Queries {
         |SELECT source, CAST(n AS BIGINT) n, CAST(sd4 AS BIGINT) sum_d2x4,
         |  1000000 - CAST(sd4 * 6000000
         |    // ((CAST(n AS HUGEINT) * n * n - n) * 4) AS BIGINT) rho_ppm
-        |FROM ag WHERE n > 1 ORDER BY source""".stripMargin,
+        |FROM ag WHERE n > 1 ORDER BY source""".stripMargin),
 
-    "q_score_calibration" ->
+    "q_score_calibration" -> Entry(qScoreCalibration _,
       """WITH b AS (SELECT source, n_chars, (lang = 'en') y,
         |  row_number() OVER (PARTITION BY source ORDER BY n_chars, doc_id) rn,
         |  count(*) OVER (PARTITION BY source) nd
@@ -8483,9 +8215,9 @@ object Queries {
         |  CAST(n_pos AS BIGINT) n_pos,
         |  CAST(n_pos * 1000000 // n AS BIGINT) pos_rate_ppm,
         |  CAST(score_lo AS BIGINT) score_lo, CAST(score_hi AS BIGINT) score_hi
-        |FROM g ORDER BY source, bucket""".stripMargin,
+        |FROM g ORDER BY source, bucket""".stripMargin),
 
-    "q_corr_matrix" -> {
+    "q_corr_matrix" -> Entry(qCorrMatrix _, {
       val names = Seq("d0", "d1", "d2", "d3")
       val pairs = for { i <- names.indices; j <- names.indices if i < j }
         yield (names(i), names(j))
@@ -8517,9 +8249,9 @@ object Queries {
          |  1000000 - CAST(sd2 * 6000000
          |    // ((CAST(n AS HUGEINT) * n * n - n) * 4) AS BIGINT) rho_ppm
          |FROM p WHERE n > 1 ORDER BY flag, col_x, col_y""".stripMargin
-    },
+    }),
 
-    "q_join_size_profile" -> {
+    "q_join_size_profile" -> Entry(qJoinSizeProfile _, {
       def one(name: String, a: String, ka: String, b: String, kb: String) =
         s"""SELECT '$name' join_name,
            |  CAST(count(*) AS BIGINT) matching_keys,
@@ -8533,9 +8265,9 @@ object Queries {
          |UNION ALL
          |${one("part_lineitem", "part", "p_partkey", "lineitem", "l_partkey")}
          |ORDER BY join_name""".stripMargin
-    },
+    }),
 
-    "q_group_split" ->
+    "q_group_split" -> Entry(qGroupSplit _,
       """WITH ev AS (SELECT user_id, event_id,
         |  ('0x'||substr(md5(CAST(user_id AS VARCHAR)),1,8))::BIGINT % 10 b
         |  FROM events),
@@ -8550,9 +8282,9 @@ object Queries {
         |SELECT split, CAST(n_users AS BIGINT) n_users,
         |  CAST(n_events AS BIGINT) n_events,
         |  CAST(leaked_users AS BIGINT) leaked_users
-        |FROM per, lk ORDER BY split""".stripMargin,
+        |FROM per, lk ORDER BY split""".stripMargin),
 
-    "q_forecast_eval" ->
+    "q_forecast_eval" -> Entry(qForecastEval _,
       """WITH h AS (SELECT event_type,
         |  epoch_ns(ts) // 3600000000000 hidx, count(*) n_obs
         |  FROM events GROUP BY 1, 2),
@@ -8574,9 +8306,9 @@ object Queries {
         |  CAST(seasonal_ae AS BIGINT) seasonal_ae,
         |  CAST(naive_ae AS BIGINT) naive_ae,
         |  CAST(CAST(seasonal_ae AS HUGEINT) * 1000000 // naive_ae AS BIGINT) mase_ppm
-        |FROM ag WHERE naive_ae > 0 ORDER BY event_type""".stripMargin,
+        |FROM ag WHERE naive_ae > 0 ORDER BY event_type""".stripMargin),
 
-    "q_grid_join" ->
+    "q_grid_join" -> Entry(qGridJoin _,
       """WITH p AS (SELECT vec_id,
         |  CAST(floor((CAST(embedding[1] AS DOUBLE)+1.0)*1048576) AS BIGINT) xi,
         |  CAST(floor((CAST(embedding[2] AS DOUBLE)+1.0)*1048576) AS BIGINT) yi
@@ -8587,7 +8319,7 @@ object Queries {
         |FROM p a, p b, nn WHERE a.vec_id < b.vec_id
         |  AND (a.xi-b.xi)*(a.xi-b.xi)+(a.yi-b.yi)*(a.yi-b.yi)
         |      <= CAST(1000000 AS BIGINT)*1000000//nn.n
-        |ORDER BY id_a, id_b""".stripMargin,
+        |ORDER BY id_a, id_b""".stripMargin),
 
     // MATERIALIZED hints are load-bearing at scale: pr (the O(n²)
     // brute-force pair scan — deliberately naive, it IS the referee)
@@ -8595,7 +8327,7 @@ object Queries {
     // multiply-referenced CTEs by default, re-running the quadratic
     // scan per reference (the q_kcore exponential-inline class).
     // Semantics identical.
-    "q_dbscan" ->
+    "q_dbscan" -> Entry(qDbscan _,
       """WITH RECURSIVE p AS MATERIALIZED (SELECT vec_id,
         |  CAST(floor((CAST(embedding[1] AS DOUBLE)+1.0)*1048576) AS BIGINT) xi,
         |  CAST(floor((CAST(embedding[2] AS DOUBLE)+1.0)*1048576) AS BIGINT) yi
@@ -8623,9 +8355,9 @@ object Queries {
         |  CAST(sum(CASE WHEN role='core' THEN 1 ELSE 0 END) AS BIGINT) n_core,
         |  CAST(sum(CASE WHEN role='border' THEN 1 ELSE 0 END) AS BIGINT) n_border,
         |  CAST(count(*) AS BIGINT) n_points
-        |FROM allp GROUP BY cluster_rep ORDER BY cluster_rep""".stripMargin,
+        |FROM allp GROUP BY cluster_rep ORDER BY cluster_rep""".stripMargin),
 
-    "q_phrase_search" ->
+    "q_phrase_search" -> Entry(qPhraseSearch _,
       """WITH tok AS (SELECT doc_id,
         |  unnest(string_split(text,' ')) w,
         |  unnest(range(1, len(string_split(text,' '))+1)) pos
@@ -8640,9 +8372,9 @@ object Queries {
         |  JOIN t2 ON t1.doc_id = t2.doc_id AND t2.pos = t1.pos + 1
         |  GROUP BY t1.doc_id)
         |SELECT top1.w1, top1.w2, occ.doc_id, CAST(n_occ AS BIGINT) n_occ
-        |FROM occ, top1 ORDER BY doc_id""".stripMargin,
+        |FROM occ, top1 ORDER BY doc_id""".stripMargin),
 
-    "q_rake_keywords" ->
+    "q_rake_keywords" -> Entry(qRakeKeywords _,
       """WITH tok AS (SELECT doc_id,
         |  unnest(string_split(text,' ')) w,
         |  unnest(range(1, len(string_split(text,' '))+1)) pos
@@ -8670,9 +8402,9 @@ object Queries {
         |  CAST(min(p.score_ppm) AS BIGINT) score_ppm
         |  FROM ph JOIN pscore p USING (doc_id, grp) GROUP BY ph.phrase)
         |SELECT phrase, n_words, n_occ, score_ppm FROM agg
-        |ORDER BY score_ppm DESC, phrase LIMIT 20""".stripMargin,
+        |ORDER BY score_ppm DESC, phrase LIMIT 20""".stripMargin),
 
-    "q_seq_patterns" ->
+    "q_seq_patterns" -> Entry(qSeqPatterns _,
       """WITH e AS (SELECT user_id, event_type t1,
         |  lead(event_type,1) OVER w l1, lead(event_type,2) OVER w l2,
         |  lead(event_type,3) OVER w l3, lead(event_type,4) OVER w l4
@@ -8688,9 +8420,9 @@ object Queries {
         |SELECT t1, t2, t3, CAST(count(*) AS BIGINT) n_occ,
         |  CAST(count(DISTINCT user_id) AS BIGINT) n_users
         |FROM st WHERE t3 IS NOT NULL GROUP BY t1, t2, t3
-        |ORDER BY n_occ DESC, t1, t2, t3 LIMIT 25""".stripMargin,
+        |ORDER BY n_occ DESC, t1, t2, t3 LIMIT 25""".stripMargin),
 
-    "q_autocorr" ->
+    "q_autocorr" -> Entry(qAutocorr _,
       """WITH h AS (SELECT event_type,
         |  epoch_ns(ts) // 3600000000000 hidx, count(*) n_obs
         |  FROM events GROUP BY 1, 2),
@@ -8720,9 +8452,9 @@ object Queries {
         |    AS BIGINT) r_sign,
         |  CAST((num * 1000 // d1) * (num * 1000 // d2) AS BIGINT) r2_ppm
         |FROM fin WHERE d1 > 0 AND d2 > 0
-        |ORDER BY event_type, lag_h""".stripMargin,
+        |ORDER BY event_type, lag_h""".stripMargin),
 
-    "q_changepoint" ->
+    "q_changepoint" -> Entry(qChangepoint _,
       """WITH h AS (SELECT event_type,
         |  epoch_ns(ts) // 3600000000000 hidx, count(*) n_obs
         |  FROM events GROUP BY 1, 2),
@@ -8751,9 +8483,9 @@ object Queries {
         |  CAST((total - p) * 1000000 // (n_hours - cp_t) AS BIGINT)
         |    post_mean_ppm
         |FROM cp JOIN pre ON pre.event_type = cp.event_type AND pre.t = cp.cp_t
-        |ORDER BY cp.event_type""".stripMargin,
+        |ORDER BY cp.event_type""".stripMargin),
 
-    "q_benford_audit" ->
+    "q_benford_audit" -> Entry(qBenfordAudit _,
       """WITH c AS (SELECT CAST(floor(CAST(l_extendedprice AS DOUBLE) * 100)
         |    AS BIGINT) cents FROM lineitem),
         |o AS (SELECT CAST(substr(CAST(cents AS VARCHAR), 1, 1) AS BIGINT)
@@ -8768,9 +8500,9 @@ object Queries {
         |  CAST(benford_ppm AS BIGINT) benford_ppm,
         |  CAST(n_obs * 1000000 // total - benford_ppm AS BIGINT) dev_ppm
         |FROM o JOIN b ON o.digit = b.digit CROSS JOIN t
-        |ORDER BY o.digit""".stripMargin,
+        |ORDER BY o.digit""".stripMargin),
 
-    "q_rolling_slope" ->
+    "q_rolling_slope" -> Entry(qRollingSlope _,
       """WITH h AS (SELECT event_type,
         |  epoch_ns(ts) // 3600000000000 hidx, count(*) n_obs
         |  FROM events GROUP BY 1, 2),
@@ -8800,9 +8532,9 @@ object Queries {
         |SELECT agg.event_type, max_slope_ppm, max_slope_hidx,
         |  min_slope_ppm, min_slope_hidx
         |FROM agg JOIN up USING (event_type) JOIN dn USING (event_type)
-        |ORDER BY agg.event_type""".stripMargin,
+        |ORDER BY agg.event_type""".stripMargin),
 
-    "q_hybrid_rrf" ->
+    "q_hybrid_rrf" -> Entry(qHybridRrf _,
       """WITH t AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w
         |  FROM documents),
         |f AS (SELECT * FROM t WHERE w <> ''),
@@ -8837,9 +8569,9 @@ object Queries {
         |    + COALESCE(1000000 // (60 + r_embed), 0) rrf_ppm,
         |  r_bm25, r_embed
         |FROM bm FULL JOIN em ON bm.doc_id = em.doc_id
-        |ORDER BY rrf_ppm DESC, doc_id LIMIT 20""".stripMargin,
+        |ORDER BY rrf_ppm DESC, doc_id LIMIT 20""".stripMargin),
 
-    "q_twap" ->
+    "q_twap" -> Entry(qTwap _,
       """WITH e AS (SELECT event_type, epoch_ns(ts) tsn, event_id,
         |  CAST(floor(CAST(value AS DOUBLE) * 100) AS BIGINT) cents
         |  FROM events),
@@ -8852,9 +8584,9 @@ object Queries {
         |  CAST(sum(CAST(cents AS HUGEINT) * dt) // sum(dt) AS BIGINT)
         |    twap_cents
         |FROM l WHERE dt IS NOT NULL GROUP BY event_type
-        |ORDER BY event_type""".stripMargin,
+        |ORDER BY event_type""".stripMargin),
 
-    "q_quantile_normalize" ->
+    "q_quantile_normalize" -> Entry(qQuantileNormalize _,
       """WITH e AS (SELECT event_type, event_id,
         |  CAST(floor(CAST(value AS DOUBLE) * 100) AS BIGINT) cents
         |  FROM events WHERE value IS NOT NULL),
@@ -8874,9 +8606,9 @@ object Queries {
         |  CAST(max(gval) AS BIGINT) max_norm,
         |  CAST(sum(CAST(gval AS HUGEINT)) AS BIGINT) sum_norm
         |FROM j JOIN g ON j.gpos = g.gpos GROUP BY j.event_type
-        |ORDER BY j.event_type""".stripMargin,
+        |ORDER BY j.event_type""".stripMargin),
 
-    "q_fit_transform" ->
+    "q_fit_transform" -> Entry(qFitTransform _,
       """WITH e AS (SELECT event_type, event_id,
         |  CAST(floor(CAST(value AS DOUBLE) * 100) AS BIGINT) cents,
         |  ('0x'||substr(md5(CAST(event_id AS VARCHAR)),1,8))::BIGINT % 10 b
@@ -8903,9 +8635,9 @@ object Queries {
         |  CAST(min(z_ppm) AS BIGINT) min_z_ppm,
         |  CAST(max(z_ppm) AS BIGINT) max_z_ppm
         |FROM z GROUP BY split, event_type
-        |ORDER BY split, event_type""".stripMargin,
+        |ORDER BY split, event_type""".stripMargin),
 
-    "q_ppr" ->
+    "q_ppr" -> Entry(qPpr _,
       """WITH e0 AS (SELECT DISTINCT o_custkey * 2 c, l_suppkey * 2 + 1 sup
         |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
         |edges AS (SELECT c src, sup dst FROM e0
@@ -8938,9 +8670,9 @@ object Queries {
         |  FROM nodes LEFT JOIN c3 ON nodes.node = c3.dst)
         |SELECT node, CAST(r AS BIGINT) ppr_ppb FROM r3
         |WHERE node NOT IN (SELECT node FROM srcs) AND r > 0
-        |ORDER BY ppr_ppb DESC, node LIMIT 30""".stripMargin,
+        |ORDER BY ppr_ppb DESC, node LIMIT 30""".stripMargin),
 
-    "q_ind_discovery" ->
+    "q_ind_discovery" -> Entry(qIndDiscovery _,
       """WITH c1 AS (SELECT 'orders.o_custkey<customer.c_custkey' candidate,
         |  (SELECT count(DISTINCT o_custkey) FROM orders) n_lhs,
         |  (SELECT count(*) FROM (SELECT DISTINCT o_custkey v FROM orders)
@@ -8976,9 +8708,9 @@ object Queries {
         |SELECT candidate, CAST(n_lhs AS BIGINT) n_lhs,
         |  CAST(n_missing AS BIGINT) n_missing,
         |  CAST(CASE WHEN n_missing = 0 THEN 1 ELSE 0 END AS BIGINT) is_ind
-        |FROM u ORDER BY candidate""".stripMargin,
+        |FROM u ORDER BY candidate""".stripMargin),
 
-    "q_assortativity" ->
+    "q_assortativity" -> Entry(qAssortativity _,
       """WITH e0 AS (SELECT DISTINCT o_custkey * 2 src, l_suppkey * 2 + 1 dst
         |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
         |sym AS (SELECT src, dst FROM e0 UNION ALL SELECT dst, src FROM e0),
@@ -8998,9 +8730,9 @@ object Queries {
         |  CASE WHEN d1 > 0 AND d2 > 0
         |    THEN CAST((num * 1000 // d1) * (num * 1000 // d2) AS BIGINT)
         |    ELSE NULL END r2_ppm
-        |FROM fin""".stripMargin,
+        |FROM fin""".stripMargin),
 
-    "q_mutual_nn" ->
+    "q_mutual_nn" -> Entry(qMutualNn _,
       """WITH p AS (SELECT vec_id,
         |  CAST(floor((CAST(embedding[1] AS DOUBLE)+1.0)*1048576) AS BIGINT) xi,
         |  CAST(floor((CAST(embedding[2] AS DOUBLE)+1.0)*1048576) AS BIGINT) yi
@@ -9019,9 +8751,9 @@ object Queries {
         |SELECT a.pid id_a, b.pid id_b, a.d2 d2
         |FROM nn a JOIN nn b
         |  ON a.nb = b.pid AND b.nb = a.pid AND a.pid < b.pid
-        |ORDER BY id_a""".stripMargin,
+        |ORDER BY id_a""".stripMargin),
 
-    "q_seasonal_decompose" ->
+    "q_seasonal_decompose" -> Entry(qSeasonalDecompose _,
       """WITH h AS (SELECT event_type,
         |  epoch_ns(ts) // 3600000000000 hidx, count(*) n_obs
         |  FROM events GROUP BY 1, 2),
@@ -9039,9 +8771,9 @@ object Queries {
         |  CAST(CAST(sum_n AS HUGEINT) * nt * 1000000
         |    // (CAST(n_hours AS HUGEINT) * st) AS BIGINT) seasonal_ppm
         |FROM bh JOIN tt USING (event_type) WHERE st > 0
-        |ORDER BY bh.event_type, h""".stripMargin,
+        |ORDER BY bh.event_type, h""".stripMargin),
 
-    "q_cascade_delete" ->
+    "q_cascade_delete" -> Entry(qCascadeDelete _,
       """WITH v AS (SELECT c_custkey FROM customer
         |  WHERE ('0x'||substr(md5(CAST(c_custkey AS VARCHAR)),1,8))::BIGINT
         |    % 50 = 0),
@@ -9060,9 +8792,9 @@ object Queries {
         |SELECT table_name, CAST(rows_total AS BIGINT) rows_total,
         |  CAST(rows_removed AS BIGINT) rows_removed,
         |  CAST(rows_removed * 1000000 // rows_total AS BIGINT) removed_ppm
-        |FROM u ORDER BY table_name""".stripMargin,
+        |FROM u ORDER BY table_name""".stripMargin),
 
-    "q_encoding_advisor" ->
+    "q_encoding_advisor" -> Entry(qEncodingAdvisor _,
       """WITH li AS (SELECT l_orderkey, l_linenumber,
         |  l_returnflag, l_linestatus,
         |  CAST(epoch_us(l_shipdate) // 86400000000 AS VARCHAR) shipday,
@@ -9093,9 +8825,9 @@ object Queries {
         |  CASE WHEN n_runs * 4 <= n THEN 'rle'
         |       WHEN n_distinct * 100 <= n THEN 'dict'
         |       ELSE 'plain' END recommended
-        |FROM ag ORDER BY col_name""".stripMargin,
+        |FROM ag ORDER BY col_name""".stripMargin),
 
-    "q_post_stratify" ->
+    "q_post_stratify" -> Entry(qPostStratify _,
       """WITH e AS (SELECT event_type, event_id,
         |  CAST(floor(CAST(value AS DOUBLE) * 100) AS BIGINT) cents
         |  FROM events),
@@ -9113,9 +8845,9 @@ object Queries {
         |  CAST(CAST(samp_cents AS HUGEINT) * n_pop // n_samp AS BIGINT)
         |    est_cents,
         |  true_cents
-        |FROM pop JOIN sa USING (event_type) ORDER BY pop.event_type""".stripMargin,
+        |FROM pop JOIN sa USING (event_type) ORDER BY pop.event_type""".stripMargin),
 
-    "q_local_clustering" ->
+    "q_local_clustering" -> Entry(qLocalClustering _,
       """WITH g AS (SELECT epoch_ns(ts)//600000000000 slot, event_type et,
         |  user_id u, row_number() OVER (PARTITION BY
         |    epoch_ns(ts)//600000000000, event_type
@@ -9134,12 +8866,12 @@ object Queries {
         |  CAST(COALESCE(tri,0) AS BIGINT) n_triangles,
         |  CAST(COALESCE(tri,0)*2000000//(d*(d-1)) AS BIGINT) cc_ppm
         |FROM deg LEFT JOIN tn ON deg.n=tn.n WHERE d>=2
-        |ORDER BY user_id""".stripMargin,
+        |ORDER BY user_id""".stripMargin),
 
     // med2 = sum of the two middle order statistics: DuckDB's even-n
     // median is (a+b)/2 in double — a dyadic rational, so 2× is the
     // exact integer a+b on any engine
-    "q_rolling_median" ->
+    "q_rolling_median" -> Entry((s, d) => qRollingMedian(s, d),
       """WITH e AS (SELECT user_id, event_id, epoch_ns(ts)//1000000000 t,
         |  CAST(CAST(value AS DECIMAL(18,2))*100 AS BIGINT) cents FROM events)
         |SELECT user_id, event_id, t,
@@ -9147,9 +8879,9 @@ object Queries {
         |  CAST(2*median(cents) OVER w AS BIGINT) med2_cents
         |FROM e WINDOW w AS (PARTITION BY user_id ORDER BY t, event_id
         |  ROWS BETWEEN 14 PRECEDING AND CURRENT ROW)
-        |ORDER BY user_id, event_id""".stripMargin,
+        |ORDER BY user_id, event_id""".stripMargin),
 
-    "q_char_entropy" ->
+    "q_char_entropy" -> Entry(qCharEntropy _,
       """WITH ch AS (SELECT doc_id, unnest(string_split(text,'')) c
         |  FROM documents),
         |cc AS (SELECT doc_id, c, count(*) n FROM ch WHERE c<>''
@@ -9159,11 +8891,11 @@ object Queries {
         |SELECT doc_id, n_ch, CAST(n_distinct_ch AS BIGINT) n_distinct_ch,
         |  CAST(CAST(s2 AS HUGEINT)*1000000 //
         |    (CAST(n_ch AS HUGEINT)*n_ch) AS BIGINT) collision_ppm
-        |FROM ag ORDER BY doc_id""".stripMargin,
+        |FROM ag ORDER BY doc_id""".stripMargin),
 
     // the identical generated Morton formula as q_zorder_layout;
     // zone-map overlap tested per (layout, file, predicate)
-    "q_zonemap_compare" ->
+    "q_zonemap_compare" -> Entry(qZonemapCompare _,
       s"""WITH pts AS (SELECT l_partkey % ${ZorderSql.DimMod} px,
          |    (l_suppkey*37) % ${ZorderSql.DimMod} sx FROM lineitem),
          |pz AS (SELECT px, sx,
@@ -9188,9 +8920,9 @@ object Queries {
          |  (SELECT CAST(nm AS BIGINT) FROM m WHERE m.pred=pr.pred)
          |    rows_matched
          |FROM f, pr GROUP BY layout, pred
-         |ORDER BY layout, pred""".stripMargin,
+         |ORDER BY layout, pred""".stripMargin),
 
-    "q_hits" ->
+    "q_hits" -> Entry(qHits _,
       """WITH e AS (SELECT DISTINCT o_custkey c, l_suppkey sup
         |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
         |a1 AS (SELECT sup, CAST(count(*) AS HUGEINT) a1 FROM e GROUP BY sup),
@@ -9204,9 +8936,9 @@ object Queries {
         |    CAST(a2 * 1000000 // (SELECT max(a2) FROM a2) AS BIGINT) score_ppm
         |  FROM a2 ORDER BY score_ppm DESC, node LIMIT 15)
         |SELECT * FROM (SELECT * FROM hub UNION ALL SELECT * FROM auth)
-        |ORDER BY "role", score_ppm DESC, node""".stripMargin,
+        |ORDER BY "role", score_ppm DESC, node""".stripMargin),
 
-    "q_sssp_bounded" ->
+    "q_sssp_bounded" -> Entry((s, d) => qSsspBounded(s, d),
       """WITH ol AS (SELECT o_custkey*2 c, l_suppkey*2+1 sup,
         |    CAST(floor(CAST(l_extendedprice AS DOUBLE) * 100) AS BIGINT) cents
         |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
@@ -9227,11 +8959,11 @@ object Queries {
         |d4 AS (SELECT node, min(d) d FROM (SELECT node, d FROM d3
         |  UNION ALL SELECT e.dst, d3.d + e.w FROM d3
         |  JOIN e ON e.src = d3.node) GROUP BY node)
-        |SELECT node, d dist_cents FROM d4 ORDER BY node""".stripMargin,
+        |SELECT node, d dist_cents FROM d4 ORDER BY node""".stripMargin),
 
     // dyadic alpha=1/2 EWMA: num = sum of lag_j * 2^(15-j), den
     // telescopes to 2^16 - 2^(16-n); exact integers on both engines
-    "q_ewma" ->
+    "q_ewma" -> Entry(qEwma _,
       """WITH ev AS (SELECT event_type, event_id, epoch_ns(ts)//1000000000 t,
         |  CAST(CAST(value AS DECIMAL(18,2))*100 AS BIGINT) cents FROM events),
         |l AS (SELECT event_type, event_id, t,
@@ -9256,9 +8988,9 @@ object Queries {
         |  ROWS BETWEEN 15 PRECEDING AND CURRENT ROW))
         |SELECT event_type, event_id, t, n_win,
         |  num // (65536 - (65536 // CAST(2**n_win AS BIGINT))) ewma_cents
-        |FROM l ORDER BY event_type, event_id""".stripMargin,
+        |FROM l ORDER BY event_type, event_id""".stripMargin),
 
-    "q_label_prop" ->
+    "q_label_prop" -> Entry(qLabelProp _,
       """WITH p AS (SELECT vec_id,
         |  CAST(floor((CAST(embedding[1] AS DOUBLE)+1.0)*1048576) AS BIGINT) xi,
         |  CAST(floor((CAST(embedding[2] AS DOUBLE)+1.0)*1048576) AS BIGINT) yi
@@ -9280,9 +9012,9 @@ object Queries {
         |  UNION ALL SELECT e.dst, l2.lab FROM l2
         |  JOIN e ON e.src = l2.node) GROUP BY node)
         |SELECT lab AS "label", CAST(count(*) AS BIGINT) n_members FROM l3
-        |GROUP BY lab ORDER BY "label"""".stripMargin,
+        |GROUP BY lab ORDER BY "label"""".stripMargin),
 
-    "q_k_anonymity" ->
+    "q_k_anonymity" -> Entry(qKAnonymity _,
       """WITH q AS (SELECT source, lang, n_chars // 100 len_bucket,
         |  CASE WHEN len(string_split(text,' ')) < 39 THEN 0
         |       WHEN len(string_split(text,' ')) < 69 THEN 1 ELSE 2 END sens
@@ -9293,9 +9025,9 @@ object Queries {
         |  CAST(n AS BIGINT) n, CAST(n_sensitive AS BIGINT) n_sensitive,
         |  CAST(CASE WHEN n < 5 THEN 1 ELSE 0 END AS BIGINT) k_violation,
         |  CAST(CASE WHEN n_sensitive < 2 THEN 1 ELSE 0 END AS BIGINT) l_violation
-        |FROM g ORDER BY source, lang, len_bucket""".stripMargin,
+        |FROM g ORDER BY source, lang, len_bucket""".stripMargin),
 
-    "q_rfm_scores" ->
+    "q_rfm_scores" -> Entry(qRfmScores _,
       """WITH pu AS (SELECT user_id,
         |  max(epoch_ns(ts) // 1000000000) r_s, count(*) freq,
         |  CAST(sum(CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) mon
@@ -9342,9 +9074,9 @@ object Queries {
         |  CAST(count(*) AS BIGINT) n_users,
         |  CAST(sum(mon) AS BIGINT) sum_monetary_cents
         |FROM sc GROUP BY 1, 2, 3
-        |ORDER BY r_score, f_score, m_score""".stripMargin,
+        |ORDER BY r_score, f_score, m_score""".stripMargin),
 
-    "q_mrr_eval" ->
+    "q_mrr_eval" -> Entry(qMrrEval _,
       """WITH r AS (SELECT user_id, event_type,
         |  row_number() OVER (PARTITION BY user_id
         |    ORDER BY value DESC, event_id) rnk
@@ -9352,9 +9084,9 @@ object Queries {
         |SELECT user_id, CAST(min(rnk) AS BIGINT) first_rank,
         |  CAST(1000000 // min(rnk) AS BIGINT) rr_ppm
         |FROM r WHERE event_type = 'purchase'
-        |GROUP BY user_id ORDER BY user_id""".stripMargin,
+        |GROUP BY user_id ORDER BY user_id""".stripMargin),
 
-    "q_gini_concentration" ->
+    "q_gini_concentration" -> Entry(qGiniConcentration _,
       """WITH pu AS (SELECT event_type, user_id, count(*) x
         |  FROM events GROUP BY 1,2),
         |rk AS (SELECT event_type, user_id, x,
@@ -9366,9 +9098,9 @@ object Queries {
         |  CAST(total AS BIGINT) total,
         |  CAST((2*six - (n_units+1)*CAST(total AS HUGEINT)) * 1000000
         |    // (CAST(n_units AS HUGEINT)*total) AS BIGINT) gini_ppm
-        |FROM ag WHERE total > 0 ORDER BY event_type""".stripMargin,
+        |FROM ag WHERE total > 0 ORDER BY event_type""".stripMargin),
 
-    "q_cluster_purity" ->
+    "q_cluster_purity" -> Entry(qClusterPurity _,
       s"""WITH ${kmeansCte(Queries.KmeansK, Queries.KmeansIters)},
          |j AS (SELECT cl, label FROM a${Queries.KmeansIters}
          |  JOIN (SELECT DISTINCT vec_id, label FROM embeddings) USING (vec_id)),
@@ -9380,9 +9112,9 @@ object Queries {
          |  CAST(label AS BIGINT) majority_label,
          |  CAST(nl AS BIGINT) majority_n,
          |  CAST(nl * 1000000 // n AS BIGINT) purity_ppm
-         |FROM top WHERE rn = 1 ORDER BY cluster""".stripMargin,
+         |FROM top WHERE rn = 1 ORDER BY cluster""".stripMargin),
 
-    "q_lexical_diversity" ->
+    "q_lexical_diversity" -> Entry(qLexicalDiversity _,
       """WITH t AS (SELECT doc_id,
         |  unnest(string_split(text,' ')) tok,
         |  unnest(range(0, len(string_split(text,' ')))) pos
@@ -9400,9 +9132,9 @@ object Queries {
         |  CAST(COALESCE(n_segments, 0) AS BIGINT) n_segments,
         |  CAST(sttr_sum // n_segments AS BIGINT) msttr_ppm
         |FROM pd LEFT JOIN fs ON pd.doc_id = fs.doc_id
-        |ORDER BY pd.doc_id""".stripMargin,
+        |ORDER BY pd.doc_id""".stripMargin),
 
-    "q_ngram_novelty" ->
+    "q_ngram_novelty" -> Entry(qNgramNovelty _,
       s"""WITH ${shingleCte},
          |ex AS (SELECT doc_id, unnest(sh) shingle FROM sh),
          |fd AS (SELECT shingle, min(doc_id) first_doc FROM ex GROUP BY shingle),
@@ -9413,9 +9145,9 @@ object Queries {
          |  CAST(COALESCE(n_novel, 0) AS BIGINT) n_novel,
          |  CAST(COALESCE(n_novel, 0) * 1000000 // n_shingles AS BIGINT) novelty_ppm
          |FROM tot LEFT JOIN nov ON tot.doc_id = nov.doc_id
-         |ORDER BY tot.doc_id""".stripMargin,
+         |ORDER BY tot.doc_id""".stripMargin),
 
-    "q_quality_repetition" ->
+    "q_quality_repetition" -> Entry(qQualityRepetition _,
       """WITH w AS (SELECT doc_id, string_split(text, ' ') toks FROM documents),
         |b AS (SELECT doc_id, unnest(CASE WHEN len(toks) >= 2 THEN
         |    list_transform(generate_series(1, len(toks)-1), i -> toks[i]||' '||toks[i+1])
@@ -9432,9 +9164,9 @@ object Queries {
         |  CAST(COALESCE(bt.max_bigram * 2, 0) AS DOUBLE) / CAST(len(toks) AS DOUBLE) top_bigram_frac,
         |  COALESCE(CAST(ft.t5 - ft.d5 AS DOUBLE) / CAST(ft.t5 AS DOUBLE), 0.0) dup_5gram_frac
         |FROM w LEFT JOIN bt USING (doc_id) LEFT JOIN ft USING (doc_id)
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin),
 
-    "q_decontaminate" ->
+    "q_decontaminate" -> Entry(qDecontaminate _,
       """WITH w AS (SELECT doc_id, string_split(text, ' ') w FROM documents),
         |s4 AS (SELECT doc_id, unnest(CASE WHEN len(w) >= 4 THEN
         |    list_distinct(list_transform(generate_series(1, len(w)-3),
@@ -9445,14 +9177,14 @@ object Queries {
         |SELECT train_id, COUNT(DISTINCT tr.gram) n_shared_ngrams,
         |  COUNT(DISTINCT ev.eval_id) n_eval_docs
         |FROM tr JOIN ev USING (gram)
-        |GROUP BY train_id ORDER BY train_id""".stripMargin,
+        |GROUP BY train_id ORDER BY train_id""".stripMargin),
 
-    "q_kmeans_embed" ->
+    "q_kmeans_embed" -> Entry(qKmeansEmbed _,
       s"""WITH ${kmeansCte(Queries.KmeansK, Queries.KmeansIters)}
          |SELECT vec_id, cl AS cluster, dist2 FROM a${Queries.KmeansIters}
-         |ORDER BY vec_id""".stripMargin,
+         |ORDER BY vec_id""".stripMargin),
 
-    "q_semdedup" ->
+    "q_semdedup" -> Entry(qSemdedup _,
       s"""WITH ${kmeansCte(Queries.KmeansK, Queries.KmeansIters)},
          |nn AS (SELECT vec_id, qv, list_dot_product(qv, qv) norm2 FROM qk),
          |pairs AS (SELECT a.cl, a.vec_id id_a, b.vec_id id_b,
@@ -9462,16 +9194,16 @@ object Queries {
          |  JOIN nn na ON a.vec_id = na.vec_id
          |  JOIN nn nb ON b.vec_id = nb.vec_id)
          |SELECT cl AS cluster, id_a, id_b, cos_sim FROM pairs
-         |WHERE cos_sim >= 0.4 ORDER BY id_a, id_b""".stripMargin,
+         |WHERE cos_sim >= 0.4 ORDER BY id_a, id_b""".stripMargin),
 
-    "q_avro_decode" ->
+    "q_avro_decode" -> Entry(qAvroDecode _,
       """SELECT doc_id, lang, source, n_chars,
         |  CAST(len(string_split(text, ' ')) AS BIGINT) AS n_words,
         |  substr(text, 1, 40) AS prefix
         |FROM documents
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin),
 
-    "q1_agg" ->
+    "q1_agg" -> Entry((s, d) => q1Agg(s, d),
       """SELECT l_returnflag, l_linestatus,
         |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
         |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
@@ -9479,20 +9211,20 @@ object Queries {
         |  COUNT(*) AS count_order
         |FROM lineitem
         |GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin),
 
-    "q_filter_jsonpath" ->
+    "q_filter_jsonpath" -> Entry((s, d) => qFilterJsonpath(s, d),
       """SELECT event_id, event_type, json_extract_string(props, '$.k') AS k
         |FROM events
         |WHERE event_type IN ('purchase','click')
         |  AND json_extract_string(props, '$.k') IN ('1','2','3')
-        |ORDER BY event_id""".stripMargin,
+        |ORDER BY event_id""".stripMargin),
 
     // Mirrors qFilterJsonpathDeep's nested doc arithmetically: items[i] has
     // id=i, amount=(event_id%97)*(i+1) for i in 0..event_id%3; meta.user =
     // (user_id, user_id%7==0). Each JSONPath flag reduces to the same
     // membership test computed with DuckDB list lambdas.
-    "q_filter_jsonpath_deep" ->
+    "q_filter_jsonpath_deep" -> Entry(qFilterJsonpathDeep _,
       """SELECT event_id,
         |  user_id IN (1,2,3,4,5,6,7,8,9) AS f_dotted,
         |  len(list_filter(generate_series(0, event_id % 3),
@@ -9503,12 +9235,12 @@ object Queries {
         |  (event_id % 3 = 2) OR (user_id = 2) AS f_rec,
         |  user_id % 7 = 0 AS f_vip
         |FROM events
-        |ORDER BY event_id""".stripMargin,
+        |ORDER BY event_id""".stripMargin),
 
-    "q_mask_project" ->
-      "SELECT doc_id, text, lang FROM documents ORDER BY doc_id",
+    "q_mask_project" -> Entry(qMaskProject _,
+      "SELECT doc_id, text, lang FROM documents ORDER BY doc_id"),
 
-    "q_route_topics" ->
+    "q_route_topics" -> Entry(qRouteTopics _,
       """SELECT event_id, event_type AS topic,
         |  CASE WHEN event_type = 'purchase' THEN 'sub-01'
         |       WHEN event_type = 'click' THEN 'sub-02'
@@ -9517,16 +9249,16 @@ object Queries {
         |       WHEN event_type = 'click' THEN '_aether/clicks/' || event_type
         |       ELSE '_aether/all/' || event_type END AS target_path
         |FROM events
-        |ORDER BY event_id""".stripMargin,
+        |ORDER BY event_id""".stripMargin),
 
-    "q_hash_canonical" ->
+    "q_hash_canonical" -> Entry(qHashCanonical _,
       """SELECT doc_id,
         |  substr(md5('{"doc_id": ' || doc_id || ', "lang": "' || lang ||
         |             '", "source": "' || source || '"}'), 1, 16) AS doc_hash
         |FROM documents
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin),
 
-    "q_sync_antijoin" ->
+    "q_sync_antijoin" -> Entry(qSyncAntijoin _,
       """WITH incoming AS (
         |  SELECT doc_id,
         |    substr(md5('{"doc_id": ' || doc_id || ', "lang": "' || lang ||
@@ -9542,9 +9274,9 @@ object Queries {
         |WHERE NOT EXISTS (
         |  SELECT 1 FROM store s
         |  WHERE s.doc_id = i.doc_id AND s.doc_hash = i.doc_hash)
-        |ORDER BY i.doc_id""".stripMargin,
+        |ORDER BY i.doc_id""".stripMargin),
 
-    "q_join_broadcast" ->
+    "q_join_broadcast" -> Entry((s, d) => qJoinBroadcast(s, d),
       """SELECT r_name, n_name,
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue,
         |  COUNT(*) AS n_orders
@@ -9553,20 +9285,20 @@ object Queries {
         |JOIN nation ON c_nationkey = n_nationkey
         |JOIN region ON n_regionkey = r_regionkey
         |GROUP BY r_name, n_name
-        |ORDER BY r_name, n_name""".stripMargin,
+        |ORDER BY r_name, n_name""".stripMargin),
 
-    "q_join_shuffle" ->
+    "q_join_shuffle" -> Entry((s, d) => qJoinShuffle(s, d),
       """SELECT o_orderpriority,
         |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue,
         |  COUNT(*) AS n_items
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
         |WHERE l_discount > 0.02 AND o_orderstatus <> 'F'
         |GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin,
+        |ORDER BY o_orderpriority""".stripMargin),
 
     // rank ties broken by token string; coverage in ppm via integer
     // floor division — no float ratio crosses the engines
-    "q_vocab_coverage" ->
+    "q_vocab_coverage" -> Entry(qVocabCoverage _,
       """WITH t AS (SELECT unnest(string_split(text, ' ')) AS tok FROM documents),
         |c AS (SELECT tok, COUNT(*) AS c FROM t WHERE tok <> '' GROUP BY tok),
         |r AS (SELECT c, ROW_NUMBER() OVER (ORDER BY c DESC, tok) AS rk FROM c)
@@ -9576,12 +9308,12 @@ object Queries {
         |  COUNT(*) AS n_types,
         |  (CAST(SUM(CASE WHEN rk <= 1000 THEN c ELSE 0 END) AS BIGINT) * 1000000)
         |    // CAST(SUM(c) AS BIGINT) AS coverage_ppm
-        |FROM r""".stripMargin,
+        |FROM r""".stripMargin),
 
     // µs timestamps on both sides (epoch_us == Spark's ts div 1000
     // for the ns-parquet column); the oracle joins by plain
     // inequality — binning must not change the result
-    "q_interval_overlap" ->
+    "q_interval_overlap" -> Entry((s, d) => qIntervalOverlapJoin(s, d),
       """WITH e AS (SELECT user_id, event_id, event_type,
         |    epoch_ns(ts) // 1000 AS t_us FROM events),
         |p AS (SELECT user_id, event_id AS p_id, t_us AS p_lo,
@@ -9593,12 +9325,12 @@ object Queries {
         |  WHERE p_lo < v_hi AND v_lo < p_hi)
         |SELECT user_id, COUNT(*) AS n_overlaps,
         |  MIN(p_id * 100000 + v_id) AS min_pair
-        |FROM ov GROUP BY user_id ORDER BY user_id""".stripMargin,
+        |FROM ov GROUP BY user_id ORDER BY user_id""".stripMargin),
 
     // integer-ppm arithmetic end to end (1e6·C(bg) // C(prefix),
     // then // n_bigrams) — exact in both engines, no float drift;
     // DuckDB zips parallel unnests of the two shifted token slices
-    "q_ngram_lm_score" ->
+    "q_ngram_lm_score" -> Entry(qNgramLmScore _,
       """WITH toks AS (SELECT doc_id,
         |    list_filter(string_split(text, ' '), t -> t <> '') AS toks
         |  FROM documents),
@@ -9612,12 +9344,12 @@ object Queries {
         |  FROM bg JOIN bc USING (w1, w2) JOIN pc USING (w1))
         |SELECT doc_id, COUNT(*) AS n_bigrams,
         |  CAST(CAST(SUM(cond_ppm) AS BIGINT) // COUNT(*) AS BIGINT) AS familiarity_ppm
-        |FROM sc GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+        |FROM sc GROUP BY doc_id ORDER BY doc_id""".stripMargin),
 
     // a span is duplicated iff its 8-token window hash occurs in
     // >= 2 distinct docs; COUNT(d.h) over the left join counts the
     // doc's duplicated windows
-    "q_dup_spans" ->
+    "q_dup_spans" -> Entry(qDupSpans _,
       """WITH toks AS (SELECT doc_id,
         |    list_filter(string_split(text, ' '), t -> t <> '') AS toks
         |  FROM documents),
@@ -9630,11 +9362,11 @@ object Queries {
         |  CAST(COUNT(d.h) AS BIGINT) AS n_dup,
         |  (CAST(COUNT(d.h) AS BIGINT) * 1000000) // COUNT(*) AS dup_ppm
         |FROM w LEFT JOIN d ON w.h = d.h
-        |GROUP BY w.doc_id ORDER BY w.doc_id""".stripMargin,
+        |GROUP BY w.doc_id ORDER BY w.doc_id""".stripMargin),
 
     // struct min/max mirrors Spark's lexicographic arg-min with
     // (t, event_id) tie-break exactly
-    "q_ohlc_bars" ->
+    "q_ohlc_bars" -> Entry(qOhlcBars _,
       """WITH e AS (SELECT event_type, epoch_ns(ts) // 1000 AS t, event_id, value,
         |    (epoch_ns(ts) // 1000) // 3600000000 AS hour FROM events)
         |SELECT event_type, hour,
@@ -9642,10 +9374,10 @@ object Queries {
         |  (MAX(struct_pack(t := t, event_id := event_id, value := value))).value AS close,
         |  MAX(value) AS high, MIN(value) AS low, COUNT(*) AS volume
         |FROM e GROUP BY event_type, hour
-        |ORDER BY event_type, hour""".stripMargin,
+        |ORDER BY event_type, hour""".stripMargin),
 
     // the identical generated div/mod Morton formula, DuckDB spelling
-    "q_zorder_layout" ->
+    "q_zorder_layout" -> Entry(qZorderLayout _,
       s"""WITH q AS (SELECT l_partkey % ${ZorderSql.DimMod} AS px,
          |    l_suppkey % ${ZorderSql.DimMod} AS sx
          |    FROM lineitem),
@@ -9654,11 +9386,11 @@ object Queries {
          |SELECT z // ${ZorderSql.FileZRange} AS fid, COUNT(*) AS n_rows,
          |  MIN(px) AS min_p, MAX(px) AS max_p,
          |  MIN(sx) AS min_s, MAX(sx) AS max_s
-         |FROM z GROUP BY fid ORDER BY fid""".stripMargin,
+         |FROM z GROUP BY fid ORDER BY fid""".stripMargin),
 
     // streaming first-fit: bin = cum-bytes-before // target, per
     // event_type partition
-    "q_compaction_plan" ->
+    "q_compaction_plan" -> Entry(qCompactionPlan _,
       """WITH f AS (SELECT event_type,
         |    (epoch_ns(ts) // 1000) // 86400000000 AS day, COUNT(*) AS bytes
         |  FROM events GROUP BY event_type, day),
@@ -9671,10 +9403,10 @@ object Queries {
         |  CAST(SUM(bytes) AS BIGINT) AS total_bytes,
         |  MIN(day) AS min_day, MAX(day) AS max_day
         |FROM b GROUP BY event_type, bin
-        |ORDER BY event_type, bin""".stripMargin,
+        |ORDER BY event_type, bin""".stripMargin),
 
     // O(n²) strict-dominance oracle for the window-based skyline
-    "q_skyline_2d" ->
+    "q_skyline_2d" -> Entry(qSkyline2d _,
       """WITH p AS (SELECT user_id,
         |    CAST(SUM(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS x,
         |    COUNT(*) AS y
@@ -9682,11 +9414,11 @@ object Queries {
         |SELECT user_id, x, y FROM p
         |WHERE NOT EXISTS (SELECT 1 FROM p q
         |  WHERE q.x >= p.x AND q.y >= p.y AND (q.x > p.x OR q.y > p.y))
-        |ORDER BY user_id""".stripMargin,
+        |ORDER BY user_id""".stripMargin),
 
     // lead() over the per-key changelog; deletes close versions
     // without emitting one
-    "q_cdc_scd2" ->
+    "q_cdc_scd2" -> Entry(qCdcScd2 _,
       """WITH c AS (SELECT user_id, epoch_ns(ts) // 1000 AS t, event_id, value,
         |    CASE WHEN value < 5 THEN 'D' ELSE 'U' END AS op FROM events),
         |v AS (SELECT *, LEAD(t) OVER (PARTITION BY user_id
@@ -9694,11 +9426,11 @@ object Queries {
         |SELECT user_id, event_id, t AS valid_from, valid_to, value AS val,
         |  (valid_to IS NULL) AS is_current
         |FROM v WHERE op = 'U'
-        |ORDER BY user_id, valid_from, event_id""".stripMargin,
+        |ORDER BY user_id, valid_from, event_id""".stripMargin),
 
     // independent oracle formulation: correlated latest-change-before
     // subquery (tombstones read NULL) vs the union+window merge
-    "q_pit_join" ->
+    "q_pit_join" -> Entry(qPitJoin _,
       """WITH e AS (SELECT user_id, epoch_ns(ts) // 1000 AS t, event_id,
         |    event_type, value FROM events),
         |c AS (SELECT user_id, t, event_id,
@@ -9709,20 +9441,20 @@ object Queries {
         |  (SELECT v.v FROM c v WHERE v.user_id = f.user_id
         |     AND (v.t, v.event_id) < (f.t, f.event_id)
         |   ORDER BY v.t DESC, v.event_id DESC LIMIT 1) AS profile_val
-        |FROM f ORDER BY user_id, event_id""".stripMargin,
+        |FROM f ORDER BY user_id, event_id""".stripMargin),
 
     // from-scratch rollup: the MV rewrite must be value-invisible
-    "q_mv_rewrite" ->
+    "q_mv_rewrite" -> Entry(qMvRewrite _,
       """SELECT l_returnflag, l_linestatus,
         |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
         |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price,
         |  COUNT(*) AS n_rows
         |FROM lineitem GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin),
 
     // from-scratch coarse aggregate: the roll-up over the fine MV
     // must be value-identical (integer-cent measures, exact)
-    "q_mv_rollup" ->
+    "q_mv_rollup" -> Entry(qMvRollup _,
       """SELECT l_returnflag,
         |  CAST(SUM(CAST(CAST(l_quantity AS DECIMAL(18,2)) * 100 AS BIGINT))
         |    AS BIGINT) AS sum_qty_cents,
@@ -9732,13 +9464,13 @@ object Queries {
         |  MAX(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT))
         |    AS max_price_cents
         |FROM lineitem GROUP BY l_returnflag
-        |ORDER BY l_returnflag""".stripMargin,
+        |ORDER BY l_returnflag""".stripMargin),
 
     // from-scratch avg in exact HUGEINT arithmetic: Spark's decimal
     // avg rounds S/N half-up at scale 6, i.e. micros =
     // floor((2*cents*10^4 + n) / (2n)) for positive sums — the MV
     // avg roll-up must reproduce it bit-exactly
-    "q_mv_rollup_avg" ->
+    "q_mv_rollup_avg" -> Entry(qMvRollupAvg _,
       """WITH g AS (SELECT l_returnflag,
         |    SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT))
         |      AS sc,
@@ -9747,11 +9479,11 @@ object Queries {
         |SELECT l_returnflag,
         |  CAST((2 * sc * 10000 + n) // (2 * n) AS BIGINT) AS avg_price_micros,
         |  CAST(n AS BIGINT) AS n_rows
-        |FROM g ORDER BY l_returnflag""".stripMargin,
+        |FROM g ORDER BY l_returnflag""".stripMargin),
 
     // two leads over the per-user order; count unique per triple so
     // (n DESC, e1, e2, e3) is a total order
-    "q_event_paths" ->
+    "q_event_paths" -> Entry((s, d) => qEventPaths(s, d),
       """WITH e AS (SELECT user_id, epoch_ns(ts) // 1000 AS t, event_id,
         |    event_type FROM events),
         |p AS (SELECT event_type AS e1,
@@ -9763,10 +9495,10 @@ object Queries {
         |SELECT e1, e2, e3, COUNT(*) AS n FROM p
         |WHERE e2 IS NOT NULL AND e3 IS NOT NULL
         |GROUP BY e1, e2, e3
-        |ORDER BY n DESC, e1, e2, e3 LIMIT 10""".stripMargin,
+        |ORDER BY n DESC, e1, e2, e3 LIMIT 10""".stripMargin),
 
     // full dimension chain; decimal-routed revenue for exactness
-    "q_star_join" ->
+    "q_star_join" -> Entry(qStarJoin _,
       """SELECT r_name,
         |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) *
         |           (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue,
@@ -9776,10 +9508,10 @@ object Queries {
         |JOIN customer ON n_nationkey = c_nationkey
         |JOIN orders   ON c_custkey = o_custkey
         |JOIN lineitem ON o_orderkey = l_orderkey
-        |GROUP BY r_name ORDER BY r_name""".stripMargin,
+        |GROUP BY r_name ORDER BY r_name""".stripMargin),
 
     // same drift construction; IS NOT DISTINCT FROM = Spark's <=>
-    "q_table_diff" ->
+    "q_table_diff" -> Entry(qTableDiff _,
       """WITH l AS (SELECT o_orderkey AS k, o_orderstatus AS st,
         |    o_totalprice AS tp FROM orders),
         |r AS (SELECT o_orderkey AS k, o_orderstatus AS st,
@@ -9798,18 +9530,18 @@ object Queries {
         |            WHEN NOT has_r THEN 'removed'
         |            WHEN eq THEN 'same' ELSE 'changed' END AS class,
         |  COUNT(*) AS n, MIN(k) AS min_key, MAX(k) AS max_key
-        |FROM j GROUP BY class ORDER BY class""".stripMargin,
+        |FROM j GROUP BY class ORDER BY class""".stripMargin),
 
     // the distributed prefix-sum assignment must equal the global
     // row_number exactly
-    "q_dense_ids" ->
+    "q_dense_ids" -> Entry(qDenseIds _,
       """SELECT doc_id,
         |  ROW_NUMBER() OVER (ORDER BY doc_id) - 1 AS dense_id
-        |FROM documents ORDER BY doc_id""".stripMargin,
+        |FROM documents ORDER BY doc_id""".stripMargin),
 
     // staged funnel mins carried through user-keyed aggregates;
     // COUNT(col) skips the users who never reach a stage
-    "q_funnel" ->
+    "q_funnel" -> Entry((s, d) => qFunnel(s, d),
       """WITH e AS (SELECT user_id, event_type,
         |    epoch_ns(ts) // 1000 AS t FROM events),
         |s1 AS (SELECT user_id,
@@ -9824,9 +9556,9 @@ object Queries {
         |SELECT COUNT(t_signup) AS n_signup,
         |  COUNT(t_click) AS n_click_after_signup,
         |  COUNT(t_purchase) AS n_purchase_after_click
-        |FROM s3""".stripMargin,
+        |FROM s3""".stripMargin),
 
-    "q_cohort_retention" ->
+    "q_cohort_retention" -> Entry(qCohortRetention _,
       """WITH e AS (SELECT DISTINCT user_id,
         |    (epoch_ns(ts) // 1000) // 604800000000 AS week FROM events),
         |first AS (SELECT user_id, MIN(week) AS cohort_week FROM e GROUP BY user_id)
@@ -9835,11 +9567,11 @@ object Queries {
         |FROM e JOIN first USING (user_id)
         |WHERE week - cohort_week <= 8
         |GROUP BY cohort_week, week_offset
-        |ORDER BY cohort_week, week_offset""".stripMargin,
+        |ORDER BY cohort_week, week_offset""".stripMargin),
 
     // the same recursion, dialect-shared syntax — the engines must
     // reach the same fixpoint
-    "q_recursive_cte" ->
+    "q_recursive_cte" -> Entry(qRecursiveCte _,
       """WITH RECURSIVE u AS (SELECT DISTINCT user_id FROM events),
         |tree(user_id, depth) AS (
         |  SELECT user_id, CAST(0 AS BIGINT) AS depth FROM u WHERE user_id = 1
@@ -9850,11 +9582,11 @@ object Queries {
         |   AND c.user_id > t.user_id)
         |SELECT depth, COUNT(*) AS n_users,
         |  MIN(user_id) AS min_id, MAX(user_id) AS max_id
-        |FROM tree GROUP BY depth ORDER BY depth""".stripMargin,
+        |FROM tree GROUP BY depth ORDER BY depth""".stripMargin),
 
     // the same three damped iterations unrolled as CTEs; all integer
     // (ppb ranks, floor division) so both engines agree bit-for-bit
-    "q_pagerank" ->
+    "q_pagerank" -> Entry(qPagerank _,
       """WITH e0 AS (SELECT DISTINCT o_custkey * 2 AS c, l_suppkey * 2 + 1 AS sup
         |            FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
         |edges AS (SELECT c AS src, sup AS dst FROM e0
@@ -9881,11 +9613,11 @@ object Queries {
         |r3 AS (SELECT nodes.node,
         |         150000000 // (SELECT n FROM nc) + (85 * COALESCE(c3.contrib, 0)) // 100 AS r
         |       FROM nodes LEFT JOIN c3 ON nodes.node = c3.dst)
-        |SELECT node, CAST(r AS BIGINT) AS rank_ppb FROM r3 ORDER BY node""".stripMargin,
+        |SELECT node, CAST(r AS BIGINT) AS rank_ppb FROM r3 ORDER BY node""".stripMargin),
 
     // brute-force 3-way-join triangle enumeration (a<b<c): the degree-
     // oriented DAG enumeration must find the identical triangle set
-    "q_triangle_count" ->
+    "q_triangle_count" -> Entry(qTriangleCount _,
       """WITH li AS (SELECT DISTINCT l_orderkey AS o, l_suppkey AS sn FROM lineitem),
         |e AS (SELECT DISTINCT x.sn AS u, y.sn AS v
         |      FROM li x JOIN li y ON x.o = y.o AND x.sn < y.sn),
@@ -9897,11 +9629,11 @@ object Queries {
         |      UNION ALL SELECT c FROM t)
         |SELECT supp_id, CAST(COUNT(*) AS BIGINT) AS n_triangles
         |FROM p GROUP BY supp_id
-        |ORDER BY n_triangles DESC, supp_id LIMIT 20""".stripMargin,
+        |ORDER BY n_triangles DESC, supp_id LIMIT 20""".stripMargin),
 
     // ANSI RANGE frames include value peers in both engines; cents
     // ride integers so the rolling sum is bit-exact
-    "q_rolling_window" ->
+    "q_rolling_window" -> Entry(qRollingWindow _,
       """WITH e AS (SELECT user_id, event_id, epoch_ns(ts) // 1000000000 AS t,
         |    CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
         |  FROM events)
@@ -9911,11 +9643,11 @@ object Queries {
         |FROM e
         |WINDOW w AS (PARTITION BY user_id ORDER BY t
         |  RANGE BETWEEN 3600 PRECEDING AND CURRENT ROW)
-        |ORDER BY user_id, event_id""".stripMargin,
+        |ORDER BY user_id, event_id""".stripMargin),
 
     // null corner rules: COUNT(col) skips nulls, <=> is IS NOT
     // DISTINCT FROM, NULLIF(x,0), aggregates skip nulls
-    "q_null_semantics" ->
+    "q_null_semantics" -> Entry(qNullSemantics _,
       """WITH o AS (SELECT *, CASE WHEN o_orderkey % 5 = 0
         |    THEN o_totalprice END AS p5 FROM orders)
         |SELECT o_orderstatus,
@@ -9925,11 +9657,11 @@ object Queries {
         |  CAST(SUM(CAST(COALESCE(p5, 0.0) AS DECIMAL(18,2))) AS DOUBLE) AS sum_coalesced,
         |  CAST(SUM(NULLIF(o_orderkey % 5, 0)) AS BIGINT) AS sum_nullif,
         |  MIN(p5) AS min_skipnull
-        |FROM o GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
+        |FROM o GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin),
 
     // identical multiplicative predicate — every comparand exactly
     // representable, so decorrelation vs direct evaluation agree
-    "q_correlated_subquery" ->
+    "q_correlated_subquery" -> Entry(qCorrelatedSubquery _,
       """SELECT o_orderkey, o_custkey, o_totalprice
         |FROM orders o
         |WHERE o_totalprice * (
@@ -9938,19 +9670,19 @@ object Queries {
         |  > 2 * (
         |    SELECT SUM(CAST(o2.o_totalprice AS DECIMAL(18,2))) FROM orders o2
         |    WHERE o2.o_custkey = o.o_custkey)
-        |ORDER BY o_orderkey""".stripMargin,
+        |ORDER BY o_orderkey""".stripMargin),
 
     // merge ≡ recompute for associative stats: the oracle just
     // aggregates the whole table
-    "q_incremental_agg" ->
+    "q_incremental_agg" -> Entry(qIncrementalAgg _,
       """SELECT o_orderpriority, COUNT(*) AS n_orders,
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue,
         |  MIN(o_totalprice) AS min_price, MAX(o_totalprice) AS max_price
-        |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
+        |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
 
     // DuckDB sees the ns timestamps via epoch_ns; integer hour ids on
     // both sides, generate_series/sequence both inclusive
-    "q_gapfill" ->
+    "q_gapfill" -> Entry((s, d) => qGapFill(s, d),
       """WITH h AS (SELECT user_id, epoch_ns(ts) // 3600000000000 AS hr,
         |    COUNT(*) AS n_obs
         |  FROM events WHERE user_id < 50 GROUP BY 1, 2),
@@ -9958,11 +9690,11 @@ object Queries {
         |g AS (SELECT user_id, unnest(generate_series(mn, mx)) AS hr FROM b)
         |SELECT g.user_id, g.hr, COALESCE(h.n_obs, 0) AS n
         |FROM g LEFT JOIN h ON g.user_id = h.user_id AND g.hr = h.hr
-        |ORDER BY g.user_id, g.hr""".stripMargin,
+        |ORDER BY g.user_id, g.hr""".stripMargin),
 
     // all-integer lambdas: filter/transform/aggregate mirror
     // list_filter/list_transform/list_aggregate exactly
-    "q_array_fns" ->
+    "q_array_fns" -> Entry(qArrayFns _,
       """WITH a AS (SELECT l_orderkey,
         |    list_sort(list(CAST(l_quantity AS BIGINT))) AS qs
         |  FROM lineitem GROUP BY 1)
@@ -9970,45 +9702,45 @@ object Queries {
         |  CAST(len(list_filter(qs, x -> x >= 25)) AS BIGINT) AS n_big,
         |  CAST(list_aggregate(list_transform(qs, x -> x * 2), 'sum') AS BIGINT) AS dbl_sum,
         |  qs[1] AS min_q
-        |FROM a ORDER BY l_orderkey""".stripMargin,
+        |FROM a ORDER BY l_orderkey""".stripMargin),
 
     // the relational equivalent of the map build/filter/rescale —
     // the oracle never constructs a map, which is the point
-    "q_map_fns" ->
+    "q_map_fns" -> Entry(qMapFns _,
       """SELECT user_id, event_type,
         |  CAST(COUNT(*) * 10 AS BIGINT) AS n_x10
         |FROM events
         |GROUP BY user_id, event_type
         |HAVING COUNT(*) >= 2
-        |ORDER BY user_id, event_type""".stripMargin,
+        |ORDER BY user_id, event_type""".stripMargin),
 
     // the bitmap two-level aggregation is exchange-shape only — the
     // oracle is the plain distinct count it replaces
-    "q_bitmap_distinct" ->
+    "q_bitmap_distinct" -> Entry(qBitmapDistinct _,
       """SELECT o_orderstatus, COUNT(DISTINCT o_custkey) AS n_customers
-        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
+        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin),
 
     // same path extraction through DuckDB's JSON operators; SUM over
     // BIGINT is HUGEINT in DuckDB, so cast back (oracle-parity rule)
-    "q_variant_extract" ->
+    "q_variant_extract" -> Entry(qVariantExtract _,
       """SELECT event_type, COUNT(*) AS n_events,
         |  CAST(SUM(CAST(props->>'$.k' AS BIGINT)) AS BIGINT) AS sum_k,
         |  MAX(CAST(props->>'$.k' AS BIGINT)) AS max_k
         |FROM events
         |WHERE CAST(props->>'$.k' AS BIGINT) % 7 = 0
-        |GROUP BY event_type ORDER BY event_type""".stripMargin,
+        |GROUP BY event_type ORDER BY event_type""".stripMargin),
 
     // the XML fragment is built from and parsed back to these exact
     // columns — the oracle selects them directly
-    "q_xml_roundtrip" ->
+    "q_xml_roundtrip" -> Entry(qXmlRoundtrip _,
       """SELECT s_suppkey, s_suppkey AS k, s_name, s_nationkey
-        |FROM supplier ORDER BY s_suppkey""".stripMargin,
+        |FROM supplier ORDER BY s_suppkey""".stripMargin),
 
     // CASE guards spell try_* semantics at the same ~1% poison rate
     // (prime-keyed overflow / zero-divisor lanes); clean-lane
     // arithmetic fits BIGINT in both engines, so no HUGEINT detour
     // is needed and the guarded NULLs line up row-for-row
-    "q_try_fns" ->
+    "q_try_fns" -> Entry(qTryFns _,
       """SELECT o_orderkey,
         |  CASE WHEN o_orderkey % 97 <> 96 THEN o_orderkey * 1000 + o_custkey
         |  END AS t_add,
@@ -10019,12 +9751,12 @@ object Queries {
         |  CASE WHEN o_orderkey % 107 <> 0 THEN
         |    CAST(o_orderkey AS DOUBLE) / CAST(o_custkey % 4 + 1 AS DOUBLE)
         |  END AS t_div
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
+        |FROM orders ORDER BY o_orderkey""".stripMargin),
 
     // the rank-k element VALUE is unique regardless of tie order, so
     // ROW_NUMBER's arbitrary tie-break is safe; ceil(q*n) mirrors the
     // Spark-side rank rule exactly
-    "q_quantile_global" ->
+    "q_quantile_global" -> Entry((s, d) => qQuantileGlobal(s, d),
       """WITH ranked AS (SELECT l_extendedprice AS v,
         |    ROW_NUMBER() OVER (ORDER BY l_extendedprice) AS rn,
         |    COUNT(*) OVER () AS n
@@ -10035,90 +9767,90 @@ object Queries {
         |  UNION ALL
         |  SELECT CAST(0.95 AS DOUBLE) AS q, v FROM ranked
         |    WHERE rn = CAST(ceil(0.95 * n) AS BIGINT))
-        |ORDER BY q""".stripMargin,
+        |ORDER BY q""".stripMargin),
 
     // round-trips go through Spark's CSV/JSON writers and readers;
     // the oracle reads the original parquet, so a hash-match proves
     // the file-format path is lossless
-    "q_source_csv" ->
+    "q_source_csv" -> Entry(qSourceCsv _,
       """SELECT n_regionkey, COUNT(*) AS n_nations, MIN(n_name) AS first_name
-        |FROM nation GROUP BY n_regionkey ORDER BY n_regionkey""".stripMargin,
+        |FROM nation GROUP BY n_regionkey ORDER BY n_regionkey""".stripMargin),
 
-    "q_source_json" ->
+    "q_source_json" -> Entry(qSourceJson _,
       """SELECT c_mktsegment, COUNT(*) AS n_customers,
         |  CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS sum_bal
-        |FROM customer GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
+        |FROM customer GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin),
 
     // aggregates the original parquet; the ORC write+read round-trip
     // must be value-invisible
-    "q_source_orc" ->
+    "q_source_orc" -> Entry(qSourceOrc _,
       """SELECT o_orderstatus, COUNT(*) AS n_orders,
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price,
         |  MAX(o_orderkey) AS max_key
-        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
+        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin),
 
     // the oracle synthesizes the writer's schema evolution with a
     // CASE: early rows (pre-cut) never carried the column
-    "q_schema_evolution" ->
+    "q_schema_evolution" -> Entry(qSchemaEvolution _,
       """SELECT CASE WHEN o_orderdate < DATE '1998-01-01' THEN NULL
         |    ELSE o_orderpriority END AS o_orderpriority,
         |  COUNT(*) AS n_orders,
         |  CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) AS sum_cents
         |FROM orders
-        |GROUP BY 1 ORDER BY o_orderpriority NULLS FIRST""".stripMargin,
+        |GROUP BY 1 ORDER BY o_orderpriority NULLS FIRST""".stripMargin),
 
     // partition layout is IO-elision only — the oracle filters the
     // unpartitioned table (also proves the partitioned round-trip)
-    "q_partitioned_scan" ->
+    "q_partitioned_scan" -> Entry(qPartitionedScan _,
       """SELECT o_orderstatus, COUNT(*) AS n_orders,
         |  CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) AS sum_cents
         |FROM orders WHERE o_orderpriority = '1-URGENT'
-        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
+        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin),
 
     // the bucketed layout is exchange-elision only — the oracle is
     // the same join+agg on the raw parquet (also proves the bucketed
     // write/read round-trip is lossless)
-    "q_bucketed_join" ->
+    "q_bucketed_join" -> Entry(qBucketedJoin _,
       """SELECT o.o_orderkey AS okey, COUNT(*) AS n_items,
         |  CAST(SUM(CAST(CAST(l.l_quantity AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) AS sum_qty_cents,
         |  MIN(CAST(CAST(o.o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS price_cents
         |FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
         |GROUP BY o.o_orderkey
-        |ORDER BY okey""".stripMargin,
+        |ORDER BY okey""".stripMargin),
 
     // round-trips documents through the DSv2 document-store scan;
     // the oracle is the same rollup on the original table
-    "q_source_cfs" ->
+    "q_source_cfs" -> Entry(qSourceCfs _,
       """SELECT 'col_' || source AS collection, lang,
         |  COUNT(*) AS n_docs, CAST(SUM(n_chars) AS BIGINT) AS sum_chars
         |FROM (SELECT DISTINCT source, doc_id, lang, n_chars FROM documents)
         |GROUP BY source, lang
-        |ORDER BY collection, lang""".stripMargin,
+        |ORDER BY collection, lang""".stripMargin),
 
     // Bloom pruning has no false negatives and the real join runs
     // after it, so the oracle is the plain join — the filter is pure
     // exchange-volume optimization
-    "q_bloom_join" ->
+    "q_bloom_join" -> Entry(qBloomJoin _,
       """SELECT substr(CAST(o_orderdate AS VARCHAR), 1, 7) AS month,
         |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue,
         |  COUNT(*) AS n_items
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
         |WHERE o_orderpriority = '1-URGENT' AND o_orderstatus = 'F'
-        |GROUP BY 1 ORDER BY month""".stripMargin,
+        |GROUP BY 1 ORDER BY month""".stripMargin),
 
-    "q_join_semi" ->
+    "q_join_semi" -> Entry(qJoinSemi _,
       """SELECT o_orderkey, o_totalprice FROM orders
         |WHERE EXISTS (SELECT 1 FROM lineitem
         |              WHERE l_orderkey = o_orderkey AND l_quantity > 45)
-        |ORDER BY o_orderkey""".stripMargin,
+        |ORDER BY o_orderkey""".stripMargin),
 
-    "q_join_anti" ->
+    "q_join_anti" -> Entry(qJoinAnti _,
       """SELECT o_orderkey, o_orderstatus FROM orders
         |WHERE NOT EXISTS (SELECT 1 FROM lineitem
         |                  WHERE l_orderkey = o_orderkey AND l_discount > 0.05)
-        |ORDER BY o_orderkey""".stripMargin,
+        |ORDER BY o_orderkey""".stripMargin),
 
-    "q_window_funcs" ->
+    "q_window_funcs" -> Entry(qWindowFuncs _,
       """SELECT event_id, user_id,
         |  ROW_NUMBER() OVER w AS rn,
         |  LAG(value, 1) OVER w AS prev_value,
@@ -10126,12 +9858,12 @@ object Queries {
         |       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS running_value
         |FROM events
         |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        |ORDER BY event_id""".stripMargin,
+        |ORDER BY event_id""".stripMargin),
 
     // rank-ratio doubles are exact rationals of small ints — bit-equal
     // across engines; ntile follows the standard first-buckets-get-+1
     // rule on both
-    "q_window_ranks" ->
+    "q_window_ranks" -> Entry((s, d) => qWindowRanks(s, d),
       """SELECT o_orderkey, o_orderpriority,
         |  CAST(DENSE_RANK() OVER w AS BIGINT) AS drank,
         |  CAST(NTILE(4) OVER w AS BIGINT) AS quartile,
@@ -10142,11 +9874,11 @@ object Queries {
         |FROM orders
         |WINDOW w AS (PARTITION BY o_orderpriority
         |             ORDER BY o_totalprice DESC, o_orderkey)
-        |ORDER BY o_orderkey""".stripMargin,
+        |ORDER BY o_orderkey""".stripMargin),
 
     // DuckDB ASC defaults to NULLS LAST where Spark defaults FIRST —
     // spelled out explicitly on both sides
-    "q_grouping_sets" ->
+    "q_grouping_sets" -> Entry(qGroupingSets _,
       """SELECT n_name, o_orderstatus,
         |  CAST(GROUPING(n_name) AS BIGINT) AS g_nation,
         |  CAST(GROUPING(o_orderstatus) AS BIGINT) AS g_status,
@@ -10155,45 +9887,45 @@ object Queries {
         |FROM orders JOIN customer ON o_custkey = c_custkey
         |JOIN nation ON c_nationkey = n_nationkey
         |GROUP BY GROUPING SETS ((n_name, o_orderstatus), (n_name), ())
-        |ORDER BY g_nation, g_status, n_name NULLS FIRST, o_orderstatus NULLS FIRST""".stripMargin,
+        |ORDER BY g_nation, g_status, n_name NULLS FIRST, o_orderstatus NULLS FIRST""".stripMargin),
 
-    "q_topk" ->
+    "q_topk" -> Entry(qTopK _,
       """SELECT o_orderkey, o_totalprice FROM orders
-        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 10""".stripMargin,
+        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 10""".stripMargin),
 
-    "q_topk_grouped" ->
+    "q_topk_grouped" -> Entry((s, d) => qTopkGrouped(s, d),
       """SELECT event_type, rk, event_id, value FROM (
         |  SELECT event_type, event_id, value,
         |    ROW_NUMBER() OVER (PARTITION BY event_type
         |      ORDER BY value DESC, event_id) AS rk
         |  FROM events)
         |WHERE rk <= 5
-        |ORDER BY event_type, rk""".stripMargin,
+        |ORDER BY event_type, rk""".stripMargin),
 
     // the identical LATERAL shape — DuckDB also supports correlated
     // lateral ORDER BY/LIMIT subqueries
-    "q_lateral_topk" ->
+    "q_lateral_topk" -> Entry((s, d) => qLateralTopk(s, d),
       """SELECT n.n_name AS nation, t.c_name AS cust_name,
         |  CAST(CAST(t.c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT) AS bal_cents
         |FROM nation n,
         |LATERAL (SELECT c_name, c_acctbal FROM customer c
         |         WHERE c.c_nationkey = n.n_nationkey
         |         ORDER BY c_acctbal DESC, c_name LIMIT 2) t
-        |ORDER BY nation, bal_cents DESC, cust_name""".stripMargin,
+        |ORDER BY nation, bal_cents DESC, cust_name""".stripMargin),
 
-    "q_distinct" ->
+    "q_distinct" -> Entry(qDistinct _,
       """SELECT DISTINCT user_id, event_type FROM events
-        |ORDER BY user_id, event_type""".stripMargin,
+        |ORDER BY user_id, event_type""".stripMargin),
 
-    "q_setops" ->
+    "q_setops" -> Entry(qSetOps _,
       """(SELECT user_id FROM events WHERE event_type = 'purchase'
         | INTERSECT
         | SELECT user_id FROM events WHERE event_type = 'click')
         |EXCEPT
         |SELECT user_id FROM events WHERE event_type = 'error' AND value > 190
-        |ORDER BY user_id""".stripMargin,
+        |ORDER BY user_id""".stripMargin),
 
-    "q_scalar_fns" ->
+    "q_scalar_fns" -> Entry(qScalarFns _,
       """SELECT p_partkey,
         |  UPPER(p_brand) AS brand_u,
         |  SUBSTR(p_name, 1, 8) AS name8,
@@ -10204,32 +9936,32 @@ object Queries {
         |  CAST(FLOOR(p_retailprice) AS BIGINT) AS price_floor,
         |  CAST(CEIL(p_retailprice) AS BIGINT) AS price_ceil
         |FROM part
-        |ORDER BY p_partkey""".stripMargin,
+        |ORDER BY p_partkey""".stripMargin),
 
     // wide→long as explicit UNION ALL (the dialect-portable dual of
     // Spark's stack generator)
-    "q_unpivot" ->
+    "q_unpivot" -> Entry(qUnpivot _,
       """SELECT p_partkey, 'retail_cents' AS metric,
         |  CAST(CAST(p_retailprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS val
         |FROM part
         |UNION ALL
         |SELECT p_partkey, 'size', CAST(p_size AS BIGINT) FROM part
-        |ORDER BY p_partkey, metric""".stripMargin,
+        |ORDER BY p_partkey, metric""".stripMargin),
 
     // bucket arithmetic is integer-exact with data-derived bounds
-    "q_histogram" ->
+    "q_histogram" -> Entry(qHistogram _,
       """WITH c AS (SELECT CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
         |           FROM lineitem),
         |b AS (SELECT MIN(cents) AS mn, MAX(cents) AS mx FROM c)
         |SELECT LEAST(CAST(19 AS BIGINT), ((cents - mn) * 20) // (mx - mn + 1)) AS bucket,
         |  COUNT(*) AS n_rows, MIN(cents) AS lo_cents, MAX(cents) AS hi_cents
         |FROM c, b
-        |GROUP BY 1 ORDER BY bucket""".stripMargin,
+        |GROUP BY 1 ORDER BY bucket""".stripMargin),
 
     // exact HUGEINT sufficient statistics; the SAME truncating
     // integer-division chains as the Spark side derive the results
     // (r² normalized by n² so every quotient is intensive)
-    "q_regression" ->
+    "q_regression" -> Entry(qRegression _,
       """WITH s0 AS (SELECT
         |    CAST(COUNT(*) AS HUGEINT) AS n,
         |    CAST(SUM(x) AS HUGEINT) AS sx,
@@ -10250,10 +9982,10 @@ object Queries {
         |  CAST((((a * 1000000000) // (n * n)) * ((a * 1000000000) // (n * n)) * 3000)
         |    // (((b * 100000000) // (n * n)) * ((c * 30000) // (n * n)))
         |    AS BIGINT) AS r2_ppb
-        |FROM s""".stripMargin,
+        |FROM s""".stripMargin),
 
     // one-scan profile; long form as UNION ALL rows
-    "q_profile" ->
+    "q_profile" -> Entry(qProfile _,
       """WITH s AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
         |  CAST(SUM(CASE WHEN c_name IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS nn_name,
         |  CAST(COUNT(DISTINCT c_name) AS BIGINT) AS nd_name,
@@ -10272,10 +10004,10 @@ object Queries {
         |  UNION ALL SELECT 'c_mktsegment', nn_seg, nd_seg, NULL, NULL
         |  UNION ALL SELECT 'c_nationkey', nn_nat, nd_nat, NULL, NULL
         |  UNION ALL SELECT 'c_acctbal', nn_bal, nd_bal, min_bal_cents, max_bal_cents) t
-        |ORDER BY column_name""".stripMargin,
+        |ORDER BY column_name""".stripMargin),
 
     // the change feed is rebuilt from the same deterministic rules
-    "q_merge_upsert" ->
+    "q_merge_upsert" -> Entry(qMergeUpsert _,
       """WITH base AS (SELECT c_custkey AS k,
         |    CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
         |  FROM customer),
@@ -10289,7 +10021,7 @@ object Queries {
         |  COALESCE(c.op, 'K') AS action
         |FROM base b FULL JOIN ch c USING (k)
         |WHERE c.op IS NULL OR c.op <> 'D'
-        |ORDER BY k""".stripMargin,
+        |ORDER BY k""".stripMargin),
 
     // 3 unrolled peel rounds; the engine's early-stop at the fixpoint
     // is invisible because post-convergence rounds are no-ops.
@@ -10298,7 +10030,7 @@ object Queries {
     // the chain re-evaluates the 6M-row distinct join exponentially
     // (measured at sf1: >75 GB of spill then disk-full abort at 588 s;
     // with the hints, 2.7 s). Semantics identical.
-    "q_kcore" ->
+    "q_kcore" -> Entry(qKcore _,
       """WITH e0 AS MATERIALIZED (SELECT DISTINCT o_custkey*2 AS u, l_suppkey*2+1 AS v
         |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
         |k1 AS MATERIALIZED (SELECT n FROM (SELECT n, COUNT(*) d FROM
@@ -10312,21 +10044,21 @@ object Queries {
         |e3 AS MATERIALIZED (SELECT u, v FROM e2 WHERE u IN (SELECT n FROM k3) AND v IN (SELECT n FROM k3))
         |SELECT n AS node, COUNT(*) AS degree FROM
         |  (SELECT u AS n FROM e3 UNION ALL SELECT v FROM e3)
-        |GROUP BY n ORDER BY node""".stripMargin,
+        |GROUP BY n ORDER BY node""".stripMargin),
 
     // rank-banded join: pairs within w ranks, per blocking segment
-    "q_sorted_neighborhood" ->
+    "q_sorted_neighborhood" -> Entry(qSortedNeighborhood _,
       """WITH r AS (SELECT c_mktsegment AS seg, c_custkey AS k,
         |    ROW_NUMBER() OVER (PARTITION BY c_mktsegment
         |      ORDER BY CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT), c_custkey) AS rn
         |  FROM customer)
         |SELECT a.seg AS seg, a.k AS k_a, b.k AS k_b, CAST(b.rn - a.rn AS BIGINT) AS gap
         |FROM r a JOIN r b ON a.seg = b.seg AND b.rn - a.rn BETWEEN 1 AND 3
-        |ORDER BY 1, k_a, k_b""".stripMargin,
+        |ORDER BY 1, k_a, k_b""".stripMargin),
 
     // DuckDB regexp_replace needs the 'g' flag to match Spark's
     // replace-all; regexp_matches is the rlike dual
-    "q_regex_fns" ->
+    "q_regex_fns" -> Entry(qRegexFns _,
       """SELECT doc_id,
         |  regexp_extract(text, '([A-Za-z]+)', 1) AS first_word,
         |  CAST(LENGTH(regexp_replace(text, '[aeiou]', '', 'g')) AS BIGINT) AS novowel_len,
@@ -10336,26 +10068,26 @@ object Queries {
         |  CASE WHEN text IS NULL THEN NULL
         |       ELSE split_part(text, ' ', 1) END AS head_tok
         |FROM documents
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin),
 
-    "q_rollup" ->
+    "q_rollup" -> Entry(qRollup _,
       """SELECT r_name, n_name, COUNT(*) AS n_customers,
         |  CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS sum_bal
         |FROM customer
         |JOIN nation ON c_nationkey = n_nationkey
         |JOIN region ON n_regionkey = r_regionkey
         |GROUP BY ROLLUP(r_name, n_name)
-        |ORDER BY r_name NULLS FIRST, n_name NULLS FIRST""".stripMargin,
+        |ORDER BY r_name NULLS FIRST, n_name NULLS FIRST""".stripMargin),
 
-    "q_event_window" ->
+    "q_event_window" -> Entry(qEventWindow _,
       """SELECT epoch_ns(ts) // 3600000000000 AS hour_bucket, event_type,
         |  COUNT(*) AS n,
         |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
         |FROM events
         |GROUP BY hour_bucket, event_type
-        |ORDER BY hour_bucket, event_type""".stripMargin,
+        |ORDER BY hour_bucket, event_type""".stripMargin),
 
-    "q_dedup_exact" ->
+    "q_dedup_exact" -> Entry((s, d) => qDedupExact(s, d),
       """WITH all_docs AS (
         |  SELECT doc_id, text FROM documents
         |  UNION ALL
@@ -10363,9 +10095,9 @@ object Queries {
         |SELECT MIN(doc_id) AS keeper_id, COUNT(*) AS n_copies, md5(text) AS text_hash
         |FROM all_docs
         |GROUP BY md5(text)
-        |ORDER BY keeper_id""".stripMargin,
+        |ORDER BY keeper_id""".stripMargin),
 
-    "q_dedup_minhash" -> {
+    "q_dedup_minhash" -> Entry(qDedupMinhash _, {
       val matches = (0 until Dedup.MinhashK)
         .map(i => s"(CASE WHEN sa.m$i = sb.m$i THEN 1 ELSE 0 END)")
         .mkString(" + ")
@@ -10376,7 +10108,7 @@ object Queries {
          |JOIN sig sa ON id_a = sa.doc_id
          |JOIN sig sb ON id_b = sb.doc_id
          |ORDER BY doc_a, doc_b""".stripMargin
-    },
+    }),
 
     // Inverted-index token self-join (Σdf² cost, not O(n²)): COUNT(*)
     // over shared distinct shingles IS |A∩B|, and any pair passing the
@@ -10389,7 +10121,7 @@ object Queries {
     // completes in ~2 s there. Still an independent check: DuckDB
     // hash-join+group-by vs the engine's PPJoin prefix filter.
     // doc_id-keyed set semantics — see q_containment_join (r17 dup sweep)
-    "q_sim_join_exact" ->
+    "q_sim_join_exact" -> Entry(qSimJoinExact _,
       s"""WITH ${shingleCte.replace("FROM documents",
              "FROM (SELECT DISTINCT doc_id, text FROM documents)")},
          |f AS (SELECT doc_id, sh FROM sh WHERE len(sh) > 0),
@@ -10400,12 +10132,12 @@ object Queries {
          |FROM tok a JOIN tok b ON a.s = b.s AND a.doc_id < b.doc_id
          |GROUP BY a.doc_id, b.doc_id, a.n, b.n
          |HAVING 2 * COUNT(*) >= a.n + b.n - COUNT(*)
-         |ORDER BY doc_a, doc_b""".stripMargin,
+         |ORDER BY doc_a, doc_b""".stripMargin),
 
     // Directional containment via the same inverted-index form (I=0 ⇒
     // 2I≥n_a impossible for n_a≥10, so dropping non-sharing pairs loses
     // nothing); replaces the >90 s O(n²) oracle at sf0.1
-    "q_containment_join" ->
+    "q_containment_join" -> Entry(qContainmentJoin _,
       // documents are keyed by doc_id: duplicate rows must not double
       // token multiplicities (set semantics — r17 dup sweep); mirrors
       // the engine's dropDuplicates(doc_id, text)
@@ -10420,14 +10152,14 @@ object Queries {
          |WHERE a.n >= 10
          |GROUP BY a.doc_id, b.doc_id, a.n
          |HAVING 2 * COUNT(*) >= a.n
-         |ORDER BY doc_a, doc_b""".stripMargin,
+         |ORDER BY doc_a, doc_b""".stripMargin),
 
     // integer-exact DSIR: per-bigram-occurrence target/raw counts,
     // ranking emitted as truncated integer ppb (never a raw double —
     // double hashing diverges across engines), deterministic top-k.
     // DuckDB `//` on non-negative HUGEINTs truncates exactly like
     // Spark's decimal `div`.
-    "q_dsir_resample" ->
+    "q_dsir_resample" -> Entry(qDsirResample _,
       """WITH w AS (SELECT doc_id, lang, string_split(text, ' ') w FROM documents),
         |bg AS (SELECT doc_id, lang, unnest(CASE WHEN len(w) >= 2 THEN
         |    list_transform(generate_series(1, len(w)-1), i -> w[i]||' '||w[i+1])
@@ -10446,12 +10178,12 @@ object Queries {
         |    // CAST(den_raw AS HUGEINT) AS BIGINT) AS weight_ppb
         |FROM scored
         |ORDER BY weight_ppb DESC, doc_id
-        |LIMIT 100""".stripMargin,
+        |LIMIT 100""".stripMargin),
 
     // integer-exact domain mixture: ttr ppb via truncating division,
     // HUGEINT weight product (mirrors the decimal(38,0) internal),
     // largest-remainder seat assignment with (rem DESC, source) ties
-    "q_domain_mix" ->
+    "q_domain_mix" -> Entry(qDomainMix _,
       """WITH w AS (SELECT source, unnest(string_split(text, ' ')) AS w FROM documents),
         |stats AS (SELECT source, COUNT(DISTINCT w) AS dw, COUNT(*) AS tw
         |          FROM w GROUP BY source),
@@ -10469,12 +10201,12 @@ object Queries {
         |SELECT source, n_docs, ttr_ppb, CAST(weight AS BIGINT) AS weight,
         |  CAST(basealloc + CASE WHEN rn <= 10000 - sumbase THEN 1 ELSE 0 END
         |    AS BIGINT) AS alloc
-        |FROM r ORDER BY source""".stripMargin,
+        |FROM r ORDER BY source""".stripMargin),
 
     // same apportionment arithmetic with a scale-free budget (half the
     // corpus), then per-domain hash-rank selection; md5-of-id ordering
     // is byte-identical across engines
-    "q_mix_materialize" ->
+    "q_mix_materialize" -> Entry(qMixMaterialize _,
       """WITH w AS (SELECT source, unnest(string_split(text, ' ')) AS w FROM documents),
         |stats AS (SELECT source, COUNT(DISTINCT w) AS dw, COUNT(*) AS tw
         |          FROM w GROUP BY source),
@@ -10500,12 +10232,12 @@ object Queries {
         |SELECT ranked.source AS source, doc_id, rk
         |FROM ranked JOIN alloc ON ranked.source = alloc.source
         |WHERE rk <= alloc
-        |ORDER BY ranked.source, rk""".stripMargin,
+        |ORDER BY ranked.source, rk""".stripMargin),
 
     // paragraph = fixed 10-word block on this punctuation-free text;
     // first occurrence = smallest (doc_id, pos); reassembled-text md5
     // makes the surviving content scalar-comparable
-    "q_paragraph_dedup" ->
+    "q_paragraph_dedup" -> Entry(qParagraphDedup _,
       """WITH w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
         |blk AS (SELECT doc_id,
         |    unnest(list_transform(generate_series(0, (len(w)-1)//10),
@@ -10520,12 +10252,12 @@ object Queries {
         |  CAST(SUM(CASE WHEN rn = 1 THEN 1 ELSE 0 END) AS BIGINT) AS kept_blocks,
         |  md5(COALESCE(string_agg(CASE WHEN rn = 1 THEN blk END, ' ' ORDER BY pos), ''))
         |    AS kept_hash
-        |FROM r GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+        |FROM r GROUP BY doc_id ORDER BY doc_id""".stripMargin),
 
     // lift ratio in exact integer ppm (log is monotone, so the PMI
     // ranking is preserved without evaluating any transcendental);
     // HUGEINT mirrors the engine's decimal(38,0) envelope
-    "q_pmi_collocations" ->
+    "q_pmi_collocations" -> Entry(qPmiCollocations _,
       """WITH w AS (SELECT string_split(text, ' ') AS w FROM documents),
         |uni AS (SELECT t, COUNT(*) AS c1
         |        FROM (SELECT unnest(w) AS t FROM w) GROUP BY t),
@@ -10541,12 +10273,12 @@ object Queries {
         |FROM bgc JOIN uni ux ON bgc.x = ux.t JOIN uni uy ON bgc.y = uy.t, tot
         |WHERE pair_n >= 5
         |ORDER BY lift_ppm DESC, x, y
-        |LIMIT 50""".stripMargin,
+        |LIMIT 50""".stripMargin),
 
     // quartile boundaries at rank = ceil(q*n) (the engine's exact
     // global-quantile rule; 0.25/0.5/0.75 are dyadic so q*n is an
     // exact double on both sides); stage = 1 + #(boundaries < m)
-    "q_curriculum" ->
+    "q_curriculum" -> Entry(qCurriculum _,
       """WITH m AS (SELECT doc_id, n_chars,
         |    CAST(len(string_split(text, ' ')) AS BIGINT) AS m
         |  FROM documents WHERE text IS NOT NULL),
@@ -10566,11 +10298,11 @@ object Queries {
         |  CAST(COUNT(*) AS BIGINT) AS n_docs,
         |  MIN(m) AS min_words, MAX(m) AS max_words,
         |  CAST(SUM(n_chars) AS BIGINT) AS sum_chars
-        |FROM st GROUP BY stage ORDER BY stage""".stripMargin,
+        |FROM st GROUP BY stage ORDER BY stage""".stripMargin),
 
     // batch slice screened against the corpus's content-hash and
     // band-key indexes; bands CTE comes from the shared minhash chain
-    "q_incremental_dedup" ->
+    "q_incremental_dedup" -> Entry(qIncrementalDedup _,
       s"""WITH $minhashCte,
          |bt AS (SELECT doc_id FROM documents WHERE doc_id % 10 = 9),
          |eh AS (SELECT DISTINCT md5(text) AS h FROM documents WHERE doc_id % 10 != 9),
@@ -10587,13 +10319,13 @@ object Queries {
          |    AS is_near_dup
          |FROM bt LEFT JOIN ex ON bt.doc_id = ex.doc_id
          |LEFT JOIN nb ON bt.doc_id = nb.doc_id
-         |ORDER BY bt.doc_id""".stripMargin,
+         |ORDER BY bt.doc_id""".stripMargin),
 
     // positional form of the gear recurrence: h_i depends only on the
     // last 32 chars (the *2 shift mods out), so the oracle computes it
     // as sum gear(c_j)*2^(i-j) mod 2^32 with no sequential fold; each
     // term is pre-modded so list_sum stays within BIGINT
-    "q_cdc_chunks" ->
+    "q_cdc_chunks" -> Entry(qCdcChunks _,
       """WITH c AS (SELECT doc_id, text, length(text) AS n FROM documents),
         |p AS (SELECT doc_id, text, n, unnest(generate_series(1, n)) AS i FROM c),
         |h AS (SELECT doc_id, i,
@@ -10614,12 +10346,12 @@ object Queries {
         |  CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs
         |FROM ch WHERE length(chunk) >= 16
         |GROUP BY chunk HAVING COUNT(*) >= 2
-        |ORDER BY n_occ DESC, chunk_hash LIMIT 100""".stripMargin,
+        |ORDER BY n_occ DESC, chunk_hash LIMIT 100""".stripMargin),
 
     // weighted lower-discrete quantile: smallest v with cumulative
     // weight >= ceil(q*W); RANGE-framed running sum includes peers,
     // matching "weight of all rows with value <= v"
-    "q_weighted_quantiles" ->
+    "q_weighted_quantiles" -> Entry(qWeightedQuantiles _,
       """WITH w AS (SELECT l_extendedprice AS v, CAST(l_quantity AS BIGINT) AS wt
         |           FROM lineitem
         |           WHERE l_extendedprice IS NOT NULL AND l_quantity > 0),
@@ -10634,11 +10366,11 @@ object Queries {
         |  UNION ALL
         |  SELECT CAST(0.95 AS DOUBLE) AS q, v FROM o
         |    WHERE cw >= ceil(0.95 * tw))
-        |GROUP BY q ORDER BY q""".stripMargin,
+        |GROUP BY q ORDER BY q""".stripMargin),
 
     // LOO(mean) from sufficient statistics: (T - t_s)/(N - n_s) in
     // exact integer ppm; HUGEINT mirrors the decimal(38,0) internal
-    "q_source_ablation" ->
+    "q_source_ablation" -> Entry(qSourceAblation _,
       """WITH d AS (SELECT source, len(string_split(text, ' ')) AS nw FROM documents),
         |per AS (SELECT source, COUNT(*) AS n_docs, SUM(nw) AS n_words
         |        FROM d GROUP BY source),
@@ -10652,10 +10384,10 @@ object Queries {
         |  CAST(CAST(t_words - n_words AS HUGEINT) * 1000000
         |      // nullif(t_docs - n_docs, 0)
         |    - CAST(t_words AS HUGEINT) * 1000000 // t_docs AS BIGINT) AS delta_ppm
-        |FROM per, tot ORDER BY source""".stripMargin,
+        |FROM per, tot ORDER BY source""".stripMargin),
 
     // each candidate FD = one grouped distinct-count rollup
-    "q_fd_discovery" ->
+    "q_fd_discovery" -> Entry(qFdDiscovery _,
       """WITH f1 AS (SELECT 'l_orderkey->l_shipdate' AS fd, COUNT(*) AS n_groups,
         |    SUM(CASE WHEN nd > 1 THEN 1 ELSE 0 END) AS n_violating, MAX(nd) AS max_rhs
         |  FROM (SELECT l_orderkey, COUNT(DISTINCT l_shipdate) AS nd
@@ -10678,10 +10410,10 @@ object Queries {
         |  CAST(CASE WHEN n_violating = 0 THEN 1 ELSE 0 END AS BIGINT) AS holds
         |FROM (SELECT * FROM f1 UNION ALL SELECT * FROM f2
         |      UNION ALL SELECT * FROM f3 UNION ALL SELECT * FROM f4)
-        |ORDER BY fd""".stripMargin,
+        |ORDER BY fd""".stripMargin),
 
     // symmetric rollup of q_decontaminate, grouped by the eval item
-    "q_eval_leakage" ->
+    "q_eval_leakage" -> Entry(qEvalLeakage _,
       """WITH w AS (SELECT doc_id, string_split(text, ' ') w FROM documents),
         |s4 AS (SELECT doc_id, unnest(CASE WHEN len(w) >= 4 THEN
         |    list_distinct(list_transform(generate_series(1, len(w)-3),
@@ -10692,11 +10424,11 @@ object Queries {
         |SELECT eval_id, COUNT(DISTINCT tr.gram) AS n_leaked_ngrams,
         |  COUNT(DISTINCT tr.train_id) AS n_train_docs
         |FROM tr JOIN ev USING (gram)
-        |GROUP BY eval_id ORDER BY eval_id""".stripMargin,
+        |GROUP BY eval_id ORDER BY eval_id""".stripMargin),
 
     // the optimizer-rewritten HLL, mirrored in SQL: the hash-match is
     // the proof that the rewrite produced exactly the sketch
-    "q_approx_rewrite" -> {
+    "q_approx_rewrite" -> Entry(qApproxRewrite _, {
       import graft.operators.Sketches
       val lcTable = Sketches.HllLinearTable.map(v => s"${v}e0").mkString("[", ", ", "]")
       s"""WITH b AS (SELECT o_orderstatus, (_h >> 24) AS bucket,
@@ -10715,12 +10447,12 @@ object Queries {
          |       THEN ($lcTable)[256 - n_buckets_hit]
          |       ELSE raw END) AS BIGINT) AS n_custkeys_est
          |FROM agg ORDER BY o_orderstatus""".stripMargin
-    },
+    }),
 
     // verified positives via integer jaccard (2I >= U — no double
     // threshold), hash-bucketed different-source negatives ranked by
     // md5(anchor|neg); bucket arithmetic mirrors Sketches.hash32
-    "q_contrastive_pairs" ->
+    "q_contrastive_pairs" -> Entry(qContrastivePairs _,
       s"""WITH $minhashCte,
          |ver AS (SELECT id_a, id_b FROM cand
          |  JOIN sh sa ON id_a = sa.doc_id JOIN sh sb ON id_b = sb.doc_id
@@ -10747,11 +10479,11 @@ object Queries {
          |  FROM ab JOIN nb USING (bkt)
          |  WHERE n_src != a_src AND neg_id != anchor_id AND neg_id != pos_id)
          |SELECT anchor_id, pos_id, neg_id, CAST(rn AS BIGINT) AS neg_rank
-         |FROM j WHERE rn <= 2 ORDER BY anchor_id, neg_rank""".stripMargin,
+         |FROM j WHERE rn <= 2 ORDER BY anchor_id, neg_rank""".stripMargin),
 
     // exact winsorization: clip bounds at rank ceil(q*n) (the engine's
     // rank-element rule), DECIMAL(18,2)-routed sum of the clipped col
-    "q_winsorized" ->
+    "q_winsorized" -> Entry((s, d) => qWinsorized(s, d),
       """WITH v AS (SELECT l_extendedprice AS v FROM lineitem
         |           WHERE l_extendedprice IS NOT NULL),
         |r AS (SELECT v, ROW_NUMBER() OVER (ORDER BY v) AS rn,
@@ -10767,9 +10499,9 @@ object Queries {
         |    AS DECIMAL(18,2))) AS DOUBLE) AS sum_winsorized,
         |  MIN(CASE WHEN v < lo THEN lo WHEN v > hi THEN hi ELSE v END) AS lo_bound,
         |  MAX(CASE WHEN v < lo THEN lo WHEN v > hi THEN hi ELSE v END) AS hi_bound
-        |FROM v, b""".stripMargin,
+        |FROM v, b""".stripMargin),
 
-    "q_markov_transitions" ->
+    "q_markov_transitions" -> Entry(qMarkovTransitions _,
       """WITH e AS (SELECT user_id, epoch_ns(ts) // 1000 AS t, event_id,
         |    event_type FROM events),
         |p AS (SELECT event_type AS src,
@@ -10781,9 +10513,9 @@ object Queries {
         |SELECT src, dst, CAST(n AS BIGINT) AS n,
         |  CAST(n * 1000000 // SUM(n) OVER (PARTITION BY src) AS BIGINT)
         |    AS prob_ppm
-        |FROM tr ORDER BY src, dst""".stripMargin,
+        |FROM tr ORDER BY src, dst""".stripMargin),
 
-    "q_itemset_pairs" ->
+    "q_itemset_pairs" -> Entry(qItemsetPairs _,
       """WITH it AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
         |            FROM lineitem),
         |p AS (SELECT a.pk AS p_a, b.pk AS p_b
@@ -10791,11 +10523,11 @@ object Queries {
         |SELECT p_a, p_b, CAST(COUNT(*) AS BIGINT) AS support
         |FROM p GROUP BY p_a, p_b
         |HAVING COUNT(*) >= 2
-        |ORDER BY support DESC, p_a, p_b LIMIT 50""".stripMargin,
+        |ORDER BY support DESC, p_a, p_b LIMIT 50""".stripMargin),
 
     // same bipartite edge construction as q_pagerank; HUGEINT mirrors
     // the decimal(38,0) internal product
-    "q_neighbor_agg" ->
+    "q_neighbor_agg" -> Entry(qNeighborAgg _,
       """WITH e0 AS (SELECT DISTINCT o_custkey * 2 AS c, l_suppkey * 2 + 1 AS sup
         |            FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
         |sym AS (SELECT c AS src, sup AS dst FROM e0
@@ -10805,11 +10537,11 @@ object Queries {
         |  CAST(CAST(SUM(d.deg) AS HUGEINT) * 1000000 // COUNT(*) AS BIGINT)
         |    AS avg_nbr_deg_ppm
         |FROM sym s JOIN deg d ON s.dst = d.node
-        |GROUP BY s.src ORDER BY node""".stripMargin,
+        |GROUP BY s.src ORDER BY node""".stripMargin),
 
     // first/last IGNORE NULLS over the strictly-preceding rows frame;
     // DuckDB spells the same frame and null handling
-    "q_attribution" ->
+    "q_attribution" -> Entry(qAttribution _,
       """WITH e AS (SELECT user_id, epoch_ns(ts) // 1000 AS t, event_id,
         |    event_type FROM events),
         |x AS (SELECT user_id, t, event_id, event_type,
@@ -10830,18 +10562,18 @@ object Queries {
         |  lt.event_type AS last_touch_type,
         |  lt.event_id AS last_touch_id
         |FROM x WHERE event_type = 'purchase'
-        |ORDER BY purchase_id""".stripMargin,
+        |ORDER BY purchase_id""".stripMargin),
 
     // the oracle IS the naive scan — the hash-match proves the
     // trigram-index path has recall 1
-    "q_trigram_search" ->
+    "q_trigram_search" -> Entry(qTrigramSearch _,
       """SELECT doc_id, n_chars FROM documents
         |WHERE text LIKE '%table key value%'
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin),
 
     // sketch + exact companions joined per group; the hash-match
     // proves the rewrite sketched ONLY the distinct count
-    "q_approx_rewrite_mixed" -> {
+    "q_approx_rewrite_mixed" -> Entry(qApproxRewriteMixed _, {
       import graft.operators.Sketches
       val lcTable = Sketches.HllLinearTable.map(v => s"${v}e0").mkString("[", ", ", "]")
       s"""WITH b AS (SELECT o_orderstatus, (_h >> 24) AS bucket,
@@ -10869,11 +10601,11 @@ object Queries {
          |SELECT o_orderstatus, n_custkeys_est, n_orders, sum_cents, max_price
          |FROM hll JOIN ex USING (o_orderstatus)
          |ORDER BY o_orderstatus""".stripMargin
-    },
+    }),
 
     // UNION (not UNION ALL) dedupes (node, depth) pairs per step, so
     // the recursion never path-explodes; MIN(d) = BFS distance
-    "q_bfs_hops" ->
+    "q_bfs_hops" -> Entry((s, d) => qBfsHops(s, d),
       """WITH RECURSIVE
         |e0 AS (SELECT DISTINCT o_custkey * 2 AS c, l_suppkey * 2 + 1 AS sup
         |       FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
@@ -10885,9 +10617,9 @@ object Queries {
         |  SELECT e.dst, b.d + 1 FROM bfs b JOIN edges e ON b.node = e.src
         |  WHERE b.d < 3)
         |SELECT node, CAST(MIN(d) AS BIGINT) AS dist
-        |FROM bfs GROUP BY node ORDER BY node""".stripMargin,
+        |FROM bfs GROUP BY node ORDER BY node""".stripMargin),
 
-    "q_running_distinct" ->
+    "q_running_distinct" -> Entry(qRunningDistinct _,
       """WITH e AS (SELECT user_id, epoch_ns(ts) // 1000 AS t, event_id,
         |    event_type FROM events),
         |f AS (SELECT user_id, t, event_id,
@@ -10898,9 +10630,9 @@ object Queries {
         |  CAST(SUM(first_seen) OVER (PARTITION BY user_id ORDER BY t, event_id
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
         |    AS n_distinct_types
-        |FROM f ORDER BY user_id, t, event_id""".stripMargin,
+        |FROM f ORDER BY user_id, t, event_id""".stripMargin),
 
-    "q_dedup_ngram" ->
+    "q_dedup_ngram" -> Entry(qDedupNgram _,
       s"""WITH $minhashCte
          |SELECT id_a AS doc_a, id_b AS doc_b,
          |  CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE) /
@@ -10910,9 +10642,9 @@ object Queries {
          |JOIN sh sb ON id_b = sb.doc_id
          |WHERE CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE) /
          |    len(list_distinct(sa.sh || sb.sh)) >= 0.5
-         |ORDER BY doc_a, doc_b""".stripMargin,
+         |ORDER BY doc_a, doc_b""".stripMargin),
 
-    "q_dedup_simhash" -> {
+    "q_dedup_simhash" -> Entry(qDedupSimhash _, {
       val terms = (0 until 32).map(j =>
         s"(CASE WHEN list_sum(list_transform(hs, h -> CASE WHEN (h >> $j) & 1 = 1 THEN 1 ELSE -1 END)) > 0 THEN (CAST(1 AS BIGINT) << $j) ELSE CAST(0 AS BIGINT) END)")
         .mkString(" +\n    ")
@@ -10938,9 +10670,9 @@ object Queries {
          | AND a.doc_id < b.doc_id
          |WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
          |ORDER BY doc_a, doc_b""".stripMargin
-    },
+    }),
 
-    "q_dedup_embedding" -> {
+    "q_dedup_embedding" -> Entry(qDedupEmbedding _, {
       // Mirror the Spark plan's 16×12 hyperplane banding with identical
       // literals: band key = sign-bit integer of 12 exact integer dots.
       val bandSelects = Queries.dedupPlanesLiterals.grouped(12).toSeq.zipWithIndex.map {
@@ -10964,9 +10696,9 @@ object Queries {
          |FROM cand JOIN n na ON vec_a = na.vec_id JOIN n nb ON vec_b = nb.vec_id
          |WHERE list_dot_product(na.qv, nb.qv) / (sqrt(na.norm2) * sqrt(nb.norm2)) >= 0.4
          |ORDER BY vec_a, vec_b""".stripMargin
-    },
+    }),
 
-    "q_text_langid" ->
+    "q_text_langid" -> Entry(qTextLangid _,
       """WITH t AS (SELECT doc_id, list_distinct(string_split(text,' ')) toks FROM documents),
         |s AS (SELECT doc_id,
         |  CAST(len(list_intersect(toks, ['the','a','of','and'])) AS DOUBLE)/len(toks) AS score_general,
@@ -10979,9 +10711,9 @@ object Queries {
         |       WHEN score_query = greatest(score_general, score_query, score_stream) THEN 'query'
         |       ELSE 'stream' END AS pred_lang,
         |  score_general, score_query, score_stream
-        |FROM s ORDER BY doc_id""".stripMargin,
+        |FROM s ORDER BY doc_id""".stripMargin),
 
-    "q_text_quality" ->
+    "q_text_quality" -> Entry(qTextQuality _,
       """WITH t AS (SELECT doc_id, text, string_split(text,' ') w FROM documents),
         |m AS (SELECT doc_id,
         |  CAST(len(w) AS BIGINT) n_tokens,
@@ -10991,19 +10723,19 @@ object Queries {
         |SELECT doc_id, n_tokens, avg_token_len, stopword_ratio,
         |  least(1.0, CAST(n_tokens AS DOUBLE)/100.0)*0.5 + stopword_ratio*0.3 +
         |  least(1.0, avg_token_len/10.0)*0.2 AS quality_score
-        |FROM m ORDER BY doc_id""".stripMargin,
+        |FROM m ORDER BY doc_id""".stripMargin),
 
-    "q_text_tokens" ->
+    "q_text_tokens" -> Entry(qTextTokens _,
       """SELECT doc_id,
         |  CAST(len(string_split(text,' ')) AS BIGINT) ws_tokens,
         |  CAST(len(regexp_extract_all(text, '[a-z0-9]+')) AS BIGINT) re_tokens,
         |  CAST(ceil(CAST(length(text) AS DOUBLE)/4.0) AS BIGINT) est_bpe_tokens
-        |FROM documents ORDER BY doc_id""".stripMargin,
+        |FROM documents ORDER BY doc_id""".stripMargin),
 
     // NULL text → NULL fingerprint (the engine null-propagates; the
     // old coalesce('') silently fingerprinted null docs as md5('') —
     // r17 nullify metamorphic sweep)
-    "q_text_fingerprint" ->
+    "q_text_fingerprint" -> Entry(qTextFingerprint _,
       s"""WITH $shingleCte,
          |f AS (SELECT s2.doc_id, d.text IS NULL AS tnull,
          |  list_sort(list_filter(list_transform(s2.sh, t -> md5(t)), h -> substr(h,1,1) = '0')) sel
@@ -11013,9 +10745,9 @@ object Queries {
          |  CAST(CASE WHEN tnull THEN NULL ELSE len(sel) END AS BIGINT) n_selected,
          |  CASE WHEN tnull THEN NULL
          |       ELSE md5(coalesce(array_to_string(sel, ''), '')) END fingerprint
-         |FROM f ORDER BY doc_id""".stripMargin,
+         |FROM f ORDER BY doc_id""".stripMargin),
 
-    "q_ann_bruteforce" ->
+    "q_ann_bruteforce" -> Entry((s, d) => qAnnBruteforce(s, d),
       s"""WITH q AS (SELECT vec_id,
          |    list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000) AS BIGINT)) qv
          |  FROM (SELECT DISTINCT vec_id, embedding, label FROM embeddings)),
@@ -11026,9 +10758,9 @@ object Queries {
          |r AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id) rnk
          |  FROM s)
          |SELECT query_id, neighbor_id, CAST(rnk AS BIGINT) rnk, cos_sim
-         |FROM r WHERE rnk <= 5 ORDER BY query_id, rnk""".stripMargin,
+         |FROM r WHERE rnk <= 5 ORDER BY query_id, rnk""".stripMargin),
 
-    "q_ann_lsh" -> {
+    "q_ann_lsh" -> Entry(qAnnLsh _, {
       // Mirror the Spark plan's 16×10 hyperplane banding with
       // identical literals.
       val bandSelects = Queries.lshPlanesLiterals.grouped(10).toSeq.zipWithIndex.map {
@@ -11055,9 +10787,9 @@ object Queries {
          |  FROM s)
          |SELECT query_id, neighbor_id, CAST(rnk AS BIGINT) rnk, cos_sim
          |FROM r WHERE rnk <= 3 ORDER BY query_id, rnk""".stripMargin
-    },
+    }),
 
-    "q_ann_recall" -> {
+    "q_ann_recall" -> Entry(qAnnRecall _, {
       val bandSelects = Queries.lshPlanesLiterals.grouped(10).toSeq.zipWithIndex.map {
         case (grp, bi) =>
           val v = grp.zipWithIndex.map { case (p, j) =>
@@ -11093,9 +10825,9 @@ object Queries {
          |SELECT query_id, n_lsh, coalesce(hits, 0) AS hits,
          |  coalesce(hits, 0) * 1000000 // 3 AS recall_ppm
          |FROM nl LEFT JOIN h USING (query_id) ORDER BY query_id""".stripMargin
-    },
+    }),
 
-    "q_skipgram_pmi" ->
+    "q_skipgram_pmi" -> Entry(qSkipgramPmi _,
       """WITH t AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w,
         |    unnest(range(1, len(string_split(text, ' ')) + 1)) AS pos
         |  FROM documents),
@@ -11118,17 +10850,17 @@ object Queries {
         |    // (CAST(n_center AS HUGEINT) * n_context) AS BIGINT) AS pmi_ppm
         |FROM pc JOIN nc USING (center) JOIN nx USING (context) CROSS JOIN tot
         |WHERE n_pair >= 5
-        |ORDER BY pmi_ppm DESC, center, context LIMIT 20""".stripMargin,
+        |ORDER BY pmi_ppm DESC, center, context LIMIT 20""".stripMargin),
 
-    "q_bpe_first_merge" ->
+    "q_bpe_first_merge" -> Entry(qBpeFirstMerge _,
       """WITH w AS (SELECT unnest(string_split(text, ' ')) AS w FROM documents),
         |f AS (SELECT w FROM w WHERE length(w) >= 2),
         |p AS (SELECT substr(w, CAST(unnest(range(1, length(w))) AS INT), 2) AS pair
         |  FROM f)
         |SELECT pair, count(*) AS n FROM p GROUP BY pair
-        |ORDER BY n DESC, pair LIMIT 20""".stripMargin,
+        |ORDER BY n DESC, pair LIMIT 20""".stripMargin),
 
-    "q_embed_quantize" ->
+    "q_embed_quantize" -> Entry(qEmbedQuantize _,
       """WITH m AS (SELECT vec_id,
         |    list_transform(embedding,
         |      x -> CAST(floor(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS xm
@@ -11138,9 +10870,9 @@ object Queries {
         |  CAST(CASE WHEN mx > mn THEN
         |    list_sum(list_transform(xm, v -> ((v - mn) * 255) // (mx - mn)))
         |  ELSE 0 END AS BIGINT) AS checksum
-        |FROM s ORDER BY vec_id""".stripMargin,
+        |FROM s ORDER BY vec_id""".stripMargin),
 
-    "q_langid_eval" ->
+    "q_langid_eval" -> Entry(qLangidEval _,
       """WITH t AS (SELECT doc_id, lang,
         |    list_distinct(string_split(text,' ')) toks FROM documents),
         |s AS (SELECT lang,
@@ -11156,9 +10888,9 @@ object Queries {
         |FROM s)
         |SELECT lang, pred_lang, count(*) AS n FROM p
         |GROUP BY lang, pred_lang
-        |ORDER BY lang, pred_lang NULLS FIRST""".stripMargin,
+        |ORDER BY lang, pred_lang NULLS FIRST""".stripMargin),
 
-    "q_image_decode" ->
+    "q_image_decode" -> Entry(qImageDecode _,
       """WITH d AS (SELECT doc_id, 32 + doc_id % 32 AS width,
         |    16 + doc_id % 16 AS height,
         |    row_number() OVER () AS rid FROM documents),
@@ -11171,11 +10903,11 @@ object Queries {
         |  CAST(SUM(CASE WHEN v // 64 = 1 THEN 1 ELSE 0 END) AS BIGINT) h1,
         |  CAST(SUM(CASE WHEN v // 64 = 2 THEN 1 ELSE 0 END) AS BIGINT) h2,
         |  CAST(SUM(CASE WHEN v // 64 = 3 THEN 1 ELSE 0 END) AS BIGINT) h3
-        |FROM px GROUP BY rid, doc_id, width, height ORDER BY media_id""".stripMargin,
+        |FROM px GROUP BY rid, doc_id, width, height ORDER BY media_id""".stripMargin),
 
     // block-constant JPEG: every 8x8 block is flat, so px_sum/hK are
     // 64x the per-block generator values
-    "q_jpeg_decode" ->
+    "q_jpeg_decode" -> Entry(qJpegDecode _,
       """WITH d AS (SELECT doc_id, 4 + doc_id % 4 AS bx,
         |    2 + doc_id % 2 AS by,
         |    row_number() OVER () AS rid FROM documents),
@@ -11189,21 +10921,21 @@ object Queries {
         |  CAST(64*SUM(CASE WHEN v // 64 = 1 THEN 1 ELSE 0 END) AS BIGINT) h1,
         |  CAST(64*SUM(CASE WHEN v // 64 = 2 THEN 1 ELSE 0 END) AS BIGINT) h2,
         |  CAST(64*SUM(CASE WHEN v // 64 = 3 THEN 1 ELSE 0 END) AS BIGINT) h3
-        |FROM b GROUP BY rid, doc_id, bx, by ORDER BY media_id""".stripMargin,
+        |FROM b GROUP BY rid, doc_id, bx, by ORDER BY media_id""".stripMargin),
 
     // varying JPEG (every block has AC energy): the oracle recomputes
     // the id-arithmetic dims and asserts the tolerance band VERDICT —
     // the engine computes within_band from the decoded raster, so a
     // broken Huffman/dequant/IDCT stage flips the bit and fails the hash
-    "q_jpeg_decode_banded" ->
+    "q_jpeg_decode_banded" -> Entry(qJpegDecodeBanded _,
       """SELECT doc_id AS media_id,
         |  CAST(8 * (4 + doc_id % 4) AS BIGINT) AS width,
         |  CAST(8 * (2 + doc_id % 2) AS BIGINT) AS height,
         |  CAST(64 * (4 + doc_id % 4) * (2 + doc_id % 2) AS BIGINT) AS n_px,
         |  TRUE AS within_band
-        |FROM documents ORDER BY media_id""".stripMargin,
+        |FROM documents ORDER BY media_id""".stripMargin),
 
-    "q_skipgram_pairs" ->
+    "q_skipgram_pairs" -> Entry(qSkipgramPairs _,
       """WITH t AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w,
         |    unnest(range(1, len(string_split(text, ' ')) + 1)) AS pos
         |  FROM documents),
@@ -11218,9 +10950,9 @@ object Queries {
         |  UNION ALL SELECT center, c4 FROM c WHERE c4 IS NOT NULL)
         |SELECT center, context, count(*) AS n_pairs FROM p
         |GROUP BY center, context
-        |ORDER BY n_pairs DESC, center, context LIMIT 30""".stripMargin,
+        |ORDER BY n_pairs DESC, center, context LIMIT 30""".stripMargin),
 
-    "q_bm25_topk" ->
+    "q_bm25_topk" -> Entry(qBm25Topk _,
       """WITH t AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w
         |  FROM documents),
         |f AS (SELECT * FROM t WHERE w <> ''),
@@ -11236,9 +10968,9 @@ object Queries {
         |SELECT doc_id, CAST(sum(score_part) AS BIGINT) AS bm25_milli,
         |  count(*) AS n_terms
         |FROM sc GROUP BY doc_id
-        |ORDER BY bm25_milli DESC, doc_id LIMIT 20""".stripMargin,
+        |ORDER BY bm25_milli DESC, doc_id LIMIT 20""".stripMargin),
 
-    "q_blocklist_score" ->
+    "q_blocklist_score" -> Entry(qBlocklistScore _,
       """WITH cat(category, term) AS (VALUES
         |    ('latency', 'slow'), ('latency', 'fast'),
         |    ('storage', 'row'), ('storage', 'column'),
@@ -11253,9 +10985,9 @@ object Queries {
         |    (PARTITION BY category ORDER BY h DESC, doc_id) AS rn FROM hits)
         |SELECT category, n_docs, n_hits, doc_id AS top_doc, h AS top_hits
         |FROM agg JOIN r USING (category) WHERE rn = 1
-        |ORDER BY category""".stripMargin,
+        |ORDER BY category""".stripMargin),
 
-    "q_chisq_domain" ->
+    "q_chisq_domain" -> Entry(qChisqDomain _,
       """WITH obs AS (SELECT source, lang, count(*) AS o FROM documents
         |  GROUP BY source, lang),
         |rt AS (SELECT source, CAST(sum(o) AS BIGINT) AS rt FROM obs GROUP BY source),
@@ -11267,9 +10999,9 @@ object Queries {
         |    * (CAST(o AS HUGEINT)*t - CAST(rt AS HUGEINT)*ct)
         |    * 1000000) // (CAST(rt AS HUGEINT) * ct * t) AS BIGINT) AS cell_chi2_ppm
         |FROM obs JOIN rt USING (source) JOIN ct USING (lang) CROSS JOIN tot
-        |ORDER BY source, lang""".stripMargin,
+        |ORDER BY source, lang""".stripMargin),
 
-    "q_domain_centroid_sim" ->
+    "q_domain_centroid_sim" -> Entry(qDomainCentroidSim _,
       """WITH comp AS (SELECT label, unnest(range(0, len(embedding))) AS d,
         |    CAST(floor(CAST(unnest(embedding) AS DOUBLE) * 1000000) AS BIGINT) AS sx
         |  FROM embeddings),
@@ -11282,9 +11014,9 @@ object Queries {
         |  GROUP BY a.label, b.label)
         |SELECT label_a, label_b, na.n AS n_a, nb.n AS n_b, dot_g
         |FROM p JOIN n na ON label_a = na.label JOIN n nb ON label_b = nb.label
-        |ORDER BY label_a, label_b""".stripMargin,
+        |ORDER BY label_a, label_b""".stripMargin),
 
-    "q_audio_decode" ->
+    "q_audio_decode" -> Entry(qAudioDecode _,
       """WITH d AS (SELECT doc_id, 400 + doc_id % 256 AS n,
         |    row_number() OVER () AS rid FROM documents),
         |s AS (SELECT rid, doc_id, n,
@@ -11294,9 +11026,9 @@ object Queries {
         |  CAST(SUM(v) AS BIGINT) sample_sum,
         |  CAST(SUM(CASE WHEN v > 0 THEN 1 ELSE 0 END) AS BIGINT) n_positive,
         |  CAST(MIN(v) AS BIGINT) s_min, CAST(MAX(v) AS BIGINT) s_max
-        |FROM s GROUP BY rid, doc_id, n ORDER BY media_id""".stripMargin,
+        |FROM s GROUP BY rid, doc_id, n ORDER BY media_id""".stripMargin),
 
-    "q_multimodal_features" ->
+    "q_multimodal_features" -> Entry(qMultimodalFeatures _,
       """WITH c AS (SELECT doc_id media_id, length(text) byte_len,
         |    list_transform(string_split(text, ''), ch -> ascii(ch)) codes
         |  FROM documents)
@@ -11306,18 +11038,18 @@ object Queries {
         |  CAST(len(list_filter(codes, c2 -> (c2 >> 6) = 1)) AS BIGINT) h1,
         |  CAST(len(list_filter(codes, c2 -> (c2 >> 6) = 2)) AS BIGINT) h2,
         |  CAST(len(list_filter(codes, c2 -> (c2 >> 6) = 3)) AS BIGINT) h3
-        |FROM c ORDER BY media_id""".stripMargin,
+        |FROM c ORDER BY media_id""".stripMargin),
 
-    "q_multimodal_frames" ->
+    "q_multimodal_frames" -> Entry(qMultimodalFrames _,
       """WITH f AS (SELECT doc_id media_id, text,
         |    unnest(generate_series(0, (length(text) - 1) // 64, 2)) frame_idx
         |  FROM documents)
         |SELECT media_id, CAST(frame_idx AS BIGINT) frame_idx,
         |  CAST(length(substr(text, frame_idx * 64 + 1, 64)) AS BIGINT) frame_len,
         |  md5(substr(text, frame_idx * 64 + 1, 64)) frame_hash
-        |FROM f ORDER BY media_id, frame_idx""".stripMargin,
+        |FROM f ORDER BY media_id, frame_idx""".stripMargin),
 
-    "q_pipeline_e2e" ->
+    "q_pipeline_e2e" -> Entry(qPipelineE2e _,
       """WITH base AS (
         |  SELECT event_id id, user_id, event_type, value
         |  FROM events WHERE event_type IN ('purchase','click')),
@@ -11331,20 +11063,20 @@ object Queries {
         |  '{"id":' || id || ',"user_id":' || user_id ||
         |    ',"event_type":"' || event_type || '","value":' || value::VARCHAR || '}' AS doc_json
         |FROM h WHERE id % 2 = 1
-        |ORDER BY id""".stripMargin,
+        |ORDER BY id""".stripMargin),
 
-    "q_join_range" ->
+    "q_join_range" -> Entry(qJoinRange _,
       """WITH bands(band, lo, hi) AS (VALUES
         |  ('low', 0.0, 50.0), ('mid', 50.0, 150.0), ('high', 150.0, 1e9))
         |SELECT band, COUNT(*) AS n,
         |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
         |FROM events JOIN bands ON value >= lo AND value < hi
         |GROUP BY band
-        |ORDER BY band""".stripMargin,
+        |ORDER BY band""".stripMargin),
 
     // oracle is the PLAIN inequality join — the optimizer-rule
     // binning on the Spark side must be result-identical
-    "q_range_autobin" ->
+    "q_range_autobin" -> Entry(qRangeAutobin _,
       """WITH c AS (SELECT event_id AS c_id, value AS v
         |          FROM events WHERE event_type = 'click'),
         |p AS (SELECT event_id AS p_id, value AS lo, value + 2.0 AS hi
@@ -11352,9 +11084,9 @@ object Queries {
         |SELECT p_id, COUNT(*) AS n_in_window, MIN(c_id) AS min_click
         |FROM c JOIN p ON v >= lo AND v < hi
         |GROUP BY p_id
-        |ORDER BY p_id""".stripMargin,
+        |ORDER BY p_id""".stripMargin),
 
-    "q_asof_join" ->
+    "q_asof_join" -> Entry(qAsofJoin _,
       """WITH ev AS (
         |  SELECT event_id, user_id, ts, event_type,
         |    CASE WHEN event_type = 'view' THEN event_id END AS view_id
@@ -11366,9 +11098,9 @@ object Queries {
         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS prev_view_id
         |  FROM ev)
         |WHERE event_type = 'purchase'
-        |ORDER BY event_id""".stripMargin,
+        |ORDER BY event_id""".stripMargin),
 
-    "q_agg_stats" ->
+    "q_agg_stats" -> Entry((s, d) => qAggStats(s, d),
       """SELECT event_type,
         |  COUNT(DISTINCT user_id) AS n_users,
         |  MIN(value) AS min_value,
@@ -11376,9 +11108,9 @@ object Queries {
         |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS avg_value
         |FROM events
         |GROUP BY event_type
-        |ORDER BY event_type""".stripMargin,
+        |ORDER BY event_type""".stripMargin),
 
-    "q_udaf_weighted" ->
+    "q_udaf_weighted" -> Entry(qUdafWeighted _,
       """SELECT l_returnflag,
         |  (CAST(CAST(SUM(CAST(round(l_extendedprice * 100) AS BIGINT) *
         |                 CAST(round(l_quantity * 100) AS BIGINT)) AS BIGINT) AS DOUBLE) / 100.0)
@@ -11386,9 +11118,9 @@ object Queries {
         |  COUNT(*) AS n
         |FROM lineitem
         |GROUP BY l_returnflag
-        |ORDER BY l_returnflag""".stripMargin,
+        |ORDER BY l_returnflag""".stripMargin),
 
-    "q_ann_ivf" ->
+    "q_ann_ivf" -> Entry(qAnnIvf _,
       """WITH q AS (SELECT vec_id,
         |    list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000) AS BIGINT)) qv
         |  FROM (SELECT DISTINCT vec_id, embedding, label FROM embeddings)),
@@ -11413,9 +11145,9 @@ object Queries {
         |    ORDER BY cos_sim DESC, neighbor_id) rnk FROM scored)
         |SELECT query_id, neighbor_id, CAST(rnk AS BIGINT) rnk, cos_sim
         |FROM ranked WHERE rnk <= 3
-        |ORDER BY query_id, rnk""".stripMargin,
+        |ORDER BY query_id, rnk""".stripMargin),
 
-    "q_sessionize" ->
+    "q_sessionize" -> Entry((s, d) => qSessionize(s, d),
       """WITH t AS (
         |  SELECT user_id, event_id, epoch_us(ts) ts FROM events),
         |marked AS (
@@ -11432,9 +11164,9 @@ object Queries {
         |SELECT user_id, CAST(session_id AS BIGINT) session_id,
         |  COUNT(*) AS n_events, MIN(ts) AS start_ts, MAX(ts) AS end_ts
         |FROM sess GROUP BY user_id, session_id
-        |ORDER BY user_id, session_id""".stripMargin,
+        |ORDER BY user_id, session_id""".stripMargin),
 
-    "q_join_outer" ->
+    "q_join_outer" -> Entry(qJoinOuter _,
       """WITH cust AS (
         |  SELECT c_custkey, c_name FROM customer WHERE c_acctbal > 5000),
         |big AS (
@@ -11447,24 +11179,24 @@ object Queries {
         |  coalesce(n_big, 0) AS n_big,
         |  coalesce(big_total, 0.0) AS big_total
         |FROM cust FULL JOIN big ON c_custkey = o_custkey
-        |ORDER BY custkey""".stripMargin,
+        |ORDER BY custkey""".stripMargin),
 
-    "q_explode_wordcount" ->
+    "q_explode_wordcount" -> Entry(qExplodeWordcount _,
       """SELECT lang, word, COUNT(*) AS cnt
         |FROM (SELECT lang, unnest(string_split(text, ' ')) AS word FROM documents)
         |GROUP BY lang, word
         |HAVING COUNT(*) >= 100
-        |ORDER BY lang, word""".stripMargin,
+        |ORDER BY lang, word""".stripMargin),
 
-    "q_array_agg" ->
+    "q_array_agg" -> Entry(qArrayAgg _,
       """SELECT user_id,
         |  array_to_string(list_sort(list(DISTINCT event_type)), ',') AS types,
         |  COUNT(*) AS n
         |FROM events
         |GROUP BY user_id
-        |ORDER BY user_id""".stripMargin,
+        |ORDER BY user_id""".stripMargin),
 
-    "q_pivot" ->
+    "q_pivot" -> Entry((s, d) => qPivot(s, d),
       """SELECT user_id,
         |  COUNT(*) FILTER (event_type = 'click') AS click,
         |  COUNT(*) FILTER (event_type = 'error') AS error,
@@ -11473,18 +11205,18 @@ object Queries {
         |  COUNT(*) FILTER (event_type = 'view') AS view
         |FROM events
         |GROUP BY user_id
-        |ORDER BY user_id""".stripMargin,
+        |ORDER BY user_id""".stripMargin),
 
-    "q_cube" ->
+    "q_cube" -> Entry((s, d) => qCube(s, d),
       """SELECT r_name, o_orderstatus, COUNT(*) AS n_orders
         |FROM orders
         |JOIN customer ON o_custkey = c_custkey
         |JOIN nation ON c_nationkey = n_nationkey
         |JOIN region ON n_regionkey = r_regionkey
         |GROUP BY CUBE(r_name, o_orderstatus)
-        |ORDER BY r_name NULLS FIRST, o_orderstatus NULLS FIRST""".stripMargin,
+        |ORDER BY r_name NULLS FIRST, o_orderstatus NULLS FIRST""".stripMargin),
 
-    "q_setops_all" ->
+    "q_setops_all" -> Entry(qSetopsAll _,
       """WITH m AS (
         |  (SELECT user_id FROM events WHERE event_type = 'purchase'
         |   INTERSECT ALL
@@ -11492,9 +11224,9 @@ object Queries {
         |  EXCEPT ALL
         |  SELECT user_id FROM events WHERE event_type = 'error')
         |SELECT user_id, COUNT(*) AS multiplicity FROM m
-        |GROUP BY user_id ORDER BY user_id""".stripMargin,
+        |GROUP BY user_id ORDER BY user_id""".stripMargin),
 
-    "q_dedup_editdist" ->
+    "q_dedup_editdist" -> Entry(qDedupEditDistance _,
       s"""WITH $minhashCte
          |SELECT id_a AS doc_a, id_b AS doc_b,
          |  CAST(levenshtein(da.text, db.text) AS BIGINT) AS edit_dist,
@@ -11505,18 +11237,18 @@ object Queries {
          |JOIN documents db ON id_b = db.doc_id
          |WHERE 1.0 - CAST(levenshtein(da.text, db.text) AS DOUBLE) /
          |    CAST(greatest(length(da.text), length(db.text)) AS DOUBLE) >= 0.8
-         |ORDER BY doc_a, doc_b""".stripMargin,
+         |ORDER BY doc_a, doc_b""".stripMargin),
 
-    "q_boilerplate_ngrams" ->
+    "q_boilerplate_ngrams" -> Entry(qBoilerplateNgrams _,
       """WITH w AS (SELECT doc_id, string_split(text, ' ') w FROM documents),
         |sh AS (SELECT doc_id, unnest(list_distinct(list_transform(
         |    generate_series(1, len(w) - 4),
         |    i -> w[i]||' '||w[i+1]||' '||w[i+2]||' '||w[i+3]||' '||w[i+4]))) AS phrase
         |  FROM w WHERE len(w) >= 5)
         |SELECT phrase, COUNT(*) AS ndocs FROM sh GROUP BY phrase
-        |HAVING COUNT(*) >= 3 ORDER BY phrase""".stripMargin,
+        |HAVING COUNT(*) >= 3 ORDER BY phrase""".stripMargin),
 
-    "q_boilerplate_fraction" ->
+    "q_boilerplate_fraction" -> Entry(qBoilerplateFraction _,
       """WITH w AS (SELECT doc_id, string_split(text, ' ') w FROM documents),
         |sh AS (SELECT doc_id, unnest(list_distinct(list_transform(
         |    generate_series(1, len(w) - 4),
@@ -11530,9 +11262,9 @@ object Queries {
         |    CAST(COUNT(*) AS DOUBLE) AS boiler_frac
         |FROM j GROUP BY doc_id
         |HAVING SUM(CASE WHEN ndocs >= 2 THEN 1 ELSE 0 END) > 0
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin),
 
-    "q_redact_pii" ->
+    "q_redact_pii" -> Entry(qRedactPii _,
       """WITH a AS (SELECT doc_id,
         |    text || ' contact user' || CAST(doc_id AS VARCHAR)
         |      || '@mail.example.org or 555-'
@@ -11545,11 +11277,11 @@ object Queries {
         |  FROM a)
         |SELECT doc_id, CAST(length(redacted) AS BIGINT) AS n_chars,
         |  substr(redacted, greatest(1, length(redacted) - 59)) AS tail
-        |FROM r ORDER BY doc_id""".stripMargin,
+        |FROM r ORDER BY doc_id""".stripMargin),
 
     // chunk windows mirrored index-for-index; the generate_series
     // bound (4095) caps docs at ~196k tokens — far above the corpus
-    "q_chunk_docs" ->
+    "q_chunk_docs" -> Entry((s, d) => qChunkDocs(s, d),
       """WITH w AS (SELECT doc_id, string_split(text, ' ') toks FROM documents),
         |d AS (SELECT doc_id, toks,
         |  CASE WHEN len(toks) <= 64 THEN 1
@@ -11559,9 +11291,9 @@ object Queries {
         |  array_to_string(array_slice(toks, i * 48 + 1, i * 48 + 64), ' ') AS chunk_text
         |FROM d, (SELECT unnest(generate_series(0, 4095)) AS i) g
         |WHERE i < nc
-        |ORDER BY doc_id, chunk_idx""".stripMargin,
+        |ORDER BY doc_id, chunk_idx""".stripMargin),
 
-    "q_pack_docs" ->
+    "q_pack_docs" -> Entry(qPackDocs _,
       """WITH t AS (SELECT doc_id,
         |    CAST(len(string_split(text, ' ')) AS BIGINT) n_tokens,
         |    ('0x'||substr(md5(CAST(doc_id AS VARCHAR)),1,8))::BIGINT % 8 AS shard
@@ -11572,17 +11304,17 @@ object Queries {
         |  FROM t)
         |SELECT doc_id, shard, strt // 256 AS pack_idx, strt % 256 AS pack_offset,
         |  n_tokens
-        |FROM c ORDER BY doc_id""".stripMargin,
+        |FROM c ORDER BY doc_id""".stripMargin),
 
-    "q_quota_sample" ->
+    "q_quota_sample" -> Entry(qQuotaSample _,
       """WITH r AS (SELECT doc_id, source,
         |    CAST(row_number() OVER (PARTITION BY source
         |      ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS BIGINT) rk
         |  FROM documents)
         |SELECT doc_id, source, rk FROM r WHERE rk <= 40
-        |ORDER BY source, rk""".stripMargin,
+        |ORDER BY source, rk""".stripMargin),
 
-    "q_tfidf_topk" ->
+    "q_tfidf_topk" -> Entry(qTfidfTopk _,
       """WITH terms AS (SELECT doc_id, unnest(string_split(text, ' ')) term FROM documents),
         |tf AS (SELECT doc_id, term, COUNT(*) tf FROM terms
         |  WHERE term <> '' GROUP BY doc_id, term),
@@ -11594,13 +11326,13 @@ object Queries {
         |r AS (SELECT *, CAST(row_number() OVER (PARTITION BY doc_id
         |    ORDER BY tfidf DESC, term) AS BIGINT) rk FROM s)
         |SELECT doc_id, term, tf, df, tfidf, rk FROM r WHERE rk <= 3
-        |ORDER BY doc_id, rk""".stripMargin,
+        |ORDER BY doc_id, rk""".stripMargin),
 
     // HLL mirror: identical hash, identical rho CASE ladder, exact
     // powers of two (1/(1<<rho)) so every partial sum is exact and
     // addition order cannot matter; numerator and the linear-counting
     // table are SHARED literals (ln is not cross-engine bit-stable)
-    "q_approx_distinct_hll" -> {
+    "q_approx_distinct_hll" -> Entry(qApproxDistinctHll _, {
       import graft.operators.Sketches
       val lcTable = Sketches.HllLinearTable.map(v => s"${v}e0").mkString("[", ", ", "]")
       s"""WITH b AS (SELECT event_type, (_h >> 24) AS bucket,
@@ -11619,19 +11351,19 @@ object Queries {
          |       THEN ($lcTable)[256 - n_buckets_hit]
          |       ELSE raw END AS hll_est
          |FROM agg ORDER BY event_type""".stripMargin
-    },
+    }),
 
-    "q_quantiles" ->
+    "q_quantiles" -> Entry(qQuantiles _,
       """WITH q AS (SELECT l_returnflag,
         |    quantile_cont(l_quantity, [0.1, 0.25, 0.5, 0.75, 0.9]) qs
         |  FROM lineitem GROUP BY l_returnflag)
         |SELECT l_returnflag, CAST(i - 1 AS BIGINT) AS q_idx, qs[i] AS q_value
         |FROM q, (SELECT unnest([1, 2, 3, 4, 5]) i)
-        |ORDER BY l_returnflag, q_idx""".stripMargin,
+        |ORDER BY l_returnflag, q_idx""".stripMargin),
 
     // same two-pass median/MAD; quantile_cont interpolation parity is
     // the q_quantiles-proven contract
-    "q_anomaly_mad" ->
+    "q_anomaly_mad" -> Entry(qAnomalyMad _,
       """WITH e AS (SELECT event_type, value FROM events),
         |m AS (SELECT event_type, quantile_cont(value, 0.5) AS med
         |  FROM e GROUP BY event_type),
@@ -11644,10 +11376,10 @@ object Queries {
         |    AS BIGINT) AS n_outliers,
         |  COUNT(*) AS n_total
         |FROM d JOIN md USING (event_type)
-        |GROUP BY d.event_type ORDER BY d.event_type""".stripMargin,
+        |GROUP BY d.event_type ORDER BY d.event_type""".stripMargin),
 
     // same five declared checks, one metrics scan + FK anti-join
-    "q_dq_checks" ->
+    "q_dq_checks" -> Entry(qDqChecks _,
       """WITH m AS (SELECT COUNT(*) AS n,
         |    CAST(SUM(CASE WHEN o_orderkey IS NULL THEN 1 ELSE 0 END) AS BIGINT)
         |      AS null_key,
@@ -11668,11 +11400,11 @@ object Queries {
         |  UNION ALL SELECT 'custkey_references_customer', fk_bad FROM fk)
         |SELECT "check", CAST(violations AS BIGINT) AS violations,
         |  violations = 0 AS passed
-        |FROM c ORDER BY "check"""".stripMargin,
+        |FROM c ORDER BY "check"""".stripMargin),
 
     // 0-based phrase positions; string-packed postings sort binary
     // identically in both engines
-    "q_inverted_index" ->
+    "q_inverted_index" -> Entry(qInvertedIndex _,
       """WITH w AS (SELECT doc_id,
         |    list_filter(string_split(text, ' '), x -> x <> '') AS toks
         |  FROM documents),
@@ -11688,21 +11420,21 @@ object Queries {
         |  COUNT(DISTINCT doc_id) AS df
         |FROM f GROUP BY tok
         |HAVING COUNT(DISTINCT doc_id) BETWEEN 2 AND 25
-        |ORDER BY tok""".stripMargin,
+        |ORDER BY tok""".stripMargin),
 
     // identical hash rule ⇒ identical sample on any engine
-    "q_sample_hash" ->
+    "q_sample_hash" -> Entry(qSampleHash _,
       """SELECT source, COUNT(*) AS n_sampled,
         |  CAST(SUM(length(text)) AS BIGINT) AS sampled_chars
         |FROM documents
         |WHERE ('0x'||substr(md5(CAST(doc_id AS VARCHAR)),1,8))::BIGINT < 429496729
-        |GROUP BY source ORDER BY source""".stripMargin,
+        |GROUP BY source ORDER BY source""".stripMargin),
 
     // connected components mirrored as a recursive reachability
     // closure: rep(d) = min over everything reachable from d in the
     // verified-pair graph (tiny at sf0.01: ~50 nodes) — identical to
     // the min-label-propagation fixpoint by definition
-    "q_dedup_clusters" ->
+    "q_dedup_clusters" -> Entry(qDedupClusters _,
       s"""WITH RECURSIVE $minhashCte,
          |verified AS (SELECT id_a, id_b
          |  FROM cand JOIN sh sa ON id_a = sa.doc_id JOIN sh sb ON id_b = sb.doc_id
@@ -11715,9 +11447,9 @@ object Queries {
          |  UNION
          |  SELECT r.src, e.v FROM reach r JOIN edges e ON r.node = e.u)
          |SELECT src AS doc_id, MIN(node) AS cluster_rep
-         |FROM reach GROUP BY src ORDER BY doc_id""".stripMargin,
+         |FROM reach GROUP BY src ORDER BY doc_id""".stripMargin),
 
-    "q_cc_size_hist" ->
+    "q_cc_size_hist" -> Entry(qCcSizeHist _,
       s"""WITH RECURSIVE $minhashCte,
          |verified AS (SELECT id_a, id_b
          |  FROM cand JOIN sh sa ON id_a = sa.doc_id JOIN sh sb ON id_b = sb.doc_id
@@ -11735,9 +11467,9 @@ object Queries {
          |  GROUP BY cluster_rep)
          |SELECT cluster_size, count(*) AS n_clusters,
          |  CAST(cluster_size * count(*) AS BIGINT) AS n_docs
-         |FROM cs GROUP BY cluster_size ORDER BY cluster_size""".stripMargin,
+         |FROM cs GROUP BY cluster_size ORDER BY cluster_size""".stripMargin),
 
-    "q_pack_efficiency" ->
+    "q_pack_efficiency" -> Entry(qPackEfficiency _,
       """WITH t AS (SELECT doc_id,
         |    CAST(len(string_split(text, ' ')) AS BIGINT) n_tokens,
         |    ('0x'||substr(md5(CAST(doc_id AS VARCHAR)),1,8))::BIGINT % 8 AS shard
@@ -11751,9 +11483,9 @@ object Queries {
         |  FROM c GROUP BY shard)
         |SELECT shard, n_packs, total_tokens,
         |  (total_tokens * 1000000) // (n_packs * 256) AS fill_ppm
-        |FROM p ORDER BY shard""".stripMargin,
+        |FROM p ORDER BY shard""".stripMargin),
 
-    "q_dup_ratio_by_source" ->
+    "q_dup_ratio_by_source" -> Entry(qDupRatioBySource _,
       """WITH h AS (SELECT source, md5(text) AS h FROM documents),
         |c AS (SELECT h, count(*) AS c FROM h GROUP BY h)
         |SELECT source, count(*) AS n_docs,
@@ -11761,36 +11493,36 @@ object Queries {
         |  CAST(sum(CASE WHEN c.c > 1 THEN 1 ELSE 0 END) AS BIGINT) * 1000000
         |    // count(*) AS dup_ppm
         |FROM h JOIN c USING (h)
-        |GROUP BY source ORDER BY source""".stripMargin,
+        |GROUP BY source ORDER BY source""".stripMargin),
 
-    "q_hourly_activity" ->
+    "q_hourly_activity" -> Entry(qHourlyActivity _,
       """SELECT (epoch_ns(ts) // 3600000000000) % 24 AS hour, event_type,
         |  count(*) AS n_events,
         |  CAST(count(DISTINCT user_id) AS BIGINT) AS n_users
         |FROM events GROUP BY hour, event_type
-        |ORDER BY hour, event_type""".stripMargin,
+        |ORDER BY hour, event_type""".stripMargin),
 
-    "q_decay_popularity" ->
+    "q_decay_popularity" -> Entry(qDecayPopularity _,
       """WITH e AS (SELECT event_type, epoch_ns(ts) AS t FROM events),
         |m AS (SELECT max(t) AS tmax FROM e)
         |SELECT event_type, count(*) AS n_events,
         |  CAST(sum(1048576 // (1 << CAST(least((tmax - t) // 86400000000000, 20) AS INT)))
         |    AS BIGINT) AS decayed_score
-        |FROM e CROSS JOIN m GROUP BY event_type ORDER BY event_type""".stripMargin,
+        |FROM e CROSS JOIN m GROUP BY event_type ORDER BY event_type""".stripMargin),
 
-    "q_null_skew_join" ->
+    "q_null_skew_join" -> Entry(qNullSkewJoin _,
       """WITH e AS (SELECT CASE WHEN value < 1.0 THEN NULL ELSE user_id END AS k,
         |    value FROM events)
         |SELECT coalesce(CAST(c_nationkey AS BIGINT), -1) AS nation,
         |  count(*) AS n,
         |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
         |FROM e LEFT JOIN customer ON k = c_custkey
-        |GROUP BY nation ORDER BY nation""".stripMargin,
+        |GROUP BY nation ORDER BY nation""".stripMargin),
 
     // survivor selection mirrors the cluster closure, then ranks each
     // cluster by (text_len DESC, doc_id) — same deterministic
     // tie-break as the Spark window
-    "q_dedup_survivors" ->
+    "q_dedup_survivors" -> Entry(qDedupSurvivors _,
       s"""WITH RECURSIVE $minhashCte,
          |verified AS (SELECT id_a, id_b
          |  FROM cand JOIN sh sa ON id_a = sa.doc_id JOIN sh sb ON id_b = sb.doc_id
@@ -11811,12 +11543,12 @@ object Queries {
          |      ORDER BY length(d.text) DESC, c.doc_id) AS rn
          |  FROM clusters c JOIN documents d USING (doc_id))
          |SELECT cluster_rep, doc_id AS survivor_id, cluster_size, text_len
-         |FROM ranked WHERE rn = 1 ORDER BY cluster_rep""".stripMargin,
+         |FROM ranked WHERE rn = 1 ORDER BY cluster_rep""".stripMargin),
 
     // the whole curation chain composed in one statement: the
     // near-dup stages reuse the exact minhash/cluster/survivor CTEs
     // of q_dedup_clusters / q_dedup_survivors
-    "q_curation_e2e" ->
+    "q_curation_e2e" -> Entry(qCurationE2e _,
       s"""WITH RECURSIVE $minhashCte,
          |verified AS (SELECT id_a, id_b
          |  FROM cand JOIN sh sa ON id_a = sa.doc_id JOIN sh sb ON id_b = sb.doc_id
@@ -11849,11 +11581,11 @@ object Queries {
          |      ORDER BY md5('q' || doc_id), doc_id) AS qrank
          |  FROM dedup)
          |SELECT source, doc_id, n_tokens FROM sel WHERE qrank <= 40
-         |ORDER BY source, doc_id""".stripMargin,
+         |ORDER BY source, doc_id""".stripMargin),
 
     // KMV mirror: identical hash (first 8 md5 hex digits), identical
     // order statistics, identical double expression — bit-exact
-    "q_approx_distinct_kmv" ->
+    "q_approx_distinct_kmv" -> Entry(qApproxDistinctKmv _,
       """WITH h AS (SELECT DISTINCT event_type,
         |    ('0x'||substr(md5(CAST(user_id AS VARCHAR)),1,8))::BIGINT AS _h
         |  FROM events),
@@ -11863,28 +11595,28 @@ object Queries {
         |  CASE WHEN COUNT(*) < 256 THEN CAST(COUNT(*) AS DOUBLE)
         |       ELSE 255.0 / (MAX(_h) / 4294967296.0) END AS n_distinct_est
         |FROM r WHERE rn <= 256
-        |GROUP BY event_type ORDER BY event_type""".stripMargin,
+        |GROUP BY event_type ORDER BY event_type""".stripMargin),
 
     // the salted plans must produce EXACTLY the unsalted results —
     // that invariance is the point of the oracle pair
-    "q_skew_salted_agg" ->
+    "q_skew_salted_agg" -> Entry(qSkewSaltedAgg _,
       """SELECT l_returnflag, l_linestatus,
         |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
         |  COUNT(*) AS count_order
         |FROM lineitem
         |GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin),
 
-    "q_skew_salted_join" ->
+    "q_skew_salted_join" -> Entry(qSkewSaltedJoin _,
       """SELECT o_orderpriority, COUNT(*) AS n_items,
         |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
         |GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin,
+        |ORDER BY o_orderpriority""".stripMargin),
 
     // CMS mirror: same row-prefixed md5 hash32, same d×w geometry, the
     // estimate is an all-integer MIN over BIGINT counters — bit-exact
-    "q_cms_heavy_hitters" -> {
+    "q_cms_heavy_hitters" -> Entry(qCmsHeavyHitters _, {
       val d = operators.Sketches.CmsD
       val w = operators.Sketches.CmsW
       val idxs = (0 until d).mkString(",")
@@ -11905,11 +11637,11 @@ object Queries {
          |FROM est JOIN exact USING (tok)
          |WHERE est.cms_est >= 100
          |ORDER BY tok""".stripMargin
-    },
+    }),
 
     // hash-rank stratified split: the boundary test is all-integer, the
     // rank ordering is (md5 hex, doc_id) in both engines
-    "q_split_stratified" ->
+    "q_split_stratified" -> Entry(qSplitStratified _,
       """WITH r AS (SELECT doc_id, source,
         |    CAST(row_number() OVER (PARTITION BY source
         |      ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS BIGINT) rk,
@@ -11921,12 +11653,12 @@ object Queries {
         |       ELSE 'test' END AS split,
         |  COUNT(*) AS n, MIN(doc_id) AS min_id
         |FROM r GROUP BY source, split
-        |ORDER BY source, split""".stripMargin,
+        |ORDER BY source, split""".stripMargin),
 
     // PPS systematic sampling: selection iff the row's weight interval
     // crosses a multiple of total/k — integer floor division on both
     // engines (DuckDB //, Spark div), hash order (md5 hex, doc_id)
-    "q_sample_weighted" ->
+    "q_sample_weighted" -> Entry(qSampleWeighted _,
       """WITH c AS (SELECT doc_id, n_chars,
         |    SUM(n_chars) OVER (ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id
         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS w_cum,
@@ -11934,18 +11666,18 @@ object Queries {
         |  FROM documents)
         |SELECT doc_id, n_chars FROM c
         |WHERE (w_cum * 100) // w_tot > ((w_cum - n_chars) * 100) // w_tot
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin),
 
-    "q_date_fns" ->
+    "q_date_fns" -> Entry(qDateFns _,
       """SELECT CAST(year(o_orderdate) AS BIGINT) AS o_year,
         |  CAST(month(o_orderdate) AS BIGINT) AS o_month,
         |  COUNT(*) AS n_orders,
         |  COUNT(DISTINCT o_custkey) AS n_customers
         |FROM orders
         |GROUP BY o_year, o_month
-        |ORDER BY o_year, o_month""".stripMargin,
+        |ORDER BY o_year, o_month""".stripMargin),
 
-    "q_dedup_damerau" ->
+    "q_dedup_damerau" -> Entry(qDedupDamerau _,
       """WITH d AS (SELECT doc_id, lang, n_chars // 50 AS bkt,
         |    substr(text, 1, 40) AS pre FROM documents),
         |r AS (SELECT *, row_number()
@@ -11955,9 +11687,9 @@ object Queries {
         |FROM r a JOIN r b
         |  ON a.lang = b.lang AND a.bkt = b.bkt AND b.rk - a.rk IN (1, 2)
         |WHERE damerau_levenshtein(a.pre, b.pre) <= 22
-        |ORDER BY id_a, id_b""".stripMargin,
+        |ORDER BY id_a, id_b""".stripMargin),
 
-    "q_link_prediction" ->
+    "q_link_prediction" -> Entry(qLinkPrediction _,
       """WITH e AS (SELECT DISTINCT l_partkey p, l_suppkey sv FROM lineitem),
         |deg AS (SELECT p, count(*) d FROM e GROUP BY p
         |  HAVING count(*) BETWEEN 2 AND 64),
@@ -11966,9 +11698,9 @@ object Queries {
         |SELECT sa, sb, CAST(sum(1000000 // d) AS BIGINT) ra_ppm,
         |  count(*) n_shared
         |FROM pr GROUP BY sa, sb
-        |ORDER BY ra_ppm DESC, sa, sb LIMIT 25""".stripMargin,
+        |ORDER BY ra_ppm DESC, sa, sb LIMIT 25""".stripMargin),
 
-    "q_decision_stump" ->
+    "q_decision_stump" -> Entry(qDecisionStump _,
       """WITH d AS (SELECT source, n_chars,
         |    CASE WHEN lang = 'en' THEN 1 ELSE 0 END pos FROM documents),
         |ext AS (SELECT source, min(n_chars) mn, max(n_chars) mx,
@@ -11995,9 +11727,9 @@ object Queries {
         |    row_number() OVER (PARTITION BY source
         |      ORDER BY gini_ppm, b) rn FROM sc)
         |SELECT source, split_bin, n_left, n_right, gini_ppm
-        |FROM pick WHERE rn = 1 ORDER BY source""".stripMargin,
+        |FROM pick WHERE rn = 1 ORDER BY source""".stripMargin),
 
-    "q_rocchio_classify" ->
+    "q_rocchio_classify" -> Entry(qRocchioClassify _,
       """WITH d AS (SELECT doc_id, lang, CAST(n_chars AS BIGINT) x,
         |    CAST(len(string_split(text, ' ')) AS BIGINT) y FROM documents),
         |cent AS (SELECT lang clang,
@@ -12012,9 +11744,9 @@ object Queries {
         |    OVER (PARTITION BY doc_id ORDER BY d2, clang) rn FROM sc)
         |SELECT lang actual, clang predicted, count(*) n
         |FROM pick WHERE rn = 1
-        |GROUP BY actual, predicted ORDER BY actual, predicted""".stripMargin,
+        |GROUP BY actual, predicted ORDER BY actual, predicted""".stripMargin),
 
-    "q_knn_label" ->
+    "q_knn_label" -> Entry(qKnnLabel _,
       """WITH p AS (SELECT vec_id, CAST(label AS BIGINT) AS "label",
         |  CAST(floor((CAST(embedding[1] AS DOUBLE)+1.0)*1048576) AS BIGINT) xi,
         |  CAST(floor((CAST(embedding[2] AS DOUBLE)+1.0)*1048576) AS BIGINT) yi
@@ -12044,9 +11776,9 @@ object Queries {
         |      * 1000000 // count(pd.pred)
         |    ELSE 0 END AS BIGINT) acc_ppm
         |FROM p LEFT JOIN pd ON p.vec_id = pd.pid
-        |GROUP BY p."label" ORDER BY p."label"""".stripMargin,
+        |GROUP BY p."label" ORDER BY p."label"""".stripMargin),
 
-    "q_crosscorr" ->
+    "q_crosscorr" -> Entry(qCrossCorr _,
       """WITH ev AS (SELECT epoch_ns(ts) // 3600000000000 h, event_type
         |  FROM events),
         |cnt AS (SELECT h,
@@ -12077,9 +11809,9 @@ object Queries {
         |  CASE WHEN d1 > 0 AND d2 > 0
         |    THEN CAST((num * 1000 // d1) * (num * 1000 // d2) AS BIGINT)
         |    ELSE NULL END r2_ppm
-        |FROM fin ORDER BY lag_h""".stripMargin,
+        |FROM fin ORDER BY lag_h""".stripMargin),
 
-    "q_peak_detect" ->
+    "q_peak_detect" -> Entry(qPeakDetect _,
       """WITH ev AS (SELECT epoch_ns(ts) // 3600000000000 h, event_type
         |  FROM events),
         |cnt AS (SELECT event_type, h, count(*) c FROM ev GROUP BY 1, 2),
@@ -12099,9 +11831,9 @@ object Queries {
         |WHERE p2 IS NOT NULL AND f2 IS NOT NULL
         |  AND c > p1 AND c > p2 AND c > f1 AND c > f2
         |  AND c * 10 >= (p2 + p1 + c + f1 + f2) * 3
-        |ORDER BY event_type, h""".stripMargin,
+        |ORDER BY event_type, h""".stripMargin),
 
-    "q_readability" ->
+    "q_readability" -> Entry(qReadability _,
       """WITH d AS (SELECT doc_id, source,
         |    greatest(1, CAST(len(regexp_extract_all(text, '\S+'))
         |      AS BIGINT)) w,
@@ -12116,9 +11848,9 @@ object Queries {
         |  CAST(sum(fm) // count(*) AS BIGINT) avg_flesch_milli,
         |  CAST(min(fm) AS BIGINT) min_flesch_milli,
         |  CAST(max(fm) AS BIGINT) max_flesch_milli
-        |FROM f GROUP BY source ORDER BY source""".stripMargin,
+        |FROM f GROUP BY source ORDER BY source""".stripMargin),
 
-    "q_welch_ttest" ->
+    "q_welch_ttest" -> Entry(qWelchTtest _,
       """WITH c AS (SELECT CAST(c_nationkey AS BIGINT) nation,
         |    c_mktsegment = 'BUILDING' is_b,
         |    CAST(floor(c_acctbal) AS BIGINT) x
@@ -12150,9 +11882,9 @@ object Queries {
         |    THEN CAST(CAST(md_milli AS HUGEINT) * md_milli * 1000
         |      // se2_micro AS BIGINT)
         |    ELSE NULL END t2_milli
-        |FROM u ORDER BY nation""".stripMargin,
+        |FROM u ORDER BY nation""".stripMargin),
 
-    "q_hazard_km" ->
+    "q_hazard_km" -> Entry(qHazardKm _,
       """WITH per AS (SELECT user_id, min(epoch_ns(ts)) t0,
         |    max(epoch_ns(ts)) tlast,
         |    min(CASE WHEN event_type = 'purchase' THEN epoch_ns(ts) END) tp
@@ -12173,9 +11905,9 @@ object Queries {
         |    CAST(sum(h_ppm) OVER (ORDER BY d ROWS UNBOUNDED PRECEDING)
         |      AS BIGINT) ch_ppm FROM hz)
         |SELECT d, n_risk, d_ev, h_ppm, ch_ppm
-        |FROM fin WHERE d_ev > 0 ORDER BY d""".stripMargin,
+        |FROM fin WHERE d_ev > 0 ORDER BY d""".stripMargin),
 
-    "q_perm_test" ->
+    "q_perm_test" -> Entry(qPermTest _,
       """WITH base AS (SELECT c_custkey, c_mktsegment = 'BUILDING' is_b,
         |    CAST(floor(c_acctbal) AS BIGINT) x
         |  FROM customer WHERE c_mktsegment IN ('BUILDING', 'MACHINERY')),
@@ -12203,9 +11935,9 @@ object Queries {
         |  GROUP BY obs.n1, obs.n2, obs.obs_md_milli)
         |SELECT n1, n2, obs_md_milli, CAST(n_ge AS BIGINT) n_ge,
         |  (1 + CAST(n_ge AS BIGINT)) * 1000000 // 65 p_ppm
-        |FROM agg ORDER BY n1""".stripMargin,
+        |FROM agg ORDER BY n1""".stripMargin),
 
-    "q_item_lift" ->
+    "q_item_lift" -> Entry(qItemLift _,
       """WITH io AS (SELECT DISTINCT l_orderkey ok, l_partkey pk
         |  FROM lineitem),
         |n0 AS (SELECT count(DISTINCT ok) n_orders FROM io),
@@ -12223,9 +11955,9 @@ object Queries {
         |rk AS (SELECT a, b, c_ab, lift_ppm, row_number()
         |    OVER (PARTITION BY a ORDER BY lift_ppm DESC, b) rk FROM sc)
         |SELECT a, CAST(rk AS BIGINT) rk, b, c_ab, lift_ppm
-        |FROM rk WHERE rk <= 3 ORDER BY a, rk""".stripMargin,
+        |FROM rk WHERE rk <= 3 ORDER BY a, rk""".stripMargin),
 
-    "q_consistent_shard" ->
+    "q_consistent_shard" -> Entry(qConsistentShard _,
       """WITH k AS (SELECT doc_id,
         |    ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT h
         |  FROM documents),
@@ -12255,9 +11987,9 @@ object Queries {
         |  UNION ALL
         |  SELECT 'ring', n_keys, ring_moved,
         |    ring_moved * 1000000 // n_keys FROM ag)
-        |ORDER BY scheme""".stripMargin,
+        |ORDER BY scheme""".stripMargin),
 
-    "q_sax_motifs" ->
+    "q_sax_motifs" -> Entry(qSaxMotifs _,
       """WITH ev AS (SELECT epoch_ns(ts) // 86400000000000 AS dy,
         |    (epoch_ns(ts) // 3600000000000) % 24 AS hour, event_type
         |  FROM events),
@@ -12285,9 +12017,9 @@ object Queries {
         |    row_number() OVER (PARTITION BY event_type
         |      ORDER BY n_days DESC, motif, hour) rk FROM mc)
         |SELECT event_type, CAST(rk AS BIGINT) rk, hour, motif, n_days
-        |FROM rk WHERE rk <= 5 ORDER BY event_type, rk""".stripMargin,
+        |FROM rk WHERE rk <= 5 ORDER BY event_type, rk""".stripMargin),
 
-    "q_heavy_change" ->
+    "q_heavy_change" -> Entry(qHeavyChange _,
       """WITH ev AS (SELECT epoch_ns(ts) // 86400000000000 AS dy, user_id
         |  FROM events),
         |d0 AS (SELECT min(dy) d0 FROM ev),
@@ -12303,9 +12035,9 @@ object Queries {
         |fal AS (SELECT 'faller' AS "role", user_id, c1, c2, ratio_ppm
         |  FROM r ORDER BY ratio_ppm ASC, user_id LIMIT 10)
         |SELECT * FROM (SELECT * FROM ris UNION ALL SELECT * FROM fal)
-        |ORDER BY "role", ratio_ppm DESC, user_id""".stripMargin,
+        |ORDER BY "role", ratio_ppm DESC, user_id""".stripMargin),
 
-    "q_table_checksum" ->
+    "q_table_checksum" -> Entry(qTableChecksum _,
       """WITH cs AS (
         |  SELECT 'customer' tbl, count(*) n_rows,
         |    CAST(sum(('0x' || substr(md5(coalesce(CAST(c_custkey AS VARCHAR), '<null>')
@@ -12327,9 +12059,9 @@ object Queries {
         |      || '|' || coalesce(r_name, '<null>')), 1, 15))::BIGINT)
         |      % 1000000007 AS BIGINT)
         |  FROM region)
-        |SELECT tbl, n_rows, checksum FROM cs ORDER BY tbl""".stripMargin,
+        |SELECT tbl, n_rows, checksum FROM cs ORDER BY tbl""".stripMargin),
 
-    "q_bpe_merges" ->
+    "q_bpe_merges" -> Entry(qBpeMerges _,
       """WITH w0 AS (SELECT w, count(*) f FROM (
         |    SELECT unnest(string_split(text, ' ')) w FROM documents)
         |  WHERE length(w) >= 2 GROUP BY w),
@@ -12396,14 +12128,14 @@ object Queries {
         |  UNION ALL SELECT 3, pair, n FROM m3
         |  UNION ALL SELECT 4, pair, n FROM m4
         |  UNION ALL SELECT 5, pair, n FROM m5)
-        |SELECT step, pair, n_merged FROM fin ORDER BY step""".stripMargin,
+        |SELECT step, pair, n_merged FROM fin ORDER BY step""".stripMargin),
 
     // same m1..m5 trainer chain as q_bpe_merges, then the apply: every
     // word (length >= 1 — singles tokenize too) char-split and run
     // through the 5 anchored replaces in step order; coalesce(chr(7))
     // makes a missing merge a no-op instead of a NULL-poisoning
     // pattern when the vocab collapses early
-    "q_bpe_encode" ->
+    "q_bpe_encode" -> Entry(qBpeEncode _,
       """WITH w0 AS (SELECT w, count(*) f FROM (
         |    SELECT unnest(string_split(text, ' ')) w FROM documents)
         |  WHERE length(w) >= 2 GROUP BY w),
@@ -12494,9 +12226,9 @@ object Queries {
         |  CAST(n_merged AS BIGINT) n_merged,
         |  CAST(CAST(n_merged AS BIGINT) * 1000000
         |    // CAST(n_tokens AS BIGINT) AS BIGINT) merged_ppm
-        |FROM agg ORDER BY doc_id""".stripMargin,
+        |FROM agg ORDER BY doc_id""".stripMargin),
 
-    "q_eb_shrinkage" ->
+    "q_eb_shrinkage" -> Entry(qEbShrinkage _,
       """WITH per AS (SELECT user_id, count(*) n,
         |    sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) k
         |  FROM events GROUP BY user_id),
@@ -12507,9 +12239,9 @@ object Queries {
         |  CAST((CAST(k AS HUGEINT) * 1000000 + 100 * prior_ppm)
         |    // (n + 100) AS BIGINT) shrunk_ppm
         |FROM per CROSS JOIN pri
-        |ORDER BY shrunk_ppm DESC, user_id LIMIT 10""".stripMargin,
+        |ORDER BY shrunk_ppm DESC, user_id LIMIT 10""".stripMargin),
 
-    "q_mode_disc" ->
+    "q_mode_disc" -> Entry(qModeDisc _,
       """WITH c AS (SELECT CAST(c_nationkey AS BIGINT) nation,
         |    c_mktsegment seg,
         |    CAST(floor(c_acctbal * 100) AS BIGINT) cents, c_custkey
@@ -12528,9 +12260,9 @@ object Queries {
         |  WHERE rn = (nn + 1) // 2)
         |SELECT mo.nation, n, mode_seg, mode_n, median_cents
         |FROM mo JOIN me ON mo.nation = me.nation
-        |ORDER BY mo.nation""".stripMargin,
+        |ORDER BY mo.nation""".stripMargin),
 
-    "q_autocomplete" ->
+    "q_autocomplete" -> Entry(qAutocomplete _,
       """WITH v AS (SELECT w, count(*) f FROM (
         |    SELECT unnest(string_split(text, ' ')) w FROM documents)
         |  WHERE length(w) >= 1 GROUP BY w HAVING count(*) >= 2),
@@ -12540,9 +12272,9 @@ object Queries {
         |rk AS (SELECT prefix, w, f, row_number() OVER (
         |    PARTITION BY prefix ORDER BY f DESC, w) rk FROM px)
         |SELECT prefix, CAST(rk AS BIGINT) rk, w, f
-        |FROM rk WHERE rk <= 3 ORDER BY prefix, rk""".stripMargin,
+        |FROM rk WHERE rk <= 3 ORDER BY prefix, rk""".stripMargin),
 
-    "q_fano_burstiness" ->
+    "q_fano_burstiness" -> Entry(qFanoBurstiness _,
       """WITH ev AS (SELECT epoch_ns(ts) // 3600000000000 h, event_type
         |  FROM events),
         |ext AS (SELECT min(h) hmin, max(h) hmax FROM ev),
@@ -12563,14 +12295,14 @@ object Queries {
         |    WHEN (CAST(n_hours AS HUGEINT) * q - CAST(s AS HUGEINT) * s)
         |      * 1000 // (CAST(n_hours AS HUGEINT) * s) < 900 THEN 'regular'
         |    ELSE 'poisson-like' END dispersion
-        |FROM m ORDER BY event_type""".stripMargin,
+        |FROM m ORDER BY event_type""".stripMargin),
 
     // event_id tiebreak: exact-ns duplicate timestamps exist in
     // skewed data, and untied ORDER BY in a lag window is the DuckDB
     // parallel-window nondeterminism trap (see q_peak_concurrency);
     // the gap MULTISET is tie-insensitive, so the tiebreak only
     // stabilizes the oracle
-    "q_interarrival" ->
+    "q_interarrival" -> Entry(qInterarrival _,
       """WITH g AS (SELECT event_type,
         |    (epoch_ns(ts) - lag(epoch_ns(ts), 1) OVER (
         |      PARTITION BY user_id, event_type
@@ -12587,9 +12319,9 @@ object Queries {
         |  CAST(max(CASE WHEN rn = (9 * n + 9) // 10 THEN gap_s END)
         |    AS BIGINT) p90_s
         |FROM r WHERE rn = (n + 1) // 2 OR rn = (9 * n + 9) // 10
-        |GROUP BY event_type ORDER BY event_type""".stripMargin,
+        |GROUP BY event_type ORDER BY event_type""".stripMargin),
 
-    "q_minhash_calibration" -> {
+    "q_minhash_calibration" -> Entry(qMinhashCalibration _, {
       val matches = (0 until Dedup.MinhashK)
         .map(i => s"(CASE WHEN sa.m$i = sb.m$i THEN 1 ELSE 0 END)")
         .mkString(" + ")
@@ -12613,9 +12345,9 @@ object Queries {
          |  CAST(sum(err) // count(*) AS BIGINT) mae_ppm,
          |  CAST(max(err) AS BIGINT) max_err_ppm
          |FROM bk GROUP BY bucket ORDER BY bucket""".stripMargin
-    },
+    }),
 
-    "q_multipattern_scan" ->
+    "q_multipattern_scan" -> Entry(qMultipatternScan _,
       """WITH p AS (SELECT unnest(['scan','merge batch','fast table','row scan','value part','slow','hash value','a a']) pattern),
         |c AS (SELECT d.source, p.pattern,
         |    (length(d.text) - length(replace(d.text, p.pattern, '')))
@@ -12625,9 +12357,9 @@ object Queries {
         |SELECT source, pattern, CAST(sum(n) AS BIGINT) n_occ,
         |  CAST(sum(CASE WHEN n > 0 THEN 1 ELSE 0 END) AS BIGINT) n_docs
         |FROM c GROUP BY source, pattern
-        |ORDER BY source, pattern""".stripMargin,
+        |ORDER BY source, pattern""".stripMargin),
 
-    "q_vocab_growth" ->
+    "q_vocab_growth" -> Entry(qVocabGrowth _,
       """WITH ext AS (SELECT min(doc_id) mn, max(doc_id) mx FROM documents),
         |toks AS (SELECT least(9, (doc_id - mn) * 10 // (mx - mn + 1)) b,
         |    w, doc_id
@@ -12646,9 +12378,9 @@ object Queries {
         |    AS BIGINT) cum_tokens,
         |  CAST(sum(new_types) OVER (ORDER BY b ROWS UNBOUNDED PRECEDING)
         |    AS BIGINT) cum_types
-        |FROM j ORDER BY b""".stripMargin,
+        |FROM j ORDER BY b""".stripMargin),
 
-    "q_behavior_diversity" ->
+    "q_behavior_diversity" -> Entry(qBehaviorDiversity _,
       """WITH pc AS (SELECT user_id, event_type, count(*) c
         |  FROM events GROUP BY 1, 2),
         |per AS (SELECT user_id,
@@ -12657,9 +12389,9 @@ object Queries {
         |  FROM pc GROUP BY user_id)
         |SELECT div_ppm // 100000 bucket, count(*) n_users,
         |  min(div_ppm) min_div_ppm, max(div_ppm) max_div_ppm
-        |FROM per GROUP BY bucket ORDER BY bucket""".stripMargin,
+        |FROM per GROUP BY bucket ORDER BY bucket""".stripMargin),
 
-    "q_scd2_read" ->
+    "q_scd2_read" -> Entry(qScd2Read _,
       """WITH v AS (SELECT user_id, epoch_ns(ts) // 1000 t, event_id,
         |    value, CASE WHEN value < 5 THEN 'D' ELSE 'U' END op
         |  FROM events),
@@ -12670,9 +12402,9 @@ object Queries {
         |SELECT user_id, event_id, t valid_from, value val
         |FROM w CROSS JOIN tt
         |WHERE op = 'U' AND t <= tm AND (valid_to IS NULL OR valid_to > tm)
-        |ORDER BY user_id""".stripMargin,
+        |ORDER BY user_id""".stripMargin),
 
-    "q_dedup_panel" -> {
+    "q_dedup_panel" -> Entry(qDedupPanel _, {
       val matches = (0 until Dedup.MinhashK)
         .map(i => s"(CASE WHEN sa.m$i = sb.m$i THEN 1 ELSE 0 END)")
         .mkString(" + ")
@@ -12717,7 +12449,7 @@ object Queries {
          |SELECT metric, CAST(n AS BIGINT) n
          |FROM (SELECT * FROM hist UNION ALL SELECT * FROM meth)
          |ORDER BY metric""".stripMargin
-    },
+    }),
 
     // ev is DISTINCT: duplicate (user,type,second) rows cannot affect
     // gap sessionization or session endpoints, and they put ties in
@@ -12725,7 +12457,7 @@ object Queries {
     // window execution resolves NONDETERMINISTICALLY (observed on
     // skewed sf1: n_sessions drifted ±1 run-to-run). The engine side
     // is tie-insensitive by value, so dedup only stabilizes the oracle.
-    "q_peak_concurrency" ->
+    "q_peak_concurrency" -> Entry(qPeakConcurrency _,
       """WITH ev AS (SELECT DISTINCT user_id, event_type,
         |    epoch_ns(ts) // 1000000000 t FROM events),
         |br AS (SELECT user_id, event_type, t,
@@ -12750,9 +12482,9 @@ object Queries {
         |SELECT ns.event_type, n_sessions, CAST(peak AS BIGINT) peak,
         |  peak_at
         |FROM ns JOIN pk ON ns.event_type = pk.event_type AND rn = 1
-        |ORDER BY ns.event_type""".stripMargin,
+        |ORDER BY ns.event_type""".stripMargin),
 
-    "q_diameter_2sweep" ->
+    "q_diameter_2sweep" -> Entry(qDiameter2Sweep _,
       """WITH RECURSIVE
         |e0 AS (SELECT DISTINCT o_custkey * 2 AS c, l_suppkey * 2 + 1 AS sup
         |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
@@ -12777,9 +12509,9 @@ object Queries {
         |  (SELECT CAST(dist AS BIGINT) FROM far) ecc_seed,
         |  CAST(max(dist) AS BIGINT) diameter_lb,
         |  count(*) n_reached
-        |FROM m2""".stripMargin,
+        |FROM m2""".stripMargin),
 
-    "q_hll_union" -> {
+    "q_hll_union" -> Entry(qHllUnion _, {
       import graft.operators.Sketches
       val lcTable = Sketches.HllLinearTable.map(v => s"${v}e0").mkString("[", ", ", "]")
       s"""WITH t0 AS (SELECT source, unnest(string_split(text, ' ')) w
@@ -12810,9 +12542,9 @@ object Queries {
          |    / exact_distinct) AS BIGINT) err_ppm
          |FROM est JOIN ex ON est.source = ex.source
          |ORDER BY est.source""".stripMargin
-    },
+    }),
 
-    "q_activity_streaks" ->
+    "q_activity_streaks" -> Entry(qActivityStreaks _,
       """WITH d AS (SELECT DISTINCT user_id,
         |    epoch_ns(ts) // 86400000000000 AS dy FROM events),
         |isl AS (SELECT user_id, dy,
@@ -12822,8 +12554,24 @@ object Queries {
         |    max(dy) end_day
         |  FROM isl GROUP BY user_id, isl)
         |SELECT user_id, len, start_day, end_day
-        |FROM runs ORDER BY len DESC, start_day, user_id LIMIT 10""".stripMargin
+        |FROM runs ORDER BY len DESC, start_day, user_id LIMIT 10""".stripMargin)
   )
+
+  val all: Map[String, (SparkSession, String) => DataFrame] =
+    catalog.map { case (name, e) => name -> e.plan }
+
+  val oracles: Map[String, String] =
+    catalog.map { case (name, e) => name -> e.oracle }
+
+  /** The named queries' plans, in the order given. A name the catalog does
+    * not have fails here, before any Spark work, with the valid names. */
+  def resolve(names: Seq[String]): Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val unknown = names.filterNot(all.contains)
+    require(unknown.isEmpty,
+      s"unknown quer${if (unknown.size == 1) "y" else "ies"}: ${unknown.mkString(", ")}; " +
+        s"valid names: ${all.keys.toSeq.sorted.mkString(", ")}")
+    names.map(n => n -> all(n))
+  }
 
   /** DuckDB list literals of the ±1 LSH hyperplanes (shared with the
     * Spark plan so oracle and engine use identical constants). */

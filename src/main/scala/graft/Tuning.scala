@@ -4,10 +4,11 @@ import org.apache.spark.sql.SparkSession
 
 import graft.sources.{NioLocalFileSystem, NioLocalFs}
 
-/** Engine-level Spark conf defaults shared by every session-building
-  * main (Bench, Verify, the measurement tools, the streaming soaks),
-  * so a tuning decision is made once and every surface measures the
-  * same engine.
+/** Engine-level Spark conf defaults shared by every session: the tools
+  * and soaks build theirs with [[localSession]], the frozen `graft.Bench`,
+  * the benchmark harness and the test session call [[engineDefaults]]
+  * directly. A tuning decision is made once and every surface measures
+  * the same engine.
   *
   * `spark.shuffle.sort.bypassMergeThreshold = 0` (r19 optimization,
   * guide §2.2): with the default threshold (200), every shuffle whose
@@ -44,4 +45,33 @@ object Tuning {
     b.config("spark.shuffle.sort.bypassMergeThreshold", "0")
       .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
       .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[NioLocalFs].getName)
+
+  /** The session of every standalone tool: [[engineDefaults]] on
+    * `local[SPARK_GRAFT_CPUS]` (default: the cores the JVM sees), UTC, no
+    * UI, log level ERROR, then the caller's `conf`.
+    *
+    * The partition-invariance knobs apply to every tool:
+    * `SPARK_GRAFT_SHUFFLE` (shuffle partitions, default the core count),
+    * `SPARK_GRAFT_MAX_PARTITION_BYTES` (scan split size, default 128 MB)
+    * and `SPARK_GRAFT_AQE` (default true). Two `graft.Verify` dumps, one
+    * under adversarial values (a prime shuffle count, 1 MB splits, AQE
+    * off), compared by `scripts/invariance_compare.py`, show that no
+    * result depends on partition count, split boundaries or runtime
+    * re-planning: the failure mode behind partition-order float drift and
+    * first-wins/last-wins tie bugs. */
+  def localSession(conf: (String, String)*): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
+    val b = engineDefaults(SparkSession.builder())
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
+      .config("spark.sql.files.maxPartitionBytes",
+        sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "134217728"))
+      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+    val spark = conf.foldLeft(b) { case (acc, (k, v)) => acc.config(k, v) }.getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    spark
+  }
 }

@@ -1,42 +1,22 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json, for the DuckDB oracle compare. The session's
+  * partition-invariance knobs are [[Tuning.localSession]]'s. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // optional 3rd arg: comma-separated query-name filter (local iteration)
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Partition-invariance knobs (default = driver shape). Running the
-    // catalog twice under adversarial values (prime shuffle count, tiny
-    // input splits, AQE off) and diffing the dumps bit-for-bit proves
-    // no result depends on partition count, split boundaries, or
-    // runtime re-planning — the failure mode behind partition-order
-    // float drift and first-wins/last-wins tie bugs.
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val maxPartitionBytes =
-      sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "134217728")
-    val aqe = sys.env.getOrElse("SPARK_GRAFT_AQE", "true")
-    val spark = graft.Tuning.engineDefaults(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.files.maxPartitionBytes", maxPartitionBytes)
-      .config("spark.sql.adaptive.enabled", aqe)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val selected =
+      if (args.length > 2) Queries.resolve(args(2).split(",").toSeq)
+      else SparkEntry.queries.toSeq
+    val spark = Tuning.localSession()
     // stamp which data generation this dump was computed against
     // (FIXTURES records cite it; see tools.DataGenId)
     System.err.println(
       s"[verify] datagen_id=${tools.DataGenId.of(sfDir)} dir=$sfDir")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -45,9 +25,16 @@ object Verify {
       // query-local caches must not accumulate across the catalog run
       spark.catalog.clearCache()
     }
+    writeOracleJson(outDir, SparkEntry.oracleSql)
+    spark.stop()
+  }
+
+  /** Writes `oracles` to `<outDir>/oracle_sql.json`, the name → SQL object
+    * the DuckDB compare scripts read. */
+  def writeOracleJson(outDir: String, oracles: Map[String, String]): Unit = {
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
+    // — a tab or CR in oracle SQL would otherwise make the compare
+    // script's json.load fail and silently skip every correctness check.
     def q(s: String): String = "\"" + s.flatMap {
       case '"'  => "\\\""
       case '\\' => "\\\\"
@@ -57,9 +44,8 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val json = oracles
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
   }
 }

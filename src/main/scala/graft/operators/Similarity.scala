@@ -54,15 +54,6 @@ object Similarity {
     }
   }
 
-  /** Bucket id: bit i set iff dot(qv, plane_i) > 0. Integer dots ⇒
-    * exact. */
-  def bucketColumn(planes: Seq[Seq[Int]]): Column =
-    planes.zipWithIndex.map { case (p, i) =>
-      val lits = expr(p.mkString("array(", ", ", ")")).cast("array<bigint>")
-      when(graft.functions.VectorOps.dot_long(col("qv"), lits) > 0,
-        lit(1L << i)).otherwise(lit(0L))
-    }.reduce(_ + _)
-
   /** df(qv) + exploded (band_idx, band_key) rows: banded
     * random-hyperplane LSH. Planes are grouped into bands of
     * `bandSize`; a band's key is the sign-bit integer of its planes'

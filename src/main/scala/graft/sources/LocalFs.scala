@@ -5,8 +5,8 @@ import java.nio.file.Files
 import java.nio.file.attribute.PosixFilePermission
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FsServerDefaults,
-  LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FSDataInputStream, FileStatus,
+  FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 
@@ -49,4 +49,11 @@ class NioLocalFs(uri: URI, conf: Configuration) extends ChecksumFs(
     override def getServerDefaults(f: Path): FsServerDefaults = LocalConfigKeys.getServerDefaults()
     override def getServerDefaults(): FsServerDefaults = LocalConfigKeys.getServerDefaults()
     override def isValidName(src: String): Boolean = true
-  })
+  }) {
+  /** `FilterFs.open(Path)` reads the raw file and skips the `.crc`; only
+    * `ChecksumFs.open(Path, Int)` verifies. Spark's checkpoint manager reads
+    * the offset and commit logs through `FileContext.open(path)`, so without
+    * this a corrupted log entry is parsed as if it were intact. */
+  override def open(f: Path): FSDataInputStream =
+    open(f, getServerDefaults(f).getFileBufferSize)
+}

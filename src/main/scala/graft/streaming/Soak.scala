@@ -699,18 +699,10 @@ object Soak {
 object SoakBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val nEventFiles = sys.env.getOrElse("SPARK_GRAFT_STREAM_FILES", "24").toInt
     val nDocFiles = math.max(2, nEventFiles / 4)
-    val spark = graft.Tuning.engineDefaults(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.streaming.numRecentProgressUpdates", s"${nEventFiles + 8}")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Tuning.localSession(
+      "spark.sql.streaming.numRecentProgressUpdates" -> s"${nEventFiles + 8}")
     val crashPoint = sys.env.getOrElse("SPARK_GRAFT_CRASH_POINT", "pipeline")
     val docSkewPct =
       sys.env.getOrElse("SPARK_GRAFT_STREAM_DOC_SKEW_PCT", "0").toInt

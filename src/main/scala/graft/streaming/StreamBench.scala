@@ -3,7 +3,6 @@ package graft.streaming
 import java.nio.file.Files
 import java.util.concurrent.atomic.LongAdder
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -36,18 +35,11 @@ object CountingSink {
 object StreamBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val nFiles = sys.env.getOrElse("SPARK_GRAFT_STREAM_FILES", "50").toInt
-    val spark = graft.Tuning.engineDefaults(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // keep every micro-batch's progress (default 100 would do for 50
-      // batches; pin anyway so nFiles overrides stay recorded)
-      .config("spark.sql.streaming.numRecentProgressUpdates", s"${nFiles + 8}")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // keep every micro-batch's progress (default 100 would do for 50
+    // batches; pin anyway so nFiles overrides stay recorded)
+    val spark = graft.Tuning.localSession(
+      "spark.sql.streaming.numRecentProgressUpdates" -> s"${nFiles + 8}")
 
     val input = Files.createTempDirectory("sbench-in").toString
     val work = Files.createTempDirectory("sbench-work").toString

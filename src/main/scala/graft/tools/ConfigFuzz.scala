@@ -6,8 +6,6 @@ import scala.util.Random
 
 import org.json4s._
 
-import org.apache.spark.sql.SparkSession
-
 import graft.model.{FbOptions, JsonSchema, ResourceSchemas, Subscription}
 import graft.operators.Masking
 
@@ -425,14 +423,7 @@ object ConfigFuzz {
     require(d1 + d2 == 0, s"rejection-parity divergences: schema=$d1 secondary=$d2")
 
     // phase 3: compile + dump valid draws for the DuckDB referee
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.Tuning.engineDefaults(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Tuning.localSession()
     new java.io.File(outDir).mkdirs()
     val vs = (1 to nValid).map(i => drawValidVariant(rnd, i))
     // every valid draw must PASS validation before it runs — ties the

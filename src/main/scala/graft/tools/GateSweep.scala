@@ -1,8 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-import graft.{Queries, SparkEntry}
+import graft.{Queries, SparkEntry, Tuning, Verify}
 import graft.operators.TierProbe
 
 /** Adaptive-gate correctness sweep (judge brief r19 #1).
@@ -37,29 +35,20 @@ object GateSweep {
 
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    val names =
-      if (args.length > 2) args(2).split(",").toSeq else GateQueries
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = graft.Tuning.engineDefaults(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val queries = Queries.resolve(
+      if (args.length > 2) args(2).split(",").toSeq else GateQueries)
+    val spark = Tuning.localSession()
     System.err.println(
       s"[gatesweep] datagen_id=${DataGenId.of(sfDir)} dir=$sfDir")
     new java.io.File(outDir).mkdirs()
     val knobs = sys.env.keys.filter(_.startsWith("SPARK_GRAFT")).toSeq.sorted
       .map(k => s""""$k":"${sys.env(k)}"""").mkString("{", ",", "}")
-    names.foreach { name =>
+    queries.foreach { case (name, plan) =>
       TierProbe.clear()
       val t0 = System.nanoTime()
       val err =
         try {
-          Queries.all(name)(spark, sfDir).coalesce(1).write
+          plan(spark, sfDir).coalesce(1).write
             .mode("overwrite").parquet(s"$outDir/$name")
           null
         } catch { case e: Throwable => e.toString.takeWhile(_ != '\n') }
@@ -75,20 +64,8 @@ object GateSweep {
         s""","knobs":$knobs}""")
     }
     // the oracle map, so the standard compare scripts run on this dump
-    val q = (s: String) => "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql.view
-      .filterKeys(names.contains).toMap
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$outDir/oracle_sql.json"), json)
+    val names = queries.map(_._1).toSet
+    Verify.writeOracleJson(outDir, SparkEntry.oracleSql.view.filterKeys(names).toMap)
     spark.stop()
   }
 }

@@ -1,9 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
-import graft.Queries
+import graft.{Queries, Tuning}
 
 /** Formatted-plan dumper that sees THROUGH eager materializations:
   * enables [[graft.operators.PlanProbe]], runs each named catalog
@@ -15,7 +14,7 @@ import graft.Queries
   * post-checkpoint `Scan ExistingRDD`).
   *
   * Usage: runMain graft.tools.PlanDump <sfDir> <query> [query...]
-  * Env: SPARK_GRAFT_CPUS (default 32). Output goes to stdout between
+  * Session: [[graft.Tuning.localSession]]. Output goes to stdout between
   * `===== PLAN <key> =====` markers; redirect and split per query for
   * the plans/ evidence files.
   */
@@ -23,21 +22,13 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: PlanDump <sfDir> <query> [query...]")
     val sfDir = args(0)
-    val names = args.drop(1).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.Tuning.engineDefaults(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val queries = Queries.resolve(args.drop(1).toSeq)
+    val spark = Tuning.localSession()
     graft.operators.PlanProbe.enabled = true
-    for (name <- names) {
+    for ((name, plan) <- queries) {
       graft.operators.PlanProbe.clear()
       spark.catalog.clearCache()
-      val df = Queries.all(name)(spark, sfDir)
+      val df = plan(spark, sfDir)
       df.write.format("noop").mode("overwrite").save()
       println(s"===== PLAN $name (query result) =====")
       println(df.queryExecution.explainString(ExplainMode.fromString("formatted")))

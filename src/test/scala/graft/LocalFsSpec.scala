@@ -93,10 +93,40 @@ class LocalFsSpec extends AnyFunSuite with SparkTestBase {
     val raf = new RandomAccessFile(file.toFile, "rw")
     try { raf.seek(3); raf.write(raf.read() ^ 0xff) } finally raf.close()
     // read through FileContext: on a checksum error the FileSystem variant
-    // moves the file into a `bad_files` dir at its highest writable ancestor.
-    // Only the two-argument open verifies (FilterFs.open(Path) skips ChecksumFs).
-    val in = fc.open(hpath(file), 4096)
-    try intercept[ChecksumException](in.readAllBytes()) finally in.close()
+    // moves the file into a `bad_files` dir at its highest writable ancestor
+    Seq(fc.open(hpath(file), 4096), fc.open(hpath(file))).foreach { in =>
+      try intercept[ChecksumException](in.readAllBytes()) finally in.close()
+    }
+  }
+
+  test("a restarted streaming job fails on a corrupted offset log instead of resuming from it") {
+    val (input, sinkRoot, work) = (tmp().resolve("in").toString, tmp().toString, tmp())
+    val sub = Subscription("crc", "crc", "t?", FbOptions(
+      syncMode = "sync", targetPath = "_aether/entities/{topic}"))
+    def batch(ids: Range) = ids.map(i => ("tnt.t1", i.toLong, s"name-$i"))
+      .toDF("kafka_topic", "id", "name")
+    def start() = new StreamingJob(spark, Seq(sub), "tnt", () => new JsonFileSink(sinkRoot),
+      s"$work/hashes", s"$work/ckpt").start(spark.readStream.schema(batch(1 to 1).schema).parquet(input))
+    batch(1 to 10).coalesce(1).write.parquet(input)
+    val q = start()
+    try {
+      q.processAllAvailable()
+      batch(11 to 20).coalesce(1).write.mode("append").parquet(input)
+      q.processAllAvailable()
+    } finally q.stop()
+    assert(q.recentProgress.count(_.numInputRows > 0) == 2)
+
+    // the file source's offset is the last line: {"logOffset":1}; make it 0,
+    // same length and still valid JSON, so only the .crc can tell
+    val log = work.resolve("ckpt/offsets/1")
+    val text = Files.readString(log, UTF_8)
+    assert(text.endsWith("""{"logOffset":1}"""), text)
+    Files.writeString(log, text.dropRight(2) + "0}", UTF_8)
+
+    val restarted = start()
+    val err = try intercept[Exception](restarted.processAllAvailable()) finally restarted.stop()
+    val causes = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null).toSeq
+    assert(causes.exists(_.isInstanceOf[ChecksumException]), causes.mkString("\n"))
   }
 
   test("a SYNC streaming job's checkpoint, hash-store merge and manifest flip start no Hadoop shell process") {

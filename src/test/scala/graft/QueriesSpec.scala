@@ -461,6 +461,13 @@ class QueriesSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  test("a misspelled query name fails the lookup, naming it and the valid names") {
+    assert(Queries.resolve(Seq("q_tpch_q3", "q1_agg")).map(_._1) == Seq("q_tpch_q3", "q1_agg"))
+    val e = intercept[IllegalArgumentException](Queries.resolve(Seq("q1_agg", "q_tpch_q33")))
+    assert(e.getMessage.contains("unknown query: q_tpch_q33;"), e.getMessage)
+    assert(e.getMessage.contains("q_tpch_q3,"), e.getMessage)
+  }
+
   test("entry returns rows on sf0.001") {
     assert(SparkEntry.entry(spark).count() > 0)
   }
