@@ -834,6 +834,23 @@ object Queries {
         |FROM tree GROUP BY depth ORDER BY depth""".stripMargin)
   }
 
+  /** One row per lineitem of orders⋈lineitem as a customer–supplier
+    * purchase: `c` = custkey·2, `sup` = suppkey·2+1 — integer node ids
+    * in one space, so every shuffle in the graph family moves
+    * fixed-width longs, never strings — plus `extra` lineitem-derived
+    * columns. */
+  private def purchases(s: SparkSession, dir: String,
+      extra: org.apache.spark.sql.Column*): DataFrame =
+    Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey"))
+      .join(Tables.lineitem(s, dir), col("o_orderkey") === col("l_orderkey"))
+      .select((col("o_custkey") * 2).as("c") +:
+        (col("l_suppkey") * 2 + 1).as("sup") +: extra: _*)
+
+  /** The customer–supplier purchase graph: distinct (c, sup) pairs of
+    * [[purchases]]. */
+  private def purchaseEdges(s: SparkSession, dir: String): DataFrame =
+    purchases(s, dir).distinct()
+
   /** PageRank (3 unrolled iterations, damping 0.85) over the
     * customer↔supplier graph induced by orders×lineitem — the
     * canonical iterative-graph workload, in pure DataFrame form: per
@@ -848,27 +865,13 @@ object Queries {
     * ≥ 1. At 100 TB the edge list pre-partitions on src once and
     * every iteration reuses that partitioning. */
   def qPagerank(s: SparkSession, dir: String): DataFrame = {
-    // integer node ids (customer 2k, supplier 2k+1): every shuffle in
-    // the iteration loop moves fixed-width longs, never strings
-    val e0 = Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey"))
-      .join(Tables.lineitem(s, dir).select(col("l_orderkey"), col("l_suppkey")),
-            col("o_orderkey") === col("l_orderkey"))
-      .select((col("o_custkey") * 2).as("c"),
-              (col("l_suppkey") * 2 + 1).as("sup"))
-      .distinct()
     // the graph is read 3+ times (once per iteration): hash-partition
     // it on the join key ONCE — with the out-degree pre-attached to
     // every edge, so the loop body is exactly one join + one agg —
     // and cache. The cached partitioning satisfies every iteration's
     // join distribution, so each round shuffles only the
     // (|nodes|-sized) rank relation, never the (|edges|-sized) graph.
-    // Both directions come from ONE scan via explode(array(...)) — a
-    // union of two selects would run the orders×lineitem join and its
-    // distinct twice before the cache materializes.
-    val sym = e0.select(explode(array(
-        struct(col("c").as("src"), col("sup").as("dst")),
-        struct(col("sup").as("src"), col("c").as("dst")))).as("d"))
-      .select(col("d.src").as("src"), col("d.dst").as("dst"))
+    val sym = Graph.undirected(purchaseEdges(s, dir), "c", "sup")
       .repartition(col("src"))
       .cache() // read twice below (deg agg + join) — materialize once
     val deg = sym.groupBy(col("src")).agg(count(lit(1)).as("d")).cache()
@@ -975,12 +978,8 @@ object Queries {
     * the 3-round-unrolled oracle must then equal because extra peel
     * rounds past convergence are no-ops. */
   def qKcore(s: SparkSession, dir: String): DataFrame = {
-    val e = Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey"))
-      .join(Tables.lineitem(s, dir).select(col("l_orderkey"), col("l_suppkey")),
-        col("o_orderkey") === col("l_orderkey"))
-      .select((col("o_custkey") * 2).as("u"), (col("l_suppkey") * 2 + 1).as("v"))
-      .distinct()
-    graft.operators.Graph.kcorePeel(e, 34, maxRounds = 3)
+    val e = purchaseEdges(s, dir).select(col("c").as("u"), col("sup").as("v"))
+    Graph.kcorePeel(e, 34, maxRounds = 3)
       .orderBy(col("node"))
   }
 
@@ -2801,16 +2800,7 @@ object Queries {
     * join + distinct twice is strictly worse than one cached build.
     */
   def qNeighborAgg(s: SparkSession, dir: String): DataFrame = {
-    val e0 = Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey"))
-      .join(Tables.lineitem(s, dir).select(col("l_orderkey"), col("l_suppkey")),
-        col("o_orderkey") === col("l_orderkey"))
-      .select((col("o_custkey") * 2).as("c"), (col("l_suppkey") * 2 + 1).as("sup"))
-      .distinct()
-    val sym = e0.select(explode(array(
-        struct(col("c").as("src"), col("sup").as("dst")),
-        struct(col("sup").as("src"), col("c").as("dst")))).as("d"))
-      .select(col("d.src").as("src"), col("d.dst").as("dst"))
-      .cache()
+    val sym = Graph.undirected(purchaseEdges(s, dir), "c", "sup").cache()
     val deg = sym.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
     sym.join(deg.select(col("node").as("dst"), col("deg").as("dst_deg")), "dst")
       .groupBy(col("src").as("node"))
@@ -2911,15 +2901,7 @@ object Queries {
     * no path explosion) taking MIN(depth) per node. */
   def qBfsHops(s: SparkSession, dir: String,
       maxHops: Int = 3, seedBound: Long = 20L): DataFrame = {
-    val e0 = Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey"))
-      .join(Tables.lineitem(s, dir).select(col("l_orderkey"), col("l_suppkey")),
-        col("o_orderkey") === col("l_orderkey"))
-      .select((col("o_custkey") * 2).as("c"), (col("l_suppkey") * 2 + 1).as("sup"))
-      .distinct()
-    val edges = e0.select(explode(array(
-        struct(col("c").as("src"), col("sup").as("dst")),
-        struct(col("sup").as("src"), col("c").as("dst")))).as("d"))
-      .select(col("d.src").as("src"), col("d.dst").as("dst"))
+    val edges = Graph.undirected(purchaseEdges(s, dir), "c", "sup")
       // cached pre-partitioned on the BFS join key so each round
       // shuffles only the frontier, never the graph (see
       // q_diameter_2sweep's StageProfile note)
@@ -5046,16 +5028,7 @@ object Queries {
     * shuffles only the node-sized rank relation. Emits the top-30
     * non-source nodes (rank desc, node asc). */
   def qPpr(s: SparkSession, dir: String): DataFrame = {
-    val e0 = Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey"))
-      .join(Tables.lineitem(s, dir).select(col("l_orderkey"), col("l_suppkey")),
-        col("o_orderkey") === col("l_orderkey"))
-      .select((col("o_custkey") * 2).as("c"),
-        (col("l_suppkey") * 2 + 1).as("sup"))
-      .distinct()
-    val sym = e0.select(explode(array(
-        struct(col("c").as("src"), col("sup").as("dst")),
-        struct(col("sup").as("src"), col("c").as("dst")))).as("d"))
-      .select(col("d.src").as("src"), col("d.dst").as("dst"))
+    val sym = Graph.undirected(purchaseEdges(s, dir), "c", "sup")
       .repartition(col("src"))
       .cache()
     val deg = sym.groupBy(col("src")).agg(count(lit(1)).as("d")).cache()
@@ -5164,12 +5137,7 @@ object Queries {
     * two keyed joins to attach endpoint degrees, one global
     * 1-row reduce. */
   def qAssortativity(s: SparkSession, dir: String): DataFrame = {
-    val e0 = Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey"))
-      .join(Tables.lineitem(s, dir).select(col("l_orderkey"), col("l_suppkey")),
-        col("o_orderkey") === col("l_orderkey"))
-      .select((col("o_custkey") * 2).as("src"),
-        (col("l_suppkey") * 2 + 1).as("dst"))
-      .distinct()
+    val e0 = purchaseEdges(s, dir).select(col("c").as("src"), col("sup").as("dst"))
     val sym = e0.unionByName(
       e0.select(col("dst").as("src"), col("src").as("dst")))
     val deg = sym.groupBy(col("src")).agg(count(lit(1)).as("d"))
@@ -5654,77 +5622,27 @@ object Queries {
     * k, so re-relaxing it cannot improve anything — per-round results
     * are identical to full relaxation, but the edge join is sized by
     * the (shrinking) frontier's adjacency instead of the whole
-    * labeled set's. Rounds follow the one-job-per-round
-    * [[operators.Rounds.persistCounted]] discipline (r20): dist rows
-    * carry the round that last improved them, so the frontier is a
-    * filter of the materialized round rather than a second
-    * checkpoint, the improved-row count that doubles as the
-    * convergence probe rides the materializing job itself, and the
-    * previous round's blocks are freed the moment the next lands.
-    * The cached edge relation is unpersisted before return (the
-    * rounds ran eagerly); only the final dist round stays
+    * labeled set's — the [[operators.Graph.relax]] loop with offer
+    * `v + w`. The cached edge relation is unpersisted before return
+    * (the rounds ran eagerly); only the final dist round stays
     * materialized — the returned relation reads it (the
     * [[operators.Rounds]] contract). Weights and distances stay
     * integer cents end-to-end. */
   def qSsspBounded(s: SparkSession, dir: String,
       seedBound: Long = 20L): DataFrame = {
-    val ol = Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey"))
-      .join(Tables.lineitem(s, dir)
-        .select(col("l_orderkey"), col("l_suppkey"), col("l_extendedprice")),
-        col("o_orderkey") === col("l_orderkey"))
-      .select((col("o_custkey") * 2).as("c"), (col("l_suppkey") * 2 + 1).as("sup"),
-        floor(col("l_extendedprice").cast("double") * 100).cast("long")
-          .as("cents"))
+    val ol = purchases(s, dir,
+      floor(col("l_extendedprice").cast("double") * 100).cast("long").as("cents"))
     val ew = ol.groupBy(col("c"), col("sup")).agg(min(col("cents")).as("w"))
-    val e = ew.select(explode(array(
-        struct(col("c").as("src"), col("sup").as("dst"), col("w")),
-        struct(col("sup").as("src"), col("c").as("dst"), col("w")))).as("d"))
-      .select(col("d.src").as("src"), col("d.dst").as("dst"), col("d.w").as("w"))
+    val e = Graph.undirected(ew, "c", "sup", "w")
       .repartition(col("src"))
       .cache()
-    // r20 round fusion: dist rows carry `rnd`, the round that last
-    // improved them, so the frontier (delta) is a filter of the SAME
-    // materialized relation instead of a second checkpoint, and the
-    // convergence probe is the count that materializes the round
-    // ([[operators.Rounds.persistCounted]]) — ONE driver-synchronous
-    // job per round where the r19 form paid three (delta checkpoint +
-    // dist checkpoint + isEmpty). Per-round relaxation results are
-    // identical: rnd is bookkeeping the final projection drops.
-    var (dist, releaseDist, _) = operators.Rounds.persistCounted(
+    val dist = Graph.relax(e,
       e.select(col("src").as("node")).distinct()
         .filter(col("node") % 2 === 0 && col("node") < seedBound)
-        .select(col("node"), lit(0L).as("d"), lit(0L).as("rnd")),
-      reliable = false)
-    var r = 1
-    var converged = false
-    while (r <= 4 && !converged) {
-      val delta = dist.filter(col("rnd") === (r - 1L))
-      // One keyed aggregate replaces the r19 candidate-agg → left-join
-      // → strict-improvement filter → anti-join → union chain (r20,
-      // guide §2.4): min(struct(d, rnd)) over the union of the label
-      // set and the round-r-tagged relaxation offers picks the
-      // smallest distance per node, tie → the OLDER round (rnd < r) —
-      // exactly the strict-improvement rule. The candidate min folds
-      // into the same aggregate's map-side partial, so the round
-      // plans ONE exchange and zero whole-label-set broadcast builds
-      // (each was a sequential AQE stage round-trip; at cluster scale
-      // the anti-join shuffles the label set anyway).
-      val offers = e.join(delta.select(col("node").as("src"), col("d")), "src")
-        .select(col("dst").as("node"), (col("d") + col("w")).as("d"),
-          lit(r.toLong).as("rnd"))
-      val (nextDist, nextDistRelease, nImproved) =
-        operators.Rounds.persistCounted(
-          dist.unionAll(offers).groupBy(col("node"))
-            .agg(min(struct(col("d"), col("rnd"))).as("m"))
-            .select(col("node"), col("m.d").as("d"), col("m.rnd").as("rnd")),
-          reliable = false, pred = Some(col("rnd") === r.toLong))
-      releaseDist()
-      dist = nextDist; releaseDist = nextDistRelease
-      converged = nImproved == 0L
-      r += 1
-    }
+        .select(col("node"), lit(0L).as("v")),
+      maxRounds = 4, reliable = false)(_ => col("v") + col("w"))
     e.unpersist(blocking = false)
-    dist.select(col("node"), col("d").as("dist_cents")).orderBy(col("node"))
+    dist.select(col("node"), col("v").as("dist_cents")).orderBy(col("node"))
   }
 
   /** Exact exponentially-weighted moving average — the trend smoother
@@ -5772,59 +5690,25 @@ object Queries {
     * [[qSsspBounded]]: each round propagates labels out of ONLY the
     * nodes whose label improved last round (an unchanged label has
     * already been offered to every neighbor — identical per-round
-    * results, frontier-sized edge join), with the one-job-per-round
-    * [[operators.Rounds.persistCounted]] discipline — lineage cut +
-    * previous round freed as the next lands, the convergence count
-    * fused into the materializing job, the edge cache unpersisted
-    * before return. The emitted census aggregates the final
-    * node-sized label round (the only block set left). */
+    * results, frontier-sized edge join): the [[operators.Graph.relax]]
+    * loop with offer `v`, the edge cache unpersisted before return.
+    * The emitted census aggregates the final node-sized label round
+    * (the only block set left). */
   def qLabelProp(s: SparkSession, dir: String): DataFrame = {
     val pts = operators.Spatial.scaledPoints(Tables.embeddings(s, dir))
     val eps2 = operators.Spatial.dynamicEps2(1000000L, pts.count())
     val ew = operators.Spatial.gridNeighborPairs(pts, eps2)
       .select(col("id_a").as("u"), col("id_b").as("v"))
-    val e = ew.select(explode(array(
-        struct(col("u").as("src"), col("v").as("dst")),
-        struct(col("v").as("src"), col("u").as("dst")))).as("d"))
-      .select(col("d.src").as("src"), col("d.dst").as("dst"))
+    val e = Graph.undirected(ew, "u", "v")
       .repartition(col("src"))
       .cache()
-    // r20 round fusion: same round-tagged one-job-per-round shape as
-    // [[qSsspBounded]] — the frontier is the materialized round's
-    // rnd = r-1 slice, and the improved-label count that doubles as
-    // the convergence probe rides the materializing job
-    // ([[operators.Rounds.persistCounted]]; the r19 form paid three
-    // driver-synchronous jobs per round).
-    var (lab, releaseLab, _) = operators.Rounds.persistCounted(
+    val lab = Graph.relax(e,
       e.select(col("src").as("node")).distinct()
-        .select(col("node"), col("node").as("lab"), lit(0L).as("rnd")),
-      reliable = false)
-    var r = 1
-    var converged = false
-    while (r <= 3 && !converged) {
-      val delta = lab.filter(col("rnd") === (r - 1L))
-      // same one-aggregate round as qSsspBounded (r20): min(struct(
-      // lab, rnd)) over labels ∪ round-tagged offers keeps the
-      // smallest label per node, tie → the older round — identical to
-      // the strict-improvement chain, with ONE exchange and zero
-      // label-set broadcast builds per round (the offer min folds
-      // into the aggregate's map-side partial).
-      val offers = e.join(delta.select(col("node").as("src"), col("lab")), "src")
-        .select(col("dst").as("node"), col("lab"), lit(r.toLong).as("rnd"))
-      val (nextLab, nextLabRelease, nImproved) =
-        operators.Rounds.persistCounted(
-          lab.unionAll(offers).groupBy(col("node"))
-            .agg(min(struct(col("lab"), col("rnd"))).as("m"))
-            .select(col("node"), col("m.lab").as("lab"), col("m.rnd").as("rnd")),
-          reliable = false, pred = Some(col("rnd") === r.toLong))
-      releaseLab()
-      lab = nextLab; releaseLab = nextLabRelease
-      converged = nImproved == 0L
-      r += 1
-    }
+        .select(col("node"), col("node").as("v")),
+      maxRounds = 3, reliable = false)(_ => col("v"))
     e.unpersist(blocking = false)
-    lab.groupBy(col("lab")).agg(count(lit(1)).as("n_members"))
-      .select(col("lab").as("label"), col("n_members"))
+    lab.groupBy(col("v")).agg(count(lit(1)).as("n_members"))
+      .select(col("v").as("label"), col("n_members"))
       .orderBy(col("label"))
   }
 
@@ -7126,23 +7010,13 @@ object Queries {
     * no driver collect. Both sweeps are hop-bounded (6) with the
     * frontier-only round discipline of [[operators.Graph.bfsHops]]. */
   def qDiameter2Sweep(s: SparkSession, dir: String): DataFrame = {
-    val e0 = Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey"))
-      .join(Tables.lineitem(s, dir).select(col("l_orderkey"), col("l_suppkey")),
-        col("o_orderkey") === col("l_orderkey"))
-      .select((col("o_custkey") * 2).as("c"), (col("l_suppkey") * 2 + 1).as("sup"))
-      .distinct()
-    // One scan for both directions (a unionAll of two selects would
-    // run the orders×lineitem join + distinct twice at cache fill),
     // cached PRE-PARTITIONED on the BFS join key: every frontier⋈edge
     // round requires hashpartitioning(src), and an unpartitioned cache
     // makes each round re-exchange the whole graph — StageProfile at
     // sf0.1 showed 8 identical 10.5 MB edge shuffle-writes per query
     // where the design intends "shuffle the frontier, never the graph"
-    // (q_pagerank's co-partitioned-cache discipline, SparkEntry:872).
-    val edges = e0.select(explode(array(
-        struct(col("c").as("src"), col("sup").as("dst")),
-        struct(col("sup").as("src"), col("c").as("dst")))).as("d"))
-      .select(col("d.src").as("src"), col("d.dst").as("dst"))
+    // (q_pagerank's co-partitioned-cache discipline)
+    val edges = Graph.undirected(purchaseEdges(s, dir), "c", "sup")
       .repartition(col("src"))
       .cache()
     val seedRow = edges.agg(min(col("src")).as("node"))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, functions => F}
+import org.apache.spark.sql.{Column, DataFrame, functions => F}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions.{broadcast, col, count, expr, lit, when}
 
@@ -423,78 +423,89 @@ object Graph {
 
   /** Bounded-depth BFS hop distances from a source set — the
     * "how far is every node from the hubs" labeling that feeds graph
-    * cleaning (drop far-periphery nodes) and feature pipelines. Each
-    * round expands only the FRONTIER (nodes first reached last round):
-    * frontier⋈edges, dedup, anti-join against everything already
-    * labeled — so a node is labeled exactly once, at its first (= BFS
-    * minimal) hop count, and the per-round shuffle is sized by the
-    * frontier, not the graph.
-    *
-    * Round storage (r20 form): each round materializes ONE label
-    * relation (`dist` so far — the new frontier is just its
-    * `dist = r` slice) through [[Rounds.persistCounted]], whose
-    * single-stage counting action doubles as the convergence probe —
-    * one driver-synchronous job per round where the r19 form paid an
-    * eager checkpoint plus a separate isEmpty probe. (An
-    * accumulated-union-of-frontiers variant that writes only
-    * O(|frontier|) blocks per round was measured and REJECTED: the
-    * anti-join over the growing leaf set read consistently slower
-    * and noisier under the bench harness than the single-relation
-    * rewrite — see OPTIMIZATION_r20.md.) The previous round's blocks
-    * are released the moment the next round lands; a plain `.cache()`
-    * chain would instead accumulate O(maxHops) label-set copies
-    * (GraphSpec pins the release via `getPersistentRDDs`). The FINAL
-    * round stays materialized — the returned relation IS it; free it
-    * deterministically with [[Rounds.releaseOf]] or let the
-    * ContextCleaner reclaim it. Lineage truncation also severs the
-    * sources-derive-from-edges lineage that otherwise trips Spark's
-    * ambiguous-self-join detection on the frontier⋈edge join. Pass
-    * `reliableCheckpointDir` on a real cluster so rounds survive
+    * cleaning (drop far-periphery nodes) and feature pipelines: a
+    * [[relax]] whose offer is the round number, so each node keeps its
+    * first (= BFS-minimal) hop count. Returns (node, dist). The final
+    * round stays materialized — the returned relation reads it; free
+    * it with [[Rounds.releaseOf]] or let the ContextCleaner reclaim it.
+    * Pass `reliableCheckpointDir` on a real cluster so rounds survive
     * executor loss (same contract as [[kcorePeel]]). */
   def bfsHops(edges: DataFrame, sources: DataFrame, maxHops: Int,
       reliableCheckpointDir: Option[String] = None): DataFrame = {
     reliableCheckpointDir.foreach(
       edges.sparkSession.sparkContext.setCheckpointDir)
-    val reliable = reliableCheckpointDir.isDefined
-    // r20 round fusion (guide §2 / the r19 scaling-block diagnosis:
-    // the graph family was scheduling-bound on per-round jobs, not
-    // data-bound). Each round now costs ONE driver-synchronous job
-    // instead of two: the round is lazily local-checkpointed and the
-    // single-stage count that materializes it IS the convergence
-    // probe ([[Rounds.persistCounted]], counting the dist = r slice).
-    // Results are identical by construction — the relation holds the
-    // same (node, first-hop) rows, and a node still enters exactly
-    // once (the anti-join against the full label set).
-    var (dist, release, n0) = Rounds.persistCounted(
-      sources.select(col("node"), lit(0L).as("dist")).distinct(), reliable)
-    var r = 1
-    var converged = n0 == 0L
-    while (r <= maxHops && !converged) {
-      val frontier = dist.filter(col("dist") === (r - 1L))
-      // One keyed aggregate replaces the r19 distinct → anti-join →
-      // union chain (r20, guide §2.4): min(dist) over the union of
-      // the label set and the round-r-tagged reach keeps exactly the
-      // first (= BFS-minimal) hop per node — the group-by both dedups
-      // multi-edge reaches and rejects re-reaches of labeled nodes,
-      // so the round plans ONE exchange and zero broadcast builds
-      // where the old chain paid a distinct exchange plus a
-      // whole-label-set broadcast anti-join per round (each a
-      // sequential AQE stage round-trip — the family is
-      // scheduling-bound at bench scale, and at cluster scale the
-      // anti-join would shuffle the label set anyway).
-      val reached = frontier.select(col("node")).as("f")
-        .join(edges.as("e"), col("f.node") === col("e.src"))
-        .select(col("e.dst").as("node"), lit(r.toLong).as("dist"))
-      val (nextDist, nextRelease, n) = Rounds.persistCounted(
-        dist.unionAll(reached).groupBy(col("node"))
-          .agg(F.min(col("dist")).as("dist")), reliable,
-        pred = Some(col("dist") === r.toLong))
-      release()
-      dist = nextDist
-      release = nextRelease
-      converged = n == 0L
-      r += 1
-    }
-    dist
+    relax(edges, sources.select(col("node"), lit(0L).as("v")).distinct(),
+        maxHops, reliableCheckpointDir.isDefined)(r => lit(r.toLong))
+      .select(col("node"), col("v").as("dist"))
+  }
+
+  /** Frontier min-relaxation fixpoint — the one round loop behind BFS
+    * hops, bounded shortest paths and min-label propagation.
+    *
+    * `edges` carries `src`, `dst` and any edge columns the offer reads
+    * (e.g. a weight `w`; none may be named `node`, `v` or `rnd`);
+    * `init` is keyed by `node` with a start value `v`. Round 0 is
+    * `init` tagged `rnd = 0`. Round r joins the FRONTIER — the nodes
+    * whose value improved in round r-1, i.e. the `rnd = r-1` slice —
+    * to `edges` on `src` and offers `offer(r)` (evaluated over the
+    * edge and the frontier's `v`) to each `dst`. A node whose value
+    * did not improve has already offered to every neighbor, so
+    * relaxing only the frontier gives the same per-round result as
+    * relaxing every labeled node, with an edge join sized by the
+    * frontier instead of the labeled set.
+    *
+    * Each round is ONE keyed aggregate: `min(struct(v, rnd))` over the
+    * previous round ∪ the offers keeps the smallest value per node,
+    * ties going to the older round — the strict-improvement rule — so
+    * multi-edge reaches dedup and re-reaches of settled nodes drop in
+    * the same exchange, with no anti-join or broadcast of the labeled
+    * set. The round is lineage-cut and materialized by
+    * [[Rounds.persistCounted]], whose count of `rnd = r` rows (the
+    * improved nodes) is the convergence probe: one driver-synchronous
+    * job per round. Lineage truncation also keeps the plan size
+    * constant in the round count and severs any init-derives-from-
+    * edges lineage that would trip Spark's ambiguous-self-join check.
+    *
+    * Stops when `init` is empty, when a round improves nothing, or
+    * after `maxRounds`. The previous round's blocks are released as
+    * each round lands; if any round throws, the live round is released
+    * before the exception propagates. Returns (node, v, rnd), `rnd`
+    * the round that last improved the node; its blocks stay
+    * materialized for the caller (free them with [[Rounds.releaseOf]]).
+    * `reliable` routes rounds through durable checkpoints (the
+    * checkpoint dir must already be set). */
+  def relax(edges: DataFrame, init: DataFrame, maxRounds: Int,
+      reliable: Boolean)(offer: Int => Column): DataFrame = {
+    var (cur, release, live) = Rounds.persistCounted(
+      init.select(col("node"), col("v"), lit(0L).as("rnd")), reliable)
+    try {
+      var r = 1
+      while (r <= maxRounds && live > 0L) {
+        val frontier = cur.filter(col("rnd") === (r - 1L))
+          .select(col("node").as("src"), col("v"))
+        val offers = edges.join(frontier, "src")
+          .select(col("dst").as("node"), offer(r).as("v"), lit(r.toLong).as("rnd"))
+        val (next, nextRelease, improved) = Rounds.persistCounted(
+          cur.unionAll(offers).groupBy(col("node"))
+            .agg(F.min(F.struct(col("v"), col("rnd"))).as("m"))
+            .select(col("node"), col("m.v").as("v"), col("m.rnd").as("rnd")),
+          reliable, pred = Some(col("rnd") === r.toLong))
+        release()
+        cur = next; release = nextRelease; live = improved
+        r += 1
+      }
+      cur
+    } catch { case e: Throwable => release(); throw e }
+  }
+
+  /** Both directions of each `(a, b)` edge as `(src, dst, extra*)`,
+    * from ONE scan via explode(array(struct…)) — a unionAll of two
+    * selects would run the upstream edge pipeline twice. */
+  def undirected(e: DataFrame, a: String, b: String, extra: String*): DataFrame = {
+    def side(s: String, d: String) =
+      F.struct(col(s).as("src") +: col(d).as("dst") +: extra.map(col): _*)
+    e.select(F.explode(F.array(side(a, b), side(b, a))).as("d"))
+      .select(col("d.src").as("src") +: col("d.dst").as("dst") +:
+        extra.map(x => col(s"d.$x").as(x)): _*)
   }
 }

@@ -103,8 +103,11 @@ private[graft] object Rounds {
       (out, () => (), countOf(out))
     } else {
       val out = capped.localCheckpoint(false)
-      val n = countOf(out)
-      (out, releaseOf(out), n)
+      val release = releaseOf(out)
+      // the lazy checkpoint registers its RDD before the count runs, so
+      // a failing count must free the blocks its finished tasks stored
+      val n = try countOf(out) catch { case e: Throwable => release(); throw e }
+      (out, release, n)
     }
   }
 

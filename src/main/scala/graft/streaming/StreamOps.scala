@@ -2,7 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
+  StreamingQuery}
 
 /** Streaming extensions beyond the reference's processing-time loop
   * (SURVEY Table B [ext] rows): event-time windows with watermarks and
@@ -188,15 +189,48 @@ object StreamOps {
     * row is accounted exactly once — by the stream. */
   def maintainMv(facts: DataFrame, mvSession: SparkSession, name: String,
       summarize: DataFrame => DataFrame, checkpoint: String) =
-    facts.writeStream
+    eachBatch(facts, checkpoint) { (batch, batchId) =>
+      graft.plans.MaterializedView.refresh(mvSession, name,
+        summarize(batch), Some(batchId))
+    }
+
+  /** Start an append-mode stream over `in` that hands every non-empty
+    * micro-batch and its id to `merge`. */
+  private def eachBatch(in: DataFrame, checkpoint: String)(
+      merge: (DataFrame, Long) => Unit): StreamingQuery =
+    in.writeStream
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          graft.plans.MaterializedView.refresh(mvSession, name,
-            summarize(batch), Some(batchId))
+        if (!batch.isEmpty) merge(batch, batchId)
       }
       .start()
+
+  /** A small keyed counter table held as a driver-local DataFrame:
+    * each merge adds a delta cell-wise (union + `sum(cnt)` by `keys`),
+    * collects the bounded result and rebuilds it locally, which cuts
+    * the streaming lineage. A batch id ≤ the last merged id no-ops, so
+    * foreachBatch's at-least-once redelivery becomes effectively-once
+    * merging (the [[maintainMv]] rule). */
+  private final class CounterTable(spark: SparkSession, keys: Seq[String]) {
+    @volatile private var table: Option[DataFrame] = None
+    @volatile private var lastMergedBatch: Long = -1L
+
+    def merge(delta: DataFrame, batchId: Long): Unit = synchronized {
+      if (batchId <= lastMergedBatch) return // replayed batch: no-op
+      val merged = table match {
+        case None => delta
+        case Some(cur) => cur.union(delta)
+          .groupBy(keys.map(col): _*).agg(sum(col("cnt")).as("cnt"))
+      }
+      val local = merged.collect() // bounded by the caller's geometry
+      table = Some(spark.createDataFrame(
+        java.util.Arrays.asList(local: _*), merged.schema))
+      lastMergedBatch = batchId
+    }
+
+    def current: Option[DataFrame] = table
+  }
 
   /** Count-min sketch kept current under streaming ingest — "which
     * items are hot RIGHT NOW" without ever storing per-item state.
@@ -215,27 +249,14 @@ object StreamOps {
     * cut the streaming lineage (an audited bounded collect, same
     * class as the quantile bucket maps). */
   final class CmsMaintainer(spark: SparkSession) {
-    @volatile private var counters: Option[DataFrame] = None
-    @volatile private var lastMergedBatch: Long = -1L
+    private val counters = new CounterTable(spark, Seq("row_idx", "cell"))
 
     private[graft] def merge(delta: DataFrame, batchId: Long): Unit =
-      synchronized {
-        if (batchId <= lastMergedBatch) return // replayed batch: no-op
-        val merged = counters match {
-          case None => delta
-          case Some(cur) => cur.union(delta)
-            .groupBy(col("row_idx"), col("cell"))
-            .agg(sum(col("cnt")).as("cnt"))
-        }
-        val local = merged.collect() // bounded: <= CmsD * CmsW rows
-        counters = Some(spark.createDataFrame(
-          java.util.Arrays.asList(local: _*), merged.schema))
-        lastMergedBatch = batchId
-      }
+      counters.merge(delta, batchId)
 
     /** The maintained d×w counter table (empty before the first
       * merge). */
-    def counterTable: DataFrame = counters.getOrElse {
+    def counterTable: DataFrame = counters.current.getOrElse {
       import spark.implicits._
       Seq.empty[(Int, Long, Long)].toDF("row_idx", "cell", "cnt")
     }
@@ -248,15 +269,9 @@ object StreamOps {
   /** Start maintaining `store` from a streaming item relation. */
   def maintainCms(items: DataFrame, itemCol: String, store: CmsMaintainer,
       checkpoint: String) =
-    items.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          store.merge(graft.operators.Sketches.cmsCounters(batch, itemCol),
-            batchId)
-      }
-      .start()
+    eachBatch(items, checkpoint) { (batch, batchId) =>
+      store.merge(graft.operators.Sketches.cmsCounters(batch, itemCol), batchId)
+    }
 
   /** Streaming drift monitor: maintains a fixed-geometry histogram of
     * a numeric column over the stream's full history and reads out
@@ -282,8 +297,7 @@ object StreamOps {
       lo: Double, hi: Double) {
     import org.apache.spark.sql.expressions.Window
 
-    @volatile private var hist: Option[DataFrame] = None
-    @volatile private var lastMergedBatch: Long = -1L
+    private val hist = new CounterTable(spark, Seq("bucket"))
 
     /** (bucket, cnt) histogram of `valueCol` in this instance's
       * geometry: offset-scaled floor, clamped to [0, buckets). Used
@@ -296,21 +310,10 @@ object StreamOps {
         .groupBy(col("bucket")).agg(count(lit(1)).as("cnt"))
 
     private[graft] def merge(delta: DataFrame, batchId: Long): Unit =
-      synchronized {
-        if (batchId <= lastMergedBatch) return // replayed batch: no-op
-        val merged = hist match {
-          case None => delta
-          case Some(cur) => cur.union(delta)
-            .groupBy(col("bucket")).agg(sum(col("cnt")).as("cnt"))
-        }
-        val local = merged.collect() // bounded: <= buckets rows
-        hist = Some(spark.createDataFrame(
-          java.util.Arrays.asList(local: _*), merged.schema))
-        lastMergedBatch = batchId
-      }
+      hist.merge(delta, batchId)
 
     /** The maintained histogram (empty before the first merge). */
-    def histogram: DataFrame = hist.getOrElse {
+    def histogram: DataFrame = hist.current.getOrElse {
       import spark.implicits._
       Seq.empty[(Int, Long)].toDF("bucket", "cnt")
     }
@@ -349,14 +352,9 @@ object StreamOps {
     * relation. */
   def maintainDrift(values: DataFrame, valueCol: String,
       store: DriftMaintainer, checkpoint: String) =
-    values.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          store.merge(store.bucketed(batch, valueCol), batchId)
-      }
-      .start()
+    eachBatch(values, checkpoint) { (batch, batchId) =>
+      store.merge(store.bucketed(batch, valueCol), batchId)
+    }
 
   /** Incrementally-maintained JOIN materialized view — the streaming
     * enrichment shape of a training-data pipeline: an append-only
@@ -433,11 +431,5 @@ object StreamOps {
     * relation. */
   def maintainJoinMv(facts: DataFrame, store: JoinMvMaintainer,
       checkpoint: String) =
-    facts.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) store.merge(batch, batchId)
-      }
-      .start()
+    eachBatch(facts, checkpoint)(store.merge)
 }

@@ -156,6 +156,87 @@ class GraphSpec extends AnyFunSuite with SparkTestBase {
       "releaseOf(bfs result) must unpersist the final round")
   }
 
+  // undirected weighted graph: a 0-1-2-3-4-5 path with a heavy 0-3
+  // shortcut and a light 2-5 chord, plus a source-free component
+  private val weighted: Seq[(Long, Long, Long)] = Seq((0L, 1L, 4L),
+    (1L, 2L, 3L), (2L, 3L, 2L), (3L, 4L, 5L), (4L, 5L, 1L), (0L, 3L, 20L),
+    (2L, 5L, 1L), (10L, 11L, 1L), (11L, 12L, 1L))
+
+  private def weightedEdges = {
+    import spark.implicits._
+    Graph.undirected(weighted.toDF("u", "v", "w"), "u", "v", "w")
+  }
+
+  /** k synchronous rounds of x(v) = min(x(v), min over neighbors u of
+    * step(x(u), w(u,v))) from `init` — the driver-side reference for
+    * [[Graph.relax]]. */
+  private def bruteRelax(init: Map[Long, Long], k: Int)(
+      step: (Long, Long) => Long): Map[Long, Long] = {
+    val adj = weighted.flatMap { case (a, b, w) => Seq((a, b, w), (b, a, w)) }
+    (1 to k).foldLeft(init) { (x, _) =>
+      adj.foldLeft(x) { case (acc, (a, b, w)) =>
+        x.get(a).fold(acc) { xa =>
+          val o = step(xa, w)
+          if (acc.get(b).forall(o < _)) acc.updated(b, o) else acc
+        }
+      }
+    }
+  }
+
+  private def nodeValues(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+    df.select(col("node"), col("v")).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  test("relax: bounded SSSP matches Bellman-Ford; only the final round stays persisted") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val e = weightedEdges
+    val before = sc.getPersistentRDDs.keySet
+    for (k <- 1 to 5) {
+      val got = Graph.relax(e, Seq((0L, 0L)).toDF("node", "v"), k,
+        reliable = false)(_ => col("v") + col("w"))
+      val own = got.queryExecution.analyzed.collect {
+        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
+      }.toSet
+      val leaked = sc.getPersistentRDDs.keySet -- before
+      assert(leaked.size == 1 && leaked.subsetOf(own),
+        s"persisted after a $k-round relax: $leaked, final round: $own")
+      assert(nodeValues(got) == bruteRelax(Map(0L -> 0L), k)(_ + _),
+        s"$k rounds")
+      operators.Rounds.releaseOf(got)()
+      assert((sc.getPersistentRDDs.keySet -- before).isEmpty)
+    }
+  }
+
+  test("relax: k-round min-label propagation matches a driver-side reference") {
+    val e = weightedEdges
+    val nodes = weighted.flatMap { case (a, b, _) => Seq(a, b) }.distinct
+    for (k <- 1 to 4) {
+      val got = Graph.relax(e,
+        e.select(col("src").as("node")).distinct()
+          .select(col("node"), col("node").as("v")), k,
+        reliable = false)(_ => col("v"))
+      assert(nodeValues(got) ==
+        bruteRelax(nodes.map(n => n -> n).toMap, k)((x, _) => x), s"$k rounds")
+      operators.Rounds.releaseOf(got)()
+    }
+  }
+
+  test("relax: a round that throws releases every round it persisted") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val e = weightedEdges
+    val before = sc.getPersistentRDDs.keySet
+    val err = intercept[Exception] {
+      Graph.relax(e, Seq((0L, 0L)).toDF("node", "v"), 5, reliable = false) {
+        r => if (r == 2) raise_error(lit("offer failed")) else col("v") + col("w")
+      }
+    }
+    assert(err.getMessage.contains("offer failed"), err.getMessage)
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty,
+      "a failed relax must leave no round persisted")
+  }
+
   test("dense-blocked tier: per-component bitmaps match brute force; gate order pinned") {
     // 3 disjoint copies of the test graph: total nodes exceed the
     // dense gate, every component fits it -> dense-blocked
@@ -234,5 +315,20 @@ class GraphSpec extends AnyFunSuite with SparkTestBase {
     release(); release2(); release3()
     assert((sc.getPersistentRDDs.keySet -- before).isEmpty,
       "persistCounted release thunks must unpersist the round's blocks")
+  }
+
+  test("persistCounted: a failing count releases the round it checkpointed") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    // the lazy checkpoint is registered before its count runs; the
+    // count's own predicate is what fails
+    val err = intercept[Exception](operators.Rounds.persistCounted(
+      (0L until 100L).toDF("x"), reliable = false,
+      pred = Some(when(col("x") === 57L, raise_error(lit("count failed")))
+        .otherwise(lit(true)))))
+    assert(err.getMessage.contains("count failed"), err.getMessage)
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty,
+      "a failed persistCounted must not leave its round persisted")
   }
 }
