@@ -3284,12 +3284,12 @@ object Queries {
       .select(col("media_id"), col("frame_idx"), col("frame_len"), col("frame_hash"))
       .orderBy(col("media_id"), col("frame_idx"))
 
-  /** Full subscription pipeline in batch mode: the micro-batch chain
-    * `StreamingJob.start` runs (`Pipeline.compileMulti` →
-    * `Pipeline.gateMulti`), here over one subscription: route → filter
-    * → mask → path template → canonical hash → SYNC anti-join gate.
-    * The stream's per-batch `dedupeBatch` is omitted: event ids are
-    * unique, so it would keep every row. */
+  /** Full subscription pipeline in batch mode: `Pipeline.compileMulti`
+    * → `Pipeline.gateMulti`, the batch reference of the gate the
+    * stream applies in `Pipeline.batchPass`, here over one
+    * subscription: route → filter → mask → path template → canonical
+    * hash → SYNC anti-join gate. The per-key dedupe is omitted: event
+    * ids are unique, so it would keep every row. */
   def qPipelineE2e(s: SparkSession, dir: String): DataFrame = {
     import graft.model.{FbOptions, Subscription => Sub}
     val sub = Sub("sub-e2e", "e2e", "*", FbOptions(

@@ -348,7 +348,10 @@ object Graph {
 
   /** [[kcorePeel]] plus convergence status: (result, reached-fixpoint,
     * rounds-run). Package-private so GraphSpec can assert the capped
-    * non-convergence path without scraping logs. */
+    * non-convergence path without scraping logs. The previous
+    * round's blocks are released as each round lands; if any round
+    * throws, the live round is released before the exception
+    * propagates ([[relax]]'s shape). */
   private[graft] def kcorePeelWithStatus(edges: DataFrame, k: Int,
       maxRounds: Int,
       reliableCheckpointDir: Option[String] = None): (DataFrame, Boolean, Int) = {
@@ -363,28 +366,28 @@ object Graph {
     // (Dataset.unpersist is a silent no-op on checkpointed data)
     def persistRound(df: DataFrame): (DataFrame, () => Unit, Long) =
       Rounds.persistCounted(df, reliableCheckpointDir.isDefined)
-    var (cur, curRelease, prevCount) =
-      persistRound(edges.select(col("u"), col("v")))
-    var rounds = 0
-    var converged = false
-    while (!converged && (maxRounds == 0 || rounds < maxRounds)) {
-      val deg = cur.select(F.explode(F.array(col("u"), col("v"))).as("n"))
-        .groupBy(col("n")).agg(count(lit(1)).as("d"))
-      val keep = deg.filter(col("d") >= k).select(col("n"))
-      val (next, nextRelease, nextCount) = persistRound(cur
-        .join(keep.select(col("n").as("u")), Seq("u"), "left_semi")
-        .join(keep.select(col("n").as("v")), Seq("v"), "left_semi")
-        .select(col("u"), col("v")))
-      curRelease()
-      cur = next
-      curRelease = nextRelease
-      converged = nextCount == prevCount
-      prevCount = nextCount
-      rounds += 1
-    }
-    val res = cur.select(F.explode(F.array(col("u"), col("v"))).as("node"))
-      .groupBy(col("node")).agg(count(lit(1)).as("degree"))
-    (res, converged, rounds)
+    var (cur, release, prevCount) = persistRound(edges.select(col("u"), col("v")))
+    try {
+      var rounds = 0
+      var converged = false
+      while (!converged && (maxRounds == 0 || rounds < maxRounds)) {
+        val deg = cur.select(F.explode(F.array(col("u"), col("v"))).as("n"))
+          .groupBy(col("n")).agg(count(lit(1)).as("d"))
+        val keep = deg.filter(col("d") >= k).select(col("n"))
+        val (next, nextRelease, nextCount) = persistRound(cur
+          .join(keep.select(col("n").as("u")), Seq("u"), "left_semi")
+          .join(keep.select(col("n").as("v")), Seq("v"), "left_semi")
+          .select(col("u"), col("v")))
+        release()
+        cur = next; release = nextRelease
+        converged = nextCount == prevCount
+        prevCount = nextCount
+        rounds += 1
+      }
+      val res = cur.select(F.explode(F.array(col("u"), col("v"))).as("node"))
+        .groupBy(col("node")).agg(count(lit(1)).as("degree"))
+      (res, converged, rounds)
+    } catch { case e: Throwable => release(); throw e }
   }
 
   /** Sparse path: degree-oriented wedge enumeration over the

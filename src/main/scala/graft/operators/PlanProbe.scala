@@ -31,7 +31,9 @@ private[graft] object PlanProbe {
   def plans: scala.collection.Map[String, SparkPlan] =
     executions.map { case (k, qe) => k -> qe.executedPlan }
 
-  def clear(): Unit = executions.clear()
+  private val rounds = new java.util.concurrent.atomic.AtomicInteger()
+
+  def clear(): Unit = { executions.clear(); rounds.set(0) }
 
   /** Record `df`'s query execution under `key` (when enabled), hand
     * `df` back. */
@@ -39,4 +41,14 @@ private[graft] object PlanProbe {
     if (enabled) executions(key) = df.queryExecution
     df
   }
+
+  /** Record one round of an iterative operator ([[Rounds]]) as
+    * `helper:round/<n>`, n counting the rounds persisted since the
+    * last [[clear]], from 1. */
+  def recordRound(df: DataFrame): DataFrame =
+    if (enabled) record(s"helper:round/${rounds.incrementAndGet()}", df) else df
+
+  /** The recorded round number of `key`, if it is a round's. */
+  def roundOf(key: String): Option[Int] =
+    Some(key.stripPrefix("helper:round/")).filter(_ != key).flatMap(_.toIntOption)
 }

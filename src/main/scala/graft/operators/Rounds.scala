@@ -23,7 +23,11 @@ import org.apache.spark.sql.execution.LogicalRDD
   * read that round again. Final-round results returned to callers are
   * never released here; their storage is reclaimed by the
   * ContextCleaner once the caller drops the reference (GC-driven by
-  * design — `spark.catalog.clearCache()` cannot see them either). */
+  * design — `spark.catalog.clearCache()` cannot see them either).
+  *
+  * [[persist]] and [[persistCounted]] record each round's plan in
+  * [[PlanProbe]] (as `helper:round/<n>`) when the probe is enabled, so
+  * `tools.PlanDump` can show the plans the rounds ran. */
 private[graft] object Rounds {
 
   /** Truncate + materialize one round. `reliable` routes through a
@@ -31,12 +35,14 @@ private[graft] object Rounds {
     * files survive executor loss; the release thunk is then a no-op
     * (file cleanup is the checkpoint manager's job, and replayability
     * is the point of paying for reliability). */
-  def persist(df: DataFrame, reliable: Boolean): (DataFrame, () => Unit) =
+  def persist(df: DataFrame, reliable: Boolean): (DataFrame, () => Unit) = {
+    PlanProbe.recordRound(df)
     if (reliable) (df.checkpoint(true), () => ())
     else {
       val out = df.localCheckpoint(true)
       (out, releaseOf(out))
     }
+  }
 
   /** Lazy local checkpoint (r20): truncates lineage like [[persist]]
     * but defers block materialization to the FIRST job that computes
@@ -86,7 +92,8 @@ private[graft] object Rounds {
     // itself drops any hash partitioning the checkpoint would otherwise
     // carry; no current caller consumes the checkpoint's layout (each
     // shuffles or aggregates on its own key next).
-    val capped = df.coalesce(df.sparkSession.sparkContext.defaultParallelism)
+    val capped = PlanProbe.recordRound(
+      df.coalesce(df.sparkSession.sparkContext.defaultParallelism))
     // The count MUST stay exchange-free: a Dataset-level count/agg
     // plans a partial+final aggregate with a shuffle between, which
     // under AQE is two sequential query-stage materializations — MORE

@@ -13,13 +13,15 @@ import org.apache.spark.sql.functions._
   * hash changed" — as a left-anti join of the incoming batch against
   * the hash store on (id, hash). Documented deviation per SURVEY §7.4.
   * The per-subscription mode dispatch is `streaming.Pipeline.gateMulti`;
-  * its SYNC branch is [[needsUpdate]].
+  * its SYNC branch is [[needsUpdate]]. Both are the batch form of the
+  * gate (q_sync_antijoin, q_pipeline_e2e).
   *
-  * At scale: the anti-join shuffles both sides on id unless the store
-  * is broadcastable; with AQE on, Spark picks broadcast automatically
-  * when the store is small. The store itself is maintained as a
-  * parquet/Delta-style table upserted per micro-batch (see
-  * streaming.Pipeline), never collected to the driver.
+  * The stream applies the same gate without a join: in
+  * `streaming.Pipeline.batchPass` the batch rows and the stored hashes
+  * are shuffled together by store bucket, and each key's winner is
+  * compared with its stored hash in the sorted key run. The store is
+  * parquet rewritten per micro-batch, only in the buckets whose hashes
+  * changed (`streaming.HashStore`), never collected to the driver.
   */
 object SyncGate {
   sealed trait SyncMode

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -15,21 +15,27 @@ import graft.sources.DocumentSink
   *
   *   source → route(topic glob, tenant strip) → filter(field path ∈
   *   pass values) → mask(classification ≤ emit level) → target-path
-  *   template → canonical hash → sync gate (hash anti-join) →
-  *   batched idempotent upsert sink + hash-store merge.
+  *   template → canonical hash → per-key dedupe + sync gate (stored
+  *   hash compare) → batched idempotent upsert sink + hash-store
+  *   rewrite.
   *
-  * One `compileMulti` → `gateMulti` chain serves batch (oracle-
-  * verified: Queries.qPipelineE2e runs it over one subscription) and
-  * streaming (`StreamingJob.start`, over N subscriptions per
-  * micro-batch) — classic batch/streaming unification, replacing the
-  * reference's 1-message-per-0.5 s poll loop (artifacts.py:263-285)
-  * with micro-batches; offsets live in the checkpoint instead of Kafka
-  * group commits (A25 ⇒ effectively-once with the idempotent sink).
+  * `compileMulti` serves batch and streaming alike. In batch, the
+  * gate is `dedupeBatch` → `gateMulti` (oracle-verified:
+  * Queries.qPipelineE2e runs it over one subscription). The stream
+  * (`StreamingJob.start`, N subscriptions per micro-batch) runs
+  * `batchPass`, which does the dedupe, the gate, the upsert and the
+  * store rewrite in one bucket-partitioned pass with the same results
+  * — replacing the reference's 1-message-per-0.5 s poll loop
+  * (artifacts.py:263-285) with micro-batches; offsets live in the
+  * checkpoint instead of Kafka group commits (A25 ⇒ effectively-once
+  * with the idempotent sink).
   *
-  * Scale notes: every stage is a narrow projection except the sync
-  * anti-join (shuffle on id, broadcastable store) and the sink
-  * (foreachPartition, executor-side connections, ≤50-doc commits per
-  * the reference's WriteBatch limit).
+  * Scale notes: every compile stage is a narrow projection; the pass
+  * shuffles the batch and the stored hashes once, by store bucket, and
+  * writes from the tasks of that shuffle (executor-side sink
+  * connections, ≤50-doc commits per the reference's WriteBatch limit).
+  * Without a SYNC subscription the store is not read and the writes
+  * come from the tasks of the dedupe's shuffle.
   */
 object Pipeline {
 
@@ -205,7 +211,9 @@ object Pipeline {
     * consume this deterministic selection. With a Kafka source the
     * caller should pass the offset column as `orderCol` so the LAST
     * message wins (the reference's sequential semantics); without one,
-    * the max canonical hash is used as a stable tie-break. */
+    * the max canonical hash is used as a stable tie-break. The stream
+    * applies the same rule inside [[batchPass]]; this form is the
+    * batch reference for it. */
   def dedupeBatch(prepared: DataFrame, orderCol: Option[String] = None): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val ord = orderCol.map(c => col(c).desc).getOrElse(col("doc_hash").desc)
@@ -222,13 +230,13 @@ object Pipeline {
     * subscription. The change-detection key is (target_path, doc_id,
     * doc_hash) — a deliberate refinement of the reference's
     * global-by-id RTDB store (config.py:37), which cannot distinguish
-    * destinations. */
+    * destinations. The batch reference of [[batchPass]]'s gate
+    * (q_pipeline_e2e, ConfigPerturb and the benchmark's recompute run
+    * it); the stream does not call it. */
   def gateMulti(prepared: DataFrame, subs: Seq[Subscription],
                 hashStore: => DataFrame): DataFrame = {
-    def ids(m: SyncGate.SyncMode) =
-      subs.filter(s => SyncGate.parseMode(s.fbOptions.syncMode) == m).map(_.id)
-    val fwd = ids(SyncGate.Forward)
-    val sync = ids(SyncGate.Sync)
+    val fwd = modeIds(subs, SyncGate.Forward)
+    val sync = modeIds(subs, SyncGate.Sync)
     val forwarded = prepared.filter(col("sub_id").isin(fwd: _*))
     if (sync.isEmpty) forwarded
     else forwarded.unionByName(
@@ -236,55 +244,92 @@ object Pipeline {
         hashStore, Seq("target_path", "doc_id", "doc_hash")))
   }
 
-  /** Executor-side batched upsert of the gated rows. NB: the count is
-    * an at-least-once metric — Spark task retries re-run the whole
-    * partition (the writes themselves are idempotent upserts). */
-  def upsert(gated: DataFrame, mkSink: () => DocumentSink): Long = {
-    val acc = gated.sparkSession.sparkContext.longAccumulator("docs_written")
-    gated.select(col("target_path"), col("doc_id"), col("doc_json"))
-      .foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
-        val sink = mkSink()
-        val n = sink.upsertAll(rows.map(r =>
-          DocumentSink.Doc(r.getString(0), r.getString(1), r.getString(2))))
-        acc.add(n)
-      }
-    acc.value
+  private def modeIds(subs: Seq[Subscription], m: SyncGate.SyncMode): Seq[String] =
+    subs.filter(s => SyncGate.parseMode(s.fbOptions.syncMode) == m).map(_.id)
+
+  /** One micro-batch of the consumer. With a SYNC subscription the
+    * dedupe, sync gate, upsert and hash-store rewrite run as one
+    * bucket-partitioned pass ([[HashStore.pass]]): each row of
+    * `compiled` ([[compileMulti]]'s output) is tagged with its
+    * subscription's sync mode, and per (target_path, doc_id) the first
+    * batch row in `orderCol`-descending order (else max `doc_hash`)
+    * wins — [[dedupeBatch]]'s rule. Then [[gateMulti]]'s gate: a
+    * FORWARD winner is written; a SYNC winner is written, and its hash
+    * stored, only when it differs from the stored hash; a NONE/CONSUME
+    * winner is dropped. Each task commits its written documents in
+    * ≤`maxSubmit` groups as it walks, and yields each bucket whose
+    * SYNC keys changed as soon as the bucket's last key is decided;
+    * the store publishes them once the write job has committed. A task
+    * that fails after partial sink commits leaves the store as it was,
+    * so the replayed batch rewrites those documents; a replay after the
+    * publish finds every SYNC hash stored and writes only FORWARD
+    * documents. At most two Spark jobs per micro-batch (with AQE, the
+    * shuffle's map stage runs as a job of its own before the write)
+    * and nothing cached.
+    *
+    * Without a SYNC subscription there is no stored hash to compare or
+    * keep, so the store is not read: the FORWARD winners of
+    * [[dedupeBatch]] are written from the dedupe's own tasks, whose
+    * shuffle is keyed by document rather than by store bucket. */
+  def batchPass(compiled: DataFrame, subs: Seq[Subscription], orderCol: Option[String],
+                store: HashStore, mkSink: () => DocumentSink): Unit = {
+    val sync = modeIds(subs, SyncGate.Sync)
+    val fwd = modeIds(subs, SyncGate.Forward)
+    if (sync.nonEmpty) {
+      val mode = when(col("sub_id").isin(sync: _*), HashStore.SyncRow)
+        .when(col("sub_id").isin(fwd: _*), HashStore.ForwardRow)
+        .otherwise(HashStore.DropRow)
+      store.pass(compiled.withColumn("_mode", mode),
+        orderCol.map(col).getOrElse(col("doc_hash")), Some(mkSink))
+    } else if (fwd.nonEmpty)
+      dedupeBatch(compiled, orderCol).filter(col("sub_id").isin(fwd: _*))
+        .select(col("target_path"), col("doc_id"), col("doc_json"))
+        .foreachPartition { (rows: Iterator[Row]) =>
+          mkSink().upsertAll(rows.map(r =>
+            DocumentSink.Doc(r.getString(0), r.getString(1), r.getString(2)))): Unit
+        }
   }
 }
 
 /** Durable (target_path, doc_id) → doc_hash table backing SYNC-mode
   * change detection — the Spark-side equivalent of the reference's RTDB
   * `_aether/entityHash/{id}` store (config.py:37, helpers.py:51-67),
-  * maintained as parquet merged per micro-batch (no driver state).
+  * maintained as parquet rewritten per micro-batch (no driver state).
   *
   * Scale design: the store is hash-partitioned into `numBuckets`
-  * directories keyed by `pmod(hash(target_path, doc_id), numBuckets)`;
-  * a merge rewrites ONLY the buckets containing batch keys, so per-batch
-  * I/O is O(|store|/numBuckets × touched buckets), not O(|store|). Each
-  * merge writes one file per bucket dir, so the next `load()` opens one
-  * file per bucket however many partitions the update had. At billions
-  * of ids raise numBuckets so a bucket stays executor-sized — the merge
-  * plan is a bucket-pruned scan + anti-join, unchanged.
+  * directories keyed by `pmod(hash(target_path, doc_id), numBuckets)`.
+  * Every update is one bucket-partitioned [[pass]]: the batch rows and
+  * the stored rows are shuffled by bucket together, and the walk over
+  * each bucket's sorted key runs yields that bucket's full new contents
+  * only when one of its keys changed, so only changed buckets are
+  * rewritten, each as one file. The walk holds one bucket's keys and
+  * hashes at a time (never document bodies); at billions of ids raise
+  * numBuckets so a bucket stays executor-sized.
   *
   * Commit protocol (object-store-safe, no directory renames on the
   * read path): bucket data lives in immutable uniquely-named dirs; the
   * single `_manifest` file maps bucket → (current dir, previous dir)
   * and is swapped atomically (FileContext rename with OVERWRITE —
   * atomic on HDFS and local FS; a single small PUT on object stores).
-  * Readers resolve the manifest first, so they see the old or the new
-  * store, never a mix. Each bucket's PREVIOUS generation is kept until
-  * the bucket's next merge (GC is N-2), so a `load()` DataFrame that
-  * was planned before a merge can still materialize afterwards; a
-  * crash mid-merge leaves only orphan dirs, garbage-collected later.
-  * The manifest also records the store's bucket count: reopening an
-  * existing store derives the modulus from the manifest, so a caller
-  * passing a different `numBuckets` cannot split a key across two
-  * bucket dirs. All I/O goes through the Hadoop FileSystem API — no
-  * java.io.File local-FS assumptions. On the local FS of a session built
-  * by `Tuning.engineDefaults` the commit path (bucket writes, publish
-  * renames, manifest flip) starts no processes ([[graft.sources.NioRawLocalFileSystem]]).
+  * A pass writes its buckets to a staging dir; only after the write job
+  * commits does the driver rename each staged `bucket=N` dir to a fresh
+  * immutable name and flip the manifest, so a failed pass publishes
+  * nothing. Readers resolve the manifest first, so they see the old or
+  * the new store, never a mix. Each bucket's PREVIOUS generation is
+  * kept until the bucket's next rewrite (GC is N-2), so a `load()`
+  * DataFrame that was planned before a pass can still materialize
+  * afterwards; a crash mid-pass leaves only orphan dirs,
+  * garbage-collected by the next publish. The manifest also records
+  * the store's bucket count: reopening an existing store derives the
+  * modulus from the manifest, so a caller passing a different
+  * `numBuckets` cannot split a key across two bucket dirs. All I/O goes
+  * through the Hadoop FileSystem API — no java.io.File local-FS
+  * assumptions. On the local FS of a session built by
+  * `Tuning.engineDefaults` the commit path (bucket writes, publish
+  * renames, manifest flip) starts no processes
+  * ([[graft.sources.NioRawLocalFileSystem]]).
   *
-  * Concurrency: `merge` is synchronized per instance, and a store path
+  * Concurrency: passes are synchronized per instance, and a store path
   * must have a SINGLE writer (one StreamingJob — the registry enforces
   * one query per job). Two concurrent writers on one path would race
   * the last-writer-wins manifest flip and drop each other's updates;
@@ -296,15 +341,11 @@ final class HashStore(spark: SparkSession, path: String, numBuckets: Int = 16) {
   private val schema = StructType(Seq(
     StructField("target_path", StringType),
     StructField("doc_id", StringType), StructField("doc_hash", StringType)))
-  private val keys = Seq("target_path", "doc_id")
 
   private val root = new HPath(path)
   private val manifestFile = new HPath(root, "_manifest")
   private lazy val hadoopConf = spark.sessionState.newHadoopConf()
   private def fs = root.getFileSystem(hadoopConf)
-
-  private def bucketCol(buckets: Int): Column =
-    pmod(hash(col("target_path"), col("doc_id")), lit(buckets))
 
   /** Manifest snapshot: recorded bucket count + per-bucket current and
     * previous (pending-GC) dir names, all relative to root. */
@@ -360,61 +401,138 @@ final class HashStore(spark: SparkSession, path: String, numBuckets: Int = 16) {
 
   def load(): DataFrame = readDirs(readManifest().cur.values.toSeq)
 
-  /** Upsert new hashes: new rows win over stored rows per
-    * (target_path, doc_id). Callers must pass at most one row per key
-    * (Pipeline.dedupeBatch) — enforced here with a distinct as a last
-    * line of defense, since a key with TWO stored hashes would
-    * permanently suppress legitimate future writes. */
-  def merge(updates: DataFrame): Unit = synchronized {
+  /** Bulk upsert of `(target_path, doc_id, doc_hash)` rows without a
+    * sink — seeds and checks a store in specs; the stream updates the
+    * store through [[Pipeline.batchPass]]. New rows win over stored
+    * rows per (target_path, doc_id); of several rows for one key the
+    * max hash wins, so a key never ends up with two stored hashes
+    * (which would permanently suppress legitimate future writes). A
+    * bucket is rewritten only when one of its keys' hashes changed. */
+  private[graft] def merge(updates: DataFrame): Unit =
+    pass(updates.select(col("target_path"), col("doc_id").cast("string"), col("doc_hash"),
+        lit(null).cast("string").as("doc_json"), lit(HashStore.SyncRow).as("_mode")),
+      col("doc_hash"), None)
+
+  /** The one update path. `batch` carries `target_path`, `doc_id`,
+    * `doc_hash`, `doc_json` and a `_mode` ([[HashStore.SyncRow]],
+    * [[HashStore.ForwardRow]] or [[HashStore.DropRow]]); `order` ranks
+    * a key's batch rows, the highest first. The batch rows (`_src` 0)
+    * and the stored rows (`_src` 1) are bucketed, shuffled by bucket
+    * and sorted by (bucket, target_path, doc_id, _src, order desc), so
+    * each key is one run whose first row is the batch winner and whose
+    * last row is the stored hash. The walk over each task's runs
+    * commits the documents to write to one sink from `mkSink` per
+    * task, and yields the new contents of each bucket with a changed
+    * SYNC key. Writing those into a staging dir is the pass's only
+    * action; the staged `bucket=N` dirs are published after it
+    * commits. */
+  private[streaming] def pass(batch: DataFrame, order: Column,
+      mkSink: Option[() => DocumentSink]): Unit = synchronized {
     val manifest = readManifest()
     val buckets = manifest.buckets // existing store's modulus wins
-    val deduped = updates.select(col("target_path"),
-        col("doc_id").cast("string"), col("doc_hash"))
-      .dropDuplicates(keys)
-      .withColumn("bucket", bucketCol(buckets))
-      .cache()
-    try {
-      val touched = deduped.select("bucket").distinct()
-        .collect().map(_.getInt(0)).toSet
-      if (touched.isEmpty) return
+    val rows = batch.select(col("target_path"), col("doc_id"), col("doc_hash"),
+      col("doc_json"), col("_mode"), lit(0).as("_src"), order.as("_ord"))
+    val stored = readDirs(manifest.cur.values.toSeq).withColumn("_src", lit(1))
+    val walk = HashStore.walk(mkSink) _
+    val next = rows.unionByName(stored, allowMissingColumns = true)
+      .withColumn("bucket", pmod(hash(col("target_path"), col("doc_id")), lit(buckets)))
+      .repartition(col("bucket"))
+      .sortWithinPartitions(col("bucket"), col("target_path"), col("doc_id"), col("_src"),
+        col("_ord").desc)
+      .select(HashStore.PassColumns.map(col): _*)
+      .mapPartitions(walk)(Encoders.row(schema.add("bucket", IntegerType)))
+    val stamp = java.util.UUID.randomUUID().toString.take(8)
+    val staging = new HPath(root, s".stage-$stamp")
+    next.write.partitionBy("bucket").parquet(staging.toString)
+    publish(manifest, staging, stamp)
+  }
 
-      // current rows of ONLY the touched buckets, keys beaten by updates
-      val survivors = readDirs(
-          touched.toSeq.sorted.flatMap(manifest.cur.get))
-        .join(deduped.select(keys.map(col): _*), keys, "left_anti")
-        .withColumn("bucket", bucketCol(buckets))
-      val next = deduped.unionByName(survivors)
+  /** Publishes every `bucket=N` dir of a committed staging dir under a
+    * fresh immutable name, flips the manifest in one rename, then
+    * garbage-collects what the new manifest no longer references. */
+  private def publish(manifest: Manifest, staging: HPath, stamp: String): Unit = {
+    val staged = fs.listStatus(staging).toSeq.map(_.getPath.getName)
+      .collect { case HashStore.StagedBucket(b) => b.toInt }.sorted
+    if (staged.isEmpty) { fs.delete(staging, true); return }
+    val replaced = staged.map { b =>
+      val dir = s"b$b-$stamp"
+      if (!fs.rename(new HPath(staging, s"bucket=$b"), new HPath(root, dir)))
+        throw new java.io.IOException(s"cannot publish bucket $b of $root")
+      b -> dir
+    }.toMap
+    // replaced buckets retire their current dir to prev (kept one more
+    // generation); untouched buckets keep both entries as-is
+    val nextManifest = Manifest(manifest.buckets,
+      manifest.cur ++ replaced,
+      manifest.prev ++ replaced.keys.map(b =>
+        b -> manifest.cur.getOrElse(b, "")).filter(_._2.nonEmpty))
+    writeManifest(nextManifest)
 
-      // stage the new bucket data, one file per bucket (each bucket is
-      // clustered into a single write task), then publish each bucket dir
-      // under a fresh immutable name and flip the manifest in one rename
-      val stamp = java.util.UUID.randomUUID().toString.take(8)
-      val staging = new HPath(root, s".stage-$stamp")
-      next.repartition(col("bucket")).write.partitionBy("bucket").parquet(staging.toString)
-      val replaced = touched.toSeq.sorted.map { b =>
-        val dir = s"b$b-$stamp"
-        if (!fs.rename(new HPath(staging, s"bucket=$b"), new HPath(root, dir)))
-          throw new java.io.IOException(s"cannot publish bucket $b of $root")
-        b -> dir
-      }.toMap
-      // replaced buckets retire their current dir to prev (kept one more
-      // generation); untouched buckets keep both entries as-is
-      val nextManifest = Manifest(buckets,
-        manifest.cur ++ replaced,
-        manifest.prev ++ replaced.keys.map(b =>
-          b -> manifest.cur.getOrElse(b, "")).filter(_._2.nonEmpty))
-      writeManifest(nextManifest)
+    // GC: anything unreferenced by the new manifest (incl. its prev
+    // generation), stage leftovers, and manifest temp files
+    val live = nextManifest.cur.values.toSet ++ nextManifest.prev.values.toSet
+    fs.listStatus(root).foreach { st =>
+      val name = st.getPath.getName
+      val dead = (st.isDirectory && !live.contains(name)) ||
+        (!st.isDirectory && name.startsWith("_manifest.tmp-"))
+      if (dead && name != "_manifest") { fs.delete(st.getPath, true): Unit }
+    }
+  }
+}
 
-      // GC: anything unreferenced by the new manifest (incl. its prev
-      // generation), stage leftovers, and manifest temp files
-      val live = nextManifest.cur.values.toSet ++ nextManifest.prev.values.toSet
-      fs.listStatus(root).foreach { st =>
-        val name = st.getPath.getName
-        val dead = (st.isDirectory && !live.contains(name)) ||
-          (!st.isDirectory && name.startsWith("_manifest.tmp-"))
-        if (dead && name != "_manifest") { fs.delete(st.getPath, true): Unit }
+object HashStore {
+  /** `_mode` of a pass row: what its key's winner does. */
+  private[graft] val DropRow = 0
+  private[graft] val ForwardRow = 1
+  private[graft] val SyncRow = 2
+
+  private val PassColumns =
+    Seq("target_path", "doc_id", "doc_hash", "doc_json", "_mode", "_src", "bucket")
+  private val StagedBucket = "bucket=(\\d+)".r
+
+  /** One task of a [[HashStore.pass]] over its sorted [[PassColumns]]
+    * rows, bucket by bucket. Each (target_path, doc_id) run is decided
+    * by its first row (the batch winner, or the stored row when the
+    * batch has none) against the run's stored hash. A document to write
+    * joins a buffer that is committed to the task's sink whenever it
+    * holds `maxSubmit` documents, and once more after the last bucket
+    * (dropped without a sink). Every key's stored or new hash is kept
+    * for the current bucket only; the bucket's rows are yielded when
+    * its last key is decided and one of its keys changed. */
+  private[graft] def walk(mkSink: Option[() => DocumentSink])(in: Iterator[Row]): Iterator[Row] = {
+    val rows = in.buffered
+    lazy val sink = mkSink.map(_())
+    val docs = scala.collection.mutable.ArrayBuffer.empty[DocumentSink.Doc]
+    def commit(): Unit =
+      if (docs.nonEmpty) { sink.foreach(_.commitBatch(docs.toList)); docs.clear() }
+    def write(d: DocumentSink.Doc): Unit = sink.foreach { s =>
+      docs += d
+      if (docs.size >= s.maxSubmit) commit()
+    }
+    def nextBucket(): Seq[Row] = {
+      val bucket = rows.head.getInt(6)
+      val kept = scala.collection.mutable.ArrayBuffer.empty[Row]
+      var changed = false
+      while (rows.hasNext && rows.head.getInt(6) == bucket) {
+        val first = rows.next()
+        val (tp, id, h) = (first.getString(0), first.getString(1), first.getString(2))
+        val fromBatch = first.getInt(5) == 0
+        var stored = if (fromBatch) null else h
+        while (rows.hasNext && rows.head.getString(0) == tp && rows.head.getString(1) == id) {
+          val r = rows.next()
+          if (r.getInt(5) == 1) stored = r.getString(2)
+        }
+        val mode = if (fromBatch) first.getInt(4) else DropRow
+        val syncChange = mode == SyncRow && h != stored
+        changed ||= syncChange
+        val hash = if (syncChange) h else stored
+        if (hash != null) kept += Row(tp, id, hash, bucket)
+        if (syncChange || mode == ForwardRow) write(DocumentSink.Doc(tp, id, first.getString(3)))
       }
-    } finally { deduped.unpersist(): Unit }
+      if (changed) kept.toSeq else Nil
+    }
+    Iterator.continually(rows).takeWhile(_.hasNext).flatMap(_ => nextBucket()) ++
+      { commit(); Iterator.empty[Row] }
   }
 }
 
@@ -441,9 +559,6 @@ final class StreamingJob(
 
   val hashStore = new HashStore(spark, hashStorePath)
 
-  private val syncIds =
-    subs.filter(s => SyncGate.parseMode(s.fbOptions.syncMode) == SyncGate.Sync).map(_.id)
-
   /** Start the pipeline over any streaming DataFrame honoring the
     * input contract (kafka stream, file stream, or MemoryStream).
     * `queryName` (optional) names the StreamingQuery so listeners can
@@ -459,17 +574,8 @@ final class StreamingJob(
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val inBatch = preBatch.map(_(batch)).getOrElse(batch)
-        val prepared = Pipeline.dedupeBatch(
-          Pipeline.compileMulti(subs, tenant, inBatch, orderCol.toSeq), orderCol).cache()
-        try {
-          val gated = Pipeline.gateMulti(prepared, subs, hashStore.load()).cache()
-          try {
-            Pipeline.upsert(gated, mkSink)
-            if (syncIds.nonEmpty)
-              hashStore.merge(gated.filter(col("sub_id").isin(syncIds: _*))
-                .select("target_path", "doc_id", "doc_hash"))
-          } finally { gated.unpersist(): Unit }
-        } finally { prepared.unpersist(): Unit }
+        Pipeline.batchPass(Pipeline.compileMulti(subs, tenant, inBatch, orderCol.toSeq),
+          subs, orderCol, hashStore, mkSink)
       }
       .start()
   }

@@ -21,9 +21,10 @@ import graft.sources.DocumentSink
   * micro-batch, staged in event-time order so watermark late-drops
   * cannot occur by construction):
   *
-  *  1. the subscription pipeline (route → filter → hash → SYNC gate →
-  *     batched sink + hash-store merge) — durable state: checkpoint +
-  *     bucketed parquet hash store;
+  *  1. the subscription pipeline (route → filter → hash → one
+  *     bucket-partitioned pass: SYNC gate, batched sink, hash-store
+  *     rewrite) — durable state: checkpoint + bucketed parquet hash
+  *     store;
   *  2. [[StreamOps.CmsMaintainer]] over `event_type` — driver-memory
   *     sketch state;
   *  3. [[StreamOps.DriftMaintainer]] over `value` — driver-memory
@@ -56,7 +57,7 @@ import graft.sources.DocumentSink
   * the converged-state-equality criterion (multiset compares via
   * exceptAll both ways; sketch/histogram cell-wise).
   *
-  * Mid-BATCH crash atomicity (partial sink commits, no hash merge) is
+  * Mid-BATCH crash atomicity (partial sink commits, no store publish) is
   * pinned separately by CrashRecoverySpec; the soak's subject is
   * concurrent multi-query recovery + cross-query interference.
   */

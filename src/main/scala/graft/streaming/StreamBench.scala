@@ -24,8 +24,9 @@ object CountingSink {
 }
 
 /** End-to-end streaming throughput of the subscription pipeline
-  * (route → filter-off → hash → SYNC gate → 50-doc batched sink +
-  * hash-store merge) over the sf events table via a file-stream
+  * (route → filter-off → hash → one bucket-partitioned pass: SYNC
+  * gate, 50-doc batched sink, hash-store rewrite) over the sf events
+  * table via a file-stream
   * source. Stages the input as `SPARK_GRAFT_STREAM_FILES` parquet
   * files (default 50) consumed one file per trigger, so the run is a
   * sequence of uniform micro-batches; per-batch wall latency is read

@@ -23,8 +23,8 @@ import graft.streaming.Pipeline
   * templates (artifacts.py:180-186). Each variant here compiles a
   * full Subscription pipeline — route → filter → mask → template →
   * canonical hash → sync gate, the exact chain `q_pipeline_e2e` runs
-  * once — through the PRODUCTION entry points
-  * ([[Pipeline.compileMulti]] + [[Pipeline.gateMulti]]) and
+  * once — through the PRODUCTION compile ([[Pipeline.compileMulti]])
+  * and the batch reference of the stream's gate ([[Pipeline.gateMulti]]) and
   * oracle-checks the result against an independently-generated DuckDB
   * query.
   *

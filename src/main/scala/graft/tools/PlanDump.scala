@@ -11,7 +11,9 @@ import graft.{Queries, Tuning}
   * probe recorded under the query's name or a `helper:` key — the
   * real join/exchange shapes that `df.explain` on a
   * localCheckpoint-returning query cannot show (it sees only the
-  * post-checkpoint `Scan ExistingRDD`).
+  * post-checkpoint `Scan ExistingRDD`). The rounds of iterative
+  * operators (`helper:round/<n>`, one per [[graft.operators.Rounds]]
+  * persist) print last, in round order.
   *
   * Usage: runMain graft.tools.PlanDump <sfDir> <query> [query...]
   * Session: [[graft.Tuning.localSession]]. Output goes to stdout between
@@ -32,11 +34,13 @@ object PlanDump {
       df.write.format("noop").mode("overwrite").save()
       println(s"===== PLAN $name (query result) =====")
       println(df.queryExecution.explainString(ExplainMode.fromString("formatted")))
-      graft.operators.PlanProbe.executions.toSeq.sortBy(_._1).foreach {
-        case (key, qe) =>
+      // helper plans by name, then the iterative rounds in round order
+      graft.operators.PlanProbe.executions.toSeq
+        .sortBy { case (key, _) => (graft.operators.PlanProbe.roundOf(key), key) }
+        .foreach { case (key, qe) =>
           println(s"===== PLAN $name [$key] =====")
           println(qe.explainString(ExplainMode.fromString("formatted")))
-      }
+        }
     }
     spark.stop()
   }

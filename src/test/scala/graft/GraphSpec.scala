@@ -123,6 +123,53 @@ class GraphSpec extends AnyFunSuite with SparkTestBase {
         "(expected at most the final round); round releases are not firing")
   }
 
+  test("k-core: a round that throws releases every round it persisted") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    // cancel every job of this peel that starts while two rounds are
+    // persisted: a round being computed on top of the live previous one
+    val group = "kcore-failing-round"
+    val cancelled = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group) &&
+            (sc.getPersistentRDDs.keySet -- before).size >= 2) {
+          cancelled.incrementAndGet()
+          sc.cancelJob(e.jobId)
+        }
+    }
+    // a 30-edge path peels one edge off each end per round: 15 rounds
+    val path = (0L until 30L).map(i => (i, i + 1))
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "k-core with a failing round")
+    val err = try intercept[Exception] {
+      Graph.kcorePeelWithStatus(edgeDf(path), 2, maxRounds = 0)
+    } finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
+    assert(cancelled.get > 0)
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("cancelled")), err)
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty,
+      "a failed k-core peel must leave no round persisted")
+  }
+
+  test("an enabled PlanProbe records every persisted round, numbered in order") {
+    operators.PlanProbe.enabled = true
+    operators.PlanProbe.clear()
+    try {
+      val path = (0L until 9L).map(i => (i, i + 1))
+      val (_, converged, rounds) = Graph.kcorePeelWithStatus(edgeDf(path), 2, maxRounds = 0)
+      assert(converged)
+      // the input edges' round plus one per peel round
+      assert(operators.PlanProbe.executions.keys.toSeq.flatMap(operators.PlanProbe.roundOf)
+        .sorted == (1 to rounds + 1))
+      assert(operators.PlanProbe.roundOf("helper:graph.orientedTriangles").isEmpty)
+    } finally {
+      operators.PlanProbe.enabled = false
+      operators.PlanProbe.clear()
+    }
+  }
+
   test("bfsHops labels minimal hops and releases intermediate rounds") {
     import spark.implicits._
     val sc = spark.sparkContext

@@ -70,6 +70,68 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     } finally q.stop()
   }
 
+  test("a SYNC micro-batch runs at most 3 jobs, caches nothing, writes one file per bucket") {
+    import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+
+    val input = tmp(); val sinkRoot = tmp(); val work = tmp()
+    val sc = spark.sparkContext
+    val sub = Subscription("s1", "s1", "t?", FbOptions(
+      syncMode = "sync", targetPath = "_aether/entities/{topic}"))
+    // each job start as (streaming.sql.batchId, job group)
+    val starts = new LinkedBlockingQueue[(String, String)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        def prop(k: String) = Option(e.properties).flatMap(p => Option(p.getProperty(k)))
+        starts.put((prop("streaming.sql.batchId").getOrElse(""),
+          prop("spark.jobGroup.id").getOrElse("")))
+      }
+    }
+    /** Jobs per micro-batch id started before a sentinel job: the
+      * listener bus delivers job starts in order. */
+    var sentinels = 0
+    def jobsPerBatch(): Map[String, Int] = {
+      sentinels += 1
+      val group = s"pass-sentinel-$sentinels"
+      sc.setJobGroup(group, "sentinel")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      Iterator.continually(starts.poll(60, TimeUnit.SECONDS))
+        .map { s => assert(s != null, "sentinel job start never arrived"); s }
+        .takeWhile(_._2 != group).filter(_._1.nonEmpty).toSeq
+        .groupBy(_._1).map { case (b, js) => b -> js.size }
+    }
+
+    val persisted = sc.getPersistentRDDs.keySet
+    val job = new StreamingJob(spark, Seq(sub), "tnt", () => new JsonFileSink(sinkRoot),
+      s"$work/hashes", s"$work/ckpt")
+    val rows = (1L to 60L).map(i => ("tnt.t1", i, s"name-$i"))
+    sc.addSparkListener(listener)
+    val q = job.start(spark.readStream.schema("kafka_topic STRING, id LONG, name STRING")
+      .parquet(input))
+    try {
+      // new keys, then a mix of changed and unchanged ones
+      for (batch <- Seq(rows, rows.map { case (t, i, n) => (t, i, if (i % 7 == 0) s"$n-v2" else n) })) {
+        batch.toDF("kafka_topic", "id", "name").coalesce(1).write.mode("append").parquet(input)
+        q.processAllAvailable()
+        val jobs = jobsPerBatch()
+        assert(jobs.nonEmpty && jobs.values.forall(_ <= 3), s"jobs per micro-batch: $jobs")
+        assert((sc.getPersistentRDDs.keySet -- persisted).isEmpty,
+          s"a micro-batch left ${sc.getPersistentRDDs.keySet -- persisted} persisted")
+        val store = java.nio.file.Paths.get(work, "hashes")
+        val dirs = Files.list(store).iterator().asScala.filter(Files.isDirectory(_)).toSeq
+        assert(dirs.nonEmpty)
+        dirs.foreach { d =>
+          val data = Files.list(d).iterator().asScala
+            .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
+          assert(data.size == 1, s"$d holds ${data.mkString(", ")}")
+        }
+      }
+      assert(job.hashStore.load().count() == 60)
+      assert(job.hashStore.load().filter($"doc_id" === "7").count() == 1)
+    } finally { q.stop(); sc.removeSparkListener(listener) }
+  }
+
   test("routing drops topics not matching the subscription pattern") {
     val input = tmp(); val sinkRoot = tmp(); val work = tmp()
     val sub = Subscription("s2", "s2", "alpha*", FbOptions(syncMode = "forward"))
