@@ -39,12 +39,25 @@ import graft.sources.{NioLocalFileSystem, NioLocalFs}
   * [[graft.sources.NioRawLocalFileSystem]] classes do the same through
   * NIO. A session built without `engineDefaults` gets Hadoop's forking
   * default.
+  *
+  * `spark.sql.streaming.pollingDelay = 1s`: [[graft.streaming.StreamingJob]]
+  * starts its query with `Trigger.ProcessingTime(0)`, so the next
+  * micro-batch starts as soon as the previous one ends and a catch-up
+  * drain is not held to a trigger grid (with a 1 s interval a ~400 ms
+  * `stream_catchup` batch idled ~600 ms before the next one). Spark's
+  * micro-batch loop sleeps `pollingDelay` only after a trigger that found
+  * no new data; the query reads it once, from the session conf, when it
+  * starts. Spark's default is 10 ms, under which every idle job would list
+  * its input directory or fetch Kafka's latest offsets 100 times a
+  * second; 1 s keeps an idle source's poll at the once a second the 1 s
+  * trigger gave.
   */
 object Tuning {
   def engineDefaults(b: SparkSession.Builder): SparkSession.Builder =
     b.config("spark.shuffle.sort.bypassMergeThreshold", "0")
       .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
       .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[NioLocalFs].getName)
+      .config("spark.sql.streaming.pollingDelay", "1s")
 
   /** The session of every standalone tool: [[engineDefaults]] on
     * `local[SPARK_GRAFT_CPUS]` (default: the cores the JVM sees), UTC, no

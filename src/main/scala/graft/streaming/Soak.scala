@@ -5,7 +5,7 @@ import java.util.concurrent.atomic.LongAdder
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.Tables
 import graft.model._
@@ -449,7 +449,7 @@ object Soak {
     def startPipeline(subs: Seq[Subscription]): StreamingQuery = {
       val job = new StreamingJob(spark, subs, "tnt",
         () => new KeyedCountingSink(sinkKey),
-        s"$work/hashes", s"$work/pipeline-ckpt", Trigger.ProcessingTime(0L),
+        s"$work/hashes", s"$work/pipeline-ckpt",
         preBatch = if (schemaEvolve) Some(mkDecoder()) else maskPre)
       job.start(if (schemaEvolve) avroStream else evStream)
     }

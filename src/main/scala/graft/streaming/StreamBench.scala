@@ -57,10 +57,7 @@ object StreamBench {
     val sub = Subscription("bench", "bench", "*",
       FbOptions(syncMode = "sync", targetPath = "_aether/entities/{topic}"))
     val job = new StreamingJob(spark, Seq(sub), "tnt", () => new CountingSink,
-      s"$work/hashes", s"$work/ckpt",
-      // no idle wait between micro-batches: measure the engine, not
-      // the trigger cadence
-      org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
+      s"$work/hashes", s"$work/ckpt")
 
     val schema = spark.read.parquet(input).schema
     val t0 = System.nanoTime()

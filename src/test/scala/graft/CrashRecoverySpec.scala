@@ -3,7 +3,6 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.model._
@@ -45,8 +44,7 @@ class CrashRecoverySpec extends AnyFunSuite with SparkTestBase {
   private def mkJob(sinkRoot: String, work: String,
       mkSink: () => graft.sources.DocumentSink): StreamingJob =
     new StreamingJob(spark, Seq(sub), "tnt", mkSink,
-      s"$work/hashes", s"$work/ckpt", Trigger.ProcessingTime("0 seconds"),
-      orderCol = Some("off"))
+      s"$work/hashes", s"$work/ckpt", orderCol = Some("off"))
 
   /** Relative path → file content for every doc the sink wrote. */
   private def sinkState(root: String): Map[String, String] = {

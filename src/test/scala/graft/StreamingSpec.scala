@@ -451,6 +451,49 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     assert(strict.addSubscription(Subscription("f1", "f1", "t*")).isRight)
   }
 
+  test("a backlog drains back-to-back: no trigger grid between catch-up micro-batches") {
+    val input = tmp(); val sinkRoot = tmp(); val work = tmp()
+    val reg = new graft.streaming.JobRegistry(spark, "tnt")
+    val sub = Subscription("sdrain", "sdrain", "t?", FbOptions(
+      syncMode = "sync", targetPath = "_aether/entities/{topic}"))
+    assert(reg.addSubscription(sub).isRight)
+    assert(reg.addFirebase(FirebaseInstance("fb", "fb", "http://emulator")).isRight)
+    assert(reg.addJob(FirebaseJob("jd", "jd", "fb", Seq("sdrain"))).isRight)
+
+    val files = 6
+    (0 until files).foreach { f =>
+      (1L to 20L).map(i => ("tnt.t1", f * 100L + i, s"name-$f-$i")).toDF("kafka_topic", "id", "name")
+        .coalesce(1).write.mode("append").parquet(input)
+    }
+    val stream = spark.readStream.schema("kafka_topic STRING, id LONG, name STRING")
+      .option("maxFilesPerTrigger", "1").parquet(input)
+    val q = reg.startJob("jd", stream, () => new JsonFileSink(sinkRoot), work).toOption.get
+    try {
+      q.processAllAvailable()
+      val data = q.recentProgress.filter(_.numInputRows > 0).sortBy(_.batchId).toSeq
+      assert(data.size == files, data.map(_.batchId))
+      def startMs(p: org.apache.spark.sql.streaming.StreamingQueryProgress): Long =
+        java.time.Instant.parse(p.timestamp).toEpochMilli
+      // idle time between one data batch's end and the next one's start;
+      // a 1 s trigger grid makes it ~1000 ms minus the batch time. The
+      // first batch (code generation in a cold JVM) may outlast the grid
+      // interval, which hides the grid, so the gaps start after it.
+      val gaps = data.drop(1).sliding(2).map { case Seq(a, b) =>
+        startMs(b) - (startMs(a) + a.durationMs.get("triggerExecution"))
+      }.toSeq.sorted
+      val median = (gaps((gaps.size - 1) / 2) + gaps(gaps.size / 2)) / 2.0
+      assert(median < 250, s"gaps between catch-up batches (ms): $gaps")
+      assert(new java.io.File(s"$sinkRoot/_aether/entities/t1").list().count(_.endsWith(".json"))
+        == files * 20)
+    } finally q.stop()
+  }
+
+  test("an engineDefaults session polls an idle source once a second") {
+    // read by every streaming query when it starts: the sleep after a
+    // trigger that found no new data
+    assert(spark.sessionState.conf.streamingPollingDelay == 1000L)
+  }
+
   test("topic discovery: tenant filter + prefix strip; broker failure surfaces as Left") {
     import graft.sources.{StaticTopicCatalog, TopicCatalog}
     // list_topics semantics (artifacts.py:409-424): only this tenant's
