@@ -27,16 +27,7 @@ object CacheAudit {
         // final (LogicalRDD) or a cached relation in its plan. A query
         // returning a lazy plan that leaks one stray .cache() must
         // still flag (ADVICE r15).
-        val qe = res.queryExecution
-        val ownIds =
-          qe.analyzed.collectWithSubqueries {
-            case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
-          }.toSet ++
-          qe.optimizedPlan.collectWithSubqueries {
-            case imr: org.apache.spark.sql.execution.columnar.InMemoryRelation =>
-              imr.cacheBuilder.cachedColumnBuffers.id
-          }.toSet
-        val foreign = after.filterNot(ownIds)
+        val foreign = after.filterNot(operators.Rounds.ownBlocks(res))
         if (after.size > 1 || foreign.nonEmpty) {
           offenders += 1
           println(s"""{"q":"$name","leaked_rdds":${after.size},"foreign_rdds":${foreign.size}}""")

@@ -43,17 +43,14 @@ object Queries {
 
   private val dec = DecimalType(18, 2)
 
-  /** The cache-release contract's closing move: record the real final
-    * plan for the plan guard ([[operators.PlanProbe]] — the returned
+  /** A persisting query's closing move: record the real final plan
+    * for the plan guard ([[operators.PlanProbe]] — the returned
     * relation is a bare LogicalRDD the guard could not otherwise see
-    * through), materialize eagerly, run the release side-effects,
-    * hand back the detached result. */
-  private def materializeFinal(name: String, df: DataFrame)(
-      release: => Unit): DataFrame = {
-    val res = operators.PlanProbe.record(name, df).localCheckpoint(true)
-    release
-    res
-  }
+    * through) and materialize it eagerly, so the query's scope can
+    * free its intermediates. The result's blocks pass to the
+    * enclosing scope, or to the caller ([[operators.Rounds.scoped]]). */
+  private def materializeFinal(name: String, df: DataFrame): DataFrame =
+    Rounds.scoped(_.persist(operators.PlanProbe.record(name, df)))
 
   /** Per-JVM scratch root for queries that materialize side artifacts
     * (CSV/ORC/JSON round-trips, MV summaries, partitioned/bucketed
@@ -864,17 +861,17 @@ object Queries {
     * dangling-mass correction is needed: every node has out-degree
     * ≥ 1. At 100 TB the edge list pre-partitions on src once and
     * every iteration reuses that partitioning. */
-  def qPagerank(s: SparkSession, dir: String): DataFrame = {
+  def qPagerank(s: SparkSession, dir: String): DataFrame = Rounds.scoped { scope =>
     // the graph is read 3+ times (once per iteration): hash-partition
     // it on the join key ONCE — with the out-degree pre-attached to
     // every edge, so the loop body is exactly one join + one agg —
     // and cache. The cached partitioning satisfies every iteration's
     // join distribution, so each round shuffles only the
     // (|nodes|-sized) rank relation, never the (|edges|-sized) graph.
-    val sym = Graph.undirected(purchaseEdges(s, dir), "c", "sup")
-      .repartition(col("src"))
-      .cache() // read twice below (deg agg + join) — materialize once
-    val deg = sym.groupBy(col("src")).agg(count(lit(1)).as("d")).cache()
+    // Read twice below (deg agg + join) — materialize once.
+    val sym = scope.cache(Graph.undirected(purchaseEdges(s, dir), "c", "sup")
+      .repartition(col("src")))
+    val deg = scope.cache(sym.groupBy(col("src")).agg(count(lit(1)).as("d")))
     // deg's keys ARE the distinct node set — no separate distinct pass
     val nodes = deg.select(col("src").as("node"))
     val n = deg.count() // bounded scalar for the teleport term; also populates the caches
@@ -901,13 +898,9 @@ object Queries {
           (lit(150000000L / n) + expr("(85 * contrib) div 100")).as("r"))
     }
     // eager node-sized result so the two graph caches release NOW
-    // (same contract as qPpr/qHits); reclaimed by the ContextCleaner
-    // when the caller drops the reference
+    // (same contract as qPpr/qHits)
     materializeFinal("q_pagerank",
-      r.select(col("node"), col("r").as("rank_ppb")).orderBy(col("node"))) {
-      deg.unpersist(blocking = false)
-      sym.unpersist(blocking = false)
-    }
+      r.select(col("node"), col("r").as("rank_ppb")).orderBy(col("node")))
   }
 
   /** Triangle counting over the supplier co-occurrence graph (two
@@ -1803,13 +1796,13 @@ object Queries {
     * 100-element string arrays costs more than recomputing them from
     * the cached text with the fused ShinglesExpr where needed
     * (qDedupNgram's verify is the only consumer). */
-  private def minhashSigned(s: SparkSession, dir: String): (DataFrame, () => Unit) = {
-    val cached = Dedup.withMinhashSigArray(
+  private def minhashSigned(scope: Rounds.Scope, s: SparkSession,
+      dir: String): DataFrame = {
+    val cached = scope.cache(Dedup.withMinhashSigArray(
         Dedup.withShingles(
           spread(Tables.documents(s, dir).select(col("doc_id"), col("text"))),
           "text"))
-      .drop("sh")
-      .cache()
+      .drop("sh"))
     // NO materialize-before-fanout here (r20, measured): an eager
     // count() that fills the cache before the consumer stages fan out
     // looked right on paper (the r19 panel profile showed consumer
@@ -1820,17 +1813,16 @@ object Queries {
     // productively with the other consumers' independent stages, so
     // serializing it lengthens the critical path more than the lock
     // waits cost.
-    (Dedup.minhashColumns(cached),
-      () => { cached.unpersist(blocking = false): Unit })
+    Dedup.minhashColumns(cached)
   }
 
   /** MinHash+LSH near-duplicate candidates: k=64 hash family, 16
     * bands of 4 (threshold ≈ 0.5, background-0.2 collision ≈ 2.5% —
     * see DEDUP_TUNING.md); banding is the global blocking key (no n²
     * stage); sim_est = fraction of matching minhashes (1/64 steps). */
-  def qDedupMinhash(s: SparkSession, dir: String): DataFrame = {
+  def qDedupMinhash(s: SparkSession, dir: String): DataFrame = Rounds.scoped { scope =>
     val k = Dedup.MinhashK
-    val (sig, sigRelease) = minhashSigned(s, dir)
+    val sig = minhashSigned(scope, s, dir)
     val cands = Dedup.lshCandidatePairs(Dedup.withLshBands(sig), "doc_id")
     val a = sig.select(Seq(col("doc_id").as("id_a")) ++
       (0 until k).map(i => col(s"m$i").as(s"a$i")): _*)
@@ -1842,16 +1834,14 @@ object Queries {
       cands.join(a, "id_a").join(b, "id_b")
         .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"),
           (matches.cast("double") / k.toDouble).as("sim_est"))
-        .orderBy(col("doc_a"), col("doc_b"))) {
-      sigRelease()
-    }
+        .orderBy(col("doc_a"), col("doc_b")))
   }
 
   /** Exact 3-gram Jaccard verification over the LSH candidate set —
     * the classic two-stage near-dup pipeline (candidates from LSH,
     * exact set similarity only on candidates). */
-  def qDedupNgram(s: SparkSession, dir: String): DataFrame = {
-    val (sig, sigRelease) = minhashSigned(s, dir)
+  def qDedupNgram(s: SparkSession, dir: String): DataFrame = Rounds.scoped { scope =>
+    val sig = minhashSigned(scope, s, dir)
     val cands = Dedup.lshCandidatePairs(Dedup.withLshBands(sig), "doc_id")
     // verify sides carry the cached TEXT through the candidate joins;
     // the fused ShinglesExpr evaluates ABOVE them — once per
@@ -1869,9 +1859,7 @@ object Queries {
         .withColumn("jaccard", Dedup.jaccard(col("sh_a"), col("sh_b")))
         .filter(col("jaccard") >= 0.5)
         .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"), col("jaccard"))
-        .orderBy(col("doc_a"), col("doc_b"))) {
-      sigRelease()
-    }
+        .orderBy(col("doc_a"), col("doc_b")))
   }
 
   /** Edit-distance verify over the SAME LSH candidate set the MinHash
@@ -1879,8 +1867,8 @@ object Queries {
     * only ever run on candidates, never all pairs — the blocking key
     * stays the only shuffle. Normalized similarity = 1 - dist/maxlen,
     * kept at >= 0.8 (integer distance and lengths ⇒ exact doubles). */
-  def qDedupEditDistance(s: SparkSession, dir: String): DataFrame = {
-    val (sig, sigRelease) = minhashSigned(s, dir)
+  def qDedupEditDistance(s: SparkSession, dir: String): DataFrame = Rounds.scoped { scope =>
+    val sig = minhashSigned(scope, s, dir)
     val cands = Dedup.lshCandidatePairs(Dedup.withLshBands(sig), "doc_id")
     // any pair that can reach sim >= 0.8 has dist <= 0.2·maxlen, so the
     // bounded (threshold) levenshtein — early-abandon O(thr·len), not
@@ -1911,9 +1899,7 @@ object Queries {
       .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"),
         col("edit_dist"), col("edit_sim"))
       .orderBy(col("doc_a"), col("doc_b"))
-    materializeFinal("q_dedup_editdist", verified) {
-      sigRelease()
-    }
+    materializeFinal("q_dedup_editdist", verified)
   }
 
   /** EXACT Jaccard similarity self-join (threshold 0.5) via prefix
@@ -2459,9 +2445,9 @@ object Queries {
     * verification touches candidates only; the negative join shuffles
     * on the bucket key; ranking windows partition per anchor and hold
     * one ≈500-row bucket. No stage is quadratic in the corpus. */
-  def qContrastivePairs(s: SparkSession, dir: String): DataFrame = {
+  def qContrastivePairs(s: SparkSession, dir: String): DataFrame = Rounds.scoped { scope =>
     import org.apache.spark.sql.expressions.Window
-    val (sig, sigRelease) = minhashSigned(s, dir)
+    val sig = minhashSigned(scope, s, dir)
     val cands = Dedup.lshCandidatePairs(Dedup.withLshBands(sig), "doc_id")
     val sh = Tables.documents(s, dir)
       .select(col("doc_id"), graft.functions.Shingles.shingles(col("text"), 3).as("sh"))
@@ -2492,9 +2478,7 @@ object Queries {
         .withColumn("neg_rank", row_number().over(w).cast("long"))
         .filter(col("neg_rank") <= 2)
         .select(col("anchor_id"), col("pos_id"), col("neg_id"), col("neg_rank"))
-        .orderBy(col("anchor_id"), col("neg_rank"))) {
-      sigRelease()
-    }
+        .orderBy(col("anchor_id"), col("neg_rank")))
   }
 
   /** Winsorized robust aggregate: clip the value distribution at its
@@ -2566,17 +2550,15 @@ object Queries {
     * discard anyway; on normal smallint-sized baskets it reduces to
     * the classic per-basket self-join, linear in lineitems. */
   def qItemsetPairs(s: SparkSession, dir: String): DataFrame =
-    operators.Rounds.onFailure { scope =>
-      val (items, relItems) = operators.Rounds.persistLazy(
-        distinctBasketItems(s, dir))
-      scope.defer(relItems)
-      val (pairs, relPairs, _) = supportedPairs(items, scope)
+    Rounds.scoped { scope =>
+      val items = scope.persistLazy(distinctBasketItems(s, dir))
+      val (pairs, _) = supportedPairs(items, scope)
       val res = pairs
         .select(col("a").as("p_a"), col("b").as("p_b"),
           col("c_ab").as("support"))
         .orderBy(col("support").desc, col("p_a"), col("p_b"))
         .limit(50)
-      materializeFinal("q_itemset_pairs", res) { relPairs(); relItems() }
+      materializeFinal("q_itemset_pairs", res)
     }
 
   /** The (ok, pk)-distinct basket item relation both pair-core
@@ -2629,25 +2611,24 @@ object Queries {
     *  - **Join tier** (the scale-general fallback): candidates =
     *    small pairs ∪ big∩big intersection pairs; each candidate's
     *    containment count via two key joins against the big item
-    *    relation. Shared intermediates are round-persisted; the
-    *    returned thunk releases them and MUST run after the caller
-    *    materializes its final.
+    *    relation. Shared intermediates are round-persisted in the
+    *    caller's `scope`, which frees them after its final lands.
     *
     * `items` must be (ok, pk)-distinct and persisted by the caller —
-    * eagerly, or lazily ([[operators.Rounds.persistLazy]]): the gate
-    * aggregate here is the first job over it and doubles as the lazy
-    * checkpoint's materializer (it feeds that gate plus up to four
-    * subtrees); internal persists are deferred into the caller's
-    * `scope` so they release even when the gate `head()`, the idx
-    * collect, or the final materialization throws (ADVICE r16).
-    * Returns ((a, b, c_ab), release, nBaskets), a < b, c_ab ≥ 2,
+    * eagerly, or lazily ([[operators.Rounds.Scope.persistLazy]]): the
+    * gate aggregate here is the first job over it and doubles as the
+    * lazy checkpoint's materializer (it feeds that gate plus up to four
+    * subtrees); internal persists go into the caller's `scope` so they
+    * release even when the gate `head()`, the idx collect, or the final
+    * materialization throws (ADVICE r16).
+    * Returns ((a, b, c_ab), nBaskets), a < b, c_ab ≥ 2,
     * exact; nBaskets = COUNT(DISTINCT ok), a bounded scalar the gate
     * aggregate already pays for (qItemLift's lift denominator N). */
   private[graft] def supportedPairs(items: DataFrame,
-      scope: operators.Rounds.ReleaseScope,
+      scope: Rounds.Scope,
       bigBasketThreshold: Long = operators.GateKnobs.paircoreBigThreshold,
       bitmapTierMaxDistinctBig: Long = operators.GateKnobs.paircoreMaxDistinctBig,
-      bitmapTierMaxBigItemsKnob: Long = operators.GateKnobs.paircoreMaxBigItems): (DataFrame, () => Unit, Long) = {
+      bitmapTierMaxBigItemsKnob: Long = operators.GateKnobs.paircoreMaxBigItems): (DataFrame, Long) = {
     // Bitmap-tier admission bound on Σ big-basket items (= mask rows).
     // Validated AT the bound (PairCoreSpec "1M big-item bound"): the
     // persisted mask canonicalizes to ONE broadcast build — measured
@@ -2700,8 +2681,7 @@ object Queries {
     if (nBig == 0L) {
       operators.TierProbe.record("paircore", "zero-big")
       return (smallCountsPlan.filter(col("c_small") >= 2)
-        .select(col("a"), col("b"), col("c_small").as("c_ab")), () => (),
-        nBaskets)
+        .select(col("a"), col("b"), col("c_small").as("c_ab")), nBaskets)
     }
     def interPlan = big.select(col("ok").as("okx"), col("pk"))
       .join(big.select(col("ok").as("oky"), col("pk")), "pk")
@@ -2725,12 +2705,11 @@ object Queries {
       // each broadcast() below materializes its subtree independently
       // (two joins per withBits call site) — persist the ≤4M-row mask
       // once instead of recomputing it up to four times
-      val (mask, relMask) = operators.Rounds.persist(
+      val mask = scope.persist(PlanProbe.recordRound(
         big.join(broadcast(idxDf), "ok")
           .groupBy(col("pk"))
           .agg(sum(expr("CAST(shiftleft(CAST(1 AS BIGINT), idx) AS BIGINT)"))
-            .as("bits")), reliable = false)
-      scope.defer(relMask)
+            .as("bits"))))
       val withBits = (df: DataFrame) => df
         .join(broadcast(mask.select(col("pk").as("a"),
           col("bits").as("bits_a"))), Seq("a"), "left")
@@ -2740,11 +2719,9 @@ object Queries {
           "CAST(bit_count(coalesce(bits_a, CAST(0 AS BIGINT)) & " +
             "coalesce(bits_b, CAST(0 AS BIGINT))) AS BIGINT)"))
       val needSmallTwice = nBig >= 2L
-      val (smallCounts, relSmall) =
-        if (needSmallTwice) operators.Rounds.persist(smallCountsPlan,
-          reliable = false)
-        else (smallCountsPlan, () => ())
-      scope.defer(relSmall)
+      val smallCounts =
+        if (needSmallTwice) scope.persist(PlanProbe.recordRound(smallCountsPlan))
+        else smallCountsPlan
       val smallSide = withBits(smallCounts)
         .select(col("a"), col("b"),
           (col("c_small") + col("c_big")).as("c_ab"))
@@ -2757,17 +2734,14 @@ object Queries {
               Seq("a", "b"), "left_anti"))
             .select(col("a"), col("b"), col("c_big").as("c_ab"))
             .filter(col("c_ab") >= 2))
-      (out, () => { relSmall(); relMask() }, nBaskets)
+      (out, nBaskets)
     } else {
       // join tier: candidate-first with persisted shared intermediates
       operators.TierProbe.record("paircore", "join")
-      val (smallCounts, relSmall) =
-        operators.Rounds.persist(smallCountsPlan, reliable = false)
-      scope.defer(relSmall)
-      val (cands, relCands) = operators.Rounds.persist(
+      val smallCounts = scope.persist(PlanProbe.recordRound(smallCountsPlan))
+      val cands = scope.persist(PlanProbe.recordRound(
         smallCounts.select(col("a"), col("b")).unionByName(bigBigCandsPlan)
-          .distinct(), reliable = false)
-      scope.defer(relCands)
+          .distinct()))
       val cBig = cands
         .join(big.select(col("ok"), col("pk").as("a")), "a")
         .join(big.select(col("ok"), col("pk").as("b")), Seq("b", "ok"))
@@ -2779,7 +2753,7 @@ object Queries {
           (coalesce(col("c_small"), lit(0L)) +
             coalesce(col("c_big"), lit(0L))).as("c_ab"))
         .filter(col("c_ab") >= 2)
-      (out, () => { relSmall(); relCands() }, nBaskets)
+      (out, nBaskets)
     }
   }
 
@@ -2900,23 +2874,18 @@ object Queries {
     * the oracle is an independent recursive CTE (UNION-deduped, so
     * no path explosion) taking MIN(depth) per node. */
   def qBfsHops(s: SparkSession, dir: String,
-      maxHops: Int = 3, seedBound: Long = 20L): DataFrame = {
-    val edges = Graph.undirected(purchaseEdges(s, dir), "c", "sup")
-      // cached pre-partitioned on the BFS join key so each round
-      // shuffles only the frontier, never the graph (see
-      // q_diameter_2sweep's StageProfile note)
-      .repartition(col("src"))
-      .cache()
+      maxHops: Int = 3, seedBound: Long = 20L): DataFrame = Rounds.scoped { scope =>
+    // cached pre-partitioned on the BFS join key so each round
+    // shuffles only the frontier, never the graph (see
+    // q_diameter_2sweep's StageProfile note)
+    val edges = scope.cache(Graph.undirected(purchaseEdges(s, dir), "c", "sup")
+      .repartition(col("src")))
     val sources = edges.select(col("src").as("node")).distinct()
       .filter(col("node") < seedBound && col("node") % 2 === 0)
+    // the BFS's final round passes to this scope, which frees it with
+    // the edge cache once the eager node-sized result lands
     val d = Graph.bfsHops(edges, sources, maxHops)
-    // eager node-sized result; free the edge cache and the BFS's final
-    // round (bfsHops leaves it materialized for the caller — here the
-    // caller is done with it once the ordered result lands)
-    materializeFinal("q_bfs_hops", d.orderBy(col("node"))) {
-      operators.Rounds.releaseOf(d)()
-      edges.unpersist(blocking = false)
-    }
+    materializeFinal("q_bfs_hops", d.orderBy(col("node")))
   }
 
   /** Running DISTINCT count as a window — "how many distinct event
@@ -2947,15 +2916,13 @@ object Queries {
     * pair graph, each doc labeled with its component's min id (the
     * canonical keep-representative). Non-clustered docs are absent:
     * clustering only touches docs that appeared in a verified pair. */
-  def qDedupClusters(s: SparkSession, dir: String): DataFrame = {
-    val ngram = qDedupNgram(s, dir) // eager checkpoint (its own contract)
+  def qDedupClusters(s: SparkSession, dir: String): DataFrame = Rounds.scoped { _ =>
+    // the ngram pairs' eager checkpoint and CC's label round both pass
+    // to this scope; CC materializes its labels from the pairs, so only
+    // the label round outlives it (the returned relation reads it)
+    val ngram = qDedupNgram(s, dir)
     val pairs = ngram.select(col("doc_a"), col("doc_b"))
     val labels = Dedup.connectedComponents(pairs, "doc_a", "doc_b")
-    // CC materialized its label round from the pair checkpoint — the
-    // pairs have no remaining consumer; only the label round stays
-    // (the returned relation reads it; ContextCleaner reclaims it when
-    // the caller drops the reference)
-    operators.Rounds.releaseOf(ngram)()
     labels
       .select(col("node").as("doc_id"), col("label").as("cluster_rep"))
       .orderBy(col("doc_id"))
@@ -3023,12 +2990,11 @@ object Queries {
     * one-pass expression), pigeonhole blocking on the 4 byte-chunks
     * (any pair at hamming≤3 must share a chunk — exact, no misses),
     * verified at hamming ≤ 3. */
-  def qDedupSimhash(s: SparkSession, dir: String): DataFrame = {
+  def qDedupSimhash(s: SparkSession, dir: String): DataFrame = Rounds.scoped { scope =>
     import graft.functions.SimHash.simhash
-    val sh = Dedup.withShingles(
+    val sh = scope.cache(Dedup.withShingles(
       spread(Tables.documents(s, dir).select(col("doc_id"), col("text"))), "text")
-      .select(col("doc_id"), simhash(col("sh")).as("simhash"))
-      .cache()
+      .select(col("doc_id"), simhash(col("sh")).as("simhash")))
     val chunks = (0 until 4).map(c =>
       struct(lit(c).as("chunk_idx"),
         shiftright(col("simhash"), 8 * c).bitwiseAND(lit(255L)).as("chunk_val")))
@@ -3050,9 +3016,7 @@ object Queries {
             .as("hamming"))
         .distinct()
         .filter(col("hamming") <= 3)
-        .orderBy(col("doc_a"), col("doc_b"))) {
-      sh.unpersist(blocking = false)
-    }
+        .orderBy(col("doc_a"), col("doc_b")))
   }
 
   /** 192 deterministic ±1 hyperplanes = 16 LSH bands × 12 planes for
@@ -5027,11 +4991,10 @@ object Queries {
     * edge relation is partitioned and cached once; each round
     * shuffles only the node-sized rank relation. Emits the top-30
     * non-source nodes (rank desc, node asc). */
-  def qPpr(s: SparkSession, dir: String): DataFrame = {
-    val sym = Graph.undirected(purchaseEdges(s, dir), "c", "sup")
-      .repartition(col("src"))
-      .cache()
-    val deg = sym.groupBy(col("src")).agg(count(lit(1)).as("d")).cache()
+  def qPpr(s: SparkSession, dir: String): DataFrame = Rounds.scoped { scope =>
+    val sym = scope.cache(Graph.undirected(purchaseEdges(s, dir), "c", "sup")
+      .repartition(col("src")))
+    val deg = scope.cache(sym.groupBy(col("src")).agg(count(lit(1)).as("d")))
     val nodes = deg.select(col("src").as("node"))
     // source set: customer nodes 0–9 (ids 2k, k<10) present in the
     // graph. Source-ness is a PREDICATE of the node id, so every
@@ -5081,10 +5044,7 @@ object Queries {
       r.filter(!isSrc)
         .select(col("node"), col("r").as("ppr_ppb"))
         .orderBy(col("ppr_ppb").desc, col("node")).limit(30)
-        .orderBy(col("ppr_ppb").desc, col("node"))) {
-      deg.unpersist(blocking = false)
-      sym.unpersist(blocking = false)
-    }
+        .orderBy(col("ppr_ppb").desc, col("node")))
   }
 
   /** Inclusion-dependency discovery (the Binder/SPIDER profiling
@@ -5577,13 +5537,12 @@ object Queries {
     * each half-round is one keyed join + one keyed aggregate of the
     * edge relation (alternating on the two endpoints); the max is a
     * 1-row broadcast; top-15 per role via TakeOrdered. */
-  def qHits(s: SparkSession, dir: String): DataFrame = {
-    val e = Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey"))
+  def qHits(s: SparkSession, dir: String): DataFrame = Rounds.scoped { scope =>
+    val e = scope.cache(Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey"))
       .join(Tables.lineitem(s, dir).select(col("l_orderkey"), col("l_suppkey")),
         col("o_orderkey") === col("l_orderkey"))
       .select(col("o_custkey").as("c"), col("l_suppkey").as("sup"))
-      .distinct()
-      .cache()
+      .distinct())
     val a1 = e.groupBy(col("sup"))
       .agg(expr("CAST(count(1) AS DECIMAL(38,0))").as("a1"))
     val h1 = e.join(a1, "sup").groupBy(col("c")).agg(sum(col("a1")).as("h1"))
@@ -5601,9 +5560,7 @@ object Queries {
     materializeFinal("q_hits",
       topPpm(h2, "c", "h2", "hub")
         .unionAll(topPpm(a2, "sup", "a2", "authority"))
-        .orderBy(col("role"), col("score_ppm").desc, col("node"))) {
-      e.unpersist(blocking = false)
-    }
+        .orderBy(col("role"), col("score_ppm").desc, col("node")))
   }
 
   /** Hop-bounded multi-source weighted shortest path — Bellman-Ford
@@ -5623,25 +5580,23 @@ object Queries {
     * are identical to full relaxation, but the edge join is sized by
     * the (shrinking) frontier's adjacency instead of the whole
     * labeled set's — the [[operators.Graph.relax]] loop with offer
-    * `v + w`. The cached edge relation is unpersisted before return
-    * (the rounds ran eagerly); only the final dist round stays
+    * `v + w`. The scope frees the cached edge relation on return (the
+    * rounds ran eagerly); only the final dist round stays
     * materialized — the returned relation reads it (the
     * [[operators.Rounds]] contract). Weights and distances stay
     * integer cents end-to-end. */
   def qSsspBounded(s: SparkSession, dir: String,
-      seedBound: Long = 20L): DataFrame = {
+      seedBound: Long = 20L): DataFrame = Rounds.scoped { scope =>
     val ol = purchases(s, dir,
       floor(col("l_extendedprice").cast("double") * 100).cast("long").as("cents"))
     val ew = ol.groupBy(col("c"), col("sup")).agg(min(col("cents")).as("w"))
-    val e = Graph.undirected(ew, "c", "sup", "w")
-      .repartition(col("src"))
-      .cache()
+    val e = scope.cache(Graph.undirected(ew, "c", "sup", "w")
+      .repartition(col("src")))
     val dist = Graph.relax(e,
       e.select(col("src").as("node")).distinct()
         .filter(col("node") % 2 === 0 && col("node") < seedBound)
         .select(col("node"), lit(0L).as("v")),
       maxRounds = 4, reliable = false)(_ => col("v") + col("w"))
-    e.unpersist(blocking = false)
     dist.select(col("node"), col("v").as("dist_cents")).orderBy(col("node"))
   }
 
@@ -5691,22 +5646,20 @@ object Queries {
     * nodes whose label improved last round (an unchanged label has
     * already been offered to every neighbor — identical per-round
     * results, frontier-sized edge join): the [[operators.Graph.relax]]
-    * loop with offer `v`, the edge cache unpersisted before return.
+    * loop with offer `v`, the edge cache freed by the scope on return.
     * The emitted census aggregates the final node-sized label round
     * (the only block set left). */
-  def qLabelProp(s: SparkSession, dir: String): DataFrame = {
+  def qLabelProp(s: SparkSession, dir: String): DataFrame = Rounds.scoped { scope =>
     val pts = operators.Spatial.scaledPoints(Tables.embeddings(s, dir))
     val eps2 = operators.Spatial.dynamicEps2(1000000L, pts.count())
     val ew = operators.Spatial.gridNeighborPairs(pts, eps2)
       .select(col("id_a").as("u"), col("id_b").as("v"))
-    val e = Graph.undirected(ew, "u", "v")
-      .repartition(col("src"))
-      .cache()
+    val e = scope.cache(Graph.undirected(ew, "u", "v")
+      .repartition(col("src")))
     val lab = Graph.relax(e,
       e.select(col("src").as("node")).distinct()
         .select(col("node"), col("node").as("v")),
       maxRounds = 3, reliable = false)(_ => col("v"))
-    e.unpersist(blocking = false)
     lab.groupBy(col("v")).agg(count(lit(1)).as("n_members"))
       .select(col("v").as("label"), col("n_members"))
       .orderBy(col("label"))
@@ -5744,14 +5697,13 @@ object Queries {
     * no global sort, no ntile window. Monetary goes through
     * DECIMAL(18,2) cents; recency through epoch SECONDS so every
     * boundary is double-exact (< 2⁵³ — epoch nanos are not). */
-  def qRfmScores(s: SparkSession, dir: String): DataFrame = {
-    val per = Tables.events(s, dir)
+  def qRfmScores(s: SparkSession, dir: String): DataFrame = Rounds.scoped { scope =>
+    val per = scope.cache(Tables.events(s, dir)
       .groupBy(col("user_id"))
       .agg(max(expr("ts div 1000000000")).as("r_s"),
         count(lit(1)).as("freq"),
         sum(expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)"))
-          .as("mon"))
-      .cache()
+          .as("mon")))
     val qs = Seq(0.2, 0.4, 0.6, 0.8)
     def bounds(c: String): Array[Double] =
       Quantiles.quantiles(per, c, qs).orderBy(col("q")).collect()
@@ -5769,7 +5721,7 @@ object Queries {
       .orderBy(col("r_score"), col("f_score"), col("m_score"))
     // eager ≤125-row result so the per-user cache (read by the
     // quantile probes above and the final plan) releases NOW
-    materializeFinal("q_rfm_scores", out) { per.unpersist(): Unit }
+    materializeFinal("q_rfm_scores", out)
   }
 
   /** Lexical diversity: overall type-token ratio plus mean segmental
@@ -6266,17 +6218,15 @@ object Queries {
     * literal from the core's gate aggregate (r20 — it was a 1-row
     * crossJoin broadcast before). */
   def qItemLift(s: SparkSession, dir: String): DataFrame =
-    operators.Rounds.onFailure { scope =>
+    Rounds.scoped { scope =>
     import org.apache.spark.sql.expressions.Window
-    val (items, relItems) = operators.Rounds.persistLazy(
-      distinctBasketItems(s, dir))
-    scope.defer(relItems)
+    val items = scope.persistLazy(distinctBasketItems(s, dir))
     // N = COUNT(DISTINCT ok) rides the strategy-gate aggregate inside
     // supportedPairs — a bounded scalar, so the lift projection folds
     // it as a literal instead of a distinct-count subtree + crossJoin
     // (r20: the separate subtree cost 2 extra exchanges + a broadcast
     // per run for a number the gate already knew)
-    val (pairs, relPairs, nOrders) = supportedPairs(items, scope)
+    val (pairs, nOrders) = supportedPairs(items, scope)
     val margin = items.groupBy(col("pk")).agg(count(lit(1)).as("c"))
     // both directions from ONE pass over the pair relation (a union
     // would reference it twice and force an extra 7.6M-row persist at
@@ -6301,7 +6251,7 @@ object Queries {
       .select(col("a"), col("rk").cast("long").as("rk"), col("b"),
         col("c_ab"), col("lift_ppm"))
       .orderBy(col("a"), col("rk"))
-    materializeFinal("q_item_lift", res) { relPairs(); relItems() }
+    materializeFinal("q_item_lift", res)
   }
 
   /** Consistent-hashing shard-rebalance audit: when a cluster grows
@@ -6482,14 +6432,15 @@ object Queries {
     * vocabulary collapses early). Driver state is the ≤5 merge pairs;
     * all counting is distributed and every round's checkpoint is
     * released as soon as the next round lands. */
-  private def bpeTrain(s: SparkSession, dir: String): Seq[(Long, String, Long)] = {
+  private def bpeTrain(s: SparkSession, dir: String): Seq[(Long, String, Long)] =
+    Rounds.scoped { scope =>
     val dec = Tables.documents(s, dir)
       .select(explode(split(col("text"), " ")).as("w"))
       .filter(length(col("w")) >= 2)
       .groupBy(col("w")).agg(count(lit(1)).as("f"))
       .select(col("f"),
         trim(regexp_replace(col("w"), "(.)", "$1 ")).as("seq"))
-    var cur = dec.localCheckpoint(true)
+    var cur = scope.persist(dec)
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Long)]
     var step = 1
     var exhausted = false
@@ -6519,20 +6470,15 @@ object Queries {
           // occurrences sharing a delimiter (" x y x y ") defer the
           // second merge to the next round - identical on both engines,
           // and the selection counts stay per-position.
-          val next = cur.withColumn("seq",
+          val next = scope.persist(cur.withColumn("seq",
             trim(org.apache.spark.sql.functions.replace(
               concat(lit(" "), col("seq"), lit(" ")),
-              lit(s" $p "), lit(" " + p.replace(" ", "") + " "))))
-            .localCheckpoint(true)
-          // Dataset.unpersist is a silent no-op on locally-
-          // checkpointed rounds (the Rounds contract) — free the
-          // round's blocks through the underlying RDD
-          operators.Rounds.releaseOf(cur)()
+              lit(s" $p "), lit(" " + p.replace(" ", "") + " ")))))
+          scope.release(cur)
           cur = next
       }
       step += 1
     }
-    operators.Rounds.releaseOf(cur)()
     merges.toSeq
   }
 
@@ -6727,14 +6673,13 @@ object Queries {
     * exact integer ppm; the exact-side set sizes use |A|+|B|−|∩| so
     * no union array materializes. Same two-join shape as the verify
     * queries, candidates bounded by the LSH banding. */
-  def qMinhashCalibration(s: SparkSession, dir: String): DataFrame = {
+  def qMinhashCalibration(s: SparkSession, dir: String): DataFrame = Rounds.scoped { scope =>
     val k = Dedup.MinhashK
     // documents are keyed by doc_id: dedupe AFTER the shared signature
     // cache (identical rows sign identically), so duplicate physical
     // rows can't quadruple every candidate pair (r17 dup sweep) while
     // the cache stays shared with the rest of the dedup family
-    val (sigRaw, sigRelease) = minhashSigned(s, dir)
-    val sig = sigRaw.dropDuplicates(Seq("doc_id"))
+    val sig = minhashSigned(scope, s, dir).dropDuplicates(Seq("doc_id"))
     val cands = Dedup.lshCandidatePairs(Dedup.withLshBands(sig), "doc_id")
     // text rides the candidate joins; shingling evaluates ABOVE them,
     // once per candidate pair side instead of once per corpus row per
@@ -6764,9 +6709,7 @@ object Queries {
         .agg(count(lit(1)).as("n_pairs"),
           expr("sum(err) div count(1)").as("mae_ppm"),
           max(col("err")).as("max_err_ppm"))
-        .orderBy(col("bucket"))) {
-      sigRelease()
-    }
+        .orderBy(col("bucket")))
   }
 
   /** Fixed lexicon for the fused multi-pattern scan — substrings (not
@@ -6885,14 +6828,12 @@ object Queries {
     * before they trust any single one at 100 TB. All four signals
     * compute in the SAME two candidate joins (no extra passes). */
   def qDedupPanel(s: SparkSession, dir: String): DataFrame =
-    operators.Rounds.onFailure { scope =>
+    Rounds.scoped { scope =>
     import graft.functions.{Shingles, SimHash}
     val k = Dedup.MinhashK
     // doc_id-keyed dedupe after the shared cache — see
     // qMinhashCalibration (r17 dup sweep)
-    val (sigRaw, sigRelease) = minhashSigned(s, dir)
-    scope.defer(sigRelease)
-    val sig = sigRaw.dropDuplicates(Seq("doc_id"))
+    val sig = minhashSigned(scope, s, dir).dropDuplicates(Seq("doc_id"))
     val cands = Dedup.lshCandidatePairs(Dedup.withLshBands(sig), "doc_id")
     // verify sides carry only (id, TEXT, minhash cols) through the
     // candidate joins; shingling, simhash and the levenshtein prefix
@@ -6940,9 +6881,7 @@ object Queries {
     // subtree duplicated under hist and meth). One eager checkpoint
     // of the candidate-bounded vote rows runs it once (guide §5
     // caching discipline — reused AND expensive to recompute).
-    val (votes, relVotes) =
-      operators.Rounds.persist(votesPlan, reliable = false)
-    scope.defer(relVotes)
+    val votes = scope.persist(PlanProbe.recordRound(votesPlan))
     val hist = votes
       .groupBy(expr("concat('votes_', CAST(v_exact + v_minhash + " +
         "v_simhash + v_edit AS STRING))").as("metric"))
@@ -6958,10 +6897,7 @@ object Queries {
         struct(lit("m_edit").as("metric"), col("m_edit").as("n")))).as("s"))
       .select(col("s.metric").as("metric"), col("s.n").as("n"))
     materializeFinal("q_dedup_panel",
-      hist.unionByName(meth).orderBy(col("metric"))) {
-      relVotes()
-      sigRelease()
-    }
+      hist.unionByName(meth).orderBy(col("metric")))
   }
 
   /** Peak session concurrency per event type — the capacity question
@@ -7009,34 +6945,28 @@ object Queries {
     * relation fed straight back in as the second sweep's source set —
     * no driver collect. Both sweeps are hop-bounded (6) with the
     * frontier-only round discipline of [[operators.Graph.bfsHops]]. */
-  def qDiameter2Sweep(s: SparkSession, dir: String): DataFrame = {
+  def qDiameter2Sweep(s: SparkSession, dir: String): DataFrame = Rounds.scoped { scope =>
     // cached PRE-PARTITIONED on the BFS join key: every frontier⋈edge
     // round requires hashpartitioning(src), and an unpartitioned cache
     // makes each round re-exchange the whole graph — StageProfile at
     // sf0.1 showed 8 identical 10.5 MB edge shuffle-writes per query
     // where the design intends "shuffle the frontier, never the graph"
     // (q_pagerank's co-partitioned-cache discipline)
-    val edges = Graph.undirected(purchaseEdges(s, dir), "c", "sup")
-      .repartition(col("src"))
-      .cache()
+    val edges = scope.cache(Graph.undirected(purchaseEdges(s, dir), "c", "sup")
+      .repartition(col("src")))
     val seedRow = edges.agg(min(col("src")).as("node"))
     val d1 = operators.Graph.bfsHops(edges, seedRow, 6)
     val far = d1.orderBy(col("dist").desc, col("node")).limit(1)
     val d2 = operators.Graph.bfsHops(edges, far.select(col("node")), 6)
-    // eager 1-row result, then free the edge cache AND both sweeps'
-    // final BFS rounds deterministically (bfsHops leaves its last
-    // round materialized for the caller — here the caller is done)
+    // eager 1-row result; the scope then frees the edge cache AND both
+    // sweeps' final BFS rounds, which passed to it
     materializeFinal("q_diameter_2sweep",
       seedRow.select(col("node").as("seed"))
         .crossJoin(broadcast(far.select(col("node").as("far_node"),
           col("dist").as("ecc_seed"))))
         .crossJoin(broadcast(d2.agg(max(col("dist")).as("diameter_lb"),
           count(lit(1)).as("n_reached"))))
-        .orderBy(col("seed"))) {
-      operators.Rounds.releaseOf(d1)()
-      operators.Rounds.releaseOf(d2)()
-      edges.unpersist(blocking = false)
-    }
+        .orderBy(col("seed")))
   }
 
   /** HLL sketch-union algebra: per-source distinct-token estimates

@@ -291,11 +291,9 @@ object Dedup {
     *
     * @param tokens (idCol, "tok") relation, tokens DISTINCT per id.
     *               Cached internally: every stage derives from it, and
-    *               the cache must outlive the RETURNED (lazy) plan, so
-    *               this method cannot unpersist it. Callers that loop
-    *               over corpora should `tokens.unpersist()` (or
-    *               `spark.catalog.clearCache()`) after materializing
-    *               the result. */
+    *               the RETURNED lazy plan reads the cache, so it stays
+    *               outside any scope (the lazy-result allowance of
+    *               [[Rounds]]). */
   def exactSimJoin(tokens: DataFrame, idCol: String, tNum: Int, tDen: Int,
       maxDirectPairs: Long = GateKnobs.simJoinMaxDirectPairs): DataFrame = {
     require(tNum > 0 && tDen > 0 && tNum <= tDen, "threshold must be in (0,1]")
@@ -514,31 +512,27 @@ object Dedup {
   private[graft] def connectedComponentsWithMethod(pairs: DataFrame,
       aCol: String, bCol: String,
       maxIters: Int = 20, reliableCheckpointDir: Option[String] = None,
-      driverEdgeLimit: Long = GateKnobs.ccDriverEdgeLimit): (DataFrame, String) = {
+      driverEdgeLimit: Long = GateKnobs.ccDriverEdgeLimit): (DataFrame, String) =
+    Rounds.scoped { scope =>
     val spark = pairs.sparkSession
     import spark.implicits._
     reliableCheckpointDir.foreach(spark.sparkContext.setCheckpointDir)
-    def persistRound(df: DataFrame): DataFrame =
-      if (reliableCheckpointDir.isDefined) df.checkpoint(true)
-      else df.localCheckpoint(true)
+    val reliable = reliableCheckpointDir.isDefined
     // materialize the (possibly expensive — LSH + verify) pair
     // pipeline ONCE; nodes, edges, and the final join all read this
     // cache instead of re-running the upstream per consumer
-    val p = pairs.select(col(aCol), col(bCol)).cache()
+    val p = scope.cache(pairs.select(col(aCol), col(bCol)))
     // canonical undirected edges (lo < hi); self-pairs drop out of the
     // edge set but their nodes are preserved via `nodes` below
     val nodes = p.select(col(aCol).as("node"))
       .unionByName(p.select(col(bCol).as("node"))).distinct()
-    var edges = p.select(
+    var edges = scope.cache(p.select(
         least(col(aCol), col(bCol)).as("lo"),
         greatest(col(aCol), col(bCol)).as("hi"))
-      .filter(col("lo") =!= col("hi")).distinct().cache()
+      .filter(col("lo") =!= col("hi")).distinct())
 
     val longKeys = edges.schema.fields.forall(
       _.dataType == org.apache.spark.sql.types.LongType)
-    // set by the star-contraction branch to the FINAL round's release
-    // thunk; called only after `out` below has materialized from it
-    var releaseFinal: () => Unit = () => ()
     val (labels: DataFrame, method: String) =
       if (longKeys && edges.count() <= driverEdgeLimit) {
         val es = edges.collect().map(r => (r.getLong(0), r.getLong(1)))
@@ -592,18 +586,14 @@ object Dedup {
         }
         var iters = 0
         var converged = isStarForest(edges)
-        // round 0 is the plain .cache() above — Dataset.unpersist works
-        // there; every later round is checkpointed, so its blocks are
-        // freed via the Rounds release thunk once the next round lands
-        var release: () => Unit = { val r0 = edges; () => { r0.unpersist(); () } }
+        // each round (round 0 is the cache above) is freed once the
+        // next one has landed and been tested
         while (!converged && iters < maxIters) {
-          val (next, nextRelease) =
-            Rounds.persist(smallStar(largeStar(edges)),
-              reliableCheckpointDir.isDefined)
-          edges = next
+          val prev = edges
+          edges = scope.persist(
+            PlanProbe.recordRound(smallStar(largeStar(edges))), reliable)
           converged = isStarForest(edges)
-          release()
-          release = nextRelease
+          scope.release(prev)
           iters += 1
         }
         if (!converged)
@@ -611,20 +601,17 @@ object Dedup {
             s"connectedComponents did not converge in $maxIters star-contraction " +
               "rounds: the pair graph is pathologically large or adversarial; " +
               "raise maxIters (rounds needed is O(log² n), ~5 in practice)")
-        releaseFinal = release
         (edges.select(col("hi").as("node"), col("lo").as("label"))
           .unionByName(edges.select(col("lo").as("node"), col("lo").as("label")))
           .distinct(), "star-contraction")
       }
     // self-paired or otherwise edge-less nodes are their own cluster.
-    // Materialize eagerly BEFORE dropping the caches — returning the
-    // lazy plan and unpersisting would silently re-run the whole pair
-    // pipeline when the caller first acts on the result.
-    val out = persistRound(nodes.join(labels, Seq("node"), "left")
-      .select(col("node"), coalesce(col("label"), col("node")).as("label")))
-    releaseFinal() // star path: free the final round's checkpointed blocks
-    edges.unpersist() // union-find path: edges is the plain .cache() above
-    p.unpersist()
+    // Materialize eagerly BEFORE the scope drops the caches — returning
+    // the lazy plan would silently re-run the whole pair pipeline when
+    // the caller first acts on the result.
+    val out = scope.persist(nodes.join(labels, Seq("node"), "left")
+      .select(col("node"), coalesce(col("label"), col("node")).as("label")),
+      reliable)
     TierProbe.record("dedup.cc", method)
     (out, method)
   }

@@ -39,13 +39,12 @@ object Graph {
 
   /** Per-node exact triangle participation counts.
     *
-    * Cache contract: every tier SELF-RELEASES — it returns an eager
-    * localCheckpoint of the per-node counts (bounded by |V|) and
-    * unpersists its internal caches (edge list, id-mapped edges,
-    * adjacency bitmaps, probe labels) before returning, so at most
-    * the returned result's own blocks remain registered, reclaimed by
-    * the ContextCleaner when the caller drops the reference (the
-    * [[Rounds]] contract; pinned catalog-wide by graft.CacheAudit).
+    * Cache contract: every tier returns an eager checkpoint of the
+    * per-node counts (bounded by |V|) and its scope frees the internal
+    * caches (edge list, id-mapped edges, adjacency bitmaps, probe
+    * labels), so at most the returned result's own blocks remain
+    * registered (the [[Rounds]] contract; pinned catalog-wide by
+    * graft.CacheAudit).
     * Driver memory: tiers beyond "dense" run a
     * connected-components probe whose union-find shortcut may collect
     * up to [[ProbeDriverEdgeLimit]] (1M) edges on the driver; larger
@@ -99,20 +98,18 @@ object Graph {
     *     scalable general bound. */
   private[graft] def triangleCountsWithPath(edges: DataFrame,
       denseMaxNodes: Int = GateKnobs.triDenseMaxNodes,
-      maxAdjBytes: Long = GateKnobs.triMaxAdjBytes): (DataFrame, String) = {
+      maxAdjBytes: Long = GateKnobs.triMaxAdjBytes): (DataFrame, String) =
+    Rounds.scoped { scope =>
     // |V| decides the plan. Cache the canonical edge list — it is the
     // narrowest relation every downstream consumer derives from — and
     // pay the upstream edge-construction pipeline exactly once (the
     // node-count action materializes it).
-    val e = edges.cache()
+    val e = scope.cache(edges)
     val nodes = e.select(F.explode(F.array(col("u"), col("v"))).as("node"))
       .distinct()
     val n = nodes.count()
     if (n <= denseMaxNodes) {
-      // denseTriangles self-releases (eager localCheckpoint), so the
-      // edge cache has no remaining consumer
       val res = denseTriangles(e, nodes, n)
-      e.unpersist()
       TierProbe.record("graph.triangles", "dense")
       (res, "dense")
     }
@@ -130,18 +127,15 @@ object Graph {
         .agg(F.max(col("cn"))).head.getLong(0)
       val words = (cmax + 63) / 64
       if (cmax <= denseMaxNodes && n * words * 8 <= maxAdjBytes) {
-        // componentDenseTriangles returns an eager localCheckpoint, so
-        // the edge cache has no remaining consumer; the probe's CC
-        // label round is consumed by that same call — free it too
         val res = componentDenseTriangles(e, labels, cmax)
-        Rounds.releaseOf(labels)()
-        e.unpersist()
         TierProbe.record("graph.triangles", "dense-blocked")
         (res, "dense-blocked")
       }
       else {
-        Rounds.releaseOf(labels)() // probe labels only fed cmax here
-        e.unpersist()
+        // the probe labels only fed cmax, and the sparse plan reads
+        // `edges` itself: free both before it runs
+        scope.release(labels)
+        scope.release(e)
         TierProbe.record("graph.triangles", "sparse")
         (orientedTriangles(edges), "sparse")
       }
@@ -168,7 +162,7 @@ object Graph {
     * in r14: higher-order functions are interpreted and allocate per
     * element — still the reason the words build uses flat columns.) */
   private[graft] def denseTriangles(e: DataFrame, nodes: DataFrame,
-      n: Long): DataFrame = {
+      n: Long): DataFrame = Rounds.scoped { scope =>
     // dense-rank nodes to 0..n-1 so ids index bitmap bits. The
     // single-partition window is bounded by the dense-path gate
     // (n ≤ denseMaxNodes), never by the data.
@@ -182,10 +176,9 @@ object Graph {
         F.struct(col("v").as("a"), col("u").as("b")))).as("d"))
       .select(col("d.a").as("a"), col("d.b").as("b"))
     // eb feeds two consumers (adjacency build collect + probe scan)
-    val eb = both
+    val eb = scope.cache(both
       .join(broadcast(ids.select(col("node").as("a"), col("nid").as("aid"))), "a")
-      .join(broadcast(ids.select(col("node").as("b"), col("nid").as("bid"))), "b")
-      .cache()
+      .join(broadcast(ids.select(col("node").as("b"), col("nid").as("bid"))), "b"))
     val words = ((n + 63) / 64).toInt
     val pre = eb.select(col("aid"), expr("bid div 64").as("w"),
       expr("shiftleft(1L, CAST(bid % 64 AS INT))").as("b"))
@@ -204,17 +197,15 @@ object Graph {
     // tri(a) = ½ Σ_{b∈N(a)} popcount(bm[a] & bm[b]): one streamed pass
     // over the directed edges. The sum is even by construction, so
     // `div 2` is exact.
-    val res = PlanProbe.record("helper:graph.denseTriangles",
+    // eager per-node result (bounded by |V|) so eb and the broadcast
+    // release NOW — the same self-release contract as
+    // componentDenseTriangles
+    val res = scope.persist(PlanProbe.record("helper:graph.denseTriangles",
       eb.select(col("a").as("node"), graft.functions.BitmapOps
           .lookup_and_popcount(col("aid"), col("bid"), bc).as("common"))
         .groupBy(col("node"))
         .agg(expr("sum(common) div 2").as("n_triangles"))
-        .filter(col("n_triangles") > 0))
-      // eager per-node result (bounded by |V|) so eb and the broadcast
-      // release NOW — the same self-release contract as
-      // componentDenseTriangles
-      .localCheckpoint(true)
-    eb.unpersist()
+        .filter(col("n_triangles") > 0)))
     bc.destroy()
     res
   }
@@ -235,7 +226,7 @@ object Graph {
     * intersect is sound), and the probe streams |E| rows through one
     * projection. */
   private[graft] def componentDenseTriangles(e: DataFrame, labels: DataFrame,
-      cmax: Long): DataFrame = {
+      cmax: Long): DataFrame = Rounds.scoped { scope =>
     val ids = labels.withColumn("nid",
       F.row_number().over(
         Window.partitionBy(col("label")).orderBy(col("node"))).cast("long") - 1)
@@ -257,12 +248,11 @@ object Graph {
       .select(col("d.a").as("a"), col("d.b").as("b"))
     // the b-side id is the same component's local rank (edges stay
     // within components); gids ride in from both sides
-    val eb = both
+    val eb = scope.cache(both
       .join(broadcast(gids.select(col("node").as("a"), col("label"),
         col("nid").as("aid"), col("gid").as("ga"))), "a")
       .join(broadcast(gids.select(col("node").as("b"),
-        col("nid").as("bid"), col("gid").as("gb"))), "b")
-      .cache()
+        col("nid").as("bid"), col("gid").as("gb"))), "b"))
     val words = ((cmax + 63) / 64).toInt
     val pre = eb.select(col("ga"), col("aid"), expr("bid div 64").as("w"),
       expr("shiftleft(1L, CAST(bid % 64 AS INT))").as("b"))
@@ -276,17 +266,15 @@ object Graph {
       .foreach(r => adjArr(r.getLong(0).toInt) = r.getAs[Array[Byte]](1))
     for (i <- adjArr.indices if adjArr(i) == null) adjArr(i) = Array.emptyByteArray
     val bc = e.sparkSession.sparkContext.broadcast(adjArr)
-    val res = PlanProbe.record("helper:graph.componentDenseTriangles",
+    // eager per-node result (bounded by |V|) so the cache and the
+    // broadcast release NOW instead of lingering until the caller's
+    // clearCache
+    val res = scope.persist(PlanProbe.record("helper:graph.componentDenseTriangles",
       eb.select(col("a").as("node"), graft.functions.BitmapOps
           .lookup_and_popcount(col("ga"), col("gb"), bc).as("common"))
         .groupBy(col("node"))
         .agg(expr("sum(common) div 2").as("n_triangles"))
-        .filter(col("n_triangles") > 0))
-      // eager per-node result (bounded by |V|) so the cache and the
-      // broadcast release NOW instead of lingering until the caller's
-      // clearCache — the sparse branch's unpersist discipline
-      .localCheckpoint(true)
-    eb.unpersist()
+        .filter(col("n_triangles") > 0)))
     bc.destroy()
     res
   }
@@ -349,37 +337,34 @@ object Graph {
   /** [[kcorePeel]] plus convergence status: (result, reached-fixpoint,
     * rounds-run). Package-private so GraphSpec can assert the capped
     * non-convergence path without scraping logs. The previous
-    * round's blocks are released as each round lands; if any round
-    * throws, the live round is released before the exception
-    * propagates ([[relax]]'s shape). */
+    * round's blocks are released as each round lands; the scope frees
+    * the live round if any round throws ([[relax]]'s shape). */
   private[graft] def kcorePeelWithStatus(edges: DataFrame, k: Int,
       maxRounds: Int,
       reliableCheckpointDir: Option[String] = None): (DataFrame, Boolean, Int) = {
     require(k >= 1, "k must be positive")
     reliableCheckpointDir.foreach(
       edges.sparkSession.sparkContext.setCheckpointDir)
-    // Rounds.persistCounted truncates lineage and materializes the
-    // round through the SAME job that returns the surviving-edge
-    // count (r20 fusion: the eager-checkpoint-then-count pair cost 2
-    // driver-synchronous jobs per peel round); the release thunk
-    // frees a round's blocks the moment the next round lands
-    // (Dataset.unpersist is a silent no-op on checkpointed data)
-    def persistRound(df: DataFrame): (DataFrame, () => Unit, Long) =
-      Rounds.persistCounted(df, reliableCheckpointDir.isDefined)
-    var (cur, release, prevCount) = persistRound(edges.select(col("u"), col("v")))
-    try {
+    Rounds.scoped { scope =>
+      // persistCounted truncates lineage and materializes the round
+      // through the SAME job that returns the surviving-edge count
+      // (r20 fusion: the eager-checkpoint-then-count pair cost 2
+      // driver-synchronous jobs per peel round)
+      def persistRound(df: DataFrame): (DataFrame, Long) =
+        scope.persistCounted(df, reliableCheckpointDir.isDefined)
+      var (cur, prevCount) = persistRound(edges.select(col("u"), col("v")))
       var rounds = 0
       var converged = false
       while (!converged && (maxRounds == 0 || rounds < maxRounds)) {
         val deg = cur.select(F.explode(F.array(col("u"), col("v"))).as("n"))
           .groupBy(col("n")).agg(count(lit(1)).as("d"))
         val keep = deg.filter(col("d") >= k).select(col("n"))
-        val (next, nextRelease, nextCount) = persistRound(cur
+        val (next, nextCount) = persistRound(cur
           .join(keep.select(col("n").as("u")), Seq("u"), "left_semi")
           .join(keep.select(col("n").as("v")), Seq("v"), "left_semi")
           .select(col("u"), col("v")))
-        release()
-        cur = next; release = nextRelease
+        scope.release(cur)
+        cur = next
         converged = nextCount == prevCount
         prevCount = nextCount
         rounds += 1
@@ -387,50 +372,47 @@ object Graph {
       val res = cur.select(F.explode(F.array(col("u"), col("v"))).as("node"))
         .groupBy(col("node")).agg(count(lit(1)).as("degree"))
       (res, converged, rounds)
-    } catch { case e: Throwable => release(); throw e }
+    }
   }
 
   /** Sparse path: degree-oriented wedge enumeration over the
     * undirected canonical edge relation (`u < v`). */
-  private[graft] def orientedTriangles(e: DataFrame): DataFrame = {
+  private[graft] def orientedTriangles(e: DataFrame): DataFrame =
+    Rounds.scoped { scope =>
     val deg = e.select(col("u").as("n")).unionAll(e.select(col("v").as("n")))
       .groupBy(col("n")).agg(count(lit(1)).as("d"))
     // orient: src = endpoint with smaller (degree, id); total order ⇒
     // each triangle materializes as exactly one (a→b→c, a→c) pattern
     val du = deg.select(col("n").as("u"), col("d").as("du"))
     val dv = deg.select(col("n").as("v"), col("d").as("dv"))
-    val ed = e.join(du, "u").join(dv, "v")
+    // read three times below (two wedge sides + closure)
+    val ed = scope.cache(e.join(du, "u").join(dv, "v")
       .select(
         when(col("du") < col("dv") ||
           (col("du") === col("dv") && col("u") < col("v")), col("u"))
           .otherwise(col("v")).as("src"),
         when(col("du") < col("dv") ||
           (col("du") === col("dv") && col("u") < col("v")), col("v"))
-          .otherwise(col("u")).as("dst"))
-      .cache() // read three times below (two wedge sides + closure)
+          .otherwise(col("u")).as("dst")))
     val tri = ed.as("e1")
       .join(ed.as("e2"), col("e1.dst") === col("e2.src"))
       .select(col("e1.src").as("a"), col("e1.dst").as("b"), col("e2.dst").as("c"))
       .join(ed.as("e3"), col("a") === col("e3.src") && col("c") === col("e3.dst"))
       .select(col("a"), col("b"), col("c"))
-    val res = PlanProbe.record("helper:graph.orientedTriangles",
+    // eager per-node result so the oriented-edge cache releases NOW
+    // (same self-release contract as the dense tiers)
+    scope.persist(PlanProbe.record("helper:graph.orientedTriangles",
       tri
         .select(F.explode(F.array(col("a"), col("b"), col("c"))).as("node"))
-        .groupBy(col("node")).agg(count(lit(1)).as("n_triangles")))
-      // eager per-node result so the oriented-edge cache releases NOW
-      // (same self-release contract as the dense tiers)
-      .localCheckpoint(true)
-    ed.unpersist()
-    res
+        .groupBy(col("node")).agg(count(lit(1)).as("n_triangles"))))
   }
 
   /** Bounded-depth BFS hop distances from a source set — the
     * "how far is every node from the hubs" labeling that feeds graph
     * cleaning (drop far-periphery nodes) and feature pipelines: a
     * [[relax]] whose offer is the round number, so each node keeps its
-    * first (= BFS-minimal) hop count. Returns (node, dist). The final
-    * round stays materialized — the returned relation reads it; free
-    * it with [[Rounds.releaseOf]] or let the ContextCleaner reclaim it.
+    * first (= BFS-minimal) hop count. Returns (node, dist), which reads
+    * the final round (see [[relax]]).
     * Pass `reliableCheckpointDir` on a real cluster so rounds survive
     * executor loss (same contract as [[kcorePeel]]). */
   def bfsHops(edges: DataFrame, sources: DataFrame, maxHops: Int,
@@ -463,7 +445,7 @@ object Graph {
     * multi-edge reaches dedup and re-reaches of settled nodes drop in
     * the same exchange, with no anti-join or broadcast of the labeled
     * set. The round is lineage-cut and materialized by
-    * [[Rounds.persistCounted]], whose count of `rnd = r` rows (the
+    * [[Rounds.Scope.persistCounted]], whose count of `rnd = r` rows (the
     * improved nodes) is the convergence probe: one driver-synchronous
     * job per round. Lineage truncation also keeps the plan size
     * constant in the round count and severs any init-derives-from-
@@ -471,34 +453,32 @@ object Graph {
     *
     * Stops when `init` is empty, when a round improves nothing, or
     * after `maxRounds`. The previous round's blocks are released as
-    * each round lands; if any round throws, the live round is released
-    * before the exception propagates. Returns (node, v, rnd), `rnd`
-    * the round that last improved the node; its blocks stay
-    * materialized for the caller (free them with [[Rounds.releaseOf]]).
+    * each round lands; the scope frees the live round if any round
+    * throws. Returns the final round (node, v, rnd), `rnd` the round
+    * that last improved the node; it passes to the caller's scope
+    * ([[Rounds.scoped]]).
     * `reliable` routes rounds through durable checkpoints (the
     * checkpoint dir must already be set). */
   def relax(edges: DataFrame, init: DataFrame, maxRounds: Int,
-      reliable: Boolean)(offer: Int => Column): DataFrame = {
-    var (cur, release, live) = Rounds.persistCounted(
+      reliable: Boolean)(offer: Int => Column): DataFrame = Rounds.scoped { scope =>
+    var (cur, live) = scope.persistCounted(
       init.select(col("node"), col("v"), lit(0L).as("rnd")), reliable)
-    try {
-      var r = 1
-      while (r <= maxRounds && live > 0L) {
-        val frontier = cur.filter(col("rnd") === (r - 1L))
-          .select(col("node").as("src"), col("v"))
-        val offers = edges.join(frontier, "src")
-          .select(col("dst").as("node"), offer(r).as("v"), lit(r.toLong).as("rnd"))
-        val (next, nextRelease, improved) = Rounds.persistCounted(
-          cur.unionAll(offers).groupBy(col("node"))
-            .agg(F.min(F.struct(col("v"), col("rnd"))).as("m"))
-            .select(col("node"), col("m.v").as("v"), col("m.rnd").as("rnd")),
-          reliable, pred = Some(col("rnd") === r.toLong))
-        release()
-        cur = next; release = nextRelease; live = improved
-        r += 1
-      }
-      cur
-    } catch { case e: Throwable => release(); throw e }
+    var r = 1
+    while (r <= maxRounds && live > 0L) {
+      val frontier = cur.filter(col("rnd") === (r - 1L))
+        .select(col("node").as("src"), col("v"))
+      val offers = edges.join(frontier, "src")
+        .select(col("dst").as("node"), offer(r).as("v"), lit(r.toLong).as("rnd"))
+      val (next, improved) = scope.persistCounted(
+        cur.unionAll(offers).groupBy(col("node"))
+          .agg(F.min(F.struct(col("v"), col("rnd"))).as("m"))
+          .select(col("node"), col("m.v").as("v"), col("m.rnd").as("rnd")),
+        reliable, pred = Some(col("rnd") === r.toLong))
+      scope.release(cur)
+      cur = next; live = improved
+      r += 1
+    }
+    cur
   }
 
   /** Both directions of each `(a, b)` edge as `(src, dst, extra*)`,

@@ -52,108 +52,113 @@ object Quantiles {
     // NaN included) so the bit-space fallback — which distinguishes the
     // two zero encodings — agrees with SQL value comparison, where
     // -0.0 == 0.0.
-    var cur = df.select((col(valueCol).cast("double") + lit(0.0)).as("v"))
-      .filter(col("v").isNotNull).cache()
+    Rounds.scoped(scope => refineRank(scope,
+      scope.cache(df.select((col(valueCol).cast("double") + lit(0.0)).as("v"))
+        .filter(col("v").isNotNull)), k, buckets, collectLimit))
+  }
+
+  /** [[rankElement]]'s refinement over the cached values `start`,
+    * each narrowed subset cached in `scope`. */
+  private def refineRank(scope: Rounds.Scope, start: DataFrame, k: Long,
+      buckets: Int, collectLimit: Long): Double = {
+    var cur = start
     var rank = k
     var iters = 0
-    try {
-      while (iters < GateKnobs.quantileRefineIters) {
-        val head = cur.agg(count(lit(1)), min(col("v")), max(col("v"))).head()
-        val n = head.getLong(0)
-        require(rank <= n, s"rank $rank exceeds non-null count $n")
-        val (lo, hi) = (head.getDouble(1), head.getDouble(2))
-        if (lo == hi) { TierProbe.record("quantiles.rank", "uniform"); return lo }
-        if (n <= collectLimit) {
-          val arr = cur.select(col("v")).collect().map(_.getDouble(0))
-          java.util.Arrays.sort(arr)
-          TierProbe.record("quantiles.rank", "collect")
-          return arr((rank - 1).toInt)
-        }
-        val width = (hi - lo) / buckets
-        val bucketExpr = least(
-          floor((col("v") - lit(lo)) / lit(width)).cast("int"), lit(buckets - 1))
-        val counts = cur.groupBy(bucketExpr.as("b")).agg(count(lit(1)).as("c"))
-          .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-        var cum = 0L
-        var chosen = -1
-        var below = 0L
-        var i = 0
-        while (i < buckets && chosen < 0) {
-          val c = counts.getOrElse(i, 0L)
-          if (cum + c >= rank && c > 0) { chosen = i; below = cum }
-          cum += c
-          i += 1
-        }
-        require(chosen >= 0, s"rank $rank not covered by bucket counts (total $cum)")
-        rank -= below
-        val next = cur.filter(bucketExpr === chosen).cache()
-        cur.unpersist()
-        cur = next
-        iters += 1
+    while (iters < GateKnobs.quantileRefineIters) {
+      val head = cur.agg(count(lit(1)), min(col("v")), max(col("v"))).head()
+      val n = head.getLong(0)
+      require(rank <= n, s"rank $rank exceeds non-null count $n")
+      val (lo, hi) = (head.getDouble(1), head.getDouble(2))
+      if (lo == hi) { TierProbe.record("quantiles.rank", "uniform"); return lo }
+      if (n <= collectLimit) {
+        val arr = cur.select(col("v")).collect().map(_.getDouble(0))
+        java.util.Arrays.sort(arr)
+        TierProbe.record("quantiles.rank", "collect")
+        return arr((rank - 1).toInt)
       }
-      // Refinement stalled (adversarial magnitude spread). Previous
-      // fallback was a single-partition Window sort — an executor-OOM
-      // risk when the stalled subset is still huge. Instead: binary
-      // search on the ordered 64-bit double encoding. Invariant: the
-      // answer's ord-bits lie in [loB, hiB]; each step one cheap
-      // count-aggregation in VALUE space (`<=` on doubles). Converges
-      // to the smallest double m with count(v <= m) >= rank, which the
-      // discreteness of the double grid guarantees is an attained data
-      // value (-0.0 already normalized away above). ≤64 passes, each
-      // over the cached narrowed subset.
-      TierProbe.record("quantiles.rank", "bitsearch")
-      val mm = cur.agg(min(col("v")), max(col("v"))).head()
-      var loB = ordBits(mm.getDouble(0))
-      var hiB = ordBits(mm.getDouble(1))
-      while (loB < hiB) {
-        val midB = (loB & hiB) + ((loB ^ hiB) >> 1) // overflow-safe floor midpoint
-        val m = fromOrd(midB)
-        if (cur.filter(col("v") <= m).count() >= rank) hiB = midB
-        else loB = midB + 1
+      val width = (hi - lo) / buckets
+      val bucketExpr = least(
+        floor((col("v") - lit(lo)) / lit(width)).cast("int"), lit(buckets - 1))
+      val counts = cur.groupBy(bucketExpr.as("b")).agg(count(lit(1)).as("c"))
+        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+      var cum = 0L
+      var chosen = -1
+      var below = 0L
+      var i = 0
+      while (i < buckets && chosen < 0) {
+        val c = counts.getOrElse(i, 0L)
+        if (cum + c >= rank && c > 0) { chosen = i; below = cum }
+        cum += c
+        i += 1
       }
-      fromOrd(loB)
-    } finally cur.unpersist()
+      require(chosen >= 0, s"rank $rank not covered by bucket counts (total $cum)")
+      rank -= below
+      val next = scope.cache(cur.filter(bucketExpr === chosen))
+      scope.release(cur)
+      cur = next
+      iters += 1
+    }
+    // Refinement stalled (adversarial magnitude spread). Previous
+    // fallback was a single-partition Window sort — an executor-OOM
+    // risk when the stalled subset is still huge. Instead: binary
+    // search on the ordered 64-bit double encoding. Invariant: the
+    // answer's ord-bits lie in [loB, hiB]; each step one cheap
+    // count-aggregation in VALUE space (`<=` on doubles). Converges
+    // to the smallest double m with count(v <= m) >= rank, which the
+    // discreteness of the double grid guarantees is an attained data
+    // value (-0.0 already normalized away above). ≤64 passes, each
+    // over the cached narrowed subset.
+    TierProbe.record("quantiles.rank", "bitsearch")
+    val mm = cur.agg(min(col("v")), max(col("v"))).head()
+    var loB = ordBits(mm.getDouble(0))
+    var hiB = ordBits(mm.getDouble(1))
+    while (loB < hiB) {
+      val midB = (loB & hiB) + ((loB ^ hiB) >> 1) // overflow-safe floor midpoint
+      val m = fromOrd(midB)
+      if (cur.filter(col("v") <= m).count() >= rank) hiB = midB
+      else loB = midB + 1
+    }
+    fromOrd(loB)
   }
 
   /** (quantile, value) rows for each q: rank = ceil(q·n), the
     * lower-discrete quantile — same rank rule the oracle SQL spells
     * out with ROW_NUMBER. */
-  def quantiles(df: DataFrame, valueCol: String, qs: Seq[Double]): DataFrame = {
+  def quantiles(df: DataFrame, valueCol: String, qs: Seq[Double]): DataFrame =
+    Rounds.scoped { scope =>
     val spark = df.sparkSession
     import spark.implicits._
     // `+ 0.0` normalizes -0.0 (same contract as rankElement)
-    val base = df.select((col(valueCol).cast("double") + lit(0.0)).as("v"))
-      .filter(col("v").isNotNull).cache()
-    try {
-      val n = base.count()
-      // zero non-null rows ⇒ ceil(q·n) = 0, which is not a rank: the
-      // quantile of an empty multiset is no rows, not a crash
-      if (n == 0L) Seq.empty[(Double, Double)].toDF("q", "v")
-      else if (n <= GateKnobs.quantileCollectLimit) {
-        // batched collect tier (r19): every rank reads the SAME sorted
-        // array, so a 5-quantile request costs ONE collect instead of
-        // five full rankElement cycles (cache + head-aggregate +
-        // collect each) — rankElement would have taken this exact
-        // collect exit per rank anyway, so the values are identical
-        // by construction. The >collectLimit path below is untouched:
-        // at scale each rank still refines independently.
-        val arr = base.select(col("v")).collect().map(_.getDouble(0))
-        java.util.Arrays.sort(arr)
-        TierProbe.record("quantiles.rank", "collect")
-        qs.map { q =>
-          // same rank contract as rankElement's require(1 <= k <= n):
-          // an out-of-range q must fail identically on both tiers,
-          // not as a bare ArrayIndexOutOfBounds (ADVICE r19)
-          val k = math.ceil(q * n).toLong
-          require(k >= 1 && k <= n, s"rank k=$k out of range [1, $n] (q=$q)")
-          (q, arr((k - 1).toInt))
-        }.toDF("q", "v")
-      }
-      else qs.map { q =>
+    val base = scope.cache(df.select((col(valueCol).cast("double") + lit(0.0)).as("v"))
+      .filter(col("v").isNotNull))
+    val n = base.count()
+    // zero non-null rows ⇒ ceil(q·n) = 0, which is not a rank: the
+    // quantile of an empty multiset is no rows, not a crash
+    if (n == 0L) Seq.empty[(Double, Double)].toDF("q", "v")
+    else if (n <= GateKnobs.quantileCollectLimit) {
+      // batched collect tier (r19): every rank reads the SAME sorted
+      // array, so a 5-quantile request costs ONE collect instead of
+      // five full rankElement cycles (cache + head-aggregate +
+      // collect each) — rankElement would have taken this exact
+      // collect exit per rank anyway, so the values are identical
+      // by construction. The >collectLimit path below is untouched:
+      // at scale each rank still refines independently.
+      val arr = base.select(col("v")).collect().map(_.getDouble(0))
+      java.util.Arrays.sort(arr)
+      TierProbe.record("quantiles.rank", "collect")
+      qs.map { q =>
+        // same rank contract as rankElement's require(1 <= k <= n):
+        // an out-of-range q must fail identically on both tiers,
+        // not as a bare ArrayIndexOutOfBounds (ADVICE r19)
         val k = math.ceil(q * n).toLong
-        (q, rankElement(base, "v", k))
+        require(k >= 1 && k <= n, s"rank k=$k out of range [1, $n] (q=$q)")
+        (q, arr((k - 1).toInt))
       }.toDF("q", "v")
-    } finally base.unpersist()
+    }
+    else qs.map { q =>
+      val k = math.ceil(q * n).toLong
+      (q, rankElement(base, "v", k))
+    }.toDF("q", "v")
   }
 
   /** Weighted rank element: the smallest value v such that the total
@@ -169,120 +174,123 @@ object Quantiles {
       k: Long, buckets: Int = 1024,
       collectLimit: Long = GateKnobs.quantileCollectLimit): Double = {
     require(k >= 1, s"rank must be >= 1, got $k")
-    var cur = df
+    Rounds.scoped(scope => refineWeightedRank(scope, scope.cache(df
       .select((col(valueCol).cast("double") + lit(0.0)).as("v"),
         col(weightCol).cast("long").as("wt"))
-      .filter(col("v").isNotNull && col("wt") > 0).cache()
+      .filter(col("v").isNotNull && col("wt") > 0)), k, buckets, collectLimit))
+  }
+
+  /** [[weightedRankElement]]'s refinement over the cached (v, wt) rows
+    * `start`, each narrowed subset cached in `scope`. */
+  private def refineWeightedRank(scope: Rounds.Scope, start: DataFrame,
+      k: Long, buckets: Int, collectLimit: Long): Double = {
+    var cur = start
     var rank = k
     var iters = 0
-    try {
-      while (iters < GateKnobs.quantileRefineIters) {
-        val head = cur
-          .agg(sum(col("wt")), min(col("v")), max(col("v")), count(lit(1)))
-          .head()
-        val tw = head.getLong(0)
-        require(rank <= tw, s"rank $rank exceeds total weight $tw")
-        val (lo, hi) = (head.getDouble(1), head.getDouble(2))
-        val nRows = head.getLong(3)
-        if (lo == hi) { TierProbe.record("quantiles.weightedRank", "uniform"); return lo }
-        if (nRows <= collectLimit) {
-          TierProbe.record("quantiles.weightedRank", "collect")
-          val arr = cur.select(col("v"), col("wt")).collect()
-            .map(r => (r.getDouble(0), r.getLong(1))).sortBy(_._1)
-          var cum = 0L
-          var j = 0
-          while (j < arr.length) {
-            cum += arr(j)._2
-            if (cum >= rank) return arr(j)._1
-            j += 1
-          }
-          throw new IllegalStateException("unreachable: rank <= total weight")
-        }
-        val width = (hi - lo) / buckets
-        val bucketExpr = least(
-          floor((col("v") - lit(lo)) / lit(width)).cast("int"), lit(buckets - 1))
-        val sums = cur.groupBy(bucketExpr.as("b")).agg(sum(col("wt")).as("c"))
-          .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    while (iters < GateKnobs.quantileRefineIters) {
+      val head = cur
+        .agg(sum(col("wt")), min(col("v")), max(col("v")), count(lit(1)))
+        .head()
+      val tw = head.getLong(0)
+      require(rank <= tw, s"rank $rank exceeds total weight $tw")
+      val (lo, hi) = (head.getDouble(1), head.getDouble(2))
+      val nRows = head.getLong(3)
+      if (lo == hi) { TierProbe.record("quantiles.weightedRank", "uniform"); return lo }
+      if (nRows <= collectLimit) {
+        TierProbe.record("quantiles.weightedRank", "collect")
+        val arr = cur.select(col("v"), col("wt")).collect()
+          .map(r => (r.getDouble(0), r.getLong(1))).sortBy(_._1)
         var cum = 0L
-        var chosen = -1
-        var below = 0L
-        var i = 0
-        while (i < buckets && chosen < 0) {
-          val c = sums.getOrElse(i, 0L)
-          if (cum + c >= rank && c > 0) { chosen = i; below = cum }
-          cum += c
-          i += 1
+        var j = 0
+        while (j < arr.length) {
+          cum += arr(j)._2
+          if (cum >= rank) return arr(j)._1
+          j += 1
         }
-        require(chosen >= 0, s"rank $rank not covered by bucket sums (total $cum)")
-        rank -= below
-        val next = cur.filter(bucketExpr === chosen).cache()
-        cur.unpersist()
-        cur = next
-        iters += 1
+        throw new IllegalStateException("unreachable: rank <= total weight")
       }
-      // stall fallback: binary search on ordered double bits, one
-      // cumulative-weight aggregate per step (≤64 passes)
-      TierProbe.record("quantiles.weightedRank", "bitsearch")
-      val mm = cur.agg(min(col("v")), max(col("v"))).head()
-      var loB = ordBits(mm.getDouble(0))
-      var hiB = ordBits(mm.getDouble(1))
-      while (loB < hiB) {
-        val midB = (loB & hiB) + ((loB ^ hiB) >> 1)
-        val m = fromOrd(midB)
-        val cw = cur.filter(col("v") <= m)
-          .agg(coalesce(sum(col("wt")), lit(0L))).head().getLong(0)
-        if (cw >= rank) hiB = midB else loB = midB + 1
+      val width = (hi - lo) / buckets
+      val bucketExpr = least(
+        floor((col("v") - lit(lo)) / lit(width)).cast("int"), lit(buckets - 1))
+      val sums = cur.groupBy(bucketExpr.as("b")).agg(sum(col("wt")).as("c"))
+        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+      var cum = 0L
+      var chosen = -1
+      var below = 0L
+      var i = 0
+      while (i < buckets && chosen < 0) {
+        val c = sums.getOrElse(i, 0L)
+        if (cum + c >= rank && c > 0) { chosen = i; below = cum }
+        cum += c
+        i += 1
       }
-      fromOrd(loB)
-    } finally cur.unpersist()
+      require(chosen >= 0, s"rank $rank not covered by bucket sums (total $cum)")
+      rank -= below
+      val next = scope.cache(cur.filter(bucketExpr === chosen))
+      scope.release(cur)
+      cur = next
+      iters += 1
+    }
+    // stall fallback: binary search on ordered double bits, one
+    // cumulative-weight aggregate per step (≤64 passes)
+    TierProbe.record("quantiles.weightedRank", "bitsearch")
+    val mm = cur.agg(min(col("v")), max(col("v"))).head()
+    var loB = ordBits(mm.getDouble(0))
+    var hiB = ordBits(mm.getDouble(1))
+    while (loB < hiB) {
+      val midB = (loB & hiB) + ((loB ^ hiB) >> 1)
+      val m = fromOrd(midB)
+      val cw = cur.filter(col("v") <= m)
+        .agg(coalesce(sum(col("wt")), lit(0L))).head().getLong(0)
+      if (cw >= rank) hiB = midB else loB = midB + 1
+    }
+    fromOrd(loB)
   }
 
   /** (q, v) rows for each q at rank = ceil(q · totalWeight) — the
     * weighted lower-discrete quantile, the weight-aware analog of
     * [[quantiles]]. */
   def weightedQuantiles(df: DataFrame, valueCol: String, weightCol: String,
-      qs: Seq[Double]): DataFrame = {
+      qs: Seq[Double]): DataFrame = Rounds.scoped { scope =>
     val spark = df.sparkSession
     import spark.implicits._
-    val base = df
+    val base = scope.cache(df
       .select((col(valueCol).cast("double") + lit(0.0)).as("v"),
         col(weightCol).cast("long").as("wt"))
-      .filter(col("v").isNotNull && col("wt") > 0).cache()
-    try {
-      val head = base.agg(coalesce(sum(col("wt")), lit(0L)), count(lit(1)))
-        .head()
-      val tw = head.getLong(0)
-      val nRows = head.getLong(1)
-      // zero total weight (empty or all-zero-weight input) ⇒ no rank
-      // mass anywhere: emit no rows, mirroring [[quantiles]]
-      if (tw == 0L) Seq.empty[(Double, Double)].toDF("q", "v")
-      else if (nRows <= GateKnobs.quantileCollectLimit) {
-        // batched collect tier — one collect + cumulative walk answers
-        // every rank (see [[quantiles]]); identical to the per-rank
-        // weightedRankElement collect exit by construction
-        val arr = base.select(col("v"), col("wt")).collect()
-          .map(r => (r.getDouble(0), r.getLong(1))).sortBy(_._1)
-        TierProbe.record("quantiles.weightedRank", "collect")
-        def at(k: Long): Double = {
-          // same rank contract as weightedRankElement's require:
-          // k=0 must not silently return the minimum (ADVICE r19)
-          require(k >= 1 && k <= tw,
-            s"weighted rank k=$k out of range [1, $tw]")
-          var cum = 0L
-          var j = 0
-          while (j < arr.length) {
-            cum += arr(j)._2
-            if (cum >= k) return arr(j)._1
-            j += 1
-          }
-          throw new IllegalStateException("unreachable: rank <= total weight")
+      .filter(col("v").isNotNull && col("wt") > 0))
+    val head = base.agg(coalesce(sum(col("wt")), lit(0L)), count(lit(1)))
+      .head()
+    val tw = head.getLong(0)
+    val nRows = head.getLong(1)
+    // zero total weight (empty or all-zero-weight input) ⇒ no rank
+    // mass anywhere: emit no rows, mirroring [[quantiles]]
+    if (tw == 0L) Seq.empty[(Double, Double)].toDF("q", "v")
+    else if (nRows <= GateKnobs.quantileCollectLimit) {
+      // batched collect tier — one collect + cumulative walk answers
+      // every rank (see [[quantiles]]); identical to the per-rank
+      // weightedRankElement collect exit by construction
+      val arr = base.select(col("v"), col("wt")).collect()
+        .map(r => (r.getDouble(0), r.getLong(1))).sortBy(_._1)
+      TierProbe.record("quantiles.weightedRank", "collect")
+      def at(k: Long): Double = {
+        // same rank contract as weightedRankElement's require:
+        // k=0 must not silently return the minimum (ADVICE r19)
+        require(k >= 1 && k <= tw,
+          s"weighted rank k=$k out of range [1, $tw]")
+        var cum = 0L
+        var j = 0
+        while (j < arr.length) {
+          cum += arr(j)._2
+          if (cum >= k) return arr(j)._1
+          j += 1
         }
-        qs.map(q => (q, at(math.ceil(q * tw).toLong))).toDF("q", "v")
+        throw new IllegalStateException("unreachable: rank <= total weight")
       }
-      else qs.map { q =>
-        val k = math.ceil(q * tw).toLong
-        (q, weightedRankElement(base, "v", "wt", k))
-      }.toDF("q", "v")
-    } finally base.unpersist()
+      qs.map(q => (q, at(math.ceil(q * tw).toLong))).toDF("q", "v")
+    }
+    else qs.map { q =>
+      val k = math.ceil(q * tw).toLong
+      (q, weightedRankElement(base, "v", "wt", k))
+    }.toDF("q", "v")
   }
 }

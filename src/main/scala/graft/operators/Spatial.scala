@@ -95,9 +95,10 @@ object Spatial {
     * Scale shape: on top of the O(n) pair relation this is one degree
     * aggregate, one CC run over the (much smaller) core–core edge set,
     * and two semi/equi joins — every shuffle keyed on point id. */
-  def dbscan(pts: DataFrame, eps2: Long, minPts: Long): DataFrame = {
-    val pairs = gridNeighborPairs(pts, eps2)
-      .select(col("id_a"), col("id_b")).cache()
+  def dbscan(pts: DataFrame, eps2: Long, minPts: Long): DataFrame =
+    Rounds.scoped { scope =>
+    val pairs = scope.cache(gridNeighborPairs(pts, eps2)
+      .select(col("id_a"), col("id_b")))
     val sym = pairs.select(col("id_a").as("u"), col("id_b").as("v"))
       .unionByName(pairs.select(col("id_b").as("u"), col("id_a").as("v")))
     val deg = sym.groupBy(col("u")).agg(count(lit(1)).as("deg"))
@@ -121,15 +122,11 @@ object Spatial {
       .groupBy(col("u")).agg(min(col("cluster_rep")).as("cluster_rep"))
       .select(col("u").as("pid"), col("cluster_rep"))
       .withColumn("role", lit("border"))
-    // eager point-sized result, then free the pair cache AND the CC
-    // label round (labels fed the eager compute; only the returned
-    // result's own blocks remain — the Rounds contract)
-    val out = PlanProbe.record("helper:spatial.dbscan",
+    // eager point-sized result; the scope then frees the pair cache
+    // AND the CC label round (labels fed the eager compute; only the
+    // returned result's own blocks remain — the Rounds contract)
+    scope.persist(PlanProbe.record("helper:spatial.dbscan",
       coreRows.unionByName(borderRows)
-        .select(col("pid"), col("role"), col("cluster_rep")))
-      .localCheckpoint(true)
-    Rounds.releaseOf(cc)()
-    pairs.unpersist()
-    out
+        .select(col("pid"), col("role"), col("cluster_rep"))))
   }
 }

@@ -551,7 +551,8 @@ object HashStore {
   * back-to-back, one micro-batch after the other, and an idle source is
   * polled once a second (the session's `spark.sql.streaming.pollingDelay`,
   * see [[graft.Tuning.engineDefaults]]), where the reference sleeps 0.5 s
-  * on every cycle. */
+  * on every cycle. [[start]] refuses a stream whose session polls more
+  * often than once a second. */
 final class StreamingJob(
     spark: SparkSession,
     subs: Seq[Subscription],
@@ -578,6 +579,11 @@ final class StreamingJob(
     * registered (the registry's consumer-group-style name,
     * artifacts.py:226). */
   def start(stream: DataFrame, queryName: Option[String] = None): StreamingQuery = {
+    // the query reads its idle poll interval from its stream's session
+    val pollMs = stream.sparkSession.sessionState.conf.streamingPollingDelay
+    require(pollMs >= 1000L, s"spark.sql.streaming.pollingDelay is $pollMs ms on " +
+      "the stream's session, so an idle source would be polled every " +
+      s"$pollMs ms; build the session with graft.Tuning.engineDefaults (1 s)")
     val base = stream.writeStream
     queryName.foreach(n => base.queryName(n))
     base

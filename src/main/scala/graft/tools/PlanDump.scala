@@ -12,8 +12,8 @@ import graft.{Queries, Tuning}
   * real join/exchange shapes that `df.explain` on a
   * localCheckpoint-returning query cannot show (it sees only the
   * post-checkpoint `Scan ExistingRDD`). The rounds of iterative
-  * operators (`helper:round/<n>`, one per [[graft.operators.Rounds]]
-  * persist) print last, in round order.
+  * operators (`helper:round/<n>`, one per recorded round of a
+  * [[graft.operators.Rounds.Scope]]) print last, in round order.
   *
   * Usage: runMain graft.tools.PlanDump <sfDir> <query> [query...]
   * Session: [[graft.Tuning.localSession]]. Output goes to stdout between

@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Catalog-wide cache-release contract (VERDICT r13/r14 finding): a
@@ -15,7 +19,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * copies of executor storage at cluster scale.
   *
   * Covers every catalog query that carries a `.cache()` or a
-  * multi-round `localCheckpoint` chain.
+  * multi-round `localCheckpoint` chain, on both paths: each query runs
+  * once cleanly (counting the Spark jobs the query function starts),
+  * then once more with the last of those jobs cancelled — for most
+  * queries the final materialization, for q_sssp_bounded and
+  * q_label_prop a relaxation round — and must throw leaving nothing
+  * persisted.
   */
 class CatalogReleaseSpec extends AnyFunSuite with SparkTestBase {
 
@@ -50,11 +59,49 @@ class CatalogReleaseSpec extends AnyFunSuite with SparkTestBase {
     "q_itemset_pairs",
     "q_item_lift")
 
-  for (name <- covered)
+  private def groupOf(e: SparkListenerJobStart): String =
+    Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+      .getOrElse("")
+
+  /** Jobs each covered query's function started in its clean run. */
+  private val jobsStarted = scala.collection.concurrent.TrieMap.empty[String, Int]
+
+  /** `f` and the number of Spark jobs it started. Its jobs carry a
+    * unique job group; the listener bus delivers job starts in order,
+    * so once the sentinel job run after `f` arrives, every job of `f`
+    * has (TablesSpec's counter). */
+  private def withJobCount[T](f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"release-${java.util.UUID.randomUUID()}"
+    val starts = new LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = starts.put(groupOf(e))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "release")
+      val result = try f finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-end", "sentinel")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      (result, Iterator.continually(starts.poll(60, TimeUnit.SECONDS))
+        .map { g => assert(g != null, "sentinel job start never arrived"); g }
+        .takeWhile(_ != s"$group-end").count(_ == group))
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** Resolves every table's schema once, so a query's first load of a
+    * table runs no schema job in one run and not the other. */
+  private lazy val tablesResolved: Unit =
+    Seq("region", "nation", "customer", "supplier", "part", "orders", "lineitem",
+      "events", "documents", "embeddings").foreach(Tables.table(spark, sf, _))
+
+  for (name <- covered) {
     test(s"$name leaves at most its final result persisted") {
       val sc = spark.sparkContext
+      tablesResolved
       val before = sc.getPersistentRDDs.keySet
-      val res = SparkEntry.queries(name)(spark, sf)
+      val (res, jobs) = withJobCount(SparkEntry.queries(name)(spark, sf))
+      jobsStarted(name) = jobs
       assert(res.count() >= 0)
       val leaked = sc.getPersistentRDDs.keySet -- before
       assert(leaked.size <= 1,
@@ -63,17 +110,49 @@ class CatalogReleaseSpec extends AnyFunSuite with SparkTestBase {
           "checkpointed round is not being released")
       // the one allowed survivor must be the RESULT's own blocks —
       // its eager final or a round its plan reads — not a stray cache
-      val ownIds =
-        res.queryExecution.analyzed.collectWithSubqueries {
-          case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
-        }.toSet ++
-        res.queryExecution.optimizedPlan.collectWithSubqueries {
-          case imr: org.apache.spark.sql.execution.columnar.InMemoryRelation =>
-            imr.cacheBuilder.cachedColumnBuffers.id
-        }.toSet
-      val foreign = leaked.filterNot(ownIds)
+      val foreign = leaked.filterNot(operators.Rounds.ownBlocks(res))
       assert(foreign.isEmpty,
         s"$name's surviving persisted RDD(s) $foreign are not blocks " +
           "its own result reads — a leaked intermediate, not the allowance")
     }
+
+    test(s"$name frees every persist when its last job fails") {
+      val last = jobsStarted.getOrElse(name,
+        fail(s"the clean run of $name did not record its job count"))
+      assert(last > 0, s"$name started no job")
+      val sc = spark.sparkContext
+      /** One run with job `last` (and any later one) cancelled: the
+        * error, or the result when the job finished before its cancel
+        * landed (listener events arrive asynchronously). */
+      def attempt(): Either[Throwable, org.apache.spark.sql.DataFrame] = {
+        val group = s"release-fail-${java.util.UUID.randomUUID()}"
+        val seen = new AtomicInteger()
+        val listener = new SparkListener {
+          override def onJobStart(e: SparkListenerJobStart): Unit =
+            if (groupOf(e) == group && seen.incrementAndGet() >= last)
+              sc.cancelJob(e.jobId)
+        }
+        sc.addSparkListener(listener)
+        sc.setJobGroup(group, s"$name with its last job cancelled")
+        try Right(SparkEntry.queries(name)(spark, sf))
+        catch { case e: Exception => Left(e) }
+        finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
+      }
+      val before = sc.getPersistentRDDs.keySet
+      val err = Iterator.continually(attempt()).take(5).map {
+        case Right(res) =>
+          // lost the race: free what the result holds and run again
+          operators.Rounds.releaseOf(res)()
+          None
+        case Left(e) => Some(e)
+      }.collectFirst { case Some(e) => e }
+        .getOrElse(fail(s"$name never failed with job $last cancelled"))
+      assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+        .exists(e => String.valueOf(e.getMessage).contains("cancelled")), err)
+      val leaked = sc.getPersistentRDDs.keySet -- before
+      assert(leaked.isEmpty,
+        s"$name left ${leaked.size} persisted RDDs registered after its " +
+          s"job $last of $last was cancelled")
+    }
+  }
 }

@@ -249,11 +249,16 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
 
   test("connected components: non-convergence throws instead of returning split labels") {
     val chain = (0L until 63L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
     val e = intercept[IllegalStateException] {
       Dedup.connectedComponents(chain, "doc_a", "doc_b", maxIters = 1,
         driverEdgeLimit = 0)
     }
     assert(e.getMessage.contains("did not converge"))
+    // the pair and edge caches and the live round are freed on the way out
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty,
+      "a non-converging connected components run left persisted RDDs")
   }
 
   test("connected components: reliable checkpoint path yields identical labels") {

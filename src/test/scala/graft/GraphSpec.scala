@@ -344,24 +344,28 @@ class GraphSpec extends AnyFunSuite with SparkTestBase {
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
     val df = (0L until 100L).toDF("x")
-    // unfiltered count
-    val (out, release, n) = Rounds.persistCounted(df, reliable = false)
-    assert(n == 100L)
-    // the checkpoint is materialized: reading it back needs no lineage
-    assert(out.agg(sum(col("x"))).head.getLong(0) == 4950L)
-    // predicate count matches a separate filter-count, from ONE job
-    val (out2, release2, n2) = Rounds.persistCounted(
-      df.select(col("x"), (col("x") % 2).as("r")), reliable = false,
-      pred = Some(col("r") === 1L))
-    assert(n2 == 50L && out2.count() == 100L)
-    // empty relation: pred-count is 0, not a null NPE
-    val (out3, release3, n3) = Rounds.persistCounted(
-      df.filter(col("x") < 0L), reliable = false,
-      pred = Some(col("x") === 1L))
-    assert(n3 == 0L && out3.count() == 0L)
-    release(); release2(); release3()
+    Rounds.scoped { scope =>
+      // unfiltered count
+      val (out, n) = scope.persistCounted(df, reliable = false)
+      assert(n == 100L)
+      // the checkpoint is materialized: reading it back needs no lineage
+      assert(out.agg(sum(col("x"))).head.getLong(0) == 4950L)
+      // predicate count matches a separate filter-count, from ONE job
+      val (out2, n2) = scope.persistCounted(
+        df.select(col("x"), (col("x") % 2).as("r")), reliable = false,
+        pred = Some(col("r") === 1L))
+      assert(n2 == 50L && out2.count() == 100L)
+      // empty relation: pred-count is 0, not a null NPE
+      val (out3, n3) = scope.persistCounted(
+        df.filter(col("x") < 0L), reliable = false,
+        pred = Some(col("x") === 1L))
+      assert(n3 == 0L && out3.count() == 0L)
+      // release frees one round now; the scope holds the other two
+      scope.release(out)
+      assert((sc.getPersistentRDDs.keySet -- before).size == 2)
+    }
     assert((sc.getPersistentRDDs.keySet -- before).isEmpty,
-      "persistCounted release thunks must unpersist the round's blocks")
+      "the scope must unpersist every round's blocks on exit")
   }
 
   test("persistCounted: a failing count releases the round it checkpointed") {
@@ -370,10 +374,10 @@ class GraphSpec extends AnyFunSuite with SparkTestBase {
     val before = sc.getPersistentRDDs.keySet
     // the lazy checkpoint is registered before its count runs; the
     // count's own predicate is what fails
-    val err = intercept[Exception](operators.Rounds.persistCounted(
+    val err = intercept[Exception](operators.Rounds.scoped(_.persistCounted(
       (0L until 100L).toDF("x"), reliable = false,
       pred = Some(when(col("x") === 57L, raise_error(lit("count failed")))
-        .otherwise(lit(true)))))
+        .otherwise(lit(true))))))
     assert(err.getMessage.contains("count failed"), err.getMessage)
     assert((sc.getPersistentRDDs.keySet -- before).isEmpty,
       "a failed persistCounted must not leave its round persisted")

@@ -134,16 +134,14 @@ class PairCoreSpec extends AnyFunSuite with SparkTestBase {
     assertNoForeignLeak("join tier", writeFixture(joinTierBaskets))
   }
 
-  test("Rounds.onFailure releases deferred persists on the exception path only") {
+  test("Rounds.scoped releases its persists on failure, and on success after the result") {
     import spark.implicits._
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
     val boom = new RuntimeException("mid-body failure")
     val thrown = intercept[RuntimeException] {
-      operators.Rounds.onFailure { scope =>
-        val (df, rel) = operators.Rounds.persist(
-          Seq(1L, 2L, 3L).toDF("v"), reliable = false)
-        scope.defer(rel)
+      operators.Rounds.scoped { scope =>
+        val df = scope.persist(Seq(1L, 2L, 3L).toDF("v"))
         assert(df.count() == 3)
         // the persisted round IS registered while the body runs
         assert((sc.getPersistentRDDs.keySet -- before).nonEmpty)
@@ -152,17 +150,23 @@ class PairCoreSpec extends AnyFunSuite with SparkTestBase {
     }
     assert(thrown eq boom)
     assert((sc.getPersistentRDDs.keySet -- before).isEmpty,
-      "onFailure did not release the deferred persist on the failure path")
-    // success path: the scope must NOT release (materializeFinal owns it)
-    val survivor = operators.Rounds.onFailure { scope =>
-      val (df, rel) = operators.Rounds.persist(
-        Seq(1L, 2L).toDF("v"), reliable = false)
-      scope.defer(rel)
-      (df, rel)
+      "scoped did not release its persist on the failure path")
+    // success path: the result is computed from the intermediate, which
+    // is released once the block returns
+    val total = operators.Rounds.scoped { scope =>
+      val df = scope.cache(Seq(1L, 2L).toDF("v"))
+      val n = df.agg(sum(col("v"))).head.getLong(0)
+      assert((sc.getPersistentRDDs.keySet -- before).nonEmpty)
+      n
     }
-    assert((sc.getPersistentRDDs.keySet -- before).nonEmpty,
-      "onFailure must leave persists alone on the success path")
-    survivor._2()
+    assert(total == 3L)
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty,
+      "scoped did not release its persist on the success path")
+    // a checkpoint the result reads leaves with it, to the caller
+    val kept = operators.Rounds.scoped(_.persist(Seq(5L).toDF("v")))
+    assert((sc.getPersistentRDDs.keySet -- before).size == 1)
+    assert(kept.head.getLong(0) == 5L)
+    operators.Rounds.releaseOf(kept)()
     assert((sc.getPersistentRDDs.keySet -- before).isEmpty)
   }
 

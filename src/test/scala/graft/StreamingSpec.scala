@@ -494,6 +494,26 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     assert(spark.sessionState.conf.streamingPollingDelay == 1000L)
   }
 
+  test("start refuses a stream whose session polls an idle source more than once a second") {
+    val input = tmp(); val sinkRoot = tmp(); val work = tmp()
+    val sub = Subscription("s1", "s1", "t?", FbOptions(syncMode = "forward"))
+    val df = Seq(("tnt.t1", 1L, "x", 1.0)).toDF("kafka_topic", "id", "name", "score")
+    df.coalesce(1).write.mode("append").parquet(input)
+    val job = new StreamingJob(spark, Seq(sub), "tnt", () => new JsonFileSink(sinkRoot),
+      s"$work/hashes", s"$work/ckpt")
+    val fast = spark.newSession()
+    fast.conf.set("spark.sql.streaming.pollingDelay", "10ms")
+    val err = intercept[IllegalArgumentException](
+      job.start(fast.readStream.schema(df.schema).parquet(input)))
+    assert(err.getMessage.contains("Tuning.engineDefaults"), err.getMessage)
+    // the same job starts on a stream of the engineDefaults session
+    val q = job.start(spark.readStream.schema(df.schema).parquet(input))
+    try {
+      q.processAllAvailable()
+      assert(new java.io.File(s"$sinkRoot/_aether/entities/t1").list().length == 1)
+    } finally q.stop()
+  }
+
   test("topic discovery: tenant filter + prefix strip; broker failure surfaces as Left") {
     import graft.sources.{StaticTopicCatalog, TopicCatalog}
     // list_topics semantics (artifacts.py:409-424): only this tenant's
