@@ -1,5 +1,7 @@
 package graft.model
 
+import org.json4s._
+
 /** Control-plane resources mirroring the reference's JSON-schema
   * contracts (reference: firebase/app/fixtures/schemas.py — Firebase
   * 21-126, Subscription 128-296, Job 298-358; examples
@@ -55,163 +57,214 @@ object Validation {
   val SchemaSyncModes: Set[String] = Set("forward") // schemas.py:284
   val EngineSyncModes: Set[String] = Set("forward", "sync", "consume", "none")
 
-  import org.json4s._
+  import ResourceKind._
 
-  /** The reference-shaped JSON definition of a Subscription (the dict
-    * examples.py:35-51 validates): empty optional settings are absent
-    * keys, so the ported schema's presence-based `dependencies`
-    * blocks fire exactly as they do in the SDK. `topic_options` is
-    * emitted only when a filter or mask is configured (an empty
-    * topic_options object violates its anyOf, as in the reference). */
-  def subscriptionDefinition(sub: Subscription): JValue = {
-    val o = sub.fbOptions
-    val filterConfigured =
-      o.filterRequired || o.filterFieldPath.nonEmpty || o.filterPassValues.nonEmpty
-    val maskConfigured = o.maskingLevels.nonEmpty || o.maskingEmitLevel.nonEmpty
-    val topicOpts: List[(String, JValue)] =
-      (if (maskConfigured)
-        List("masking_annotation" -> JString(o.maskingAnnotation): (String, JValue)) ++
-          (if (o.maskingLevels.nonEmpty)
-            List("masking_levels" -> JArray(o.maskingLevels.map(JString(_)).toList): (String, JValue))
-          else Nil) ++
-          (if (o.maskingEmitLevel.nonEmpty)
-            List("masking_emit_level" -> JString(o.maskingEmitLevel): (String, JValue))
-          else Nil)
-      else Nil) ++
-      (if (filterConfigured)
-        List("filter_required" -> JBool(o.filterRequired): (String, JValue)) ++
-          (if (o.filterFieldPath.nonEmpty)
-            List("filter_field_path" -> JString(o.filterFieldPath): (String, JValue))
-          else Nil) ++
-          (if (o.filterPassValues.nonEmpty)
-            List("filter_pass_values" -> JArray(o.filterPassValues.map(JString(_)).toList): (String, JValue))
-          else Nil)
-      else Nil)
-    JObject(List[(String, JValue)](
-      "id" -> JString(sub.id),
-      "name" -> JString(sub.name),
-      "topic_pattern" -> JString(sub.topicPattern)) ++
-      (if (topicOpts.nonEmpty) List("topic_options" -> JObject(topicOpts): (String, JValue)) else Nil) ++
-      List("fb_options" -> JObject(List(
-        "sync_mode" -> JString(o.syncMode),
-        "target_path" -> JString(o.targetPath))): (String, JValue)))
-  }
+  def validateSubscription(sub: Subscription,
+      allowedSyncModes: Set[String] = EngineSyncModes): Seq[String] =
+    Subscriptions.validate(sub, allowedSyncModes)
+  def validateFirebase(fb: FirebaseInstance): Seq[String] = Firebases.validate(fb, EngineSyncModes)
+  def validateJob(job: FirebaseJob): Seq[String] = Jobs.validate(job, EngineSyncModes)
+}
 
-  def firebaseDefinition(fb: FirebaseInstance): JValue = JObject(List[(String, JValue)](
-    "id" -> JString(fb.id),
-    "name" -> JString(fb.name),
-    "url" -> JString(fb.url),
-    "credential" -> JsonSchema.parse(if (fb.credentialJson.trim.nonEmpty) fb.credentialJson else "null"),
-    "aether_server_alias" -> JString(fb.aetherServerAlias),
-    "firebase_config_path" -> JString(fb.firebaseConfigPath),
-    "hash_path" -> JString(fb.hashPath)))
+/** One control-plane resource kind (reference A18-A23: one
+  * add/get/list/delete/validate_pretty/get_schema surface for every
+  * kind, artifacts.py:132-157, README.md:138-189). The registry keeps
+  * one definition store over these entries and the REST control plane
+  * serves every kind from them. */
+sealed abstract class ResourceKind[T](
+    /** URL segment and durable-store key. */
+    val name: String,
+    /** The ported schema (schemas.py). */
+    val schema: String,
+    /** REST actions beyond the common set (README.md:151-189). */
+    val actions: Seq[String] = Nil) {
 
-  def jobDefinition(job: FirebaseJob): JValue = JObject(List[(String, JValue)](
-    "id" -> JString(job.id),
-    "name" -> JString(job.name),
-    "firebase" -> JString(job.firebase),
-    "subscription" -> JArray(job.subscriptions.map(JString(_)).toList)))
+  /** Reference-shaped definition JSON → value (the REST add/validate
+    * bodies, examples.py:22-56). Lenient: absent keys take the
+    * case-class defaults; validation decides acceptance. */
+  def fromJson(j: JValue): T
+  /** The reference-shaped JSON definition of a value: what `get`
+    * serves, the store persists and validation checks. */
+  def definition(t: T): JValue
+  def id(t: T): String
+  /** Checks beyond the schema. */
+  protected def checks(t: T, syncModes: Set[String]): Seq[String]
+  /** Schema errors this engine deliberately waives for `t`. */
+  protected def waives(schemaError: String, t: T, syncModes: Set[String]): Boolean = false
+  /** Resources `t` names, as (field, kind, id); add and start refuse
+    * a value whose referenced resource does not exist. */
+  def references(t: T): Seq[(String, ResourceKind[_], String)] = Nil
 
-  // ---- reference-shaped definition JSON → case classes (the REST
-  // add/validate bodies, examples.py:22-56). Lenient: absent keys take
-  // the case-class defaults; schema validation decides acceptance.
-  private def str(j: JValue, key: String, dflt: String = ""): String =
-    j \ key match { case JString(s) => s; case _ => dflt }
-  private def strs(j: JValue, key: String): Seq[String] =
-    j \ key match { case JArray(xs) => xs.collect { case JString(s) => s }; case _ => Nil }
+  private lazy val parsedSchema = JsonSchema.parse(schema)
 
-  def subscriptionFromJson(j: JValue): Subscription = {
-    val to = j \ "topic_options"
-    val fo = j \ "fb_options"
-    Subscription(
+  /** A REST body, validated as received. */
+  final def validateJson(defn: JValue, syncModes: Set[String]): Seq[String] =
+    validate(defn, fromJson(defn), syncModes)
+  /** A typed value, validated as its definition. */
+  final def validate(t: T, syncModes: Set[String]): Seq[String] =
+    validate(definition(t), t, syncModes)
+
+  /** The kind's one validation (validate_pretty, artifacts.py:141-157):
+    * the definition against the ported schema, then the checks on the
+    * value. */
+  private def validate(defn: JValue, t: T, syncModes: Set[String]): Seq[String] =
+    (JsonSchema.validateValue(parsedSchema, defn, "$").filterNot(waives(_, t, syncModes)) ++
+      checks(t, syncModes)).distinct
+}
+
+object ResourceKind {
+  import JsonCodec.{str, strs}
+
+  /** The messages whose condition holds. */
+  private def failing(rules: (Boolean, String)*): Seq[String] = rules.collect { case (true, m) => m }
+  private def when(cond: Boolean)(fields: (String, JValue)*): List[(String, JValue)] =
+    if (cond) fields.toList else Nil
+  private def strings(xs: Seq[String]): JValue = JArray(xs.map(JString(_)).toList)
+
+  /** schemas.py:21-126: requires the credential object and the
+    * server-alias/config/hash paths, as the SDK does. */
+  object Firebases extends ResourceKind[FirebaseInstance]("firebase", ResourceSchemas.FbInstance,
+      Seq("test_connection")) {
+    def fromJson(j: JValue): FirebaseInstance = FirebaseInstance(
       id = str(j, "id"),
       name = str(j, "name"),
-      topicPattern = str(j, "topic_pattern"),
-      fbOptions = FbOptions(
-        syncMode = str(fo, "sync_mode", "forward"),
-        targetPath = str(fo, "target_path", "_aether/entities/{topic}"),
-        filterRequired = (to \ "filter_required") match {
-          case JBool(b) => b; case _ => false
-        },
-        filterFieldPath = str(to, "filter_field_path"),
-        filterPassValues = strs(to, "filter_pass_values"),
-        maskingAnnotation = str(to, "masking_annotation", "aether_masking").stripPrefix("@"),
-        maskingLevels = strs(to, "masking_levels"),
-        maskingEmitLevel = str(to, "masking_emit_level")))
+      url = str(j, "url"),
+      credentialJson = (j \ "credential") match {
+        case JNothing => ""
+        case c => org.json4s.jackson.JsonMethods.compact(org.json4s.jackson.JsonMethods.render(c))
+      },
+      aetherServerAlias = str(j, "aether_server_alias", "aether"),
+      firebaseConfigPath = str(j, "firebase_config_path", "_aether/rules"),
+      hashPath = str(j, "hash_path", "_aether/hashes"))
+
+    def definition(fb: FirebaseInstance): JValue = JObject(List[(String, JValue)](
+      "id" -> JString(fb.id),
+      "name" -> JString(fb.name),
+      "url" -> JString(fb.url),
+      "credential" -> JsonSchema.parse(if (fb.credentialJson.trim.nonEmpty) fb.credentialJson else "null"),
+      "aether_server_alias" -> JString(fb.aetherServerAlias),
+      "firebase_config_path" -> JString(fb.firebaseConfigPath),
+      "hash_path" -> JString(fb.hashPath)))
+
+    def id(fb: FirebaseInstance): String = fb.id
+
+    protected def checks(fb: FirebaseInstance, syncModes: Set[String]): Seq[String] = failing(
+      fb.id.isEmpty -> "id: must be non-empty",
+      fb.url.isEmpty -> "url: must be non-empty")
   }
 
-  def firebaseFromJson(j: JValue): FirebaseInstance = FirebaseInstance(
-    id = str(j, "id"),
-    name = str(j, "name"),
-    url = str(j, "url"),
-    credentialJson = (j \ "credential") match {
-      case JNothing => ""
-      case c => org.json4s.jackson.JsonMethods.compact(org.json4s.jackson.JsonMethods.render(c))
-    },
-    aetherServerAlias = str(j, "aether_server_alias", "aether"),
-    firebaseConfigPath = str(j, "firebase_config_path", "_aether/rules"),
-    hashPath = str(j, "hash_path", "_aether/hashes"))
-
-  def jobFromJson(j: JValue): FirebaseJob = FirebaseJob(
-    id = str(j, "id"),
-    name = str(j, "name"),
-    firebase = str(j, "firebase"),
-    subscriptions = strs(j, "subscription"))
-
-  /** Full ported-schema validation (schemas.py:128-296) + the
-    * secondary path rule (artifacts.py:159-172): target path must
-    * have an odd number of '/'-separated segments (collection-rooted
-    * CFS path) and no placeholder other than {topic}. The shipped
-    * schema's sync_mode enum (["forward"]) is widened to
-    * `allowedSyncModes` — the engine-capability deviation documented
-    * on [[EngineSyncModes]]. */
-  def validateSubscription(sub: Subscription,
-      allowedSyncModes: Set[String] = EngineSyncModes): Seq[String] = {
-    val o = sub.fbOptions
-    val schemaErrs = JsonSchema.validate(ResourceSchemas.Subscription,
-        subscriptionDefinition(sub))
-      .filterNot(e => e.startsWith("$.fb_options.sync_mode") && e.contains("enum") &&
-        allowedSyncModes.contains(o.syncMode))
-    val errs = Seq.newBuilder[String]
-    errs ++= schemaErrs
-    if (sub.id.isEmpty) errs += "id: must be non-empty"
-    if (sub.name.isEmpty) errs += "name: must be non-empty"
-    if (sub.topicPattern.isEmpty) errs += "topic_pattern: must be non-empty"
-    if (!allowedSyncModes.contains(o.syncMode))
-      errs += s"fb_options.sync_mode: '${o.syncMode}' not in ${allowedSyncModes.mkString(",")}"
-    if (o.maskingEmitLevel.nonEmpty && o.maskingLevels.nonEmpty &&
-        !o.maskingLevels.contains(o.maskingEmitLevel))
-      errs += "fb_options.masking_emit_level: must be one of masking_levels"
-    // secondary validation (artifacts.py:159-172)
-    val placeholders = "\\{([^}]*)\\}".r.findAllMatchIn(o.targetPath).map(_.group(1)).toSeq
-    placeholders.filterNot(_ == "topic").foreach { p =>
-      errs += s"fb_options.target_path: illegal placeholder {$p}"
+  /** schemas.py:128-296 + the secondary path rule
+    * (artifacts.py:159-172): the target path must have an odd number
+    * of '/'-separated segments (collection-rooted CFS path) and no
+    * placeholder other than {topic}. The shipped schema's sync_mode
+    * enum (["forward"]) is widened to the registry's allowed modes —
+    * the engine-capability deviation documented on
+    * [[Validation.EngineSyncModes]]. */
+  object Subscriptions extends ResourceKind[Subscription]("subscription",
+      ResourceSchemas.Subscription) {
+    def fromJson(j: JValue): Subscription = {
+      val to = j \ "topic_options"
+      val fo = j \ "fb_options"
+      Subscription(
+        id = str(j, "id"),
+        name = str(j, "name"),
+        topicPattern = str(j, "topic_pattern"),
+        fbOptions = FbOptions(
+          syncMode = str(fo, "sync_mode", "forward"),
+          targetPath = str(fo, "target_path", "_aether/entities/{topic}"),
+          filterRequired = (to \ "filter_required") == JBool(true),
+          filterFieldPath = str(to, "filter_field_path"),
+          filterPassValues = strs(to, "filter_pass_values"),
+          maskingAnnotation = str(to, "masking_annotation", "aether_masking").stripPrefix("@"),
+          maskingLevels = strs(to, "masking_levels"),
+          maskingEmitLevel = str(to, "masking_emit_level")))
     }
-    val segments = o.targetPath.stripPrefix("/").stripSuffix("/").split("/")
-    if (segments.length % 2 == 0)
-      errs += s"fb_options.target_path: must have an odd number of segments, got ${segments.length}"
-    errs.result()
+
+    /** Empty optional settings are absent keys, so the ported schema's
+      * presence-based `dependencies` blocks fire exactly as they do in
+      * the SDK. `topic_options` is emitted only when a filter or mask
+      * is configured (an empty topic_options object violates its
+      * anyOf, as in the reference). */
+    def definition(sub: Subscription): JValue = {
+      val o = sub.fbOptions
+      val topicOpts =
+        when(o.maskingLevels.nonEmpty || o.maskingEmitLevel.nonEmpty)(
+          "masking_annotation" -> JString(o.maskingAnnotation)) ++
+        when(o.maskingLevels.nonEmpty)("masking_levels" -> strings(o.maskingLevels)) ++
+        when(o.maskingEmitLevel.nonEmpty)("masking_emit_level" -> JString(o.maskingEmitLevel)) ++
+        when(o.filterRequired || o.filterFieldPath.nonEmpty || o.filterPassValues.nonEmpty)(
+          "filter_required" -> JBool(o.filterRequired)) ++
+        when(o.filterFieldPath.nonEmpty)("filter_field_path" -> JString(o.filterFieldPath)) ++
+        when(o.filterPassValues.nonEmpty)("filter_pass_values" -> strings(o.filterPassValues))
+      JObject(List[(String, JValue)]("id" -> JString(sub.id), "name" -> JString(sub.name),
+          "topic_pattern" -> JString(sub.topicPattern)) ++
+        when(topicOpts.nonEmpty)("topic_options" -> JObject(topicOpts)) :+
+        ("fb_options" -> JObject("sync_mode" -> JString(o.syncMode), "target_path" -> JString(o.targetPath))))
+    }
+
+    def id(sub: Subscription): String = sub.id
+
+    override protected def waives(schemaError: String, sub: Subscription,
+        syncModes: Set[String]): Boolean =
+      schemaError.startsWith("$.fb_options.sync_mode") && schemaError.contains("enum") &&
+        syncModes.contains(sub.fbOptions.syncMode)
+
+    protected def checks(sub: Subscription, syncModes: Set[String]): Seq[String] = {
+      val o = sub.fbOptions
+      val placeholders = "\\{([^}]*)\\}".r.findAllMatchIn(o.targetPath).map(_.group(1)).toSeq
+      val segments = o.targetPath.stripPrefix("/").stripSuffix("/").split("/")
+      failing(
+        sub.id.isEmpty -> "id: must be non-empty",
+        sub.name.isEmpty -> "name: must be non-empty",
+        sub.topicPattern.isEmpty -> "topic_pattern: must be non-empty",
+        !syncModes.contains(o.syncMode) ->
+          s"fb_options.sync_mode: '${o.syncMode}' not in ${syncModes.mkString(",")}",
+        (o.maskingEmitLevel.nonEmpty && o.maskingLevels.nonEmpty &&
+          !o.maskingLevels.contains(o.maskingEmitLevel)) ->
+          "fb_options.masking_emit_level: must be one of masking_levels") ++
+        placeholders.filterNot(_ == "topic").map(p => s"fb_options.target_path: illegal placeholder {$p}") ++
+        failing((segments.length % 2 == 0) ->
+          s"fb_options.target_path: must have an odd number of segments, got ${segments.length}")
+    }
   }
 
-  /** Ported-schema validation (schemas.py:21-126): requires the
-    * credential object and the server-alias/config/hash paths, as the
-    * SDK does. */
-  def validateFirebase(fb: FirebaseInstance): Seq[String] = {
-    val errs = Seq.newBuilder[String]
-    errs ++= JsonSchema.validate(ResourceSchemas.FbInstance, firebaseDefinition(fb))
-    if (fb.id.isEmpty) errs += "id: must be non-empty"
-    if (fb.url.isEmpty) errs += "url: must be non-empty"
-    errs.result()
+  /** schemas.py:298-358; a job names its firebase instance and its
+    * subscriptions, and both must exist. */
+  object Jobs extends ResourceKind[FirebaseJob]("job", ResourceSchemas.FbJob,
+      Seq("pause", "resume", "get_status", "get_logs", "list_topics", "list_subscribed_topics")) {
+    def fromJson(j: JValue): FirebaseJob = FirebaseJob(
+      id = str(j, "id"),
+      name = str(j, "name"),
+      firebase = str(j, "firebase"),
+      subscriptions = strs(j, "subscription"))
+
+    def definition(job: FirebaseJob): JValue = JObject(List[(String, JValue)](
+      "id" -> JString(job.id),
+      "name" -> JString(job.name),
+      "firebase" -> JString(job.firebase),
+      "subscription" -> strings(job.subscriptions)))
+
+    def id(job: FirebaseJob): String = job.id
+
+    protected def checks(job: FirebaseJob, syncModes: Set[String]): Seq[String] = failing(
+      job.id.isEmpty -> "id: must be non-empty",
+      job.firebase.isEmpty -> "firebase: must reference a firebase resource",
+      job.subscriptions.isEmpty -> "subscriptions: must be non-empty")
+
+    override def references(job: FirebaseJob): Seq[(String, ResourceKind[_], String)] =
+      ("firebase", Firebases, job.firebase) +: job.subscriptions.map(("subscriptions", Subscriptions, _))
   }
 
-  /** Ported-schema validation (schemas.py:298-358) + referential
-    * emptiness checks. */
-  def validateJob(job: FirebaseJob): Seq[String] = {
-    val errs = Seq.newBuilder[String]
-    errs ++= JsonSchema.validate(ResourceSchemas.FbJob, jobDefinition(job))
-    if (job.id.isEmpty) errs += "id: must be non-empty"
-    if (job.firebase.isEmpty) errs += "firebase: must reference a firebase resource"
-    if (job.subscriptions.isEmpty) errs += "subscriptions: must be non-empty"
-    errs.result()
-  }
+  /** The table, in the order the control plane serves it. Lazy: a kind
+    * initializes this object first when it is the first kind used. */
+  lazy val all: Seq[ResourceKind[_]] = Seq(Firebases, Subscriptions, Jobs)
+}
+
+/** Reading string fields of a JSON definition; absent or non-string
+  * keys read as the default. */
+private[graft] object JsonCodec {
+  def str(j: JValue, key: String, dflt: String = ""): String =
+    j \ key match { case JString(s) => s; case _ => dflt }
+  def strs(j: JValue, key: String): Seq[String] =
+    j \ key match { case JArray(xs) => xs.collect { case JString(s) => s }; case _ => Nil }
 }

@@ -23,9 +23,10 @@ import graft.model._
   * against the verbatim-ported draft-07 schemas so presence-based
   * `dependencies` blocks behave exactly as in the SDK.
   *
-  * `resume` rebuilds the query from the registry's stored start
-  * arguments (checkpoint-recovered); inject `resumeJob` to override
-  * how a job's stream is rebuilt.
+  * Every resource kind is one [[ResourceKind]] table entry: the
+  * common actions, `describe` and the kind's own actions all read it,
+  * so the served and the described actions cannot drift. `resume`
+  * restarts the job's run from its checkpoint.
   *
   * Tenancy: every request is dispatched by its `x-oauth-realm` header
   * to that tenant's registry (the reference fronts the SDK server
@@ -36,21 +37,11 @@ import graft.model._
   * each other's resources.
   */
 final class ControlPlane(reg: JobRegistry,
-    allowedSyncModes: Set[String] = Validation.EngineSyncModes,
-    resumeJob: Option[String => Either[Seq[String], Unit]] = None,
-    /** Builds the sink a Firebase instance's `test_connection` pings
-      * (reference: lazily builds the app + RTDB/CFS clients and maps
-      * failure to HTTP 500, artifacts.py:112-124). */
-    sinkFor: FirebaseInstance => graft.sources.DocumentSink =
-      fb => new graft.sources.JsonFileSink(fb.rootPath),
     port: Int = 0,
     /** realm → tenant registry. The default `reg` serves requests
       * without a realm header (and may also be listed here under its
       * own realm name). */
     realms: Map[String, JobRegistry] = Map.empty) {
-
-  private def doResume(r: JobRegistry, id: String): Either[Seq[String], Unit] =
-    resumeJob.map(f => f(id)).getOrElse(r.resumeJob(id).map(_ => ()))
 
   private val server = HttpServer.create(new java.net.InetSocketAddress("127.0.0.1", port), 0)
 
@@ -78,158 +69,116 @@ final class ControlPlane(reg: JobRegistry,
     JObject("valid" -> JBool(false),
       "validation_errors" -> JArray(messages.map(JString(_)).toList))
 
-  /** Raw-body schema validation + engine secondary checks — the
-    * validate_pretty contract (artifacts.py:141-157). */
-  private def validate(kind: String, definition: JValue): Seq[String] = kind match {
-    case "subscription" =>
-      val sub = Validation.subscriptionFromJson(definition)
-      val schemaErrs = JsonSchema.validate(ResourceSchemas.Subscription, definition)
-        .filterNot(e => e.startsWith("$.fb_options.sync_mode") && e.contains("enum") &&
-          allowedSyncModes.contains(sub.fbOptions.syncMode))
-      (schemaErrs ++ Validation.validateSubscription(sub, allowedSyncModes)).distinct
-    case "firebase" =>
-      (JsonSchema.validate(ResourceSchemas.FbInstance, definition) ++
-        Validation.validateFirebase(Validation.firebaseFromJson(definition))).distinct
-    case "job" =>
-      (JsonSchema.validate(ResourceSchemas.FbJob, definition) ++
-        Validation.validateJob(Validation.jobFromJson(definition))).distinct
-  }
+  private def strings(xs: Seq[String]): JValue = JArray(xs.map(JString(_)).toList)
 
-  private def schemaOf(kind: String): String = kind match {
-    case "subscription" => ResourceSchemas.Subscription
-    case "firebase" => ResourceSchemas.FbInstance
-    case "job" => ResourceSchemas.FbJob
-  }
+  private def definitionOf[T](reg: JobRegistry, kind: ResourceKind[T], id: String): Option[JValue] =
+    reg.get(kind, id).map(kind.definition)
 
-  private def getDefinition(reg: JobRegistry, kind: String, id: String): Option[JValue] =
-    kind match {
-      case "subscription" => reg.getSubscription(id).map(Validation.subscriptionDefinition)
-      case "firebase" => reg.getFirebase(id).map(Validation.firebaseDefinition)
-      case "job" => reg.getJob(id).map(Validation.jobDefinition)
-    }
+  /** Actions every kind serves (README.md:138-150). */
+  private val commonActions = Seq("describe", "get_schema", "validate_pretty",
+    "add", "get", "list", "delete")
 
-  /** Tenant dispatch (docker-compose.yml:13): realm header → that
-    * tenant's registry; no header → the default; unknown → None. */
-  private def registryFor(ex: HttpExchange): Option[JobRegistry] =
-    Option(ex.getRequestHeaders.getFirst("x-oauth-realm")) match {
-      case None => Some(reg)
-      case Some(realm) => realms.get(realm)
-    }
-
-  private def handle(reg: JobRegistry, kind: String, action: String,
+  private def handle(reg: JobRegistry, kind: ResourceKind[_], action: String,
       ex: HttpExchange): Unit = action match {
     case "add" =>
-      val defn = body(ex)
-      val schemaErrs = validate(kind, defn)
-      if (schemaErrs.nonEmpty) respond(ex, 400, errs(schemaErrs))
-      else {
-        val result = kind match {
-          case "subscription" => reg.addSubscription(Validation.subscriptionFromJson(defn))
-          case "firebase" => reg.addFirebase(Validation.firebaseFromJson(defn))
-          case "job" => reg.addJob(Validation.jobFromJson(defn))
-        }
-        result match {
-          case Right(id) => respond(ex, 200, JObject("id" -> JString(id)))
-          case Left(es) => respond(ex, 400, errs(es))
-        }
+      reg.addDefinition(kind, body(ex)) match {
+        case Right(id) => respond(ex, 200, JObject("id" -> JString(id)))
+        case Left(es) => respond(ex, 400, errs(es))
       }
     case "validate_pretty" =>
-      validate(kind, body(ex)) match {
+      // the registry's own sync modes: validate and add cannot disagree
+      kind.validateJson(body(ex), reg.allowedSyncModes) match {
         case Nil => respond(ex, 200, JObject("valid" -> JBool(true)))
         case es => respond(ex, 200, errs(es))
       }
-    case "get_schema" => respond(ex, 200, JsonMethods.parse(schemaOf(kind)))
+    case "get_schema" => respond(ex, 200, JsonMethods.parse(kind.schema))
     case "get" =>
-      param(ex, "id").flatMap(getDefinition(reg, kind, _)) match {
+      param(ex, "id").flatMap(definitionOf(reg, kind, _)) match {
         case Some(d) => respond(ex, 200, d)
         case None => respond(ex, 404, JObject("error" -> JString("not found")))
       }
-    case "list" =>
-      val ids = kind match {
-        case "subscription" => reg.listSubscriptions()
-        case "firebase" => reg.listFirebases()
-        case "job" => reg.listJobs()
-      }
-      respond(ex, 200, JArray(ids.map(JString(_)).toList))
+    case "list" => respond(ex, 200, strings(reg.list(kind)))
     case "delete" =>
       param(ex, "id") match {
         case None => respond(ex, 400, JObject("error" -> JString("id required")))
-        case Some(id) =>
-          kind match {
-            case "subscription" => reg.removeSubscription(id)
-            case "firebase" => reg.removeFirebase(id)
-            case "job" => reg.removeJob(id)
-          }
-          respond(ex, 200, JBool(true))
+        case Some(id) => reg.remove(kind, id); respond(ex, 200, JBool(true))
       }
-    // job-only actions (README.md:151-189)
-    case "get_status" if kind == "job" =>
+    case "describe" =>
+      // self-documenting action list (README.md:36-59)
+      respond(ex, 200, JArray((commonActions ++ kind.actions).map(m =>
+        JObject("method" -> JString(m))).toList))
+    case a if kind.actions.contains(a) => kindAction(reg, a, ex)
+    case other =>
+      respond(ex, 404, JObject("error" -> JString(s"unknown action $other")))
+  }
+
+  /** The actions a kind adds to the common set (README.md:151-189). */
+  private def kindAction(reg: JobRegistry, action: String, ex: HttpExchange): Unit = action match {
+    case "get_status" =>
       respond(ex, 200, JString(param(ex, "id").map(reg.getStatus).getOrElse("UNKNOWN")))
-    case "get_logs" if kind == "job" =>
-      respond(ex, 200,
-        JArray(param(ex, "id").toSeq.flatMap(reg.getLogs).map(JString(_)).toList))
-    case "pause" if kind == "job" =>
+    case "get_logs" => respond(ex, 200, strings(param(ex, "id").toSeq.flatMap(reg.getLogs)))
+    case "pause" =>
       param(ex, "id").foreach(reg.pauseJob); respond(ex, 200, JBool(true))
-    case "resume" if kind == "job" =>
+    case "resume" =>
       param(ex, "id") match {
-        case Some(id) => doResume(reg, id) match {
+        case Some(id) => reg.resumeJob(id) match {
           case Right(_) => respond(ex, 200, JBool(true))
           case Left(es) => respond(ex, 400, errs(es))
         }
         case None => respond(ex, 400, JObject("error" -> JString("id required")))
       }
-    case "test_connection" if kind == "firebase" =>
+    case "list_topics" =>
+      reg.listTopics() match {
+        case Right(ts) => respond(ex, 200, strings(ts))
+        case Left(e) => respond(ex, 500, JObject("error" -> JString(e)))
+      }
+    case "list_subscribed_topics" =>
+      respond(ex, 200, strings(param(ex, "id").toSeq.flatMap(reg.listSubscribedTopics)))
+    case "test_connection" =>
+      // pings the instance's sink (reference: lazily builds the app +
+      // RTDB/CFS clients and maps failure to HTTP 500,
+      // artifacts.py:112-124)
       param(ex, "id").flatMap(reg.getFirebase) match {
         case None => respond(ex, 404, JObject("error" -> JString("not found")))
         case Some(fb) =>
-          (try sinkFor(fb).testConnection()
+          (try new graft.sources.JsonFileSink(fb.rootPath).testConnection()
           catch { case scala.util.control.NonFatal(e) => Left(String.valueOf(e.getMessage)) }) match {
             case Right(_) => respond(ex, 200, JBool(true))
             case Left(msg) => respond(ex, 500, JObject("error" -> JString(msg)))
           }
       }
-    case "describe" =>
-      // self-documenting action list (README.md:36-59)
-      val common = Seq("describe", "get_schema", "validate_pretty",
-        "add", "get", "list", "delete")
-      val extra = kind match {
-        case "job" => Seq("pause", "resume", "get_status", "get_logs",
-          "list_topics", "list_subscribed_topics")
-        case "firebase" => Seq("test_connection")
-        case _ => Nil
-      }
-      respond(ex, 200, JArray((common ++ extra).map(m =>
-        JObject("method" -> JString(m))).toList))
-    case "list_topics" if kind == "job" =>
-      reg.listTopics() match {
-        case Right(ts) => respond(ex, 200, JArray(ts.map(JString(_)).toList))
-        case Left(e) => respond(ex, 500, JObject("error" -> JString(e)))
-      }
-    case "list_subscribed_topics" if kind == "job" =>
-      respond(ex, 200, JArray(param(ex, "id").toSeq
-        .flatMap(reg.listSubscribedTopics).map(JString(_)).toList))
-    case other =>
-      respond(ex, 404, JObject("error" -> JString(s"unknown action $other")))
   }
 
-  Seq("firebase", "subscription", "job").foreach { kind =>
-    server.createContext(s"/$kind", (ex: HttpExchange) => {
-      try {
-        val action = ex.getRequestURI.getPath.stripPrefix(s"/$kind").stripPrefix("/")
-        registryFor(ex) match {
-          case Some(tenantReg) => handle(tenantReg, kind, action, ex)
-          case None => respond(ex, 404, JObject("error" -> JString(
-            s"unknown realm '${ex.getRequestHeaders.getFirst("x-oauth-realm")}'")))
-        }
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          respond(ex, 500, JObject("error" -> JString(String.valueOf(e.getMessage))))
-      } finally ex.close()
+  /** Every job's status; unhealthy while any job awaits a restart
+    * (RECONFIGURE) or has stopped without being paused (STOPPED). */
+  private def health(reg: JobRegistry): JValue = {
+    val status = reg.listJobs().map(j => j -> reg.getStatus(j))
+    JObject(
+      "healthy" -> JBool(!status.exists(s => s._2 == "RECONFIGURE" || s._2 == "STOPPED")),
+      "jobs" -> JObject(status.map { case (j, s) => j -> (JString(s): JValue) }.toList))
+  }
+
+  /** Serves `ex` from its tenant's registry (docker-compose.yml:13):
+    * realm header → that tenant's registry; no header → the default;
+    * unknown realm → 404. */
+  private def serve(ex: HttpExchange)(f: JobRegistry => Unit): Unit =
+    try {
+      val realm = Option(ex.getRequestHeaders.getFirst("x-oauth-realm"))
+      realm.fold(Option(reg))(realms.get) match {
+        case Some(tenantReg) => f(tenantReg)
+        case None => respond(ex, 404, JObject("error" -> JString(s"unknown realm '${realm.get}'")))
+      }
+    } catch {
+      case scala.util.control.NonFatal(e) =>
+        respond(ex, 500, JObject("error" -> JString(String.valueOf(e.getMessage))))
+    } finally ex.close()
+
+  ResourceKind.all.foreach { kind =>
+    server.createContext(s"/${kind.name}", (ex: HttpExchange) => serve(ex) { r =>
+      handle(r, kind, ex.getRequestURI.getPath.stripPrefix(s"/${kind.name}").stripPrefix("/"), ex)
     })
   }
-  server.createContext("/health", (ex: HttpExchange) => {
-    try respond(ex, 200, JObject("healthy" -> JBool(true))) finally ex.close()
-  })
+  server.createContext("/health", (ex: HttpExchange) => serve(ex)(r => respond(ex, 200, health(r))))
 
   def start(): ControlPlane = { server.start(); this }
   def stop(): Unit = server.stop(0)

@@ -2,14 +2,17 @@ package graft.streaming
 
 import java.util.UUID
 import java.util.concurrent.{Executors, ThreadFactory, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
+import scala.collection.concurrent.TrieMap
 import scala.collection.mutable
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener}
 
-import graft.model.{FirebaseInstance, FirebaseJob, Subscription, Validation}
+import graft.model.{FirebaseInstance, FirebaseJob, ResourceKind, Subscription, Validation}
+import graft.model.ResourceKind.{Firebases, Jobs, Subscriptions}
 import graft.sources.DocumentSink
 
 /** Control plane: resource registry + job lifecycle
@@ -17,10 +20,12 @@ import graft.sources.DocumentSink
   * job pause/resume/status, last-100 log ring — artifacts.py:132-157,
   * 195-256, 409-443; README.md:138-189).
   *
-  * Resources are validated on add (errors returned, not thrown — the
-  * validate_pretty contract) and jobs map 1:1 to StreamingQueries;
-  * status comes from the live query, logs from a bounded ring fed by
-  * a [[StreamingQueryListener]] plus lifecycle events. Tenancy: every
+  * Resources of every [[ResourceKind]] live in one definition store
+  * and are validated on add (errors returned, not thrown — the
+  * validate_pretty contract). Each started job has one [[Run]]: how to
+  * start it again, its live query, its failure count and its
+  * supervisor status; logs come from a bounded ring fed by a
+  * [[StreamingQueryListener]] plus lifecycle events. Tenancy: every
   * job's topics/checkpoints are prefixed with the tenant
   * (artifacts.py:226,293-295).
   *
@@ -33,10 +38,10 @@ import graft.sources.DocumentSink
   * (pause/remove) never triggers a restart.
   */
 final class JobRegistry(spark: SparkSession, tenant: String,
-    /** Sync modes accepted on addSubscription. Defaults to the modes
+    /** Sync modes a subscription may name. Defaults to the modes
       * this engine implements; pass [[Validation.SchemaSyncModes]] for
       * the reference's strict schema contract (schemas.py:284). */
-    allowedSyncModes: Set[String] = Validation.EngineSyncModes,
+    val allowedSyncModes: Set[String] = Validation.EngineSyncModes,
     /** First-retry delay after a query failure; doubles per
       * consecutive failure. Reference: sleep(self.sleep_delay * 10)
       * = 5 s, artifacts.py:281. */
@@ -58,34 +63,31 @@ final class JobRegistry(spark: SparkSession, tenant: String,
       * query from its persisted [[JobStartSpec]] + checkpoint after a
       * JVM restart. None = in-memory only (tests, throwaway runs). */
     store: Option[graft.sources.RtdbStore] = None) {
-  private val firebases = mutable.Map[String, FirebaseInstance]()
-  private val subscriptions = mutable.Map[String, Subscription]()
-  // TrieMap: read by the listener without the registry monitor
-  private val jobs = scala.collection.concurrent.TrieMap[String, FirebaseJob]()
-  private val queries = mutable.Map[String, StreamingQuery]()
+  // kind → id → value. TrieMaps: the listener reads jobs without the
+  // registry monitor (see Run).
+  private val defs: Map[ResourceKind[_], TrieMap[String, Any]] =
+    ResourceKind.all.map(k => k -> TrieMap.empty[String, Any]).toMap
   private val logRing = mutable.Map[String, mutable.ArrayDeque[String]]()
   private val MaxLogs = 100 // callback_logger('JOB', stack, 100), artifacts.py:225
 
-  // ---- supervisor state --------------------------------------------------
-  // CONCURRENT, not monitor-guarded: Spark delivers QueryStartedEvent
-  // to listeners SYNCHRONOUSLY on the thread inside
-  // DataStreamWriter.start — while startJob/doRestart hold this
-  // registry's monitor awaiting the startup latch. A listener that
-  // takes the monitor would deadlock the start; lock-free reads keep
-  // the listener safe from any delivery context.
-  private final class Runtime(val restart: () => StreamingQuery) {
-    val attempts = new java.util.concurrent.atomic.AtomicInteger(0) // consecutive failures; reset on progress
+  /** One started job's runtime record. Its fields are volatile, not
+    * monitor-guarded: Spark delivers QueryStartedEvent to listeners
+    * SYNCHRONOUSLY on the thread inside DataStreamWriter.start — while
+    * startJob/restart hold this registry's monitor awaiting the startup
+    * latch. A listener that takes the monitor would deadlock the start;
+    * lock-free reads keep the listener safe from any delivery context. */
+  private final class Run(
+      /** Starts the job's query from its checkpoint over the current
+        * definitions: the supervised restart and `resume` both call it. */
+      val launch: () => Either[Seq[String], StreamingQuery]) {
+    /** The latest attempt's query, live or dead; None once paused. */
+    @volatile var query: Option[StreamingQuery] = None
+    /** Consecutive failures; reset once a restarted query makes progress. */
+    val failures = new AtomicInteger(0)
+    /** RECONFIGURE while awaiting a restart, STOPPED after giving up. */
+    @volatile var status: Option[String] = None
   }
-  private val runtimes = scala.collection.concurrent.TrieMap[String, Runtime]()
-  /** Last successful start's arguments, kept across pause so `resume`
-    * (the reference's job action, README.md:151-160) can rebuild the
-    * query from its checkpoint without the caller re-supplying them. */
-  private val lastStart =
-    mutable.Map[String, (DataFrame, () => DocumentSink, String)]()
-  private val queryToJob = scala.collection.concurrent.TrieMap[UUID, String]()
-  /** Non-query-derived status (RECONFIGURE while awaiting restart,
-    * STOPPED after giving up). */
-  private val statusOverride = scala.collection.concurrent.TrieMap[String, String]()
+  private val runs = TrieMap[String, Run]()
 
   private lazy val scheduler = Executors.newSingleThreadScheduledExecutor(
     new ThreadFactory {
@@ -95,34 +97,37 @@ final class JobRegistry(spark: SparkSession, tenant: String,
       }
     })
 
-  /** Listener feeding the per-job log ring and driving crash
-    * recovery (reference: the job thread's own poll-loop logging +
-    * RECONFIGURE handling, artifacts.py:263-285,434-443). */
   /** Reference-style consumer-group name for a job's query
     * (group_name = f'{tenant}.firebaseconsumer.{id}',
     * artifacts.py:226) — also how started/progress events (which fire
-    * before/without the query-id registration) resolve their job. */
+    * before the run holds the query) resolve their job. */
   private def queryNameOf(jobId: String) = s"$tenant.firebaseconsumer.$jobId"
   private def jobOfName(name: String): Option[String] = {
     val prefix = s"$tenant.firebaseconsumer."
     Option(name).filter(_.startsWith(prefix)).map(_.substring(prefix.length))
-      .filter(jobs.contains)
+      .filter(defs(Jobs).contains)
   }
+  /** The job whose run holds the query run `runId` (a paused run holds
+    * none, so its stop is not a failure). */
+  private def jobOfRun(runId: UUID): Option[String] =
+    runs.collectFirst { case (j, r) if r.query.exists(_.runId == runId) => j }
 
+  /** Listener feeding the per-job log ring and driving crash recovery
+    * (reference: the job thread's own poll-loop logging + RECONFIGURE
+    * handling, artifacts.py:263-285,434-443). */
   private val listener: StreamingQueryListener = new StreamingQueryListener {
     override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
-      jobOfName(e.name).orElse(jobFor(e.id))
-        .foreach(j => log(j, s"query started (run ${e.runId})"))
+      jobOfName(e.name).foreach(j => log(j, s"query started (run ${e.runId})"))
     override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
-      jobOfName(e.progress.name).orElse(jobFor(e.progress.id)).foreach { j =>
+      jobOfName(e.progress.name).foreach { j =>
         // reset backoff only past batch 0: a crash-looping job that
         // always squeezes one batch in before failing must still see
         // the exponential delay engage
-        if (e.progress.batchId > 0) runtimes.get(j).foreach(_.attempts.set(0))
+        if (e.progress.batchId > 0) runs.get(j).foreach(_.failures.set(0))
         log(j, s"progress: batch ${e.progress.batchId}, ${e.progress.numInputRows} rows")
       }
-    override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = {
-      jobFor(e.id).foreach { j =>
+    override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+      jobOfRun(e.runId).foreach { j =>
         e.exception match {
           case Some(err) =>
             log(j, s"query failed: ${err.linesIterator.nextOption().getOrElse(err)}")
@@ -130,53 +135,44 @@ final class JobRegistry(spark: SparkSession, tenant: String,
           case None => log(j, "query terminated")
         }
       }
-      // the run is dead: drop its id mapping so supervised restarts
-      // don't accumulate one stale entry per replaced query
-      queryToJob.remove(e.id): Unit
-    }
   }
   spark.streams.addListener(listener)
 
-  private def jobFor(queryId: UUID): Option[String] = queryToJob.get(queryId)
-
-  /** Live query-id→job entries (test observability): must stay bounded
-    * at O(active queries) under a restart storm — onQueryTerminated
-    * drops the dead run's mapping, so supervised restarts cannot
-    * accumulate one stale entry per replaced query. */
-  private[graft] def trackedQueryCount: Int = queryToJob.size
+  /** Job → run id of the query its run holds (test observability): a
+    * run holds only its latest attempt, so supervised restarts replace
+    * the dead query instead of accumulating one per attempt. */
+  private[graft] def heldRuns: Map[String, Option[UUID]] =
+    runs.map { case (j, r) => j -> r.query.map(_.runId) }.toMap
 
   private def scheduleRestart(jobId: String): Unit = synchronized {
-    runtimes.get(jobId) match {
-      case Some(rt) if jobs.contains(jobId) =>
-        if (rt.attempts.get() >= maxRestarts) {
-          statusOverride(jobId) = "STOPPED"
-          log(jobId, s"giving up after ${rt.attempts.get()} failed restarts")
-        } else {
-          val attempt = rt.attempts.incrementAndGet()
-          // status RECONFIGURE + delayed retry (artifacts.py:278-281)
-          statusOverride(jobId) = "RECONFIGURE"
-          val delay = math.min(
-            restartBackoffMs * (1L << math.min(attempt - 1, 16)), maxBackoffMs)
-          log(jobId, s"status RECONFIGURE; restart #$attempt in $delay ms")
-          scheduler.schedule(new Runnable { def run(): Unit = doRestart(jobId) },
-            delay, TimeUnit.MILLISECONDS): Unit
-        }
-      case _ => // paused/removed meanwhile: no restart
+    // paused (no query) or removed (no run) meanwhile: no restart
+    runs.get(jobId).filter(_.query.nonEmpty).foreach { run =>
+      if (run.failures.get() >= maxRestarts) {
+        run.status = Some("STOPPED")
+        log(jobId, s"giving up after ${run.failures.get()} failed restarts")
+      } else {
+        val attempt = run.failures.incrementAndGet()
+        // status RECONFIGURE + delayed retry (artifacts.py:278-281)
+        run.status = Some("RECONFIGURE")
+        val delay = math.min(
+          restartBackoffMs * (1L << math.min(attempt - 1, 16)), maxBackoffMs)
+        log(jobId, s"status RECONFIGURE; restart #$attempt in $delay ms")
+        scheduler.schedule((() => restart(jobId, run)): Runnable,
+          delay, TimeUnit.MILLISECONDS): Unit
+      }
     }
   }
 
-  private def doRestart(jobId: String): Unit = synchronized {
-    val rt = runtimes.get(jobId)
-    if (rt.nonEmpty && jobs.contains(jobId) && !queries.get(jobId).exists(_.isActive)) {
-      try {
-        val q = rt.get.restart()
-        queries(jobId) = q
-        queryToJob(q.id) = jobId
-        statusOverride.remove(jobId): Unit
-        log(jobId, s"job $jobId restarted")
-      } catch {
-        case NonFatal(err) =>
-          log(jobId, s"restart failed: ${err.getMessage}")
+  private def restart(jobId: String, run: Run): Unit = synchronized {
+    // not paused, resumed or removed since the failure
+    if (runs.get(jobId).contains(run) && run.query.exists(!_.isActive)) {
+      (try run.launch() catch { case NonFatal(err) => Left(Seq(String.valueOf(err.getMessage))) }) match {
+        case Right(q) =>
+          run.query = Some(q)
+          run.status = None
+          log(jobId, s"job $jobId restarted")
+        case Left(es) =>
+          log(jobId, s"restart failed: ${es.mkString("; ")}")
           scheduleRestart(jobId)
       }
     }
@@ -212,54 +208,61 @@ final class JobRegistry(spark: SparkSession, tenant: String,
   private def unpersist(kind: String, id: String): Unit =
     store.foreach(_.set(rpath(kind, id), JNothing))
 
-  /** add → Right(id) or Left(validation errors). */
-  def addFirebase(fb: FirebaseInstance): Either[Seq[String], String] = synchronized {
-    val errs = Validation.validateFirebase(fb)
-    if (errs.nonEmpty) Left(errs)
-    else {
-      firebases(fb.id) = fb
-      persist("firebase", fb.id, Validation.firebaseDefinition(fb))
-      Right(fb.id)
+  // ---- resources ---------------------------------------------------------
+
+  /** add → Right(id) or Left(validation errors, then dangling references). */
+  def add[T](kind: ResourceKind[T], t: T): Either[Seq[String], String] =
+    put(kind, t, kind.validate(t, allowedSyncModes))
+
+  /** add of a reference-shaped REST body, validated as received. */
+  def addDefinition[T](kind: ResourceKind[T], defn: JValue): Either[Seq[String], String] =
+    put(kind, kind.fromJson(defn), kind.validateJson(defn, allowedSyncModes))
+
+  private def put[T](kind: ResourceKind[T], t: T, invalid: Seq[String]): Either[Seq[String], String] =
+    synchronized {
+      val errs = invalid ++ dangling(kind, t)
+      if (errs.nonEmpty) Left(errs)
+      else {
+        val id = kind.id(t)
+        defs(kind)(id) = t
+        persist(kind.name, id, kind.definition(t))
+        Right(id)
+      }
     }
+
+  /** `t`'s references to resources this registry does not hold. */
+  private def dangling[T](kind: ResourceKind[T], t: T): Seq[String] =
+    kind.references(t).collect { case (field, k, id) if !defs(k).contains(id) => s"$field: unknown '$id'" }
+
+  def get[T](kind: ResourceKind[T], id: String): Option[T] =
+    defs(kind).get(id).map(_.asInstanceOf[T])
+
+  def list(kind: ResourceKind[_]): Seq[String] = defs(kind).keys.toSeq.sorted
+
+  /** Removing a job stops it and drops its run and start spec. */
+  def remove(kind: ResourceKind[_], id: String): Unit = synchronized {
+    if (kind == Jobs) {
+      pauseJob(id)
+      runs.remove(id): Unit
+      unpersist("jobspec", id)
+      log(id, s"job $id removed")
+    }
+    defs(kind).remove(id): Unit
+    unpersist(kind.name, id)
   }
 
-  def addSubscription(sub: Subscription): Either[Seq[String], String] = synchronized {
-    val errs = Validation.validateSubscription(sub, allowedSyncModes)
-    if (errs.nonEmpty) Left(errs)
-    else {
-      subscriptions(sub.id) = sub
-      persist("subscription", sub.id, Validation.subscriptionDefinition(sub))
-      Right(sub.id)
-    }
-  }
-
-  def addJob(job: FirebaseJob): Either[Seq[String], String] = synchronized {
-    val errs = Validation.validateJob(job) ++
-      (if (!firebases.contains(job.firebase)) Seq(s"firebase: unknown '${job.firebase}'") else Nil) ++
-      job.subscriptions.filterNot(subscriptions.contains).map(s => s"subscriptions: unknown '$s'")
-    if (errs.nonEmpty) Left(errs)
-    else {
-      jobs(job.id) = job
-      persist("job", job.id, Validation.jobDefinition(job))
-      Right(job.id)
-    }
-  }
-
-  // resource accessors for the REST control plane (A28)
-  def getFirebase(id: String): Option[FirebaseInstance] = synchronized(firebases.get(id))
-  def getSubscription(id: String): Option[Subscription] = synchronized(subscriptions.get(id))
-  def getJob(id: String): Option[FirebaseJob] = jobs.get(id)
-  def listFirebases(): Seq[String] = synchronized(firebases.keys.toSeq.sorted)
-  def listSubscriptions(): Seq[String] = synchronized(subscriptions.keys.toSeq.sorted)
-  def listJobs(): Seq[String] = jobs.keys.toSeq.sorted
-  def removeFirebase(id: String): Unit = synchronized {
-    firebases.remove(id): Unit
-    unpersist("firebase", id)
-  }
-  def removeSubscription(id: String): Unit = synchronized {
-    subscriptions.remove(id): Unit
-    unpersist("subscription", id)
-  }
+  def addFirebase(fb: FirebaseInstance): Either[Seq[String], String] = add(Firebases, fb)
+  def addSubscription(sub: Subscription): Either[Seq[String], String] = add(Subscriptions, sub)
+  def addJob(job: FirebaseJob): Either[Seq[String], String] = add(Jobs, job)
+  def getFirebase(id: String): Option[FirebaseInstance] = get(Firebases, id)
+  def getSubscription(id: String): Option[Subscription] = get(Subscriptions, id)
+  def getJob(id: String): Option[FirebaseJob] = get(Jobs, id)
+  def listFirebases(): Seq[String] = list(Firebases)
+  def listSubscriptions(): Seq[String] = list(Subscriptions)
+  def listJobs(): Seq[String] = list(Jobs)
+  def removeFirebase(id: String): Unit = remove(Firebases, id)
+  def removeSubscription(id: String): Unit = remove(Subscriptions, id)
+  def removeJob(id: String): Unit = remove(Jobs, id)
 
   /** Topics this tenant could subscribe to: broker metadata filtered
     * to the tenant prefix, prefix stripped (list_topics,
@@ -269,35 +272,41 @@ final class JobRegistry(spark: SparkSession, tenant: String,
     try Right(graft.sources.TopicCatalog.tenantTopics(topicCatalog.allTopics(), tenant))
     catch { case NonFatal(e) => Left(s"$e @timeout: 5") }
 
-  def listSubscribedTopics(jobId: String): Seq[String] = synchronized {
-    jobs.get(jobId).toSeq.flatMap(_.subscriptions)
-      .flatMap(subscriptions.get).map(s => s"$tenant.${s.topicPattern}")
-  }
+  def listSubscribedTopics(jobId: String): Seq[String] =
+    getJob(jobId).toSeq.flatMap(_.subscriptions)
+      .flatMap(getSubscription).map(s => s"$tenant.${s.topicPattern}")
+
+  // ---- job lifecycle -----------------------------------------------------
 
   /** Start a job over the given stream (test/file/kafka source built
     * by the caller); all of the job's subscriptions run in one query,
     * first glob match winning (reference consumer semantics). The
     * supervisor restarts the query from its checkpoint on failure. */
   def startJob(jobId: String, stream: DataFrame, mkSink: () => DocumentSink,
-               workDir: String): Either[Seq[String], StreamingQuery] = synchronized {
-    jobs.get(jobId) match {
-      case None => Left(Seq(s"job: unknown '$jobId'"))
-      // a second start would silently orphan the running query's handle,
-      // leaving two queries contending on one checkpoint/hash-store dir
-      case Some(_) if queries.get(jobId).exists(_.isActive) =>
-        Left(Seq(s"job: '$jobId' already running"))
-      case Some(job) =>
-        val subsForJob = job.subscriptions.map(subscriptions)
-        val sj = new StreamingJob(spark, subsForJob, tenant, mkSink,
-          s"$workDir/hashstore-$tenant-$jobId", s"$workDir/checkpoint-$tenant-$jobId")
-        val q = sj.start(stream, Some(queryNameOf(jobId)))
-        queries(jobId) = q
-        queryToJob(q.id) = jobId
-        runtimes(jobId) = new Runtime(() => sj.start(stream, Some(queryNameOf(jobId))))
-        lastStart(jobId) = (stream, mkSink, workDir)
-        statusOverride.remove(jobId): Unit
-        log(jobId, s"job $jobId started")
-        Right(q)
+               workDir: String): Either[Seq[String], StreamingQuery] =
+    begin(jobId, () => getJob(jobId).toRight(Seq(s"job: unknown '$jobId'")).flatMap { job =>
+      dangling(Jobs, job) match {
+        case Nil =>
+          val sj = new StreamingJob(spark, job.subscriptions.flatMap(getSubscription), tenant,
+            mkSink, s"$workDir/hashstore-$tenant-$jobId", s"$workDir/checkpoint-$tenant-$jobId")
+          Right(sj.start(stream, Some(queryNameOf(jobId))))
+        case errs => Left(errs)
+      }
+    })
+
+  /** Launches a new run of the job unless it is running. */
+  private def begin(jobId: String, launch: () => Either[Seq[String], StreamingQuery])
+      : Either[Seq[String], StreamingQuery] = synchronized {
+    // a second start would silently orphan the running query's handle,
+    // leaving two queries contending on one checkpoint/hash-store dir
+    if (runs.get(jobId).exists(_.query.exists(_.isActive)))
+      Left(Seq(s"job: '$jobId' already running"))
+    else launch().map { q =>
+      val run = new Run(launch)
+      run.query = Some(q)
+      runs(jobId) = run
+      log(jobId, s"job $jobId started")
+      q
     }
   }
 
@@ -312,12 +321,12 @@ final class JobRegistry(spark: SparkSession, tenant: String,
       }
     }
 
-  /** Resume a paused job from its checkpoint using the in-memory
-    * start arguments (the SDK's `resume` action) — or, after a JVM
-    * restart, the persisted [[JobStartSpec]]. */
+  /** Resume a paused job from its checkpoint through its run (the
+    * SDK's `resume` action) — or, after a JVM restart, from the
+    * persisted [[JobStartSpec]]. */
   def resumeJob(jobId: String): Either[Seq[String], StreamingQuery] = synchronized {
-    lastStart.get(jobId) match {
-      case Some((stream, mkSink, workDir)) => startJob(jobId, stream, mkSink, workDir)
+    runs.get(jobId) match {
+      case Some(run) => begin(jobId, run.launch)
       case None =>
         store.map(_.get(rpath("jobspec", jobId))).filter(_ != JNothing) match {
           case Some(specJson) => startJob(jobId, JobStartSpec.fromJson(specJson))
@@ -330,35 +339,28 @@ final class JobRegistry(spark: SparkSession, tenant: String,
     * RECONFIGURE = failed and awaiting supervised restart
     * (JobStatus.RECONFIGURE, artifacts.py:280). */
   def getStatus(jobId: String): String = synchronized {
-    statusOverride.get(jobId) match {
-      case Some(s) => s
-      case None => queries.get(jobId) match {
-        case Some(q) if q.isActive => "NORMAL"
-        case Some(_) => "STOPPED"
-        case None if jobs.contains(jobId) => "PAUSED"
-        case None => "UNKNOWN"
-      }
-    }
+    val run = runs.get(jobId)
+    run.flatMap(_.status).getOrElse(run.flatMap(_.query) match {
+      case Some(q) if q.isActive => "NORMAL"
+      case Some(_) => "STOPPED"
+      case None if getJob(jobId).nonEmpty => "PAUSED"
+      case None => "UNKNOWN"
+    })
+  }
+
+  /** Stops the run's query without a supervised restart; the run stays
+    * for `resume`. */
+  private def halt(run: Run): Option[StreamingQuery] = {
+    val q = run.query
+    run.query = None // first: its termination must not look like a failure
+    run.status = None
+    q.foreach(_.stop())
+    q
   }
 
   /** pause = stop the query, keep the definition (resume restarts). */
   def pauseJob(jobId: String): Unit = synchronized {
-    runtimes.remove(jobId): Unit // intentional stop: no supervised restart
-    statusOverride.remove(jobId): Unit
-    queries.remove(jobId).foreach { q =>
-      queryToJob.remove(q.id): Unit
-      q.stop()
-      log(jobId, s"job $jobId paused")
-    }
-  }
-
-  def removeJob(jobId: String): Unit = synchronized {
-    pauseJob(jobId)
-    jobs.remove(jobId): Unit
-    lastStart.remove(jobId): Unit
-    unpersist("job", jobId)
-    unpersist("jobspec", jobId)
-    log(jobId, s"job $jobId removed")
+    runs.get(jobId).flatMap(halt).foreach(_ => log(jobId, s"job $jobId paused"))
   }
 
   /** Detach this registry from the shared SparkSession: stop active
@@ -369,26 +371,19 @@ final class JobRegistry(spark: SparkSession, tenant: String,
     * clean half of the kill-and-rebuild path ([[resumeJob]] continues
     * from the persisted spec + checkpoint). */
   def shutdown(): Unit = synchronized {
-    runtimes.clear()
-    statusOverride.clear()
-    queries.values.foreach(q => if (q.isActive) q.stop())
-    queries.clear()
-    queryToJob.clear()
+    runs.values.foreach(halt)
     scheduler.shutdownNow(): Unit
     spark.streams.removeListener(listener)
   }
 
   // ---- rehydration (constructor tail: all maps above are initialized) ----
   store.foreach { st =>
-    def each(kind: String)(f: JValue => Unit): Unit =
-      st.get(s"registry/$tenant/$kind") match {
-        case JObject(entries) => entries.foreach { case (_, defn) => f(defn) }
-        case _ =>
-      }
     // definitions were validated when first added; trust the mirror so
     // a schema-contract tweak can never strand persisted state
-    each("firebase") { d => val fb = Validation.firebaseFromJson(d); firebases(fb.id) = fb }
-    each("subscription") { d => val s = Validation.subscriptionFromJson(d); subscriptions(s.id) = s }
-    each("job") { d => val j = Validation.jobFromJson(d); jobs(j.id) = j }
+    def load[T](kind: ResourceKind[T]): Unit = st.get(s"registry/$tenant/${kind.name}") match {
+      case JObject(entries) => entries.foreach { case (_, d) => val t = kind.fromJson(d); defs(kind)(kind.id(t)) = t }
+      case _ =>
+    }
+    ResourceKind.all.foreach(load(_))
   }
 }

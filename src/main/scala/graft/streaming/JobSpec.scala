@@ -5,6 +5,7 @@ import org.apache.spark.sql.types.StructType
 
 import org.json4s._
 
+import graft.model.JsonCodec
 import graft.sources.{DocumentSink, JsonFileSink}
 
 /** Rebuildable job wiring. A running job holds a live DataFrame and a
@@ -82,9 +83,4 @@ object JobStartSpec {
     source = StreamSourceSpec.fromJson(j \ "source"),
     sink = SinkSpec.fromJson(j \ "sink"),
     workDir = JsonCodec.str(j, "work_dir"))
-}
-
-private[streaming] object JsonCodec {
-  def str(j: JValue, key: String, dflt: String = ""): String =
-    j \ key match { case JString(s) => s; case _ => dflt }
 }

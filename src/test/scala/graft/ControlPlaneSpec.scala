@@ -5,6 +5,8 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.model.{FirebaseInstance, FirebaseJob, Subscription, Validation}
+import graft.sources.JsonFileSink
 import graft.streaming.{ControlPlane, JobRegistry}
 
 /** REST control plane over the registry (reference A28: the SDK API
@@ -18,6 +20,12 @@ class ControlPlaneSpec extends AnyFunSuite with SparkTestBase {
   private lazy val cp = new ControlPlane(reg).start()
   private lazy val client = HttpClient.newHttpClient()
 
+  private def call(server: ControlPlane, path: String, body: Option[String] = None): (Int, String) = {
+    val b = HttpRequest.newBuilder(URI.create(s"${server.address}$path"))
+    val r = client.send(body.map(s => b.POST(HttpRequest.BodyPublishers.ofString(s))).getOrElse(b.GET()).build(),
+      HttpResponse.BodyHandlers.ofString())
+    (r.statusCode(), r.body())
+  }
   private def get(path: String): (Int, String) = {
     val r = client.send(HttpRequest.newBuilder(URI.create(s"${cp.address}$path")).GET().build(),
       HttpResponse.BodyHandlers.ofString())
@@ -49,7 +57,7 @@ class ControlPlaneSpec extends AnyFunSuite with SparkTestBase {
       .stripMargin.replace("\n", "")
 
   test("health endpoint answers") {
-    assert(get("/health") == (200, """{"healthy":true}"""))
+    assert(get("/health") == (200, """{"healthy":true,"jobs":{}}"""))
   }
 
   test("add/get/list round-trip for the three resource types") {
@@ -136,6 +144,63 @@ class ControlPlaneSpec extends AnyFunSuite with SparkTestBase {
       assert(call("/firebase/list", None)._2 == """["default"]""")
       assert(call("/firebase/list", Some("nobody"))._1 == 404)
     } finally { mt.stop(); regA.shutdown(); regB.shutdown() }
+  }
+
+  test("a strict registry's validate_pretty and add agree on sync_mode") {
+    val strict = new JobRegistry(spark, "strict", Validation.SchemaSyncModes)
+    val scp = new ControlPlane(strict).start()
+    try {
+      val syncSub = subExample.replace("\"sync_mode\":\"forward\"", "\"sync_mode\":\"sync\"")
+      val (vc, vb) = call(scp, "/subscription/validate_pretty", Some(syncSub))
+      assert(vc == 200 && vb.contains("\"valid\":false") && vb.contains("sync_mode"), vb)
+      val (ac, ab) = call(scp, "/subscription/add", Some(syncSub))
+      assert(ac == 400 && ab == vb, ab)
+    } finally { scp.stop(); strict.shutdown() }
+  }
+
+  test("resuming a job whose subscription was deleted answers 400, not 500") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-cp").toString
+    val r = new JobRegistry(spark, "tnt")
+    val rcp = new ControlPlane(r).start()
+    try {
+      assert(r.addFirebase(FirebaseInstance("fb", "fb", "http://emulator")).isRight)
+      assert(r.addSubscription(Subscription("sx", "sx", "t?")).isRight)
+      assert(r.addJob(FirebaseJob("jx", "jx", "fb", Seq("sx"))).isRight)
+      val batch = Seq(("tnt.t1", 1L, "a")).toDF("kafka_topic", "id", "name")
+      batch.write.parquet(s"$dir/in")
+      val started = r.startJob("jx", spark.readStream.schema(batch.schema).parquet(s"$dir/in"),
+        () => new JsonFileSink(s"$dir/sink"), s"$dir/work")
+      assert(started.isRight, started)
+      started.toOption.get.processAllAvailable()
+      assert(call(rcp, "/job/pause?id=jx")._1 == 200)
+      assert(call(rcp, "/subscription/delete?id=sx")._1 == 200)
+      assert(call(rcp, "/job/resume?id=jx") ==
+        (400, """{"valid":false,"validation_errors":["subscriptions: unknown 'sx'"]}"""))
+      assert(r.resumeJob("jx") == Left(Seq("subscriptions: unknown 'sx'")))
+      assert(r.getStatus("jx") == "PAUSED")
+    } finally { rcp.stop(); r.shutdown() }
+  }
+
+  test("describe lists exactly the actions each kind serves") {
+    val kinds = Seq("firebase", "subscription", "job")
+    val listed = kinds.map { kind =>
+      val (c, b) = get(s"/$kind/describe")
+      assert(c == 200, b)
+      kind -> "\"method\":\"([a-z_]+)\"".r.findAllMatchIn(b).map(_.group(1)).toSeq
+    }.toMap
+    kinds.foreach { kind =>
+      // every listed action is served (an empty body and no id leave
+      // the registry unchanged)...
+      listed(kind).foreach { a =>
+        val (_, b) = post(s"/$kind/$a", "{}")
+        assert(!b.contains("unknown action"), s"/$kind/$a: $b")
+      }
+      // ...and an action no kind lists, or only another kind lists, is not
+      (listed.values.flatten.toSet -- listed(kind) + "frobnicate").foreach { a =>
+        assert(get(s"/$kind/$a") == (404, s"""{"error":"unknown action $a"}"""), s"/$kind/$a")
+      }
+    }
   }
 
   test("delete removes resources; server stops") {

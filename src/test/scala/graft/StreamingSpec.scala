@@ -628,11 +628,23 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
         s"delays not monotone-doubling-capped: $delays")
       assert(logs.exists(_.contains("giving up after")), logs.mkString(" | "))
 
-      // a restart STORM must not leak one queryToJob entry per dead
-      // run: every terminated run's mapping is dropped, so the map is
-      // bounded by the active-query count (0 — the job is STOPPED)
-      assert(eventually(10000)(reg.trackedQueryCount == 0),
-        s"queryToJob leaked ${reg.trackedQueryCount} entries after the storm")
+      // a restart STORM must not accumulate one query per dead attempt:
+      // the registry holds one run for the job, and that run holds only
+      // the query of the latest started attempt
+      val startedRuns = logs.flatMap(l => """query started \(run ([-0-9a-f]+)\)""".r
+        .findFirstMatchIn(l).map(m => java.util.UUID.fromString(m.group(1))))
+      assert(startedRuns.distinct.size > 1, logs.mkString(" | "))
+      assert(reg.heldRuns == Map("js2" -> Some(startedRuns.last)),
+        s"held: ${reg.heldRuns}; started: $startedRuns")
+
+      // /health reports the job that gave up
+      val cp = new graft.streaming.ControlPlane(reg).start()
+      try {
+        val health = java.net.http.HttpClient.newHttpClient().send(
+          java.net.http.HttpRequest.newBuilder(java.net.URI.create(s"${cp.address}/health")).build(),
+          java.net.http.HttpResponse.BodyHandlers.ofString())
+        assert(health.body() == """{"healthy":false,"jobs":{"js2":"STOPPED"}}""", health.body())
+      } finally cp.stop()
     } finally { try reg.pauseJob("js2") catch { case _: Exception => } }
   }
 }
