@@ -4,8 +4,6 @@ import java.nio.file.{Files, Path, Paths}
 import java.util
 import java.util.concurrent.atomic.AtomicLong
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -18,10 +16,12 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 /** DataSource V2 connector over the Firestore-style document store
-  * that `JsonFileSink` writes ({root}/{collection…}/{doc_id}.json) —
-  * the read path the reference exposes as `read_cfs`
-  * (firebase/app/helpers.py:106-110), as a REAL Spark table instead
-  * of a driver-side helper:
+  * that `JsonFileSink` writes — the read path the reference exposes as
+  * `read_cfs` (firebase/app/helpers.py:106-110: one document with a doc
+  * id, the whole collection without), as a REAL Spark table instead of
+  * a single-process helper. It reads through the sink's own layout
+  * ([[JsonFileSink$]]), so a row's collection and doc id are the
+  * strings that were written:
   *
   *   spark.read.format("graft-cfs").option("root", dir).load()
   *     → (collection STRING, doc_id STRING, json STRING)
@@ -90,8 +90,8 @@ final class CfsTable(root: String) extends Table with SupportsRead with Supports
 
 /** Executor-side document upserts through the same `JsonFileSink`
   * the streaming pipeline uses: every task writes its partition in
-  * maxSubmit-sized batches, idempotent by (collection, doc_id) —
-  * which is exactly why commit/abort are no-ops: a replayed task
+  * maxSubmit-sized batches ([[DocumentSink.Committer]]), idempotent by
+  * (collection, doc_id) — which is exactly why commit/abort are no-ops: a replayed task
   * re-upserts the same keys (effectively-once, like the streaming
   * path's checkpoint + idempotent-sink contract). */
 final class CfsBatchWrite(root: String, schema: StructType) extends BatchWrite {
@@ -130,16 +130,11 @@ final class CfsWriterFactory(root: String, ci: Int, di: Int, ji: Int)
     extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     new DataWriter[InternalRow] {
-      private val sink = new JsonFileSink(root)
-      private val buf = scala.collection.mutable.ArrayBuffer.empty[DocumentSink.Doc]
-      private def flush(): Unit =
-        if (buf.nonEmpty) { sink.commitBatch(buf.toSeq); buf.clear() }
-      override def write(row: InternalRow): Unit = {
-        buf += DocumentSink.Doc(row.getString(ci), row.getString(di), row.getString(ji))
-        if (buf.size >= sink.maxSubmit) flush()
-      }
-      override def commit(): WriterCommitMessage = { flush(); new WriterCommitMessage {} }
-      override def abort(): Unit = buf.clear()
+      private val out = new DocumentSink.Committer(() => new JsonFileSink(root))
+      override def write(row: InternalRow): Unit =
+        out.write(DocumentSink.Doc(row.getString(ci), row.getString(di), row.getString(ji)))
+      override def commit(): WriterCommitMessage = { out.flush(); new WriterCommitMessage {} }
+      override def abort(): Unit = ()
       override def close(): Unit = ()
     }
 }
@@ -212,26 +207,11 @@ final class CfsScan(root: String, collectionEq: Option[String],
     * pushed collection equality resolves that one dir directly —
     * sibling collections are never even listed. */
   override def planInputPartitions(): Array[InputPartition] = {
-    val rootPath = Paths.get(root).toAbsolutePath.normalize
-    def isDoc(p: Path) = p.getFileName.toString.endsWith(".json")
-    collectionEq match {
-      case Some(c) =>
-        val dir = c.split("/").filter(_.nonEmpty)
-          .foldLeft(rootPath)(_ resolve _).normalize
-        if (dir.startsWith(rootPath) && Files.isDirectory(dir))
-          Array(CfsInputPartition(dir.toString, c))
-        else Array.empty
-      case None =>
-        val walk = Files.walk(rootPath)
-        try {
-          val dirs = walk.iterator().asScala
-            .filter(isDoc).map(_.getParent).toSet
-          dirs.toArray.sortBy(_.toString).map { d =>
-            CfsInputPartition(d.toString,
-              rootPath.relativize(d).iterator().asScala.mkString("/"))
-          }
-        } finally walk.close()
+    val dirs = collectionEq match {
+      case Some(c) => JsonFileSink.collection(root, c).map(c -> _).toSeq
+      case None => JsonFileSink.collections(root)
     }
+    dirs.map { case (c, d) => CfsInputPartition(d.toString, c): InputPartition }.toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -249,26 +229,16 @@ final class CfsReaderFactory(docIdEq: Option[String], columns: Array[String])
 final class CfsPartitionReader(p: CfsInputPartition, docIdEq: Option[String],
     columns: Array[String]) extends PartitionReader[InternalRow] {
   private val needJson = columns.contains("json")
-  private val files: Iterator[Path] = docIdEq match {
-    case Some(id) =>
-      val f = Paths.get(p.dir).resolve(s"$id.json")
-      if (Files.exists(f)) Iterator(f) else Iterator.empty
-    case None =>
-      val listed = Files.list(Paths.get(p.dir))
-      val sorted =
-        try listed.iterator().asScala
-          .filter(_.getFileName.toString.endsWith(".json"))
-          .toSeq.sortBy(_.getFileName.toString)
-        finally listed.close()
-      sorted.iterator
+  private val docs: Iterator[(String, Path)] = docIdEq match {
+    case Some(id) => JsonFileSink.doc(Paths.get(p.dir), id).map(id -> _).iterator
+    case None => JsonFileSink.docs(Paths.get(p.dir)).iterator
   }
   private var current: InternalRow = _
 
   override def next(): Boolean =
-    if (!files.hasNext) false
+    if (!docs.hasNext) false
     else {
-      val f = files.next()
-      val docId = f.getFileName.toString.stripSuffix(".json")
+      val (docId, f) = docs.next()
       val values = columns.map {
         case "collection" => UTF8String.fromString(p.collection)
         case "doc_id"     => UTF8String.fromString(docId)

@@ -81,27 +81,3 @@ final class JsonTreeRtdb(file: String) extends RtdbStore {
       StandardCopyOption.ATOMIC_MOVE): Unit
   }
 }
-
-/** Firebase-helpers analog over an [[RtdbStore]] (helpers.py:49-67):
-  * the per-entity hash get/set and the intended needs-update rule.
-  * The reference's `remote_msg_needs_update` returns None (falsy)
-  * instead of True when hashes DIFFER (helpers.py:61-67) — a latent
-  * bug; we implement the intended "changed ⇒ update" semantics, the
-  * same documented deviation the batch SYNC gate makes. */
-object RtdbHelpers {
-  def getRemoteHash(store: RtdbStore, hashPath: String, id: String): Option[String] =
-    store.get(s"$hashPath/$id") match {
-      case JString(s) => Some(s)
-      case _ => None
-    }
-
-  def setRemoteHash(store: RtdbStore, hashPath: String, id: String, hash: String): Unit =
-    store.set(s"$hashPath/$id", JString(hash))
-
-  def remoteMsgNeedsUpdate(store: RtdbStore, hashPath: String, id: String,
-      newHash: String): Boolean =
-    getRemoteHash(store, hashPath, id) match {
-      case None => true
-      case Some(old) => old != newHash
-    }
-}

@@ -1,7 +1,5 @@
 package graft.tools
 
-import java.nio.file.{Files, Paths}
-
 import scala.util.Random
 
 import org.json4s._
@@ -423,8 +421,6 @@ object ConfigFuzz {
     require(d1 + d2 == 0, s"rejection-parity divergences: schema=$d1 secondary=$d2")
 
     // phase 3: compile + dump valid draws for the DuckDB referee
-    val spark = graft.Tuning.localSession()
-    new java.io.File(outDir).mkdirs()
     val vs = (1 to nValid).map(i => drawValidVariant(rnd, i))
     // every valid draw must PASS validation before it runs — ties the
     // two sides of the contract together
@@ -441,30 +437,10 @@ object ConfigFuzz {
         require(errs.isEmpty, s"valid draw ${v.id}/${ss.id} failed validation: $errs")
       }
     }
-    var failed = 0
-    vs.foreach { v =>
-      try ConfigPerturb.run(spark, sfDir, v).coalesce(1).write
-        .mode("overwrite").parquet(s"$outDir/${v.id}")
-      catch { case e: Throwable =>
-        failed += 1
-        System.err.println(s"[cfgfuzz] ${v.id} failed: ${e.getMessage}")
-      }
-      spark.catalog.clearCache()
-    }
-    def q(str: String): String = "\"" + str.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = vs.map(v => s"${q(v.id)}: ${q(ConfigPerturb.oracleFor(v))}")
-      .mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    println(s"""{"phase":"valid-referee-dump","draws":$nValid,"compile_failures":$failed}""")
-    require(failed == 0, s"$failed valid draws failed to compile/run")
-    spark.stop()
+    val spark = graft.Tuning.localSession()
+    try graft.Verify.dump(spark, outDir,
+      vs.map(v => (v.id, () => ConfigPerturb.run(spark, sfDir, v), ConfigPerturb.oracleFor(v))))
+    finally spark.stop()
+    println(s"""{"phase":"valid-referee-dump","draws":$nValid}""")
   }
 }

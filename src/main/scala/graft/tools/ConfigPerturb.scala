@@ -1,7 +1,5 @@
 package graft.tools
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -390,30 +388,9 @@ object ConfigPerturb {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     val spark = graft.Tuning.localSession()
-    new java.io.File(outDir).mkdirs()
     val vs = variants
-    require(vs.map(_.id).distinct.size == vs.size, "duplicate variant ids")
-    vs.foreach { v =>
-      try run(spark, sfDir, v).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/${v.id}")
-      catch { case e: Throwable =>
-        System.err.println(s"[cfgperturb] ${v.id} failed: ${e.getMessage}")
-      }
-      spark.catalog.clearCache()
-    }
-    def q(str: String): String = "\"" + str.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = vs.map(v => s"${q(v.id)}: ${q(oracleFor(v))}")
-      .mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    try graft.Verify.dump(spark, outDir, vs.map(v => (v.id, () => run(spark, sfDir, v), oracleFor(v))))
+    finally spark.stop()
     System.err.println(s"[cfgperturb] ${vs.size} config variants dumped")
-    spark.stop()
   }
 }

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import java.nio.file.{Files, Paths}
 
 /** Metamorphic PROGRAM-variant harness (judge brief r16 → r17 #1).
   *
@@ -301,32 +300,11 @@ object Perturb {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     val spark = graft.Tuning.localSession()
-    new java.io.File(outDir).mkdirs()
     val vs = variants
-    require(vs.map(_.id).distinct.size == vs.size, "duplicate variant ids")
-    vs.foreach { v =>
-      try v.fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/${v.id}")
-      catch { case e: Throwable =>
-        System.err.println(s"[perturb] ${v.id} failed: ${e.getMessage}")
-      }
-      spark.catalog.clearCache()
-    }
-    def q(str: String): String = "\"" + str.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = vs.map(v => s"${q(v.id)}: ${q(v.oracle)}")
-      .mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    try graft.Verify.dump(spark, outDir, vs.map(v => (v.id, () => v.fn(spark, sfDir), v.oracle)))
+    finally spark.stop()
     System.err.println(s"[perturb] ${vs.size} program variants dumped " +
       s"(${vs.count(_.kind == "pres")} semantics-preserving, " +
       s"${vs.count(_.kind == "shift")} semantics-shifting)")
-    spark.stop()
   }
 }

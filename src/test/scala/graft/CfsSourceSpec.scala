@@ -12,7 +12,7 @@ class CfsSourceSpec extends AnyFunSuite with SparkTestBase {
   private def freshStore(): String = {
     val root = java.nio.file.Files.createTempDirectory("graft-cfs-spec").toString
     val sink = new JsonFileSink(root)
-    sink.upsertAll(Iterator(
+    sink.commitBatch(Seq(
       DocumentSink.Doc("_aether/entities/purchase", "p1", """{"v":1}"""),
       DocumentSink.Doc("_aether/entities/purchase", "p2", """{"v":2}"""),
       DocumentSink.Doc("_aether/entities/click", "c1", """{"v":3}"""),
@@ -32,6 +32,20 @@ class CfsSourceSpec extends AnyFunSuite with SparkTestBase {
       ("_aether/entities/purchase", "p2", """{"v":2}"""),
       ("_aether/entities/click", "c1", """{"v":3}"""),
       ("_aether/clicks/click", "c2", """{"v":4}""")))
+  }
+
+  test("collection and doc ids read back as written; a doc id cannot reach another file") {
+    val root = java.nio.file.Files.createTempDirectory("graft-cfs-ids").toString
+    new JsonFileSink(root).commitBatch(Seq(
+      DocumentSink.Doc("_aether/t t", "a b/c", """{"v":1}"""),
+      DocumentSink.Doc("_aether/t t", "x:y", """{"v":2}""")))
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getString(0), r.getString(1))).toSet
+    val all = Set(("_aether/t t", "a b/c"), ("_aether/t t", "x:y"))
+    assert(ids(read(root)) === all)
+    assert(ids(read(root).filter(col("doc_id") === "a b/c")) === Set(("_aether/t t", "a b/c")))
+    assert(ids(read(root).filter(col("collection") === "_aether/t t")) === all)
+    assert(ids(read(freshStore()).filter(col("doc_id") === "../click/c1")) === Set.empty)
   }
 
   test("collection equality prunes to one partition (one directory)") {

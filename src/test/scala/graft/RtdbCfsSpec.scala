@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import org.json4s._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,10 +12,26 @@ import graft.sources._
 /** Generic RTDB/CFS read-write surface (reference A15/A16,
   * helpers.py:69-114), mirroring firebase/tests/test_unit.py:53-85:
   * RTDB scalar/list/map round-trips, CFS doc set/get/delete, and the
-  * collection/doc path alternation. */
-class RtdbCfsSpec extends AnyFunSuite {
+  * collection/doc path alternation. CFS reads go through `graft-cfs`,
+  * the one `read_cfs`. */
+class RtdbCfsSpec extends AnyFunSuite with SparkTestBase {
+  import spark.implicits._
 
   private def tmp(): String = Files.createTempDirectory("graft-rtdb").toString
+
+  private def collection(root: String, path: String): DataFrame =
+    spark.read.format("graft-cfs").option("root", root).load()
+      .filter(col("collection") === path)
+
+  /** read_cfs(path, doc_id): the document's JSON, None when absent. */
+  private def readDoc(root: String, path: String, docId: String): Option[String] =
+    collection(root, path).filter(col("doc_id") === docId).select("json").as[String]
+      .collect().headOption
+
+  /** read_cfs(path): every (doc id, JSON) in the collection. */
+  private def readCollection(root: String, path: String): Seq[(String, String)] =
+    collection(root, path).select("doc_id", "json").as[(String, String)]
+      .collect().toSeq.sortBy(_._1)
 
   test("rtdb: get of unset path is None; scalar/list/map values round-trip (test_unit.py:53-60)") {
     val db = new JsonTreeRtdb(s"${tmp()}/tree.json")
@@ -47,28 +65,13 @@ class RtdbCfsSpec extends AnyFunSuite {
     assert(new JsonTreeRtdb(f).get("x/y") == JInt(42))
   }
 
-  test("rtdb helpers: hash get/set and intended needs-update semantics (helpers.py:49-67)") {
-    val db = new JsonTreeRtdb(s"${tmp()}/tree.json")
-    val hp = "_aether/hashes"
-    assert(RtdbHelpers.getRemoteHash(db, hp, "e1").isEmpty)
-    // no stored hash: needs update (helpers.py:63-64)
-    assert(RtdbHelpers.remoteMsgNeedsUpdate(db, hp, "e1", "aaaa"))
-    RtdbHelpers.setRemoteHash(db, hp, "e1", "aaaa")
-    assert(RtdbHelpers.getRemoteHash(db, hp, "e1").contains("aaaa"))
-    // same hash: no update (helpers.py:65-66)
-    assert(!RtdbHelpers.remoteMsgNeedsUpdate(db, hp, "e1", "aaaa"))
-    // changed hash: update (intended semantics; the reference's falsy
-    // None here is the documented latent bug)
-    assert(RtdbHelpers.remoteMsgNeedsUpdate(db, hp, "e1", "bbbb"))
-  }
-
   test("cfs: doc set/get/delete-equivalent round-trip (test_unit.py:63-70)") {
     val root = tmp()
     val sink = new JsonFileSink(root)
     val doc = """{"key":"t_val"}"""
     sink.commitBatch(Seq(DocumentSink.Doc("test", "adoc", doc)))
-    assert(sink.readDoc("test", "adoc").contains(doc))
-    assert(sink.readDoc("test", "missing").isEmpty)
+    assert(readDoc(root, "test", "adoc").contains(doc))
+    assert(readDoc(root, "test", "missing").isEmpty)
   }
 
   test("cfs: collection/doc alternation write + read back (test_unit.py:73-85)") {
@@ -78,11 +81,11 @@ class RtdbCfsSpec extends AnyFunSuite {
     val path = "_aether/entity/type-of-entity"
     val msg = """{"hello":"cfs!"}"""
     sink.commitBatch(Seq(DocumentSink.Doc(path, "some-id", msg)))
-    assert(sink.readDoc(path, "some-id").contains(msg))
+    assert(readDoc(root, path, "some-id").contains(msg))
     // whole-collection read (read_cfs without doc_id, helpers.py:110)
     sink.commitBatch(Seq(DocumentSink.Doc(path, "other-id", """{"n":2}""")))
-    assert(sink.readCollection(path) ==
+    assert(readCollection(root, path) ==
       Seq("other-id" -> """{"n":2}""", "some-id" -> msg))
-    assert(sink.readCollection("nope/x/y").isEmpty)
+    assert(readCollection(root, "nope/x/y").isEmpty)
   }
 }

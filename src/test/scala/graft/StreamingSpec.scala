@@ -75,10 +75,8 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import scala.jdk.CollectionConverters._
 
-    val input = tmp(); val sinkRoot = tmp(); val work = tmp()
+    val sinkRoot = tmp()
     val sc = spark.sparkContext
-    val sub = Subscription("s1", "s1", "t?", FbOptions(
-      syncMode = "sync", targetPath = "_aether/entities/{topic}"))
     // each job start as (streaming.sql.batchId, job group)
     val starts = new LinkedBlockingQueue[(String, String)]()
     val listener = new SparkListener {
@@ -103,33 +101,54 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     }
 
     val persisted = sc.getPersistentRDDs.keySet
-    val job = new StreamingJob(spark, Seq(sub), "tnt", () => new JsonFileSink(sinkRoot),
-      s"$work/hashes", s"$work/ckpt")
     val rows = (1L to 60L).map(i => ("tnt.t1", i, s"name-$i"))
+    // new keys, then a mix of changed and unchanged ones, with a second
+    // version of ids 1-7 in the same micro-batch
+    val batches = Seq(rows,
+      rows.map { case (t, i, n) => (t, i, if (i % 7 == 0) s"$n-v2" else n) } ++ rows.take(7))
     sc.addSparkListener(listener)
-    val q = job.start(spark.readStream.schema("kafka_topic STRING, id LONG, name STRING")
-      .parquet(input))
-    try {
-      // new keys, then a mix of changed and unchanged ones
-      for (batch <- Seq(rows, rows.map { case (t, i, n) => (t, i, if (i % 7 == 0) s"$n-v2" else n) })) {
-        batch.toDF("kafka_topic", "id", "name").coalesce(1).write.mode("append").parquet(input)
+    try for (mode <- Seq("sync", "forward")) {
+      val input = tmp(); val work = tmp()
+      val sub = Subscription("s1", "s1", "t?", FbOptions(
+        syncMode = mode, targetPath = "_aether/entities/{topic}"))
+      val job = new StreamingJob(spark, Seq(sub), "tnt",
+        if (mode == "sync") () => new JsonFileSink(sinkRoot) else () => new RecordingSink("stream-fwd"),
+        s"$work/hashes", s"$work/ckpt")
+      val q = job.start(spark.readStream.schema("kafka_topic STRING, id LONG, name STRING")
+        .parquet(input))
+      try for (batch <- batches) {
+        val df = batch.toDF("kafka_topic", "id", "name")
+        df.coalesce(1).write.mode("append").parquet(input)
         q.processAllAvailable()
         val jobs = jobsPerBatch()
-        assert(jobs.nonEmpty && jobs.values.forall(_ <= 3), s"jobs per micro-batch: $jobs")
+        assert(jobs.nonEmpty && jobs.values.forall(_ <= 3), s"$mode jobs per micro-batch: $jobs")
         assert((sc.getPersistentRDDs.keySet -- persisted).isEmpty,
-          s"a micro-batch left ${sc.getPersistentRDDs.keySet -- persisted} persisted")
+          s"a $mode micro-batch left ${sc.getPersistentRDDs.keySet -- persisted} persisted")
         val store = java.nio.file.Paths.get(work, "hashes")
-        val dirs = Files.list(store).iterator().asScala.filter(Files.isDirectory(_)).toSeq
-        assert(dirs.nonEmpty)
-        dirs.foreach { d =>
-          val data = Files.list(d).iterator().asScala
-            .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
-          assert(data.size == 1, s"$d holds ${data.mkString(", ")}")
+        if (mode == "sync") {
+          val dirs = Files.list(store).iterator().asScala.filter(Files.isDirectory(_)).toSeq
+          assert(dirs.nonEmpty)
+          dirs.foreach { d =>
+            val data = Files.list(d).iterator().asScala
+              .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
+            assert(data.size == 1, s"$d holds ${data.mkString(", ")}")
+          }
+        } else {
+          val expected = graft.streaming.Pipeline.dedupeBatch(
+              graft.streaming.Pipeline.compileMulti(Seq(sub), "tnt", df))
+            .filter($"sub_id" === sub.id).select("target_path", "doc_id", "doc_json")
+            .as[(String, String, String)].collect().toSeq.sorted
+          assert(RecordingSink.take("stream-fwd") == expected)
+          assert(!Files.exists(store.resolve("_manifest")))
         }
       }
-      assert(job.hashStore.load().count() == 60)
-      assert(job.hashStore.load().filter($"doc_id" === "7").count() == 1)
-    } finally { q.stop(); sc.removeSparkListener(listener) }
+      finally q.stop()
+      if (mode == "sync") {
+        assert(job.hashStore.load().count() == 60)
+        assert(job.hashStore.load().filter($"doc_id" === "7").count() == 1)
+      }
+    }
+    finally sc.removeSparkListener(listener)
   }
 
   test("routing drops topics not matching the subscription pattern") {
