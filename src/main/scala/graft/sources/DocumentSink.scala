@@ -100,26 +100,24 @@ final class JsonFileSink(root: String) extends DocumentSink {
   * {root}/a/b (empty segments ignored) and document `id` the file
   * {id}.json in it. Doc ids and path segments come from message
   * content, so each is percent-encoded — anything but letters, digits,
-  * '-', '_' and '.' as `%xx`, and a segment `.` or `..` as `%2e`s — and
-  * the (targetPath, docId) key cannot traverse outside the root. Reads
-  * decode the names back. A character above U+00FF that is not a letter
-  * or digit encodes to more than two hex digits, so such an id can share
-  * a file with another ('€' and " ac" are both `%20ac.json`); reads
-  * report that file under the id it decodes to. */
+  * '-', '_' and '.' as `%xx` (up to U+00FF) or `%uxxxx` (above it), and
+  * a segment `.` or `..` as `%2e`s — and the (targetPath, docId) key
+  * cannot traverse outside the root. Reads decode the names back. */
 object JsonFileSink {
   private def encode(segment: String): String =
     segment.flatMap {
       case c if c.isLetterOrDigit || c == '-' || c == '_' || c == '.' => c.toString
-      case c => f"%%${c.toInt}%02x"
+      case c if c <= 0xff => f"%%${c.toInt}%02x"
+      case c => f"%%u${c.toInt}%04x"
     } match {
       case s if s == "." || s == ".." => s.replace(".", "%2e")
       case s => s
     }
 
-  private val Escaped = "%([0-9a-f]{2})".r
+  private val Escaped = "%(?:u([0-9a-f]{4})|([0-9a-f]{2}))".r
   private def decode(name: String): String =
-    Escaped.replaceAllIn(name, m =>
-      scala.util.matching.Regex.quoteReplacement(Integer.parseInt(m.group(1), 16).toChar.toString))
+    Escaped.replaceAllIn(name, m => scala.util.matching.Regex.quoteReplacement(
+      Integer.parseInt(Option(m.group(1)).getOrElse(m.group(2)), 16).toChar.toString))
 
   private def rootPath(root: String): Path = Paths.get(root).toAbsolutePath.normalize
 

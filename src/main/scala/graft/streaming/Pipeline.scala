@@ -41,8 +41,6 @@ import graft.sources.DocumentSink
   * shuffles the batch and the stored hashes once, by store bucket, and
   * writes from the tasks of that shuffle (executor-side sink
   * connections, ≤50-doc commits per the reference's WriteBatch limit).
-  * Without a SYNC subscription the store is not read and the writes
-  * come from the tasks of the dedupe's shuffle.
   */
 object Pipeline {
 
@@ -254,51 +252,38 @@ object Pipeline {
   private def modeIds(subs: Seq[Subscription], m: SyncGate.SyncMode): Seq[String] =
     subs.filter(s => SyncGate.parseMode(s.fbOptions.syncMode) == m).map(_.id)
 
-  /** One micro-batch of the consumer. With a SYNC subscription the
-    * dedupe, sync gate, upsert and hash-store rewrite run as one
-    * bucket-partitioned pass ([[HashStore.pass]]): each row of
-    * `compiled` ([[compileMulti]]'s output) is tagged with its
-    * subscription's sync mode, and per (target_path, doc_id) the first
-    * batch row in `orderCol`-descending order (else max `doc_hash`)
-    * wins — [[dedupeBatch]]'s rule. Then [[gateMulti]]'s gate: a
-    * FORWARD winner is written; a SYNC winner is written, and its hash
-    * stored, only when it differs from the stored hash; a NONE/CONSUME
-    * winner is dropped. Each task commits its written documents in
-    * ≤`maxSubmit` groups as it walks, and yields each bucket whose
-    * SYNC keys changed as soon as the bucket's last key is decided;
-    * the store publishes them once the write job has committed. A task
-    * that fails after partial sink commits leaves the store as it was,
-    * so the replayed batch rewrites those documents; a replay after the
-    * publish finds every SYNC hash stored and writes only FORWARD
-    * documents. At most two Spark jobs per micro-batch (with AQE, the
-    * shuffle's map stage runs as a job of its own before the write)
-    * and nothing cached.
-    *
-    * Without a SYNC subscription there is no stored hash to compare or
-    * keep, so the store is not read: the FORWARD winners of
-    * [[dedupeBatch]] are written from the dedupe's own tasks. The pass
-    * would stage nothing for such a job, but its staging write costs
-    * about 60 ms a micro-batch that this path does not pay (StreamBench
-    * at 2000-row batches, 4 cores: ~15% fewer docs/s through the pass).
-    * Both paths write through a [[DocumentSink.Committer]] per task. */
+  /** One micro-batch of the consumer: the dedupe, sync gate, upsert
+    * and hash-store rewrite run as one bucket-partitioned pass
+    * ([[HashStore.pass]]). Each row of `compiled` ([[compileMulti]]'s
+    * output) is tagged with its subscription's sync mode, and per
+    * (target_path, doc_id) the first batch row in `orderCol`-descending
+    * order (else max `doc_hash`) wins — [[dedupeBatch]]'s rule. Then
+    * [[gateMulti]]'s gate: a FORWARD winner is written; a SYNC winner
+    * is written, and its hash stored, only when it differs from the
+    * stored hash; a NONE/CONSUME winner is dropped. Each task commits
+    * its written documents in ≤`maxSubmit` groups as it walks, and
+    * yields each bucket whose SYNC keys changed as soon as the bucket's
+    * last key is decided; the store publishes them once the write job
+    * has committed. A task that fails after partial sink commits leaves
+    * the store as it was, so the replayed batch rewrites those
+    * documents; a replay after the publish finds every SYNC hash stored
+    * and writes only FORWARD documents. At most two Spark jobs per
+    * micro-batch (with AQE, the shuffle's map stage runs as a job of its
+    * own before the write) and nothing cached. Only a SYNC winner can
+    * change a stored hash, so without a SYNC subscription the pass
+    * reads no stored hash and stages nothing; without a SYNC or FORWARD
+    * subscription nothing is written and no job runs. */
   def batchPass(compiled: DataFrame, subs: Seq[Subscription], orderCol: Option[String],
                 store: HashStore, mkSink: () => DocumentSink): Unit = {
     val sync = modeIds(subs, SyncGate.Sync)
     val fwd = modeIds(subs, SyncGate.Forward)
-    if (sync.nonEmpty) {
+    if (sync.nonEmpty || fwd.nonEmpty) {
       val mode = when(col("sub_id").isin(sync: _*), HashStore.SyncRow)
         .when(col("sub_id").isin(fwd: _*), HashStore.ForwardRow)
         .otherwise(HashStore.DropRow)
       store.pass(compiled.withColumn("_mode", mode),
-        orderCol.map(col).getOrElse(col("doc_hash")), Some(mkSink))
-    } else if (fwd.nonEmpty)
-      dedupeBatch(compiled, orderCol).filter(col("sub_id").isin(fwd: _*))
-        .select(col("target_path"), col("doc_id"), col("doc_json"))
-        .foreachPartition { (rows: Iterator[Row]) =>
-          val out = new DocumentSink.Committer(mkSink)
-          rows.foreach(r => out.write(DocumentSink.Doc(r.getString(0), r.getString(1), r.getString(2))))
-          out.flush()
-        }
+        orderCol.map(col).getOrElse(col("doc_hash")), Some(mkSink), canChange = sync.nonEmpty)
+    }
   }
 }
 
@@ -309,13 +294,15 @@ object Pipeline {
   *
   * Scale design: the store is hash-partitioned into `numBuckets`
   * directories keyed by `pmod(hash(target_path, doc_id), numBuckets)`.
-  * Every update is one bucket-partitioned [[pass]]: the batch rows and
-  * the stored rows are shuffled by bucket together, and the walk over
-  * each bucket's sorted key runs yields that bucket's full new contents
-  * only when one of its keys changed, so only changed buckets are
-  * rewritten, each as one file. The walk holds one bucket's keys and
-  * hashes at a time (never document bodies); at billions of ids raise
-  * numBuckets so a bucket stays executor-sized.
+  * Every micro-batch is one bucket-partitioned [[pass]]: the batch rows
+  * and the stored rows are shuffled by bucket together, and the walk
+  * over each bucket's sorted key runs yields that bucket's full new
+  * contents only when one of its keys changed, so only changed buckets
+  * are rewritten, each as one file. A batch without a SYNC row cannot
+  * change a stored hash: its pass shuffles only the batch rows and
+  * neither reads nor writes the store. The walk holds one bucket's keys
+  * and hashes at a time (never document bodies); at billions of ids
+  * raise numBuckets so a bucket stays executor-sized.
   *
   * Commit protocol (object-store-safe, no directory renames on the
   * read path): bucket data lives in immutable uniquely-named dirs; the
@@ -422,7 +409,7 @@ final class HashStore(spark: SparkSession, path: String, numBuckets: Int = 16) {
   private[graft] def merge(updates: DataFrame): Unit =
     pass(updates.select(col("target_path"), col("doc_id").cast("string"), col("doc_hash"),
         lit(null).cast("string").as("doc_json"), lit(HashStore.SyncRow).as("_mode")),
-      col("doc_hash"), None)
+      col("doc_hash"), None, canChange = true)
 
   /** The one update path. `batch` carries `target_path`, `doc_id`,
     * `doc_hash`, `doc_json` and a `_mode` ([[HashStore.SyncRow]],
@@ -436,26 +423,33 @@ final class HashStore(spark: SparkSession, path: String, numBuckets: Int = 16) {
     * task, and yields the new contents of each bucket with a changed
     * SYNC key. Writing those into a staging dir is the pass's only
     * action; the staged `bucket=N` dirs are published after it
-    * commits. */
+    * commits. `canChange` says whether `batch` holds a SyncRow. When it
+    * does not, no winner reads its stored hash and the walk yields no
+    * bucket, so the stored rows are not read and the walk runs under an
+    * action with no output: the store is left as it is. */
   private[streaming] def pass(batch: DataFrame, order: Column,
-      mkSink: Option[() => DocumentSink]): Unit = synchronized {
+      mkSink: Option[() => DocumentSink], canChange: Boolean): Unit = synchronized {
     val manifest = readManifest()
     val buckets = manifest.buckets // existing store's modulus wins
     val rows = batch.select(col("target_path"), col("doc_id"), col("doc_hash"),
       col("doc_json"), col("_mode"), lit(0).as("_src"), order.as("_ord"))
-    val stored = readDirs(manifest.cur.values.toSeq).withColumn("_src", lit(1))
+    val keyed = if (!canChange) rows else rows.unionByName(
+      readDirs(manifest.cur.values.toSeq).withColumn("_src", lit(1)), allowMissingColumns = true)
     val walk = HashStore.walk(mkSink) _
-    val next = rows.unionByName(stored, allowMissingColumns = true)
+    val next = keyed
       .withColumn("bucket", pmod(hash(col("target_path"), col("doc_id")), lit(buckets)))
       .repartition(col("bucket"))
       .sortWithinPartitions(col("bucket"), col("target_path"), col("doc_id"), col("_src"),
         col("_ord").desc)
       .select(HashStore.PassColumns.map(col): _*)
       .mapPartitions(walk)(Encoders.row(schema.add("bucket", IntegerType)))
-    val stamp = java.util.UUID.randomUUID().toString.take(8)
-    val staging = new HPath(root, s".stage-$stamp")
-    next.write.partitionBy("bucket").parquet(staging.toString)
-    publish(manifest, staging, stamp)
+    if (!canChange) next.foreach((_: Row) => ())
+    else {
+      val stamp = java.util.UUID.randomUUID().toString.take(8)
+      val staging = new HPath(root, s".stage-$stamp")
+      next.write.partitionBy("bucket").parquet(staging.toString)
+      publish(manifest, staging, stamp)
+    }
   }
 
   /** Publishes every `bucket=N` dir of a committed staging dir under a

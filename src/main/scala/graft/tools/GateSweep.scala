@@ -20,7 +20,10 @@ import graft.operators.TierProbe
   * tier line proves the forced tier really ran.
   *
   * Usage: runMain graft.tools.GateSweep <sfDir> <outDir> [q1,q2,...]
-  * (default query set = every gate-bearing catalog query).
+  * (default query set = every gate-bearing catalog query). A query's old
+  * output is deleted before it runs, so a query that throws leaves no
+  * output to referee; the main exits non-zero naming the queries that
+  * threw, after writing the rest.
   */
 object GateSweep {
   /** Catalog queries that exercise at least one adaptive gate. */
@@ -43,13 +46,15 @@ object GateSweep {
     new java.io.File(outDir).mkdirs()
     val knobs = sys.env.keys.filter(_.startsWith("SPARK_GRAFT")).toSeq.sorted
       .map(k => s""""$k":"${sys.env(k)}"""").mkString("{", ",", "}")
-    queries.foreach { case (name, plan) =>
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val failed = queries.flatMap { case (name, plan) =>
+      val out = new org.apache.hadoop.fs.Path(outDir, name)
+      out.getFileSystem(hadoopConf).delete(out, true)
       TierProbe.clear()
       val t0 = System.nanoTime()
       val err =
         try {
-          plan(spark, sfDir).coalesce(1).write
-            .mode("overwrite").parquet(s"$outDir/$name")
+          plan(spark, sfDir).coalesce(1).write.parquet(out.toString)
           null
         } catch { case e: Throwable => e.toString.takeWhile(_ != '\n') }
       spark.catalog.clearCache()
@@ -62,10 +67,14 @@ object GateSweep {
       println(s"""{"query":"$name","sec":${f"$sec%.1f"},"tiers":$tiers""" +
         s""","err":${if (err == null) "null" else s""""$err""""}""" +
         s""","knobs":$knobs}""")
+      Option(err).map(_ => name)
     }
     // the oracle map, so the standard compare scripts run on this dump
     val names = queries.map(_._1).toSet
     Verify.writeOracleJson(outDir, SparkEntry.oracleSql.view.filterKeys(names).toMap)
     spark.stop()
+    if (failed.nonEmpty)
+      throw new IllegalStateException(
+        s"${failed.size} of ${queries.size} queries failed: ${failed.mkString(", ")}")
   }
 }

@@ -111,18 +111,60 @@ class BatchPassSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("without a SYNC subscription the FORWARD winners are written and the store is left alone") {
-    val noSync = subs.filterNot(s => syncIds.contains(s.id))
-    val root = Files.createTempDirectory("graft-pass").toString
-    val store = new HashStore(spark, root, numBuckets = 4)
-    val batch = Pipeline.compileMulti(noSync, "tnt",
-      events(randomBatch(new Random(5), 40, 1L)), Seq("off"))
-    val exp = Pipeline.gateMulti(Pipeline.dedupeBatch(batch, Some("off")), noSync, store.load())
-      .select("target_path", "doc_id", "doc_json").as[(String, String, String)].collect()
-      .toSeq.sorted
-    assert(exp.nonEmpty)
-    Pipeline.batchPass(batch, noSync, Some("off"), store, () => new RecordingSink("fwd-only"))
-    assert(RecordingSink.take("fwd-only") == exp)
-    assert(!Files.exists(Paths.get(root, "_manifest")))
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val sc = spark.sparkContext
+    val root = Paths.get(Files.createTempDirectory("graft-pass").toString)
+    val store = new HashStore(spark, root.toString, numBuckets = 4)
+    val evs = events(randomBatch(new Random(5), 40, 1L))
+    // every key the batch carries, under every subscription, with a stale hash
+    store.merge(compiled(evs)
+      .select($"target_path", $"doc_id", concat(lit("stale-"), $"doc_hash").as("doc_hash")))
+    def listing() = Files.list(root).iterator().asScala.map(_.getFileName.toString).toSet
+    val (manifest, entries) = (Files.readAllBytes(root.resolve("_manifest")), listing())
+
+    for ((name, set) <- Seq("fwd-only" -> subs.filterNot(s => syncIds.contains(s.id)),
+                            "none-only" -> subs.filter(_.id == "none"))) {
+      val batch = Pipeline.compileMulti(set, "tnt", evs, Seq("off"))
+      val exp = Pipeline.gateMulti(Pipeline.dedupeBatch(batch, Some("off")), set, store.load())
+        .select("target_path", "doc_id", "doc_json").as[(String, String, String)].collect()
+        .toSeq.sorted
+      assert(exp.nonEmpty == (name == "fwd-only"), name)
+      // the pass's job starts and plans, up to a sentinel job (the
+      // listener bus delivers events in order)
+      var jobs = 0
+      val plans = new ConcurrentLinkedQueue[String]()
+      val sentinel = new CountDownLatch(1)
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+            case Some(`name`) => jobs += 1
+            case Some("sentinel") => sentinel.countDown()
+            case _ =>
+          }
+        override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+          case s: SparkListenerSQLExecutionStart => plans.add(s.physicalPlanDescription)
+          case _ =>
+        }
+      }
+      sc.addSparkListener(listener)
+      try {
+        sc.setJobGroup(name, name)
+        try Pipeline.batchPass(batch, set, Some("off"), store, () => new RecordingSink(name))
+        finally sc.clearJobGroup()
+        sc.setJobGroup("sentinel", "sentinel")
+        try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+        assert(sentinel.await(60, TimeUnit.SECONDS), "sentinel job start never arrived")
+      } finally sc.removeSparkListener(listener)
+      assert(RecordingSink.take(name) == exp, name)
+      assert((jobs > 0) == exp.nonEmpty, s"$name ran $jobs jobs")
+      // neither a stored-row scan nor a staging write
+      assert(plans.asScala.forall(!_.contains(root.toString)),
+        s"$name planned a read or write of the store:\n${plans.asScala.mkString("\n")}")
+      assert(Files.readAllBytes(root.resolve("_manifest")).sameElements(manifest), name)
+      assert(listing() == entries, s"$name left ${listing() -- entries} under the store root")
+    }
   }
 
   test("the walk yields each changed bucket as it closes and commits full groups as it goes") {

@@ -36,14 +36,21 @@ class CfsSourceSpec extends AnyFunSuite with SparkTestBase {
 
   test("collection and doc ids read back as written; a doc id cannot reach another file") {
     val root = java.nio.file.Files.createTempDirectory("graft-cfs-ids").toString
+    // '€' (U+20AC) and " ac" must not share a file
     new JsonFileSink(root).commitBatch(Seq(
       DocumentSink.Doc("_aether/t t", "a b/c", """{"v":1}"""),
-      DocumentSink.Doc("_aether/t t", "x:y", """{"v":2}""")))
+      DocumentSink.Doc("_aether/t t", "x:y", """{"v":2}"""),
+      DocumentSink.Doc("_aether/t t", "€", """{"v":3}"""),
+      DocumentSink.Doc("_aether/t t", " ac", """{"v":4}""")))
     def ids(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getString(0), r.getString(1))).toSet
-    val all = Set(("_aether/t t", "a b/c"), ("_aether/t t", "x:y"))
+    val all = Set(("_aether/t t", "a b/c"), ("_aether/t t", "x:y"),
+      ("_aether/t t", "€"), ("_aether/t t", " ac"))
     assert(ids(read(root)) === all)
+    assert(read(root).collect().map(r => (r.getString(1), r.getString(2))).toSet === Set(
+      ("a b/c", """{"v":1}"""), ("x:y", """{"v":2}"""), ("€", """{"v":3}"""), (" ac", """{"v":4}""")))
     assert(ids(read(root).filter(col("doc_id") === "a b/c")) === Set(("_aether/t t", "a b/c")))
+    assert(ids(read(root).filter(col("doc_id") === "€")) === Set(("_aether/t t", "€")))
     assert(ids(read(root).filter(col("collection") === "_aether/t t")) === all)
     assert(ids(read(freshStore()).filter(col("doc_id") === "../click/c1")) === Set.empty)
   }
